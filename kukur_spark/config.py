@@ -43,7 +43,3 @@ def from_toml(path: str) -> Dict[str, Any]:
             pending.extend(fragment.pop("include", []))
             _merge(config, fragment)
     return config
-
-
-def from_dict(config: Dict[str, Any]) -> Dict[str, Any]:
-    return dict(config)

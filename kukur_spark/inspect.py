@@ -1,4 +1,4 @@
-"""Inspect: list and preview data resources (files, directories, catalogs).
+"""Inspect: list and preview data resources (files and directories).
 
 Parity target: reference inspect family (SURVEY.md S21-S24):
 ``kukur/inspect/arrow.py:27-34,138-180`` (extension classification),
@@ -214,87 +214,3 @@ def preview(
     if columns:
         df = df.select(columns)
     return df.limit(num_rows)
-
-
-def list_catalog(spark: SparkSession) -> List[dict]:
-    """Database-catalog listing over the Spark catalog (reference S24)."""
-    out = []
-    for db in spark.catalog.listDatabases():
-        for table in spark.catalog.listTables(db.name):
-            out.append(
-                {"database": db.name, "table": table.name, "type": table.tableType}
-            )
-    return out
-
-
-def schema_report(
-    spark: SparkSession, path: str, pattern: str = "*.parquet"
-) -> DataFrame:
-    """Schema-drift report over a directory of parquet files.
-
-    The "did yesterday's export change shape" check: reads only the
-    parquet FOOTERS (no data IO) of every file matching ``pattern`` and
-    returns one row per (column, type) observation with presence counts
-    and drift flags:
-
-    - ``in_all_files`` False → the column appeared or disappeared;
-    - a column name occurring with two different ``dtype`` values →
-      type drift (two rows share the name).
-
-    Driver-side footer reads mirror the reference's inspect family
-    (metadata-only, file-count bounded — the same budget as listing);
-    the result is a DataFrame so drift checks compose with the engine.
-    """
-    import fnmatch
-
-    import pyarrow.parquet as pq
-
-    def footer_of(entry_path: str) -> str:
-        """A plain file reads directly; a directory dataset (Spark's own
-        ``name.parquet/part-*.parquet`` layout) reads its first part."""
-        if os.path.isfile(entry_path):
-            return entry_path
-        parts = sorted(
-            os.path.join(entry_path, p)
-            for p in os.listdir(entry_path)
-            if p.endswith(".parquet") and not p.startswith(("_", "."))
-        )
-        if not parts:
-            raise ValueError(f"no parquet parts under {entry_path!r}")
-        return parts[0]
-
-    files = sorted(
-        footer_of(os.path.join(path, f))
-        for f in os.listdir(path)
-        if fnmatch.fnmatch(f, pattern)
-    )
-    if not files:
-        raise ValueError(f"no files matching {pattern!r} under {path!r}")
-    obs: dict = {}
-    for fp in files:
-        schema = pq.read_schema(fp)
-        # parquet permits duplicate field names: count per-file PRESENCE,
-        # or a doubled column could mask a disappeared-column drift
-        for name, typ in {
-            (n, str(t)) for n, t in zip(schema.names, schema.types)
-        }:
-            entry = obs.setdefault(
-                (name, typ),
-                {"n_files": 0, "first_file": os.path.basename(fp)},
-            )
-            entry["n_files"] += 1
-    rows = [
-        (
-            name,
-            dtype,
-            int(v["n_files"]),
-            v["first_file"],
-            v["n_files"] == len(files),
-        )
-        for (name, dtype), v in sorted(obs.items())
-    ]
-    return spark.createDataFrame(
-        rows,
-        "column string, dtype string, n_files long,"
-        " first_file string, in_all_files boolean",
-    )

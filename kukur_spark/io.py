@@ -179,9 +179,3 @@ def persist_once(df: DataFrame) -> DataFrame:
         except Exception:
             pass  # session already stopped — nothing to release
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every test table as a temp view (for spark.sql queries)."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

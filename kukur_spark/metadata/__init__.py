@@ -3,8 +3,7 @@
 Parity target: reference ``kukur/metadata/__init__.py`` (field access
 :81-98, custom registration :141-152, camelCase serde :118-126). The Spark
 representation of a metadata *set* is one DataFrame row per series with the
-well-known columns plus a ``map<string,string>`` column for extras (see
-kukur_spark.schema.METADATA_SCHEMA).
+well-known columns plus a ``map<string,string>`` column for extras.
 """
 
 from __future__ import annotations

@@ -28,7 +28,7 @@ from __future__ import annotations
 import logging
 import os
 import weakref
-from typing import List, Optional
+from typing import Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -415,12 +415,13 @@ def _md5_long_sql(x_sql: str) -> str:
 
 
 def _token_hashes_sql(text_sql: str) -> str:
-    """SQL fragment equivalent of :func:`token_hashes`."""
+    """SQL fragment: xxhash64 of every space-split token."""
     return f"transform(split({text_sql}, ' '), t -> xxhash64(t))"
 
 
 def _combine_shingle_hashes_sql(th_col: str, k: int = 3) -> str:
-    """SQL fragment equivalent of :func:`combine_shingle_hashes`."""
+    """SQL fragment: distinct xxhash64 of each k-token shingle (the whole
+    token array when shorter than ``k``)."""
     gram = ", ".join(f"element_at({th_col}, i + {j})" for j in range(k))
     return (
         f"array_distinct(CASE WHEN size({th_col}) >= {k} THEN "
@@ -431,7 +432,8 @@ def _combine_shingle_hashes_sql(th_col: str, k: int = 3) -> str:
 
 
 def _minhash_signature_sql(hs_col: str, num_hashes: int = 32) -> str:
-    """SQL fragment equivalent of :func:`minhash_signature`.
+    """SQL fragment: ``num_hashes``-long MinHash signature, the minimum of
+    ``xxhash64(h, j)`` over the shingle hashes for each permutation ``j``.
 
     Permutation index ``j`` is a ``sequence`` lambda variable instead of
     the former ``num_hashes`` unrolled literal copies: ``xxhash64(h, j)``
@@ -453,56 +455,6 @@ def shingles(text: Column, k: int = 3) -> Column:
     idx = F.sequence(F.lit(0), F.greatest(n - F.lit(k), F.lit(0)))
     return F.array_distinct(
         F.transform(idx, lambda i: F.array_join(F.slice(toks, i + 1, k), " "))
-    )
-
-
-def token_hashes(text: Column) -> Column:
-    """Each whitespace token hashed once (array<bigint>)."""
-    return F.transform(F.split(text, " "), lambda t: F.xxhash64(t))
-
-
-def combine_shingle_hashes(th_col: Column, k: int = 3) -> Column:
-    """Distinct k-gram shingle hashes from a *materialized* token-hash
-    array column — no shingle strings are ever built.
-
-    ``th_col`` must be a real column (not an inline expression): the lambda
-    indexes it ``k`` times per shingle, and an inline expression would be
-    re-evaluated on every access (O(k·n²) hashing).
-
-    Documents with fewer than ``k`` tokens contribute one shingle — the
-    hash of their full token-hash array (indexing past the array end would
-    throw under ANSI mode and a short doc still needs an identity for
-    exact-dup detection).
-    """
-    n = F.size(th_col)
-    idx = F.sequence(F.lit(1), n - F.lit(k - 1))
-    full = F.transform(
-        idx,
-        lambda i: F.xxhash64(*[F.element_at(th_col, i + j) for j in range(k)]),
-    )
-    return F.array_distinct(
-        F.when(n >= F.lit(k), full).otherwise(F.array(F.xxhash64(th_col)))
-    )
-
-
-def minhash_signature(hash_col: Column, num_hashes: int = 32) -> Column:
-    """Array of ``num_hashes`` min-hashes over pre-hashed shingles.
-
-    ``hash_col`` is an ``array<bigint>`` of per-shingle xxhash64 values —
-    each shingle string is hashed **once**; permutation ``j`` re-mixes the
-    8-byte hash with ``xxhash64(h, j)`` (fixed-width input — far cheaper
-    than re-hashing the variable-length shingle per seed, and safe under
-    ANSI arithmetic, unlike a wrapping ``a·h + b``). Pure projection,
-    computed map-side: the only shuffle in the LSH pipeline is the final
-    bucket join.
-    """
-    return F.array(
-        *[
-            F.array_min(
-                F.transform(hash_col, lambda h: F.xxhash64(h, F.lit(j)))
-            )
-            for j in range(num_hashes)
-        ]
     )
 
 
@@ -1163,51 +1115,3 @@ FROM cand
 WHERE bit_count(xor(sa, sb)) <= {max_hamming}
 ORDER BY id_a, id_b
 """
-
-
-# ---------------------------------------------------------------------------
-# n-gram Jaccard on blocked pairs
-# ---------------------------------------------------------------------------
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    text_column: str = "text",
-    id_column: str = "doc_id",
-    block_columns: Optional[List[str]] = None,
-    threshold: float = 0.0,
-) -> DataFrame:
-    """Exact token-set Jaccard for every pair inside a blocking key.
-
-    ``block_columns`` bounds the quadratic blow-up (e.g. a source column or
-    an LSH bucket); within a block the pair join shuffles on the block key
-    only. Returns ``id_a, id_b, jaccard``.
-    """
-    block_columns = block_columns or []
-    base = df.select(
-        *[F.col(c) for c in block_columns],
-        F.col(id_column).alias("id"),
-        F.array_distinct(F.split(F.col(text_column), " ")).alias("toks"),
-    )
-    conditions = [
-        F.col(f"a.{c}") == F.col(f"b.{c}") for c in block_columns
-    ] + [F.col("a.id") < F.col("b.id")]
-    pairs = (
-        base.alias("a")
-        .join(base.alias("b"), on=conditions)
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.toks").alias("toks_a"),
-            F.col("b.toks").alias("toks_b"),
-        )
-    )
-    # arithmetic union over the distinct token arrays (|A|+|B|−inter):
-    # same value as sizing array_union, half the per-pair array work
-    inter = F.size(F.array_intersect("toks_a", "toks_b"))
-    jaccard = inter.cast("double") / (
-        F.size("toks_a") + F.size("toks_b") - inter
-    )
-    return (
-        pairs.withColumn("jaccard", F.round(jaccard, 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )

@@ -3,13 +3,7 @@
 The decode step is STUBBED (image/audio libraries are not in this
 container): ``decode_features`` runs a deterministic byte-level feature
 extractor by default and raises ``NotImplementedError`` when a real codec
-is requested for a modality with no registered decoder. A deployment
-with PIL/ffmpeg plugs decoders in through :func:`register_codec` — a
-callable registry like ``SourceFactory`` — without editing this
-operator. Registered codecs are captured into the ``mapInPandas``
-closure at plan-build time, so they ship to executors with the task
-(a module-level registry alone would be empty on freshly-imported
-workers). Everything around the stub — schema, partitioning, the
+is requested. Everything around the stub — schema, partitioning, the
 ``mapInPandas`` batch shape, frame sampling plumbing — is real and
 tested.
 
@@ -32,25 +26,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-ASSET_SCHEMA = T.StructType(
-    [
-        T.StructField("asset_id", T.LongType(), False),
-        T.StructField("modality", T.StringType(), False),  # image|audio|video
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("mime", T.StringType()),
-                    T.StructField("width", T.IntegerType()),
-                    T.StructField("height", T.IntegerType()),
-                    T.StructField("duration_ms", T.IntegerType()),
-                    T.StructField("size_bytes", T.LongType()),
-                ]
-            ),
-        ),
-    ]
-)
 
 FEATURE_SCHEMA = T.StructType(
     [
@@ -109,47 +84,21 @@ def synthesize_assets(spark, n: int = 100, partitions: int = 8) -> DataFrame:
     return generated.select("asset_id", "modality", "payload", meta.alias("meta"))
 
 
-# modality → decoder(bytes) -> bytes; populated by deployments that ship
-# real codecs (PIL/ffmpeg).  Decoders must be picklable (module-level
-# functions) — they are cloudpickled into the executor task.
-_CODECS: dict = {}
-
-
-def register_codec(modality: str, decoder) -> None:
-    """Plug a real decoder in for one modality (e.g. ``'image'``).
-
-    The extension seam for codec-bearing deployments: ``decoder`` takes
-    the raw payload bytes and returns decoded bytes for feature
-    extraction.  Mirrors ``SourceFactory.register_source``."""
-    _CODECS[modality] = decoder
-
-
-def unregister_codec(modality: str) -> None:
-    _CODECS.pop(modality, None)
-
-
-def _decode_payload(payload: bytes, modality: str, real_codec: bool, codecs=None):
+def _decode_payload(payload: bytes, modality: str, real_codec: bool):
     if real_codec:
-        codec = (codecs or {}).get(modality)
-        if codec is None:
-            raise NotImplementedError(
-                f"real {modality} decoding needs a registered codec "
-                "(PIL/ffmpeg not in this container) — see register_codec()"
-            )
-        return codec(payload)
+        raise NotImplementedError(
+            f"real {modality} decoding needs a codec "
+            "(PIL/ffmpeg not in this container)"
+        )
     return payload  # stub: features computed over raw bytes
 
 
 def decode_features(df: DataFrame, real_codec: bool = False) -> DataFrame:
     """Per-asset deterministic features via Arrow-batched ``mapInPandas``.
 
-    ``real_codec=True`` decodes through the registered codec for each
-    modality (:func:`register_codec`) and still raises
-    ``NotImplementedError`` for modalities without one. The registry
-    snapshot is taken here, driver-side, so the closure carries the
-    decoders to executors.
+    ``real_codec=True`` raises ``NotImplementedError``: no codec ships
+    with the engine.
     """
-    codecs = dict(_CODECS) if real_codec else {}
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import math
@@ -168,9 +117,7 @@ def decode_features(df: DataFrame, real_codec: bool = False) -> DataFrame:
             for asset_id, modality, payload in zip(
                 pdf["asset_id"], pdf["modality"], pdf["payload"]
             ):
-                data = _decode_payload(
-                    bytes(payload), modality, real_codec, codecs
-                )
+                data = _decode_payload(bytes(payload), modality, real_codec)
                 # byte histogram + sum via numpy (guide §4.2: vectorize
                 # inside the batch) — both are exact integer results, so
                 # they match the old per-byte Python loop bit-for-bit;
@@ -244,7 +191,6 @@ def resize_stride(
     binary out through an Arrow ``mapInPandas`` batch, new payload plus
     summary stats, nothing through the driver.
     """
-    codecs = dict(_CODECS) if real_codec else {}
 
     def shrink(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -258,9 +204,7 @@ def resize_stride(
             for asset_id, modality, payload in zip(
                 pdf["asset_id"], pdf["modality"], pdf["payload"]
             ):
-                data = _decode_payload(
-                    bytes(payload), modality, real_codec, codecs
-                )
+                data = _decode_payload(bytes(payload), modality, real_codec)
                 small = data[::factor]
                 out["asset_id"].append(int(asset_id))
                 out["modality"].append(modality)

@@ -19,27 +19,10 @@ from datetime import datetime
 from typing import Optional
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from kukur_spark.schema import TS_COLUMN, VALUE_COLUMN
 
 BUCKET_COLUMN = "bucket"
-
-
-def _bucket_expr(start: datetime, end: datetime, interval_count: int):
-    """Integer bucket id: floor((ts - start) * n / span), clamped to n-1."""
-    from kukur_spark.timeutil import epoch_us
-
-    start_us = epoch_us(start)
-    end_us = epoch_us(end)
-    span = max(end_us - start_us, 1)
-    raw = (
-        (F.unix_micros(F.col(TS_COLUMN)) - F.lit(start_us))
-        * F.lit(int(interval_count))
-    ) / F.lit(span)
-    return F.least(
-        F.floor(raw).cast("long"), F.lit(int(interval_count) - 1)
-    ).alias(BUCKET_COLUMN)
 
 
 def plot_buckets(
@@ -78,7 +61,9 @@ def _bucket_stats_sql(
     start_us: int, end_us: int, span: int, n: int, group_columns: list[str]
 ) -> str:
     """The bucket-stats statement text, shared by :func:`plot_buckets`
-    and :func:`plot_downsample` (which embeds it as a CTE)."""
+    and :func:`plot_downsample` (which embeds it as a CTE).  The inner
+    projection names only the columns the aggregate reads, so an input
+    that already carries a ``bucket`` column does not collide."""
     gsel = "".join(f"`{c}`, " for c in group_columns)
     ts_win = f"unix_micros(CAST(`{TS_COLUMN}` AS TIMESTAMP))"
     gby = gsel + f"`{BUCKET_COLUMN}`"
@@ -100,7 +85,7 @@ FROM (
     MAX(`{TS_COLUMN}`) AS ts_last,
     COUNT(1) AS n_points
   FROM (
-    SELECT *,
+    SELECT {gsel}`{TS_COLUMN}`, `{VALUE_COLUMN}`,
       LEAST(CAST(FLOOR(((unix_micros(`{TS_COLUMN}`) - {start_us}) * {n})
                        / {span}) AS BIGINT), {n - 1}) AS `{BUCKET_COLUMN}`
     FROM {{df}}

@@ -5,22 +5,13 @@
   shuffle, then a tiny second shuffle merges the per-salt partials. Works
   for algebraic aggregates (sum/count/min/max) where partial merge is the
   same function.
-- ``salted_join``: skewed equi-join — the skewed (big) side gets a
-  deterministic salt from its row content; the small side is replicated
-  once per salt value, so each hot-key partition handles 1/salt of the
-  traffic. (AQE's skew-join handles the sort-merge case automatically;
-  this is the explicit form for when AQE cannot, e.g. aggregations feeding
-  the join or non-AQE engines.)
-- ``write_bucketed`` / ``bucketed_join_ready``: persist both sides
-  bucketed+sorted by the join key so later joins co-locate without any
-  shuffle (the plan shows no Exchange).
 """
 
 from __future__ import annotations
 
-from typing import Dict, List, Tuple
+from typing import Dict, List
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _PARTIAL = {
@@ -63,76 +54,6 @@ def salted_aggregate(
             for col, fn in aggs.items()
         ]
     )
-
-
-def salted_join(
-    skewed: DataFrame,
-    small: DataFrame,
-    on: List[str],
-    salt: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join where ``skewed`` has hot keys: salt the big side
-    deterministically, replicate the small side per salt value.
-
-    Only inner/left joins are supported: with right/full joins an
-    unmatched small-side row would surface once per salt replica.
-    """
-    if how not in ("inner", "left", "left_outer", "leftouter"):
-        raise ValueError(
-            f"salted_join supports inner/left joins, not {how!r} — the "
-            "replicated small side would duplicate unmatched rows"
-        )
-    salt_col = F.pmod(
-        F.xxhash64(*[F.col(c) for c in skewed.columns]), F.lit(salt)
-    )
-    left = skewed.withColumn(
-        "__salt", salt_col.cast("int")
-    )
-    salts = small.sparkSession.range(salt).select(
-        F.col("id").cast("int").alias("__salt")
-    )
-    right = small.crossJoin(F.broadcast(salts))
-    joined = left.join(right, on=on + ["__salt"], how=how)
-    return joined.drop("__salt")
-
-
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    key: str,
-    buckets: int = 8,
-) -> None:
-    """Persist bucketed + sorted by ``key`` for shuffle-free later joins."""
-    (
-        df.write.mode("overwrite")
-        .bucketBy(buckets, key)
-        .sortBy(key)
-        .saveAsTable(table_name)
-    )
-
-
-def bucketed_join_ready(
-    spark: SparkSession, left_table: str, right_table: str, key: str
-) -> Tuple[DataFrame, bool]:
-    """Join two pre-bucketed tables; returns (df, shuffle_free).
-
-    ``shuffle_free`` is true when the join plan contains no hash-partition
-    shuffle — the bucketed layout satisfies the join's distribution
-    requirement. Auto-broadcast is disabled for the check (a broadcast of a
-    small test table would sidestep the bucketing; at real scale neither
-    side broadcasts).
-    """
-    previous = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        left = spark.table(left_table)
-        right = spark.table(right_table)
-        joined = left.join(right, on=key)
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", previous)
-    return joined, "Exchange hashpartitioning" not in plan
 
 
 def bounded_rank(

@@ -51,11 +51,6 @@ def norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    a, b = _as_double(a), _as_double(b)
-    return dot(a, b) / (norm(a) * norm(b))
-
-
 # SQL-fragment twins of the Column helpers above: same expressions, one
 # parse instead of ~40 py4j round trips per use (driver latency only —
 # the resolved trees are identical; lambda-variable display names differ,
@@ -148,45 +143,12 @@ def plane_components(plane: int, dim: int) -> list:
     ]
 
 
-def hyperplane_signature(
-    v: Column, num_planes: int = 16, dim: int = 64
-) -> Column:
-    """Bit signature: sign of the projection on each deterministic plane.
-
-    ``dim`` is the maximum vector dimensionality the literal planes cover;
-    vectors longer than ``dim`` raise at runtime rather than silently
-    hashing on a truncated plane."""
-    v = _as_double(v)
-    bits = []
-    for p in range(num_planes):
-        plane = F.array(*[F.lit(c) for c in plane_components(p, dim)])
-        proj = F.aggregate(
-            F.zip_with(v, F.slice(plane, 1, F.size(v)), lambda x, c: x * c),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bits.append(
-            F.when(proj > 0, F.shiftleft(F.lit(1).cast("long"), p)).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    out = bits[0]
-    for b in bits[1:]:
-        out = out.bitwiseOR(b)
-    return F.when(
-        F.size(v) > dim,
-        F.raise_error(
-            F.lit(f"hyperplane_signature: vector longer than dim={dim}")
-        ).cast("long"),
-    ).otherwise(out)
-
-
 def _hyperplane_signature_sql(v_sql: str, num_planes: int, dim: int) -> str:
-    """SQL-fragment twin of :func:`hyperplane_signature` over an
-    ALREADY double-cast array expression (pass a column name, not an
-    inline transform — the fragment references it ~3×`num_planes`
-    times).  Same literals (``repr`` round-trips every plane component
-    exactly), same fold shape, same raise-on-overlong guard."""
+    """SQL fragment: ``num_planes``-bit sign signature of a vector against
+    the :func:`plane_components` hyperplanes, over an ALREADY double-cast
+    array expression (pass a column name, not an inline transform — the
+    fragment references it ~3×`num_planes` times).  ``repr`` round-trips
+    every plane component exactly; a vector longer than ``dim`` raises."""
     bits = []
     for p in range(num_planes):
         plane = (

@@ -35,10 +35,9 @@ from pyspark.sql import functions as F
 
 # 2^53 as an exact double; rho is at most 53.
 POW2_53 = 9007199254740992
-# alpha_m * m^2 for m=256:  0.7213/(1+1.079/256)*65536
-ALPHA_MM = 47072.71267120224
-# ALPHA_MM * 2^53 folded to one literal so both engines evaluate a single
-# double division (no cross-engine multiply-order ambiguity).
+# alpha_m * m^2 * 2^53 for m=256 (alpha_m * m^2 = 0.7213/(1+1.079/256)*65536
+# = 47072.71267120224) folded to one literal so both engines evaluate a
+# single double division (no cross-engine multiply-order ambiguity).
 ALPHA_MM_POW2_53 = 4.2399330249068963e20
 
 HLL_M = 256  # registers (p = 8)

@@ -2,8 +2,7 @@
 
 All pure column expressions (JVM-side, whole-stage codegen) — no UDFs:
 
-- token statistics (whitespace tokenization + distinct counts);
-- quality scoring (length / repetition ratios);
+- whitespace tokenization;
 - language identification (marker-token frequencies, deterministic argmax);
 - document fingerprinting (md5 content hash + sorted-token shape hash).
 
@@ -23,40 +22,6 @@ def tokens(text: Column) -> Column:
     return F.split(text, TOKEN_SPLIT)
 
 
-def token_stats(df: DataFrame, text_column: str = "text") -> DataFrame:
-    """n_tokens, n_unique_tokens, avg_token_chars per document."""
-    text = F.col(text_column)
-    toks = tokens(text)
-    n_tokens = F.size(toks)
-    n_unique = F.size(F.array_distinct(toks))
-    total_chars = F.length(text) - (n_tokens - F.lit(1))  # spaces removed
-    return df.select(
-        *[c for c in df.columns if c != text_column],
-        n_tokens.alias("n_tokens"),
-        n_unique.alias("n_unique_tokens"),
-        F.round(total_chars.cast("double") / n_tokens, 6).alias("avg_token_chars"),
-    )
-
-
-def quality_score(df: DataFrame, text_column: str = "text") -> DataFrame:
-    """Deterministic quality score in [0, 1]:
-
-    score = min(1, n_tokens/100) × (n_unique_tokens / n_tokens)
-
-    Length factor rewards documents with enough content; the distinct ratio
-    penalizes repetition — the standard shape of heuristic quality filters
-    for LLM training data.
-    """
-    toks = tokens(F.col(text_column))
-    n_tokens = F.size(toks).cast("double")
-    n_unique = F.size(F.array_distinct(toks)).cast("double")
-    score = F.least(F.lit(1.0), n_tokens / F.lit(100.0)) * (n_unique / n_tokens)
-    return df.select(
-        *[c for c in df.columns if c != text_column],
-        F.round(score, 6).alias("quality_score"),
-    )
-
-
 # marker tokens per language — counted with the replace-length trick so the
 # exact same integer arithmetic is expressible in any SQL oracle
 LANG_MARKERS = {
@@ -66,13 +31,6 @@ LANG_MARKERS = {
     "es": " el ",
     "zh": "的",
 }
-
-
-def _occurrences(text: Column, marker: str) -> Column:
-    return (
-        (F.length(text) - F.length(F.replace(text, F.lit(marker), F.lit(""))))
-        / F.lit(len(marker))
-    ).cast("long")
 
 
 def language_id(df: DataFrame, text_column: str = "text") -> DataFrame:

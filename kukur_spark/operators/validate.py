@@ -10,7 +10,6 @@ Rule vocabulary (all JVM column expressions):
 - ``not_null(col)`` — null count
 - ``unique(cols)`` — rows minus distinct rows over the key
 - ``in_range(col, lo, hi)`` — out-of-bounds count (inclusive bounds)
-- ``matches(col, regex)`` — non-matching count
 - ``in_set(col, values)`` — out-of-vocabulary count
 - ``foreign_key(cols, ref_df, ref_cols)`` — orphaned-row count
 - ``non_negative(col)`` — negative count
@@ -47,10 +46,6 @@ def in_range(column: str, lo: Any, hi: Any) -> Rule:
     return Rule(
         f"in_range({column},{lo},{hi})", "in_range", (column,), (lo, hi)
     )
-
-
-def matches(column: str, pattern: str) -> Rule:
-    return Rule(f"matches({column})", "matches", (column,), (pattern,))
 
 
 def in_set(column: str, values: Sequence[Any]) -> Rule:
@@ -92,9 +87,6 @@ def violation_predicate(rule: Rule) -> Column:
     if rule.kind == "in_range":
         lo, hi = rule.args
         return col.isNull() | (col < lo) | (col > hi)
-    if rule.kind == "matches":
-        (pattern,) = rule.args
-        return ~col.rlike(pattern) | col.isNull()
     if rule.kind == "in_set":
         (values,) = rule.args
         return ~col.isin(list(values)) | col.isNull()

@@ -18,9 +18,6 @@ audit catches them:
    two data-sized tables is O(n²) shuffle.  :func:`unbounded_cross_joins`
    counts cross-shaped joins where NEITHER side is row-bounded (a Limit,
    a global aggregate, or a literal relation).
-3. Physical ``CartesianProduct`` nodes — :func:`physical_killers` greps
-   the executed plan (equi-joins never plan these; a non-equi join over
-   two big sides does).
 
 All checks walk the *optimized logical plan* via py4j, so they run
 without executing the query — cheap enough to audit every registered
@@ -172,16 +169,4 @@ def audit(df) -> Dict[str, int]:
     return {
         "unbounded_global_windows": unbounded_global_windows(df),
         "unbounded_cross_joins": unbounded_cross_joins(df),
-    }
-
-
-def physical_killers(df) -> Dict[str, int]:
-    """Killer node counts in the (possibly not yet executed) physical
-    plan.  BroadcastNestedLoopJoin is reported but is legitimate when
-    the broadcast side is a singleton aggregate — cross-check with
-    :func:`unbounded_cross_joins` before treating it as a failure."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return {
-        "bnlj": plan.count("BroadcastNestedLoopJoin"),
-        "cartesian": plan.count("CartesianProduct"),
     }

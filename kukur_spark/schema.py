@@ -117,44 +117,3 @@ def union_conform(chunks: List[DataFrame]) -> Optional[DataFrame]:
     for chunk in conformed[1:]:
         out = out.unionByName(chunk)
     return out
-
-
-METADATA_COLUMNS = [
-    ("series_name", T.StringType()),
-    ("source", T.StringType()),
-    ("tags", T.MapType(T.StringType(), T.StringType())),
-    ("field", T.StringType()),
-    ("description", T.StringType()),
-    ("unit", T.StringType()),
-    ("functional_lower_limit", T.DoubleType()),
-    ("functional_upper_limit", T.DoubleType()),
-    ("physical_lower_limit", T.DoubleType()),
-    ("physical_upper_limit", T.DoubleType()),
-    ("accuracy", T.DoubleType()),
-    ("accuracy_percentage", T.DoubleType()),
-    ("interpolation_type", T.StringType()),
-    ("data_type", T.StringType()),
-    ("dictionary_name", T.StringType()),
-    ("extra", T.MapType(T.StringType(), T.StringType())),
-]
-
-METADATA_SCHEMA = T.StructType(
-    [T.StructField(name, dtype, True) for name, dtype in METADATA_COLUMNS]
-)
-
-
-def with_derived_accuracy(df: DataFrame) -> DataFrame:
-    """Accuracy derived from percentage × limit span.
-
-    Column-expression twin of ``Metadata``'s derived field and the
-    reference (kukur/metadata/fields.py:125-146): the percentage must lie
-    in [0, 100], and each limit falls back physical → functional
-    *independently*.
-    """
-    pct = F.col("accuracy_percentage")
-    lo = F.coalesce(F.col("physical_lower_limit"), F.col("functional_lower_limit"))
-    hi = F.coalesce(F.col("physical_upper_limit"), F.col("functional_upper_limit"))
-    derived = F.when(
-        (pct >= 0) & (pct <= 100), (hi - lo) * pct / 100.0
-    )
-    return df.withColumn("accuracy", F.coalesce(F.col("accuracy"), derived))

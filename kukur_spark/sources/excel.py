@@ -23,9 +23,6 @@ from kukur_spark.metadata import Metadata
 from kukur_spark.schema import TS_COLUMN, VALUE_COLUMN, conform
 from kukur_spark.sources.xlsx import list_sheets, read_sheet
 
-# retained for import compatibility: reads no longer need openpyxl
-HAS_EXCEL = True
-
 
 def _column_type(values: List[Any]):
     """Spark type + coercion for one column (reference per-column

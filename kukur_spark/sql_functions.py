@@ -112,7 +112,3 @@ def register_sql_functions(spark: SparkSession) -> None:
     """Install the ``ku_*`` SQL functions into the session catalog."""
     for name, body in _FUNCTIONS.items():
         spark.sql(f"CREATE OR REPLACE TEMPORARY FUNCTION {name}{body}")
-
-
-def registered_names() -> list:
-    return sorted(_FUNCTIONS)

@@ -7,10 +7,11 @@ the Spark-native extension of the 4 verbs to continuous data:
   same tag/range predicates and canonical projection;
 - ``windowed_stats``: watermarked tumbling/sliding window aggregates
   (count/sum/min/max) per series — the streaming twin of plot buckets;
-- ``session_stats``: ``session_window`` gap sessionization per key;
-- ``running_last_value``: custom stateful operator via
-  ``applyInPandasWithState`` — emits the running last value per series on
-  every trigger (the streaming analogue of the latest-value verb A2).
+- ``streaming_counter_delta`` / ``streaming_exp_smooth``: custom stateful
+  operators via ``applyInPandasWithState``, the streaming twins of the
+  batch counter-delta and smoothing folds;
+- ``streaming_expectations_gate`` / ``_report``: the validation rule
+  vocabulary evaluated per row and per event-time window.
 
 All operators compose on any streaming DataFrame (Kafka, file, socket);
 tests drive them with a file source + memory sink + processAllAvailable.
@@ -59,23 +60,6 @@ def stream_data(
     return df
 
 
-def streaming_dedup(
-    df: DataFrame,
-    key_columns: List[str],
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Exact streaming deduplication on key columns.
-
-    ``dropDuplicates`` keyed on the given columns with a watermark bound on
-    the state store: duplicates arriving within the watermark horizon are
-    dropped exactly-once; state for expired event-time windows is evicted.
-    The streaming twin of the batch exact-dedup operator.
-    """
-    return df.withWatermark(TS_COLUMN, watermark).dropDuplicates(
-        key_columns + [TS_COLUMN]
-    )
-
-
 def windowed_stats(
     df: DataFrame,
     window: str = "5 minutes",
@@ -111,67 +95,6 @@ def windowed_stats(
             "last_value",
         )
     )
-
-
-def session_stats(
-    df: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = "10 minutes",
-    group_columns: Optional[List[str]] = None,
-) -> DataFrame:
-    """Session-window aggregation keyed by inactivity gap."""
-    group_columns = group_columns or []
-    return (
-        df.withWatermark(TS_COLUMN, watermark)
-        .groupBy(F.session_window(TS_COLUMN, gap).alias("s"), *group_columns)
-        .agg(F.count(F.lit(1)).alias("n"), F.sum(VALUE_COLUMN).alias("sum_value"))
-        .select(
-            F.col("s.start").alias("session_start"),
-            F.col("s.end").alias("session_end"),
-            *group_columns,
-            "n",
-            "sum_value",
-        )
-    )
-
-
-def dedup_within_watermark(
-    df: DataFrame,
-    key_columns: List[str],
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Streaming near-time deduplication: rows with the same keys but
-    *different* event times (retries, at-least-once replays with
-    re-stamped timestamps) collapse to the first arrival, as long as
-    they land within the watermark horizon of each other.
-
-    ``dropDuplicates`` (see ``streaming_dedup``) only collapses exact
-    (keys, ts) matches; ``dropDuplicatesWithinWatermark`` keys state on
-    the columns alone and bounds it by event-time, which is the shape
-    ingestion retries actually have. State size is O(distinct keys per
-    watermark window) — the knob a 100 TB stream tunes is the horizon,
-    not the key count.
-    """
-    return df.withWatermark(TS_COLUMN, watermark).dropDuplicatesWithinWatermark(
-        key_columns
-    )
-
-
-def stream_static_enrich(
-    stream: DataFrame,
-    metadata: DataFrame,
-    on: List[str],
-) -> DataFrame:
-    """Stream-static dimension join: enrich a point stream with series
-    metadata (units, limits, interpolation type — J1's fields).
-
-    The static side re-resolves per micro-batch (metadata updates are
-    picked up without restarting the query) and is hint-broadcast: the
-    stream side never shuffles, which keeps the stateless map pipeline
-    intact at any stream rate. Left join: unknown series pass through
-    with null metadata columns (filter downstream to drop them).
-    """
-    return stream.join(F.broadcast(metadata), on=on, how="left")
 
 
 _COUNTER_STATE_SCHEMA = T.StructType(
@@ -251,363 +174,6 @@ def streaming_counter_delta(
     )
 
 
-_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("last_ts_us", T.LongType()),
-        T.StructField("last_value", T.DoubleType()),
-        T.StructField("n_total", T.LongType()),
-    ]
-)
-
-_OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("series", T.StringType()),
-        T.StructField("last_ts_us", T.LongType()),
-        T.StructField("last_value", T.DoubleType()),
-        T.StructField("n_total", T.LongType()),
-    ]
-)
-
-
-def _update_last_value(
-    key: Tuple[str], pdfs: Iterable[pd.DataFrame], state: GroupState
-):
-    last_ts, last_value, n_total = (
-        state.get if state.exists else (None, None, 0)
-    )
-    for pdf in pdfs:
-        # rows with unparseable/null timestamps cannot participate in a
-        # "latest value" — drop them instead of letting idxmax() raise on
-        # an all-NaN series and kill the streaming query
-        pdf = pdf.dropna(subset=["ts_us"])
-        if len(pdf) == 0:
-            continue
-        n_total += len(pdf)
-        idx = pdf["ts_us"].idxmax()
-        ts_us = int(pdf["ts_us"][idx])
-        if last_ts is None or ts_us >= last_ts:
-            last_ts = ts_us
-            value = pdf["value"][idx]
-            last_value = None if value != value else float(value)  # NaN-safe
-    state.update((last_ts, last_value, n_total))
-    yield pd.DataFrame(
-        {
-            "series": [key[0]],
-            "last_ts_us": [last_ts],
-            "last_value": [last_value],
-            "n_total": [n_total],
-        }
-    )
-
-
-def running_last_value(
-    df: DataFrame, series_column: str = "series"
-) -> DataFrame:
-    """Stateful running latest-value per series (A2, streaming flavor).
-
-    Input needs columns ``series, ts, value``; emits one row per series per
-    trigger with the running last value and total count.
-    """
-    prepared = df.select(
-        F.col(series_column).alias("series"),
-        F.unix_micros(F.col(TS_COLUMN).cast("timestamp")).alias("ts_us"),
-        F.col(VALUE_COLUMN).cast("double").alias("value"),
-    )
-    return prepared.groupBy("series").applyInPandasWithState(
-        _update_last_value,
-        outputStructType=_OUTPUT_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-_MERGE_OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("key", T.StringType()),
-        T.StructField("ver_us", T.LongType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("alive", T.BooleanType()),
-    ]
-)
-
-_MERGE_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("ver_us", T.LongType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("alive", T.BooleanType()),
-    ]
-)
-
-
-def _update_merge_state(
-    key: Tuple[str], pdfs: Iterable[pd.DataFrame], state: GroupState
-):
-    ver, value, alive = state.get if state.exists else (None, None, False)
-    for pdf in pdfs:
-        pdf = pdf.dropna(subset=["ver_us"])
-        if len(pdf) == 0:
-            continue
-        idx = pdf["ver_us"].idxmax()
-        v = int(pdf["ver_us"][idx])
-        if ver is None or v >= ver:
-            ver = v
-            raw = pdf["value"][idx]
-            value = None if raw != raw else float(raw)  # NaN-safe
-            alive = not bool(pdf["dead"][idx])
-    state.update((ver, value, alive))
-    yield pd.DataFrame(
-        {
-            "key": [key[0]],
-            "ver_us": [ver],
-            "value": [value],
-            "alive": [alive],
-        }
-    )
-
-
-def streaming_merge_state(
-    df: DataFrame,
-    key_column: str = "series",
-    delete_column: str = "dead",
-) -> DataFrame:
-    """Streaming flavor of ``operators/cdc.py::merge_upsert``: a keyed
-    change stream folds into latest-writer-wins state with tombstones.
-
-    Each trigger emits the current state row per touched key (``alive``
-    False = tombstoned — downstream sinks drop or propagate the delete).
-    State is 24 bytes per live key regardless of stream volume, the
-    exact streaming analogue of the batch merge's one-exchange design;
-    a newer update resurrects a tombstoned key, matching the batch
-    operator's delete-then-update semantics.
-
-    Input columns: ``{key}, ts, value, {delete}``.
-    """
-    prepared = df.select(
-        F.col(key_column).alias("key"),
-        F.unix_micros(F.col(TS_COLUMN).cast("timestamp")).alias("ver_us"),
-        F.col(VALUE_COLUMN).cast("double").alias("value"),
-        F.col(delete_column).cast("boolean").alias("dead"),
-    )
-    return prepared.groupBy("key").applyInPandasWithState(
-        _update_merge_state,
-        outputStructType=_MERGE_OUTPUT_SCHEMA,
-        stateStructType=_MERGE_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def stream_stream_window_join(
-    left: DataFrame,
-    right: DataFrame,
-    key_column: str = "series",
-    bound: str = "10 minutes",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Stream-stream inner join: each left row pairs with right rows of
-    the same key that happened in ``(left.ts - bound, left.ts)``.
-
-    The canonical streaming attribution/enrichment shape: both sides
-    carry a watermark, and the time-interval predicate lets Spark bound
-    the join state — right rows age out of state ``bound + watermark``
-    past the event time, so state size tracks the window, not the
-    stream.  Without the interval condition the state would grow
-    forever; this function exists so callers can't forget it.
-    """
-    lw = left.withWatermark(TS_COLUMN, watermark).alias("l")
-    rw = right.withWatermark(TS_COLUMN, watermark).alias("r")
-    cond = F.expr(
-        f"l.{key_column} = r.{key_column}"
-        f" AND r.ts < l.ts"
-        f" AND r.ts >= l.ts - interval {bound}"
-    )
-    return lw.join(rw, cond).select(
-        F.col(f"l.{key_column}").alias(key_column),
-        F.col("l.ts").alias("left_ts"),
-        F.col("l.value").alias("left_value"),
-        F.col("r.ts").alias("right_ts"),
-        F.col("r.value").alias("right_value"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Streaming count-min heavy hitters (bounded-state sketch)
-# ---------------------------------------------------------------------------
-_CMS_DEPTH = 4
-_CMS_WIDTH = 64
-_CMS_TOPK = 5
-
-_CMS_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("cells", T.ArrayType(T.LongType())),
-        T.StructField("cand_tokens", T.ArrayType(T.StringType())),
-        T.StructField("cand_counts", T.ArrayType(T.LongType())),
-    ]
-)
-
-_CMS_OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("group", T.StringType()),
-        T.StructField("token", T.StringType()),
-        T.StructField("est", T.LongType()),
-        T.StructField("rank", T.LongType()),
-    ]
-)
-
-
-def _cms_buckets(token: str) -> List[int]:
-    import hashlib
-
-    out = []
-    for depth in range(_CMS_DEPTH):
-        digest = hashlib.md5(f"{token}#{depth}".encode()).hexdigest()
-        out.append(int(digest[:15], 16) % _CMS_WIDTH)
-    return out
-
-
-def _update_cms(key, frames: Iterable[pd.DataFrame], state: GroupState):
-    if state.exists:
-        cells, cand_tokens, cand_counts = state.get
-        cells = list(cells)
-        cand = dict(zip(cand_tokens, cand_counts))
-    else:
-        cells = [0] * (_CMS_DEPTH * _CMS_WIDTH)
-        cand = {}
-    for frame in frames:
-        for token in frame["token"]:
-            for depth, bucket in enumerate(_cms_buckets(token)):
-                cells[depth * _CMS_WIDTH + bucket] += 1
-            cand[token] = cand.get(token, 0) + 1
-    # the candidate map is capped: keep the tokens with the highest CMS
-    # estimates (ties broken lexicographically for determinism)
-    def est(token: str) -> int:
-        return min(
-            cells[depth * _CMS_WIDTH + bucket]
-            for depth, bucket in enumerate(_cms_buckets(token))
-        )
-
-    ranked = sorted(cand, key=lambda t: (-est(t), t))[: _CMS_TOPK * 4]
-    cand = {t: cand[t] for t in ranked}
-    state.update((cells, list(cand), [cand[t] for t in cand]))
-    top = ranked[:_CMS_TOPK]
-    yield pd.DataFrame(
-        {
-            "group": [key[0]] * len(top),
-            "token": top,
-            "est": [est(t) for t in top],
-            "rank": list(range(1, len(top) + 1)),
-        }
-    )
-
-
-def streaming_cms_heavy_hitters(
-    df: DataFrame, group_column: str, token_column: str
-) -> DataFrame:
-    """Streaming heavy hitters with a bounded count-min sketch per group.
-
-    The streaming twin of the batch ``text_cms_topk`` workload: state
-    per group is exactly ``d*w`` (=256) cells plus a small candidate
-    ring — O(1) regardless of stream length, the property that makes a
-    sketch the right answer when exact per-token counts would grow
-    state without bound.  Hashes are the same md5 derivation as the
-    batch operator, so batch and stream agree on every bucket.  Each
-    micro-batch emits the current top-5 per group.
-    """
-    prepared = df.select(
-        F.col(group_column).cast("string").alias("group"),
-        F.col(token_column).cast("string").alias("token"),
-    )
-    return prepared.groupBy("group").applyInPandasWithState(
-        _update_cms,
-        outputStructType=_CMS_OUTPUT_SCHEMA,
-        stateStructType=_CMS_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-# ---------------------------------------------------------------------------
-# Streaming lifecycle state machine (twin of workloads_r7.events_state_machine)
-# ---------------------------------------------------------------------------
-_FSM_OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("n_events", T.LongType()),
-        T.StructField("final_state", T.LongType()),
-    ]
-)
-
-_FSM_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("st", T.StringType()),
-        T.StructField("n_events", T.LongType()),
-    ]
-)
-
-
-def _fsm_step(st: str, x) -> str:
-    if x == "signup" and st == "0":
-        return "1"
-    if x == "purchase" and st in ("1", "3"):
-        return "2"
-    if x == "error" and st in ("1", "2"):
-        return "3"
-    return st
-
-
-def _update_state_machine(
-    key: Tuple[int], pdfs: Iterable[pd.DataFrame], state: GroupState
-):
-    st, n = state.get if state.exists else ("0", 0)
-    # a group's trigger data may arrive as several Arrow chunks; the fold
-    # is order-dependent, so sort the WHOLE micro-batch, not each chunk
-    chunks = [pdf.dropna(subset=["ts_us"]) for pdf in pdfs]
-    chunks = [c for c in chunks if len(c)]
-    if chunks:
-        pdf = pd.concat(chunks).sort_values(["ts_us", "event_id"])
-        n += len(pdf)
-        for x in pdf["event_type"]:
-            st = _fsm_step(st, x)
-    state.update((st, n))
-    yield pd.DataFrame(
-        {
-            "user_id": [key[0]],
-            "n_events": [n],
-            "final_state": [int(st)],
-        }
-    )
-
-
-def streaming_state_machine(df: DataFrame) -> DataFrame:
-    """Per-user lifecycle DFA over a stream — the batch fold's twin.
-
-    Carries exactly the state the batch fold proves sufficient: the
-    1-char DFA state plus an event counter per user — O(1) state per
-    key regardless of history length, which is the entire argument for
-    running this on an unbounded stream.  Events are replayed in
-    (ts, event_id) order *within* each micro-batch; like any stateful
-    stream it equals the batch answer when arrival order respects event
-    time (cross-batch reordering is the watermark trade-off, same as
-    ``streaming_counter_delta``).
-
-    Input columns: ``user_id, ts, event_id, event_type``.
-    """
-    prepared = df.select(
-        F.col("user_id").cast("long").alias("user_id"),
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-        F.col("event_id").cast("long").alias("event_id"),
-        F.col("event_type"),
-    )
-    return prepared.groupBy("user_id").applyInPandasWithState(
-        _update_state_machine,
-        outputStructType=_FSM_OUTPUT_SCHEMA,
-        stateStructType=_FSM_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
 # ---------------------------------------------------------------------------
 # Streaming exponential smoothing (twin of workloads_r7.ts_exp_smooth)
 # ---------------------------------------------------------------------------
@@ -679,628 +245,6 @@ def streaming_exp_smooth(df: DataFrame, series_column: str = "series") -> DataFr
         stateStructType=_SMOOTH_STATE_SCHEMA,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-# ---------------------------------------------------------------------------
-# Sessionization with event-time timeout (closed-session emission)
-# ---------------------------------------------------------------------------
-_SESS_OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("series", T.StringType()),
-        T.StructField("session_start_us", T.LongType()),
-        T.StructField("session_end_us", T.LongType()),
-        T.StructField("n_events", T.LongType()),
-    ]
-)
-
-_SESS_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("start_us", T.LongType()),
-        T.StructField("end_us", T.LongType()),
-        T.StructField("n", T.LongType()),
-    ]
-)
-
-_SESSION_GAP_MS = 30 * 60 * 1000
-
-
-def _update_session_close(
-    key: Tuple[str], pdfs: Iterable[pd.DataFrame], state: GroupState
-):
-    if state.hasTimedOut:
-        start_us, end_us, n = state.get
-        state.remove()
-        yield pd.DataFrame(
-            {
-                "series": [key[0]],
-                "session_start_us": [start_us],
-                "session_end_us": [end_us],
-                "n_events": [n],
-            }
-        )
-        return
-    chunks = [pdf.dropna(subset=["ts_us"]) for pdf in pdfs]
-    chunks = [c for c in chunks if len(c)]
-    if not chunks:
-        return
-    pdf = pd.concat(chunks).sort_values("ts_us")
-    start_us, end_us, n = (
-        state.get if state.exists else (None, None, 0)
-    )
-    for ts_us in pdf["ts_us"]:
-        ts_us = int(ts_us)
-        if end_us is not None and ts_us - end_us > _SESSION_GAP_MS * 1000:
-            # gap inside the arriving data: close the previous session
-            # immediately (no need to wait for the timeout)
-            yield pd.DataFrame(
-                {
-                    "series": [key[0]],
-                    "session_start_us": [start_us],
-                    "session_end_us": [end_us],
-                    "n_events": [n],
-                }
-            )
-            start_us, end_us, n = None, None, 0
-        if start_us is None:
-            start_us = ts_us
-        end_us = ts_us
-        n += 1
-    state.update((start_us, end_us, n))
-    # close when the event-time watermark passes last-seen + gap
-    state.setTimeoutTimestamp(end_us // 1000 + _SESSION_GAP_MS)
-
-
-def streaming_session_close(
-    df: DataFrame, series_column: str = "series", watermark: str = "10 minutes"
-) -> DataFrame:
-    """Emit CLOSED sessions via event-time timeout — the sessionize twin
-    that an unbounded stream needs.
-
-    State per key is one (start, end, count) triple; a session closes
-    either when a later event of the same key arrives past the
-    30-minute gap, or when the event-time watermark passes
-    ``last_event + gap`` (``GroupStateTimeout.EventTimeTimeout`` —
-    no wall clock involved, so replays are deterministic).  Late rows
-    behind the watermark are the standard watermark trade-off.
-    """
-    prepared = df.withWatermark(TS_COLUMN, watermark).select(
-        F.col(series_column).alias("series"),
-        F.col(TS_COLUMN).alias("ts"),
-        F.unix_micros(F.col(TS_COLUMN).cast("timestamp")).alias("ts_us"),
-    )
-    return prepared.groupBy("series").applyInPandasWithState(
-        _update_session_close,
-        outputStructType=_SESS_OUTPUT_SCHEMA,
-        stateStructType=_SESS_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-# ---------------------------------------------------------------------------
-# Streaming Holt trend (twin of workloads_r9.ts_holt_trend)
-# ---------------------------------------------------------------------------
-_HOLT_OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("series", T.StringType()),
-        T.StructField("n", T.LongType()),
-        T.StructField("level_e6", T.LongType()),
-        T.StructField("trend_e6", T.LongType()),
-        T.StructField("fcst1_e6", T.LongType()),
-    ]
-)
-
-_HOLT_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("level_e6", T.LongType()),
-        T.StructField("trend_e6", T.LongType()),
-        T.StructField("n", T.LongType()),
-    ]
-)
-
-
-def _update_holt_trend(
-    key: Tuple[str], pdfs: Iterable[pd.DataFrame], state: GroupState
-):
-    level, trend, n = state.get if state.exists else (None, 0, 0)
-    chunks = [pdf.dropna(subset=["ts_us", "v_e6"]) for pdf in pdfs]
-    chunks = [c for c in chunks if len(c)]
-    if chunks:
-        pdf = pd.concat(chunks).sort_values(["ts_us", "v_e6"])
-        n += len(pdf)
-        for v in pdf["v_e6"]:
-            v = int(v)
-            if level is None:
-                level, trend = v, 0
-            else:
-                new_level = (v + level + trend) >> 1
-                trend = (new_level - level + trend) >> 1
-                level = new_level
-    # same all-null rule as _update_exp_smooth: no consumed point,
-    # no row, and no state entry left behind
-    if n:
-        state.update((level, trend, n))
-        yield pd.DataFrame(
-            {
-                "series": [key[0]],
-                "n": [n],
-                "level_e6": [level],
-                "trend_e6": [trend],
-                "fcst1_e6": [level + trend],
-            }
-        )
-    else:
-        yield pd.DataFrame(
-            {
-                "series": [],
-                "n": [],
-                "level_e6": [],
-                "trend_e6": [],
-                "fcst1_e6": [],
-            }
-        )
-
-
-def streaming_holt_trend(
-    df: DataFrame, series_column: str = "series"
-) -> DataFrame:
-    """Running Holt double exponential smoothing per series — the
-    two-component streaming twin of ``ts_holt_trend``.
-
-    State is exactly the batch fold's carry (level, trend, n — three
-    longs per series); values ride the same decimal→e6 bridge and
-    arithmetic-shift halving, so for in-order arrival the running
-    (level, trend) equals the batch fold over the same prefix — pinned
-    by the cross-batch test against the batch operator's recursion.
-    """
-    prepared = df.select(
-        F.col(series_column).alias("series"),
-        F.unix_micros(F.col(TS_COLUMN).cast("timestamp")).alias("ts_us"),
-        F.floor(F.col(VALUE_COLUMN).cast("decimal(30,10)") * 1_000_000)
-        .cast("long")
-        .alias("v_e6"),
-    )
-    return prepared.groupBy("series").applyInPandasWithState(
-        _update_holt_trend,
-        outputStructType=_HOLT_OUTPUT_SCHEMA,
-        stateStructType=_HOLT_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def streaming_neardup_vs_index(
-    spark,
-    stream_docs: DataFrame,
-    table_prefix: str,
-    text_column: str = "text",
-    id_column: str = "doc_id",
-    shingle_size: int = 3,
-    num_hashes: int = 0,
-    bands: int = 0,
-    jaccard_ppm_threshold: int = 500_000,
-) -> DataFrame:
-    """Streaming twin of ``dedup_index.incremental_neardup_indexed``:
-    flag each arriving document's best near-dup match in the persisted
-    MinHash index, continuously.
-
-    The ingest shape a continuously-curated corpus needs: documents
-    stream in, their md5-LSH banding rows are computed per micro-batch
-    (pure column expressions — the same code path as batch), and a
-    **stream-static bucket join** against the pre-bucketed
-    ``<prefix>_bands`` / ``<prefix>_sets`` tables yields candidates and
-    exact-Jaccard verification without ever re-reading history text.
-    The per-document best match is a streaming ``max_by`` aggregate —
-    run the sink in **update** mode; rows re-emit as better matches
-    arrive (they cannot, within one doc — bands are static — so each doc
-    emits once per micro-batch it appears in).
-
-    The new doc's hash set rides the banding explode (``carry``), so no
-    stream-stream self-join is needed.  State is one row per flagged
-    document id — bound it with a watermark on an event-time column
-    upstream if document ids are unbounded.
-    """
-    from kukur_spark.operators.dedup import (
-        EDGE_BANDS,
-        EDGE_HASHES,
-        _md5_banded,
-        _md5_base,
-    )
-
-    num_hashes = num_hashes or EDGE_HASHES
-    bands = bands or EDGE_BANDS
-    hist_bands = spark.table(f"{table_prefix}_bands")
-    hist_sets = spark.table(f"{table_prefix}_sets")
-    base = _md5_base(
-        stream_docs, text_column, id_column, shingle_size, num_hashes
-    )
-    banded = _md5_banded(base, bands, num_hashes // bands, carry=("hs",))
-    cand = (
-        banded.alias("n")
-        .join(
-            hist_bands.alias("h"),
-            on=[
-                F.col("n.band") == F.col("h.band"),
-                F.col("n.bucket") == F.col("h.bucket"),
-            ],
-        )
-        .select(
-            F.col("n.id").alias("new_id"),
-            F.col("n.hs").alias("hs_n"),
-            F.col("h.id").alias("hist_id"),
-        )
-    )
-    verified = cand.join(
-        hist_sets.select(
-            F.col("id").alias("hist_id"), F.col("hs").alias("hs_h")
-        ),
-        "hist_id",
-    )
-    inter = F.size(F.array_intersect("hs_n", "hs_h")).cast("long")
-    tot = (F.size("hs_n") + F.size("hs_h")).cast("long")
-    scored = (
-        verified.withColumn("_inter", inter)
-        .withColumn("_union", tot - inter)
-        .withColumn("jaccard_ppm", F.expr("div(_inter * 1000000, _union)"))
-        .filter(F.col("jaccard_ppm") >= jaccard_ppm_threshold)
-    )
-    # best match per doc: max jaccard, ties to the smallest hist_id —
-    # duplicate candidates from multiple shared bands collapse here too,
-    # so no stateful dropDuplicates is needed
-    best = F.max(
-        F.struct(F.col("jaccard_ppm"), (-F.col("hist_id")).alias("nh"))
-    ).alias("b")
-    return (
-        scored.groupBy("new_id")
-        .agg(best)
-        .select(
-            "new_id",
-            (-F.col("b.nh")).cast("long").alias("hist_id"),
-            F.col("b.jaccard_ppm"),
-        )
-    )
-
-
-def streaming_pii_scrub(df: DataFrame) -> DataFrame:
-    """Streaming twin of :func:`workloads_r11.docs_pii_scrub`'s scrub
-    stage: redact e-mail addresses and phone numbers from a streaming
-    ``text`` column on ingest, annotating each row with how much PII was
-    removed.
-
-    Stateless — a pure per-row projection, so it composes with any
-    trigger and needs no watermark or state store.  At scale the scrub
-    is per-executor regex CPU on the ingest path, which is exactly where
-    a training-data pipeline wants redaction to happen (before the raw
-    text is ever persisted downstream).
-    """
-    from kukur_spark.workloads_r11 import _PII_EMAIL, _PII_PHONE
-
-    counted = df.select(
-        "*",
-        F.size(
-            F.regexp_extract_all("text", F.lit(_PII_EMAIL), F.lit(0))
-        ).alias("emails_found"),
-        F.size(
-            F.regexp_extract_all("text", F.lit(_PII_PHONE), F.lit(0))
-        ).alias("phones_found"),
-    )
-    return counted.withColumn(
-        "text",
-        F.regexp_replace(
-            F.regexp_replace("text", _PII_PHONE, "<PHONE>"),
-            _PII_EMAIL,
-            "<EMAIL>",
-        ),
-    )
-
-
-def streaming_quality_gate(df: DataFrame) -> DataFrame:
-    """Streaming twin of
-    :func:`kukur_spark.workloads_r12.docs_quality_classifier`: score and
-    gate documents with the hashed-n-gram linear quality model as they
-    arrive.
-
-    Stateless — the scoring core is the same per-row projection the
-    batch query uses (``workloads_r12.quality_score``), so batch and
-    stream can never drift.  On the ingest path this is where a
-    training pipeline drops low-quality text before paying to persist
-    or shuffle it; the gate keeps only ``label = 'keep'`` rows and
-    carries the score for downstream mixing weights.
-    """
-    from kukur_spark.workloads_r12 import quality_score
-
-    return quality_score(df).filter(F.col("label") == "keep")
-
-
-# ---------------------------------------------------------------------------
-# Streaming KS drift monitor (twin of workloads_r13.docs_ks_drift)
-# ---------------------------------------------------------------------------
-_KS_OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("group", T.StringType()),
-        T.StructField("n_seen", T.LongType()),
-        T.StructField("ks_ppm", T.LongType()),
-    ]
-)
-
-
-def streaming_ks_drift(
-    df: DataFrame,
-    reference_counts: List[int],
-    group_column: str,
-    value_column: str,
-    bucket_width: int,
-) -> DataFrame:
-    """Streaming two-sample KS drift against a static reference histogram.
-
-    The streaming counterpart of the batch ``docs_ks_drift``: arriving
-    values are bucketed JVM-side into the reference's fixed histogram
-    grid, per-group bucket counts are the only state (O(#buckets),
-    stream-length independent), and each micro-batch emits the current
-    bucketed KS statistic in ppm.  The comparison is the same
-    cross-multiplied integer form as the batch operator
-    (|cum_s·n_ref − cum_ref·n_s|, exact in python ints), so a batch
-    replay over the same buckets reproduces every emitted value —
-    pinned in tests.  Bucketing (vs the batch operator's every-distinct-
-    value evaluation) is the standard bounded-state tradeoff; the grid
-    resolution is the caller's knob.
-
-    ``reference_counts`` is the reference histogram (index = value //
-    bucket_width, clamped to the last bucket) — dimension-sized and
-    captured into the state function's closure like the multimodal
-    codec seam.
-    """
-    ref = [int(x) for x in reference_counts]
-    n_ref = sum(ref)
-    if n_ref <= 0:
-        raise ValueError("reference histogram is empty")
-    num_buckets = len(ref)
-
-    def _update(key, frames: Iterable[pd.DataFrame], state: GroupState):
-        if state.exists:
-            counts = list(state.get[0])
-        else:
-            counts = [0] * num_buckets
-        for frame in frames:
-            for b in frame["bucket"]:
-                counts[int(b)] += 1
-        n_s = sum(counts)
-        cum_s = 0
-        cum_r = 0
-        best = 0
-        for i in range(num_buckets):
-            cum_s += counts[i]
-            cum_r += ref[i]
-            best = max(best, abs(cum_s * n_ref - cum_r * n_s))
-        state.update((counts,))
-        ks_ppm = best * 1_000_000 // (n_s * n_ref) if n_s else 0
-        yield pd.DataFrame(
-            {
-                "group": [key[0]],
-                "n_seen": [n_s],
-                "ks_ppm": [ks_ppm],
-            }
-        )
-
-    prepared = df.select(
-        F.col(group_column).cast("string").alias("group"),
-        F.greatest(
-            F.lit(0).cast("long"),
-            F.least(
-                F.floor(F.col(value_column) / bucket_width),
-                F.lit(num_buckets - 1),
-            ),
-        )
-        .cast("int")
-        .alias("bucket"),
-    )
-    state_schema = T.StructType(
-        [T.StructField("counts", T.ArrayType(T.LongType()))]
-    )
-    return prepared.groupBy("group").applyInPandasWithState(
-        _update,
-        outputStructType=_KS_OUTPUT_SCHEMA,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-# ---------------------------------------------------------------------------
-# Streaming next-fit sequence packing (twin of workloads_r11.docs_pack_nextfit)
-# ---------------------------------------------------------------------------
-_PACK_OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("shard", T.LongType()),
-        T.StructField("seq_idx", T.LongType()),
-        T.StructField("tok_offset", T.LongType()),
-        T.StructField("n_tokens", T.LongType()),
-    ]
-)
-
-_PACK_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("seq", T.LongType()),
-        T.StructField("fill", T.LongType()),
-    ]
-)
-
-
-def streaming_pack_nextfit(
-    df: DataFrame, capacity: int, shards: int
-) -> DataFrame:
-    """Streaming next-fit packing: assign arriving documents to training
-    sequences as they land.
-
-    The literal form of ``docs_pack_nextfit``'s scale story — next-fit
-    is the one packer whose state is O(1) per shard (current sequence
-    index + fill), so it runs as ``applyInPandasWithState`` with no
-    growth over stream length.  Fed the same documents in the same
-    per-shard order, emitted assignments equal the batch operator's
-    (pinned in tests); sequence indices keep increasing across
-    micro-batches because the carry survives the boundary.
-
-    ``df`` needs (doc_id, n_tokens) columns; sharding uses the same
-    md5 bucketing as the batch twin.
-    """
-    from kukur_spark.operators.dedup import md5_long
-
-    prepared = df.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.least(F.col("n_tokens"), F.lit(capacity))
-        .cast("long")
-        .alias("n_tokens"),
-        (md5_long(F.col("doc_id").cast("string")) % shards).alias("shard"),
-    )
-
-    def _update(key, frames: Iterable[pd.DataFrame], state: GroupState):
-        if state.exists:
-            seq, fill = state.get
-        else:
-            seq, fill = -1, capacity  # first doc opens sequence 0
-        docs, shards_, seqs, offs, toks = [], [], [], [], []
-        for frame in frames:
-            for doc_id, n in zip(frame["doc_id"], frame["n_tokens"]):
-                n = int(n)
-                if fill + n <= capacity:
-                    off = fill
-                    fill += n
-                else:
-                    seq += 1
-                    off = 0
-                    fill = n
-                docs.append(int(doc_id))
-                shards_.append(int(key[0]))
-                seqs.append(seq)
-                offs.append(off)
-                toks.append(n)
-        state.update((seq, fill))
-        yield pd.DataFrame(
-            {
-                "doc_id": docs,
-                "shard": shards_,
-                "seq_idx": seqs,
-                "tok_offset": offs,
-                "n_tokens": toks,
-            }
-        )
-
-    return prepared.groupBy("shard").applyInPandasWithState(
-        _update,
-        outputStructType=_PACK_OUTPUT_SCHEMA,
-        stateStructType=_PACK_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def streaming_chunk_dedup_vs_index(
-    spark,
-    stream_docs: DataFrame,
-    table_name: str,
-    window: int = 16,
-) -> DataFrame:
-    """Streaming twin of ``chunk_index.incremental_chunk_dedup``: as
-    documents arrive, report how many of their bytes already exist in
-    the persisted chunk-hash index.
-
-    Chunking is pure column expressions per micro-batch (same code path
-    as batch, ``operators.chunking.cdc_chunk_rows``); membership is a
-    **stream-static join** against the pre-bucketed history table, and
-    the per-document accounting is a streaming aggregate — run the sink
-    in **update** mode.  The ingest-time "is this crawl page mostly
-    boilerplate we already have" gate.
-    """
-    from kukur_spark.operators.chunking import cdc_chunk_rows
-
-    hist = spark.table(table_name).withColumn("in_hist", F.lit(1))
-    chunks = cdc_chunk_rows(
-        stream_docs, id_columns=("doc_id",), window=window
-    )
-    joined = chunks.join(hist, "h", "left")
-    return (
-        joined.groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_chunks"),
-            F.sum("chunk_len").alias("total_bytes"),
-            F.sum(
-                F.when(F.col("in_hist") == 1, F.col("chunk_len")).otherwise(0)
-            ).alias("dup_bytes"),
-        )
-        .select(
-            "doc_id",
-            "n_chunks",
-            "total_bytes",
-            "dup_bytes",
-            F.expr("dup_bytes * 1000000L div total_bytes").alias("dup_ppm"),
-        )
-    )
-
-
-def streaming_emb_decontaminate(
-    stream_vectors: DataFrame,
-    eval_vectors: DataFrame,
-    threshold_e6: int = 300_000,
-) -> DataFrame:
-    """Streaming twin of ``workloads.docs_emb_decontaminate``: score
-    each arriving embedding against the static (broadcast) eval set and
-    flag eval-set contamination continuously.
-
-    Ingest shape: training vectors stream in; the eval set is a small
-    static frame broadcast to every micro-batch, so the stream side
-    never shuffles for the join.  The per-vector best match is a
-    streaming ``max`` aggregate keyed by ``vec_id`` — run the sink in
-    **update** mode; a vector appearing once emits once.  Sims quantize
-    to e6 BEFORE thresholding, matching the batch query bit-for-bit.
-    """
-    from kukur_spark.operators.similarity import _as_double, dot, norm
-
-    ev = (
-        eval_vectors.select(
-            F.col("vec_id").alias("eval_id"),
-            _as_double(F.col("embedding")).alias("ev"),
-        )
-        .withColumn("evn", norm(F.col("ev")))
-    )
-    scored = (
-        stream_vectors.select(
-            "vec_id", _as_double(F.col("embedding")).alias("dv")
-        )
-        .withColumn("dn", norm(F.col("dv")))
-        .join(F.broadcast(ev))
-        .select(
-            "vec_id",
-            "eval_id",
-            (
-                dot(F.col("dv"), F.col("ev")) / (F.col("dn") * F.col("evn"))
-            ).alias("sim"),
-        )
-    )
-    best = (
-        scored.groupBy("vec_id")
-        .agg(
-            F.max(F.floor(F.col("sim") * F.lit(1000000.0))).alias(
-                "max_sim_e6"
-            ),
-            F.max(
-                F.struct(
-                    F.col("sim").alias("s"),
-                    (-F.col("eval_id")).alias("t"),
-                    F.col("eval_id").alias("e"),
-                )
-            ).alias("b"),
-        )
-    )
-    return best.select(
-        "vec_id",
-        F.col("b.e").alias("nearest_eval_id"),
-        F.col("max_sim_e6").cast("long").alias("max_sim_e6"),
-        F.when(F.col("max_sim_e6") >= threshold_e6, F.lit(1))
-        .otherwise(F.lit(0))
-        .cast("int")
-        .alias("contaminated"),
     )
 
 

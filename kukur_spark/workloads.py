@@ -2495,44 +2495,6 @@ _WINDOW_CANARIES = [
     "minhash_lsh_md5",  # LSH banding pipeline (deterministic md5 twin)
     "multimodal_features",  # binary-column mapInPandas path
 ]
-_WINDOW_SWEEP_R6 = [
-    "tpch_q2", "tpch_q20", "tpch_q4", "tpch_q8", "tpch_q9",
-    "tpch_q11", "tpch_q12", "tpch_q13", "tpch_q15", "tpch_q16",
-    "tpch_q21", "tpch_q22",
-    "ts_twa", "ts_paa_sax", "ts_lttb", "ts_seasonal_profile",
-    "ts_counter_delta", "ts_zscore_outliers", "ts_rate_of_change",
-    "ts_minmax_normalize", "ts_gap_detect", "ts_percentiles",
-    "ts_value_histogram", "ts_corr_pairs", "ts_ewma", "ts_autocorr",
-    "multimodal_frame_sample", "multimodal_resize",
-    "ts_rolling_quantile", "ts_cusum_changepoint",
-    "ts_trapezoid_integral", "ts_mad_outliers",
-    "events_funnel", "emb_kmeans_step", "docs_split_assign",
-    "docs_decontaminate", "docs_pipeline_yield",
-    "events_retention_cohorts", "emb_dim_stats",
-    "ts_seasonal_residual_outliers", "orders_market_basket",
-    "ts_downtime_intervals", "emb_pq_topk",
-    "ts_seasonal_naive_backtest", "events_transition_matrix",
-]
-# Round-7 sweep: the next 45 NEVER_CHECKED.md names in registry order
-# (oldest waiting first, per VERDICT r6 #1).
-_WINDOW_SWEEP_R7 = [
-    "docs_prefix_containment", "ts_stl_lite", "docs_pack_chunks",
-    "text_pmi_pairs", "orders_rfm_segments", "ts_peak_detect",
-    "events_grouping_sets", "orders_cumulative_share", "ts_interval_join",
-    "text_repetition", "docs_domain_mix", "ts_asof_nearest",
-    "emb_int8_quantize", "text_pretokenize", "events_cumulative_users",
-    "docs_hll_tokens", "events_merge_upsert", "docs_chunks",
-    "text_lev_neardup", "orders_scd2", "textrank_step",
-    "ts_quantile_sketch", "docs_sample_bernoulli",
-    "events_reservoir_per_user", "docs_training_manifest",
-    "emb_kmeans_iter2", "events_attribution", "events_incremental_rollup",
-    "text_cms_topk", "text_df_score", "graph_triangles",
-    "ts_matrix_profile", "emb_power_iter", "docs_novelty",
-    "docs_temperature_mix", "ts_matrix_profile_banded", "ts_linreg_trend",
-    "ts_ma_crossover", "events_skew_report", "docs_bloom_probe",
-    "text_gini_diversity", "ts_interarrival_stats", "orders_benford",
-    "text_inverted_index", "events_dau_wau",
-]
 
 
 def _set_window(queries: Dict[str, Callable], window: List[str]) -> Dict:
@@ -2544,63 +2506,9 @@ def _set_window(queries: Dict[str, Callable], window: List[str]) -> Dict:
     return {name: queries[name] for name in list(window) + rest}
 
 
-# Round-8 sweep: the five r7 dq_* queries and docs_emb_decontaminate
-# first (newest unverified surface, per VERDICT r7 #1), then the next
-# 39 NEVER_CHECKED.md names in registry order.  33 oracled names remain
-# for the r9 sweep, which clears the backlog.
-_WINDOW_SWEEP_R8 = [
-    "dq_expectations", "dq_referential_integrity", "dq_uniqueness",
-    "dq_profile", "dq_version_diff", "docs_emb_decontaminate",
-    "ts_staleness", "lineitem_quality_report", "docs_bm25_topk",
-    "docs_hybrid_rrf", "docs_unigram_logprob", "docs_pack_sequences",
-    "docs_balanced_sample", "docs_mixture_weights", "retrieval_ndcg",
-    "join_cardinality_estimate", "docs_weighted_sample",
-    "docs_curriculum_buckets", "ts_exp_smooth", "events_state_machine",
-    "events_markov_transitions", "ts_sax_motifs", "sessions_entry_exit",
-    "docs_vocab_drift", "emb_class_margin", "lineitem_weighted_median",
-    "docs_rag_query", "docs_dup_rate_by_source", "events_error_burst",
-    "ts_threshold_streaks", "events_conversion_lag", "orders_repeat_rate",
-    "ts_profile_anomaly", "supplier_lead_time", "ts_leadlag_corr",
-    "docs_source_overlap", "docs_bigram_surprisal",
-    "docs_boilerplate_chunks", "docs_blocklist_filter", "dedup_lsh_recall",
-    "docs_decontaminate_13gram", "parts_basket_lift", "ts_holt_trend",
-    "docs_stratified_sample", "events_salted_agg",
-]
-
-# Round-9 sweep (terminal): the 34 remaining NEVER_CHECKED.md names in
-# registry order — this clears the oracled driver-verification backlog
-# (every oracled query then has a CORRECTNESS_r* green row).  Of the 11
-# spare slots, one goes to the round's new registration
-# (dq_profile_drift_sketch) and 10 to cross-family re-verification of
-# the oldest driver-greens (r1-r5 rounds), cheapest regression
-# insurance now that no first-time names remain.
-_WINDOW_SWEEP_R9 = [
-    # --- the 34 never-driver-checked names (NEVER_CHECKED.md order) ---
-    "parts_skyline", "events_path_trigrams", "emb_semantic_clusters",
-    "minhash_estimate_error", "nation_revenue_gini", "parts_brand_hhi",
-    "docs_dsir_weights", "docs_softdedup_weights",
-    "docs_leakage_safe_split", "docs_dup_ngram_spans",
-    "docs_pack_nextfit", "docs_epoch_shards", "emb_int8_quant_stats",
-    "docs_pii_scrub", "docs_quality_classifier", "docs_fastcdc_chunks",
-    "emb_matryoshka_recall", "events_kmv_overlap",
-    "docs_pack_bestfit_eval", "ts_theilsen_trend", "ts_mann_kendall",
-    "ts_pettitt_change", "ts_trimmed_mean", "orders_pareto_abc",
-    "docs_qq_deciles", "text_burstiness", "events_rank_suite",
-    "docs_quota_allocation", "ts_acf_multi", "orders_cohort_ltv",
-    "emb_ann_recall", "docs_lang_confusion", "emb_knn_accuracy",
-    "dq_profile_drift",
-    # --- new this round (registered after the r8 ledger): the HLL
-    # twin of dq_profile_drift, driver-checked on registration ---
-    "dq_profile_drift_sketch",
-    # --- 10 re-verification slots: oldest greens across families ---
-    "simhash_md5", "dedup_clusters", "dedup_incremental",
-    "ts_series_discovery", "ts_latest_value", "ts_plot_buckets",
-    "emb_topk_bruteforce", "tpch_q3", "tpch_q5", "text_langid",
-]
-
 # ---------------------------------------------------------------------------
-# Standing re-verification rotation (round 10+).  The one-shot per-round
-# sweeps above cleared the first-time backlog in round 9 (every oracled
+# Standing re-verification rotation (round 10+).  One-shot per-round
+# sweeps cleared the first-time backlog in round 9 (every oracled
 # query has a driver-green CORRECTNESS row).  From round 10 the window is
 # COMPUTED, not pinned: the 5 canaries plus the 45 oracled names whose
 # most recent driver-green round is OLDEST, read directly from the

@@ -510,7 +510,7 @@ def emb_ivfpq_topk(spark: SparkSession, sf: str) -> DataFrame:
     codes and the broadcast codebooks.
 
     Scale: at 10⁹+ vectors the inverted lists live hive-partitioned on
-    disk (``operators/ann_index.py``) and queries scan nprobe/C of the
+    disk and queries scan nprobe/C of the
     codes (~1.5 % of a 1.5 TB code table here); the ADC is a pure
     column expression over one element_at per subspace.  Every float
     chain is written in the oracle's left-associative order, so

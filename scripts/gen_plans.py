@@ -11,16 +11,13 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import BENCH_QUERIES  # noqa: E402
 from kukur_spark.planaudit import audit  # noqa: E402
 from kukur_spark.session import get_spark  # noqa: E402
 from kukur_spark.workloads import QUERIES  # noqa: E402
 
-BENCH = [
-    "tpch_q1", "tpch_q3", "tpch_q5", "tpch_q6", "top_customer_per_nation",
-    "ts_range_filter", "ts_plot_buckets", "ts_asof_join",
-    "ts_resample_linear", "ts_twa", "ts_lttb", "events_daily_window",
-    "sessionize", "dedup_exact", "text_token_stats", "text_langid",
-    "minhash_lsh_pairs", "emb_topk_bruteforce",
+# plans audited beyond the bench headliners
+EXTRA_PLANS = [
     # r6 retrieval / prep batch
     "docs_bm25_topk", "docs_hybrid_rrf", "docs_unigram_logprob",
     "docs_pack_sequences", "docs_balanced_sample", "docs_mixture_weights",
@@ -59,7 +56,7 @@ def main() -> None:
         " exchanges | python | 1-part win | unbnd cross |",
         "|---|---|---|---|---|---|---|---|---|",
     ]
-    for name in BENCH:
+    for name in BENCH_QUERIES + EXTRA_PLANS:
         df = QUERIES[name](spark, sf)
         killers = audit(df)
         df.count()  # run it: AQE finalizes the plan (codegen markers

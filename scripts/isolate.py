@@ -23,17 +23,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import BENCH_QUERIES  # noqa: E402
 from kukur_spark.io import TABLES, load_table  # noqa: E402
 from kukur_spark.session import get_spark  # noqa: E402
 from kukur_spark.workloads import QUERIES  # noqa: E402
-
-BENCH = [
-    "tpch_q1", "tpch_q3", "tpch_q5", "tpch_q6", "top_customer_per_nation",
-    "ts_range_filter", "ts_plot_buckets", "ts_asof_join",
-    "ts_resample_linear", "ts_twa", "ts_lttb", "events_daily_window",
-    "sessionize", "dedup_exact", "text_token_stats", "text_langid",
-    "minhash_lsh_pairs", "emb_topk_bruteforce",
-]
 
 
 def main() -> None:
@@ -49,7 +42,7 @@ def main() -> None:
         tag = args[i + 1]
         del args[i : i + 2]
     sf = args[0] if args else "/root/testdata/sf0.1"
-    names = args[1:] or BENCH
+    names = args[1:] or BENCH_QUERIES
     spark = get_spark("isolate")
     for t in TABLES:
         load_table(spark, sf, t)

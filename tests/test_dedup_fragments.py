@@ -77,7 +77,7 @@ def test_md5_signature_sequence_matches_unrolled(spark):
     )
     diff = sh.selectExpr(
         f"{new_form} AS new_sig", f"{old_form} AS old_sig"
-    ).filter("new_sig != old_sig")
+    ).filter("NOT (new_sig <=> old_sig)")
     assert diff.count() == 0
 
 
@@ -103,5 +103,5 @@ def test_band_buckets_sequence_matches_unrolled(spark, hs_table):
     )
     diff = sig.selectExpr(
         f"{new_structs} AS new_bb", f"{old_structs} AS old_bb"
-    ).filter("new_bb != old_bb")
+    ).filter("NOT (new_bb <=> old_bb)")
     assert diff.count() == 0

@@ -1,11 +1,10 @@
-"""Delta CDF → incremental dedup, end-to-end.
+"""Delta CDF → incremental expectations, end-to-end.
 
 The stated point of ``read_delta_changes`` is that incremental
 pipelines consume the per-commit delta instead of re-scanning the
-table.  This drives that composition for real: a documents Delta table
-grows by one commit; the CDF insert rows for that commit feed the
-persisted MinHash index (``operators/dedup_index.py``) and answer
-identically to handing the batch over directly.
+table.  This drives that composition for real: a lineitem Delta table
+grows commit by commit, and the expectations report over its change
+feed names the commit that introduced each violation.
 """
 
 from __future__ import annotations
@@ -13,30 +12,7 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import functions as F
-
-from kukur_spark.io import load_table
-from kukur_spark.operators.dedup_index import (
-    build_minhash_index,
-    incremental_neardup_indexed,
-)
-from kukur_spark.sources.delta_log import read_delta, read_delta_changes
-
 SF = "/root/testdata/sf0.001"
-
-
-def _docs_schema_string():
-    return json.dumps(
-        {
-            "type": "struct",
-            "fields": [
-                {"name": "doc_id", "type": "long", "nullable": True,
-                 "metadata": {}},
-                {"name": "text", "type": "string", "nullable": True,
-                 "metadata": {}},
-            ],
-        }
-    )
 
 
 def _commit_file(log_dir, version, actions):
@@ -52,61 +28,6 @@ def _stage_parquet(df, root, name):
         if f.endswith(".parquet") and not f.startswith("_")
     ][0]
     os.replace(os.path.join(root, "stage", part), os.path.join(root, name))
-
-
-def test_cdf_inserts_feed_incremental_dedup(spark, tmp_path):
-    import shutil
-    import uuid
-
-    root = str(tmp_path / "docs_delta")
-    log_dir = os.path.join(root, "_delta_log")
-    os.makedirs(log_dir)
-
-    docs = load_table(spark, SF, "documents").select("doc_id", "text")
-    history = docs.filter(F.col("doc_id") % 5 != 0)
-    batch = docs.filter(F.col("doc_id") % 10 == 0)
-    _stage_parquet(history, root, "f0.parquet")
-    _stage_parquet(batch, root, "f1.parquet")
-    meta = {
-        "metaData": {
-            "id": "docs",
-            "format": {"provider": "parquet", "options": {}},
-            "schemaString": _docs_schema_string(),
-            "partitionColumns": [],
-            "configuration": {},
-        }
-    }
-    add = lambda p: {"add": {"path": p, "partitionValues": {}, "size": 1,
-                             "modificationTime": 0, "dataChange": True}}
-    _commit_file(log_dir, 0, [
-        {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
-        meta, add("f0.parquet"),
-    ])
-    _commit_file(log_dir, 1, [add("f1.parquet")])
-
-    # index the v0 snapshot once
-    prefix = f"dedupidx.cdf_{uuid.uuid4().hex[:8]}"
-    warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    shutil.rmtree(warehouse.removeprefix("file:"), ignore_errors=True)
-    spark.sql("CREATE DATABASE IF NOT EXISTS dedupidx")
-    build_minhash_index(read_delta(spark, root, version=0), prefix,
-                        id_column="doc_id")
-
-    # the commit's CDF inserts ARE the batch
-    changes = read_delta_changes(spark, root, 1, 1)
-    new_docs = changes.filter(F.col("_change_type") == "insert").select(
-        "doc_id", "text"
-    )
-    assert new_docs.count() == batch.count()
-
-    got = incremental_neardup_indexed(
-        spark, new_docs, prefix, id_column="doc_id"
-    ).collect()
-    want = incremental_neardup_indexed(
-        spark, batch, prefix, id_column="doc_id"
-    ).collect()
-    assert sorted(tuple(r) for r in got) == sorted(tuple(r) for r in want)
-    assert got, "the sf0.001 batch should hit near-dups in history"
 
 
 def test_cdf_incremental_expectations_per_commit(spark, tmp_path):

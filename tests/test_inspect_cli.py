@@ -145,26 +145,6 @@ def test_cli_sql_subcommand(spark, tmp_path, capsys):
     assert "'n': 2" in out and "'t': 3.5" in out
 
 
-def test_schema_report_flags_drift(spark, tmp_path):
-    from kukur_spark.inspect import schema_report
-
-    spark.createDataFrame(
-        [(1, "a")], "id long, name string"
-    ).coalesce(1).write.parquet(str(tmp_path / "d1.parquet"))
-    spark.createDataFrame(
-        [(2, 3.5)], "id long, score double"
-    ).coalesce(1).write.parquet(str(tmp_path / "d2.parquet"))
-    # Spark's own directory-dataset layout is read directly (first part
-    # file per export directory)
-    rows = schema_report(spark, str(tmp_path)).collect()
-    by_col = {}
-    for r in rows:
-        by_col.setdefault(r.column, []).append(r)
-    assert by_col["id"][0].in_all_files and by_col["id"][0].n_files == 2
-    assert not by_col["name"][0].in_all_files  # disappeared in export_1
-    assert not by_col["score"][0].in_all_files  # appeared in export_1
-
-
 def test_inspect_detect_delta_toggle(tmp_path):
     """Reference FileOptions.detect_delta parity: with detection off a
     Delta dir lists as a plain directory (reference

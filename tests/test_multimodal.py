@@ -89,39 +89,3 @@ def test_resize_real_codec_gated(spark):
     assert "NotImplementedError" in str(err.value) or isinstance(
         err.value, NotImplementedError
     )
-
-
-def test_codec_registry_seam(spark, assets):
-    """A deployment-side decoder plugs in through register_codec and runs
-    inside the executor task (captured at plan-build time); modalities
-    without a codec still hit the NotImplementedError gate."""
-    from kukur_spark.operators.multimodal import (
-        register_codec,
-        unregister_codec,
-    )
-
-    # lambda → cloudpickle serializes by value, so the fake codec ships
-    # to executors the same way a deployment's module-level decoder would
-    register_codec("image", lambda payload: payload + payload)
-    try:
-        images_only = assets.filter("modality = 'image'")
-        stub = {
-            r["asset_id"]: r for r in decode_features(images_only).collect()
-        }
-        real = {
-            r["asset_id"]: r
-            for r in decode_features(images_only, real_codec=True).collect()
-        }
-        assert real, "no image assets generated"
-        for asset_id, row in real.items():
-            assert row["size_bytes"] == 2 * stub[asset_id]["size_bytes"]
-        # audio/video have no registered codec → gate still raises
-        with pytest.raises(Exception, match="registered codec"):
-            decode_features(
-                assets.filter("modality = 'audio'"), real_codec=True
-            ).collect()
-    finally:
-        unregister_codec("image")
-    # after unregistering, image decoding gates again
-    with pytest.raises(Exception, match="registered codec"):
-        decode_features(images_only, real_codec=True).collect()

@@ -12,7 +12,6 @@ from kukur_spark.operators.asof import asof_join
 from kukur_spark.operators.dedup import (
     exact_dedup,
     minhash_lsh_pairs,
-    ngram_jaccard_pairs,
     simhash_pairs,
 )
 from kukur_spark.operators.plot import plot_buckets, plot_downsample
@@ -21,7 +20,7 @@ from kukur_spark.operators.similarity import (
     ivf_topk,
     lsh_topk,
 )
-from kukur_spark.operators.text import language_id, quality_score, token_stats
+from kukur_spark.operators.text import language_id
 
 
 def ts(day, hour=0):
@@ -53,6 +52,21 @@ def test_plot_downsample_keeps_envelope(spark):
     values = [r["value"] for r in reduced]
     assert 0.0 in values and 6.0 in values  # envelope preserved
     assert len(reduced) <= 8
+
+
+def test_plot_downsample_input_with_bucket_column(spark):
+    """An input column named ``bucket`` must not collide with the
+    operator's own bucket id (it used to be an ambiguous reference)."""
+    rows = [(ts(1, h), float(h % 7), "s1", -1) for h in range(24)]
+    df = spark.createDataFrame(
+        rows, "ts timestamp, value double, series string, bucket int"
+    )
+    plain = plot_downsample(df.drop("bucket"), START, END, 2, ["series"])
+    reduced = plot_downsample(df, START, END, 2, ["series"])
+    assert reduced.columns == ["series", "ts", "value"]
+    assert reduced.collect() == plain.collect()
+    stats = plot_buckets(df, START, END, 2).collect()
+    assert [r["bucket"] for r in stats] == [0]
 
 
 def test_plot_window_half_open(spark):
@@ -140,15 +154,6 @@ def test_simhash_near_dups(spark, docs):
     assert hamming[(1, 2)] == 0  # identical text → identical simhash
 
 
-def test_ngram_jaccard_blocked(spark, docs):
-    pairs = ngram_jaccard_pairs(docs, block_columns=["source"]).collect()
-    scores = {(r["id_a"], r["id_b"]): r["jaccard"] for r in pairs}
-    assert scores[(1, 2)] == 1.0
-    assert 0.5 < scores[(1, 3)] < 1.0
-    assert (4, 5) in scores  # same block
-    assert (1, 4) not in scores  # different block never compared
-
-
 # -- similarity ------------------------------------------------------------
 @pytest.fixture()
 def vectors(spark):
@@ -189,21 +194,6 @@ def test_ivf_topk_returns_k(spark, vectors):
     ).collect()
     assert len(out) == 2
     assert out[0]["neighbor_id"] == 1
-
-
-# -- text ------------------------------------------------------------------
-def test_token_stats(spark, docs):
-    out = {r["doc_id"]: r for r in token_stats(docs).collect()}
-    assert out[1]["n_tokens"] == 9
-    assert out[1]["n_unique_tokens"] == 8  # 'the' twice
-    assert out[1]["avg_token_chars"] == pytest.approx(
-        (len(DOCS[0][1]) - 8) / 9, abs=1e-6
-    )
-
-
-def test_quality_score_bounds(spark, docs):
-    for row in quality_score(docs).collect():
-        assert 0.0 < row["quality_score"] <= 1.0
 
 
 def test_language_id_markers(spark):

@@ -64,7 +64,6 @@ def _rule_pool(V):
         lambda: ("value_non_negative", V.non_negative("value")),
         lambda: ("value_in_range", V.in_range("value", -1.0, 2.0)),
         lambda: ("series_in_set", V.in_set("series", ["s1", "s2"])),
-        lambda: ("series_matches", V.matches("series", "^s[0-9]$")),
         lambda: ("series_not_null", V.not_null("series")),
     ]
 

@@ -2,14 +2,11 @@
 
 from datetime import datetime, timezone
 
-import pytest
-
 from pyspark.sql import functions as F
 
 from kukur_spark.operators.asof import asof_join
 from kukur_spark.operators.dedup import minhash_lsh_pairs
 from kukur_spark.operators.partitions import _enumerate, partition_predicates
-from kukur_spark.operators.scale import salted_join
 from kukur_spark.timeutil import epoch_ns, epoch_us
 
 
@@ -86,13 +83,6 @@ def test_asof_multi_column_values_come_from_one_row(spark):
     out = asof_join(left, right, on=["k"], value_columns=["a", "b"]).collect()
     # must be the Jan 2 row exactly: (None, 2.0) — not a mix (1.0, 2.0)
     assert (out[0]["a"], out[0]["b"]) == (None, 2.0)
-
-
-# -- scale: unsupported join types rejected --------------------------------
-def test_salted_join_rejects_right_join(spark):
-    df = spark.createDataFrame([("k", 1.0)], "key string, v double")
-    with pytest.raises(ValueError, match="inner/left"):
-        salted_join(df, df, ["key"], how="full")
 
 
 # -- timeutil: exact epochs, UTC policy ------------------------------------

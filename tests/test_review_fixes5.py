@@ -1,56 +1,9 @@
-"""Regression tests for the round-5 ADVICE batch: streaming KS bucket
-clamp, multi-table LSH dim contract, and the range-partition
-single-materialization guarantee in operators/scale.
+"""Regression tests for the round-5 ADVICE batch: multi-table LSH dim
+contract and the range-partition single-materialization guarantee in
+operators/scale.
 """
 
-import uuid
-
 import pyspark.sql.functions as F
-
-
-def test_streaming_ks_drift_clamps_negative_values(spark, tmp_path):
-    """A value below 0 must land in bucket 0, not wrap to a tail bucket
-    through Python negative list indexing inside the state function."""
-    from kukur_spark.streaming import streaming_ks_drift
-
-    width, nb = 10, 8
-    ref_values = [5, 15, 25, 35]
-    ref = [0] * nb
-    for v in ref_values:
-        ref[min(v // width, nb - 1)] += 1
-
-    def py_ks(seen):
-        counts = [0] * nb
-        for v in seen:
-            counts[max(0, min(v // width, nb - 1))] += 1
-        n_s, n_r = len(seen), len(ref_values)
-        cs = cr = best = 0
-        for i in range(nb):
-            cs += counts[i]
-            cr += ref[i]
-            best = max(best, abs(cs * n_r - cr * n_s))
-        return best * 1_000_000 // (n_s * n_r)
-
-    path = str(tmp_path / "ksneg")
-    schema = "grp string, value long"
-    seen = [-25, -5, 5, 15]  # two negatives -> bucket 0
-    spark.createDataFrame(
-        [("g", v) for v in seen], schema
-    ).coalesce(1).write.parquet(path)
-    stream = spark.readStream.schema(schema).parquet(path)
-    out = streaming_ks_drift(stream, ref, "grp", "value", width)
-    name = f"ksneg_{uuid.uuid4().hex[:8]}"
-    query = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    query.processAllAvailable()
-    query.stop()
-    rows = spark.sql(f"SELECT * FROM {name}").collect()
-    assert rows[-1].n_seen == 4
-    assert rows[-1].ks_ppm == py_ks(seen)
 
 
 def test_multi_table_signatures_dim_contract(spark):

@@ -1,15 +1,10 @@
-"""Skew and bucketing helpers: correctness + shuffle-free bucketed joins."""
+"""Skew, distributed-ranking and table-maintenance helpers."""
 
 import pytest
 
 from pyspark.sql import functions as F
 
-from kukur_spark.operators.scale import (
-    bucketed_join_ready,
-    salted_aggregate,
-    salted_join,
-    write_bucketed,
-)
+from kukur_spark.operators.scale import salted_aggregate
 
 
 @pytest.fixture()
@@ -50,40 +45,6 @@ def test_salted_aggregate_matches_plain(spark, skewed_df):
         ).collect()
     }
     assert salted == plain
-
-
-def test_salted_join_matches_plain(spark, skewed_df):
-    dim = spark.createDataFrame(
-        [("hot", "HOT"), ("k1", "K1"), ("k5", "K5")], "key string, label string"
-    )
-    plain = sorted(
-        (r["key"], r["v"], r["label"])
-        for r in skewed_df.join(dim, "key").collect()
-    )
-    salted = sorted(
-        (r["key"], r["v"], r["label"])
-        for r in salted_join(skewed_df, dim, ["key"], salt=4).collect()
-    )
-    assert salted == plain
-    assert len(salted) == 900 + 5 + 5  # hot + k1 + k5 cold rows
-
-
-def test_bucketed_join_has_no_shuffle(spark):
-    spark.sql("DROP TABLE IF EXISTS bt_left")
-    spark.sql("DROP TABLE IF EXISTS bt_right")
-    left = spark.range(1000).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("a")
-    )
-    right = spark.range(1000).select(
-        F.col("id").alias("k"), (F.col("id") * 3).alias("b")
-    )
-    write_bucketed(left, "bt_left", "k", buckets=4)
-    write_bucketed(right, "bt_right", "k", buckets=4)
-    joined, shuffle_free = bucketed_join_ready(spark, "bt_left", "bt_right", "k")
-    assert shuffle_free, "bucketed join should not shuffle"
-    assert joined.count() == 1000
-    spark.sql("DROP TABLE bt_left")
-    spark.sql("DROP TABLE bt_right")
 
 
 def test_distributed_ntile_matches_window_ntile(spark):
@@ -175,33 +136,6 @@ def test_distributed_ntile_plan_is_bucket_partitioned(spark):
     assert "existingrdd" not in plan, plan
 
 
-def test_ivf_index_build_query_matches_inmemory_and_prunes(spark, tmp_path):
-    """Persisted IVF index: build+query returns exactly what the
-    in-memory operator returns, and the query scan carries a
-    centroid_id PartitionFilter (only probed lists are read)."""
-    from kukur_spark.io import load_table
-    from kukur_spark.operators.ann_index import build_ivf_index, ivf_index_topk
-    from kukur_spark.operators.similarity import ivf_topk
-    from pyspark.sql import functions as F
-
-    sf = "/root/testdata/sf0.001"
-    emb = load_table(spark, sf, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
-
-    path = str(tmp_path / "ivf")
-    build_ivf_index(emb, path, num_centroids=16)
-    got = ivf_index_topk(spark, path, queries, k=5, nprobe=4)
-
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [centroid_id" in plan, plan
-
-    want = ivf_topk(queries, emb, k=5, nprobe=4)
-    g = sorted(map(tuple, got.collect()))
-    w = sorted(map(tuple, want.collect()))
-    assert g == w
-    assert len(g) == 50  # 10 queries x k
-
-
 def test_table_stats_and_compaction(spark, tmp_path):
     """40 tiny files across 2 hive partitions compact to the planned
     per-partition file counts with identical data."""
@@ -240,112 +174,11 @@ def test_compaction_unpartitioned_splits_to_target(spark, tmp_path):
     spark.range(1000).repartition(25).write.parquet(src)
     (n_files, nbytes) = table_stats(spark, src)[()]
     assert n_files == 25
-    # target half the table size -> 2 output files
-    compact_table(spark, src, dst, target_file_bytes=max(nbytes // 2, 1))
+    # target half the table size, rounded up so that
+    # ceil(nbytes / target) is exactly 2 for odd nbytes too
+    compact_table(spark, src, dst, target_file_bytes=(nbytes + 1) // 2)
     assert table_stats(spark, dst)[()][0] == 2
     assert spark.read.parquet(dst).count() == 1000
-
-
-def test_zorder_interleave_matches_reference(spark):
-    from kukur_spark.operators.layout import _interleave
-    from pyspark.sql import functions as F
-
-    df = spark.createDataFrame(
-        [(a, b) for a in (0, 1, 5, 1023) for b in (0, 1, 7, 512)],
-        "a long, b long",
-    )
-    rows = df.select(
-        "a", "b", _interleave(F.col("a"), F.col("b"), 10).alias("z")
-    ).collect()
-
-    def ref(a, b):
-        z = 0
-        for i in range(10):
-            z |= ((a >> i) & 1) << (2 * i)
-            z |= ((b >> i) & 1) << (2 * i + 1)
-        return z
-
-    for r in rows:
-        assert r["z"] == ref(r["a"], r["b"]), (r["a"], r["b"])
-
-
-def test_zorder_write_prunes_both_dimensions(spark, tmp_path):
-    from kukur_spark.operators.layout import zorder_write
-    from pyspark.sql import functions as F
-
-    path = str(tmp_path / "z")
-    grid = spark.range(64 * 64).select(
-        (F.col("id") % 64).alias("x"),
-        (F.col("id") / 64).cast("long").alias("y"),
-    )
-    zorder_write(grid, path, ["x", "y"], num_files=16, bits=6)
-
-    table = spark.read.parquet(path)
-    assert table.count() == 4096
-
-    def files_with_matches(cond):
-        return (
-            table.filter(cond)
-            .select(F.input_file_name())
-            .distinct()
-            .count()
-        )
-
-    # on the Morton curve an eighth of either dimension lives in a
-    # fraction of the files; a single-column sort would leave the other
-    # dimension smeared across all 16
-    assert files_with_matches(F.col("x") < 8) <= 8
-    assert files_with_matches(F.col("y") < 8) <= 8
-
-
-def test_delete_keys_rewrites_only_hit_partitions(spark, tmp_path):
-    import os
-    from kukur_spark.operators.layout import delete_keys
-    from pyspark.sql import functions as F
-
-    path = str(tmp_path / "gdpr")
-    df = spark.range(100).select(
-        F.col("id").alias("user_id"), (F.col("id") % 4).alias("day")
-    )
-    df.write.partitionBy("day").parquet(path)
-
-    def files_of(day):
-        d = os.path.join(path, f"day={day}")
-        return sorted(
-            (f, os.path.getmtime(os.path.join(d, f)))
-            for f in os.listdir(d)
-            if not f.startswith(("_", "."))
-        )
-
-    untouched_before = files_of(1)
-    doomed = spark.createDataFrame([(8,), (16,)], "user_id long")  # day=0 only
-    rewritten = delete_keys(spark, path, doomed, "user_id", "day")
-    assert [str(p) for p in rewritten] == ["0"]
-
-    assert files_of(1) == untouched_before  # byte-for-byte untouched
-    remaining = spark.read.parquet(path)
-    assert remaining.count() == 98
-    assert remaining.filter(F.col("user_id").isin(8, 16)).count() == 0
-    assert remaining.filter(F.col("day") == 0).count() == 23
-
-
-def test_delete_keys_removes_fully_doomed_partition(spark, tmp_path):
-    """Dynamic overwrite writes nothing for a partition whose every row
-    is doomed — the operator must still remove its files."""
-    from kukur_spark.operators.layout import delete_keys
-    from pyspark.sql import functions as F
-
-    path = str(tmp_path / "gdpr_full")
-    spark.createDataFrame(
-        [(1, "a"), (2, "a"), (3, "b"), (4, "b")], "user_id long, day string"
-    ).write.partitionBy("day").parquet(path)
-
-    doomed = spark.createDataFrame([(1,), (2,)], "user_id long")  # all of day=a
-    rewritten = delete_keys(spark, path, doomed, "user_id", "day")
-    assert rewritten == ["a"]
-    remaining = spark.read.parquet(path)
-    assert sorted(r["user_id"] for r in remaining.collect()) == [3, 4]
-    assert remaining.filter(F.col("day") == "a").count() == 0
 
 
 def test_compaction_escaped_and_null_partition_values(spark, tmp_path):
@@ -382,46 +215,6 @@ def test_table_stats_ignores_hidden_directories(spark, tmp_path):
     stats = table_stats(spark, path)
     assert list(stats) == [()]
     assert stats[()][0] == 1  # only the data file
-
-
-def test_ivf_index_append_matches_rebuild(spark, tmp_path):
-    """Index maintenance: appending a batch against the existing
-    centroids answers queries identically to a full rebuild on the
-    union (batch ids above the centroid-seed range, so both paths use
-    the same centroid set)."""
-    from kukur_spark.io import load_table
-    from kukur_spark.operators.ann_index import (
-        append_to_ivf_index,
-        build_ivf_index,
-        ivf_index_topk,
-    )
-    from pyspark.sql import functions as F
-
-    sf = "/root/testdata/sf0.001"
-    emb = load_table(spark, sf, "embeddings")
-    history = emb.filter(F.col("vec_id") < 400)
-    batch = emb.filter(F.col("vec_id") >= 400)
-    queries = emb.filter(F.col("vec_id") < 10)
-
-    grown = str(tmp_path / "ivf_grown")
-    build_ivf_index(history, grown, num_centroids=16)
-    append_to_ivf_index(spark, batch, grown)
-    got = sorted(
-        map(tuple, ivf_index_topk(spark, grown, queries, k=5, nprobe=4).collect())
-    )
-
-    rebuilt = str(tmp_path / "ivf_rebuilt")
-    build_ivf_index(emb, rebuilt, num_centroids=16)
-    want = sorted(
-        map(tuple, ivf_index_topk(spark, rebuilt, queries, k=5, nprobe=4).collect())
-    )
-    assert got == want
-    assert len(got) == 50
-    # the appended rows must actually be reachable: at least one result
-    # neighbor comes from the appended batch
-    assert any(g[1] >= 400 for g in got) or all(
-        w[1] < 400 for w in want
-    )
 
 
 def test_keyed_lag_matches_window(spark):

@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from kukur_spark.base import SERIES_NAME_TAG, SeriesSearch, SeriesSelector
-from kukur_spark.sources.excel import HAS_EXCEL, ExcelSource
+from kukur_spark.sources.excel import ExcelSource
 from kukur_spark.sources.file_source import FileSource, FileSourceOptions
 from kukur_spark.sources.gpx import GpxSource
 from kukur_spark.sources.plugin import PluginSource

@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from kukur_spark.base import SeriesSelector
-from kukur_spark.sql_functions import register_sql_functions, registered_names
+from kukur_spark.sql_functions import register_sql_functions
 
 
 @pytest.fixture(scope="module", autouse=True)
@@ -125,7 +125,10 @@ def test_sql_functions_inline_no_python(spark):
 
 
 def test_registered_names_stable(spark):
-    assert registered_names() == [
+    installed = sorted(
+        f.name for f in spark.catalog.listFunctions() if f.name.startswith("ku_")
+    )
+    assert installed == [
         "ku_bucket",
         "ku_haversine_m",
         "ku_jaccard_e6",

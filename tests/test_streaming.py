@@ -8,12 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from kukur_spark.streaming import (
-    running_last_value,
-    session_stats,
-    stream_data,
-    windowed_stats,
-)
+from kukur_spark.streaming import stream_data, windowed_stats
 
 SCHEMA = T.StructType(
     [
@@ -80,91 +75,6 @@ def test_windowed_stats(spark, stream_dir):
     assert first["sum_value"] == 3.0
     assert first["first_value"] == 1.0 and first["last_value"] == 2.0
     assert rows[("s1", 5)]["n"] == 1
-
-
-def test_session_stats_gap_split(spark, stream_dir):
-    df = stream_data(spark, stream_dir, SCHEMA, tags={"series": "s2"})
-    agg = session_stats(df, gap="30 minutes", group_columns=["series"])
-    name = run_to_memory(agg)
-    rows = spark.sql(f"SELECT * FROM {name} ORDER BY session_start").collect()
-    # append mode emits only watermark-closed sessions: the 0:01 session
-    # closed (watermark reached 0:40 = 0:50 max event - 10 min); the 0:50
-    # session stays open in state — correct late-data semantics
-    assert len(rows) == 1
-    assert rows[0]["session_start"].minute == 1
-    assert rows[0]["session_end"].minute == 31  # start + 30 min gap
-    assert rows[0]["n"] == 1
-
-
-def test_streaming_dedup(spark, tmp_path):
-    from kukur_spark.streaming import streaming_dedup
-
-    rows = [
-        ("s1", ts(0), 1.0),
-        ("s1", ts(0), 1.0),  # duplicate (same series + ts)
-        ("s1", ts(2), 2.0),
-        ("s2", ts(0), 9.0),
-    ]
-    spark.createDataFrame(rows, SCHEMA).coalesce(1).write.parquet(
-        str(tmp_path / "dup")
-    )
-    df = stream_data(spark, str(tmp_path / "dup"), SCHEMA)
-    deduped = streaming_dedup(df, ["series"])
-    name = run_to_memory(deduped)
-    out = spark.sql(f"SELECT * FROM {name}").collect()
-    assert len(out) == 3  # duplicate dropped exactly-once
-
-
-def test_running_last_value_stateful(spark, stream_dir):
-    df = stream_data(spark, stream_dir, SCHEMA)
-    out = running_last_value(df)
-    name = run_to_memory(out)
-    rows = {
-        r["series"]: r for r in spark.sql(f"SELECT * FROM {name}").collect()
-    }
-    assert rows["s1"]["last_value"] == 3.0
-    assert rows["s1"]["n_total"] == 3
-    assert rows["s2"]["last_value"] == 20.0
-
-
-def test_dedup_within_watermark_collapses_restamped(spark, tmp_path):
-    from kukur_spark.streaming import dedup_within_watermark
-
-    rows = [
-        ("s1", ts(0), 1.0),
-        ("s1", ts(1), 1.0),  # same (series, value), re-stamped ts: retry
-        ("s1", ts(2), 2.0),
-        ("s2", ts(0), 1.0),  # same value, different series: kept
-    ]
-    spark.createDataFrame(rows, SCHEMA).coalesce(1).write.parquet(
-        str(tmp_path / "restamp")
-    )
-    df = stream_data(spark, str(tmp_path / "restamp"), SCHEMA)
-    deduped = dedup_within_watermark(df, ["series", "value"])
-    name = run_to_memory(deduped)
-    out = spark.sql(f"SELECT series, value FROM {name}").collect()
-    assert sorted((r["series"], r["value"]) for r in out) == [
-        ("s1", 1.0),
-        ("s1", 2.0),
-        ("s2", 1.0),
-    ]
-
-
-def test_stream_static_enrich_broadcasts_metadata(spark, stream_dir):
-    from kukur_spark.streaming import stream_static_enrich
-
-    metadata = spark.createDataFrame(
-        [("s1", "m/s", 0.0, 100.0)],
-        "series string, unit string, low double, high double",
-    )
-    df = stream_data(spark, stream_dir, SCHEMA)
-    enriched = stream_static_enrich(df, metadata, on=["series"])
-    assert enriched.isStreaming
-    name = run_to_memory(enriched)
-    rows = spark.sql(f"SELECT * FROM {name}").collect()
-    assert len(rows) == 5  # left join: unknown series pass through
-    units = {r["series"]: r["unit"] for r in rows}
-    assert units["s1"] == "m/s" and units["s2"] is None
 
 
 def test_streaming_counter_delta_across_batches(spark, tmp_path):
@@ -244,7 +154,14 @@ def test_stream_ingest_then_compaction(spark, tmp_path):
     rows = [("s1", ts(m), float(m)) for m in range(30)]
     spark.createDataFrame(rows, SCHEMA).repartition(10).write.parquet(src)
 
-    stream = stream_data(spark, src, SCHEMA)
+    # one input file per trigger, so each micro-batch lands its own file
+    # whatever the core count (one batch over all ten files would pack
+    # them into defaultParallelism tasks)
+    stream = (
+        spark.readStream.schema(SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
     query = (
         stream.writeStream.outputMode("append")
         .format("parquet")
@@ -256,187 +173,13 @@ def test_stream_ingest_then_compaction(spark, tmp_path):
     query.stop()
 
     (n_files, _) = table_stats(spark, lake)[()]
-    assert n_files >= 10  # fragmented: one file per input task
+    assert n_files >= 10  # fragmented: one file per trigger
 
     compact_table(spark, lake, packed, target_file_bytes=10**9)
     assert table_stats(spark, packed)[()][0] == 1
     before = sorted(r["value"] for r in spark.read.parquet(lake).collect())
     after = sorted(r["value"] for r in spark.read.parquet(packed).collect())
     assert before == after == [float(m) for m in range(30)]
-
-
-def test_streaming_merge_state_upsert_delete_across_batches(spark, tmp_path):
-    from kukur_spark.streaming import streaming_merge_state
-
-    schema = T.StructType(
-        [
-            T.StructField("series", T.StringType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("dead", T.BooleanType()),
-        ]
-    )
-    path = str(tmp_path / "cdc")
-    batch1 = [("k1", ts(0), 1.0, False), ("k2", ts(1), 2.0, False)]
-    spark.createDataFrame(batch1, schema).coalesce(1).write.parquet(path)
-    df = stream_data(spark, path, schema)
-    out = streaming_merge_state(df)
-    name = f"cdc_{uuid.uuid4().hex[:8]}"
-    query = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    query.processAllAvailable()
-    # batch 2: update k1, tombstone k2, stale out-of-order row for k1
-    # (older ts must NOT overwrite), insert k3
-    batch2 = [
-        ("k1", ts(5), 10.0, False),
-        ("k1", ts(2), 99.0, False),   # within-batch older: loses to ts(5)
-        ("k2", ts(6), 0.0, True),
-        ("k3", ts(3), 7.0, False),
-    ]
-    spark.createDataFrame(batch2, schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(path)
-    query.processAllAvailable()
-    # batch 3: stale cross-batch update for k1 (ts older than state),
-    # resurrect k2 after its delete
-    batch3 = [("k1", ts(4), 55.0, False), ("k2", ts(9), 3.5, False)]
-    spark.createDataFrame(batch3, schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(path)
-    query.processAllAvailable()
-    query.stop()
-    rows = spark.sql(
-        f"SELECT * FROM {name} WHERE key IN ('k1','k2','k3')"
-    ).collect()
-    # memory sink in update mode appends each trigger's emissions; the
-    # last row per key is the final state
-    final = {}
-    for r in rows:
-        final[r["key"]] = r
-    assert final["k1"]["value"] == 10.0 and final["k1"]["alive"]
-    assert final["k2"]["value"] == 3.5 and final["k2"]["alive"]  # resurrected
-    assert final["k3"]["value"] == 7.0 and final["k3"]["alive"]
-
-
-def test_stream_stream_window_join_bounds_matches(spark, tmp_path):
-    from kukur_spark.streaming import stream_stream_window_join
-
-    lpath, rpath = str(tmp_path / "purch"), str(tmp_path / "touch")
-    # purchases at minute 20 and 40; touches at minutes 12, 15, 35;
-    # with a 10-minute bound: purchase@20 matches touches@12,15 (not 35);
-    # purchase@40 matches touch@35 only
-    purchases = [("u1", ts(20), 100.0), ("u1", ts(40), 200.0)]
-    touches = [("u1", ts(12), 1.0), ("u1", ts(15), 2.0), ("u1", ts(35), 3.0)]
-    spark.createDataFrame(purchases, SCHEMA).coalesce(1).write.parquet(lpath)
-    spark.createDataFrame(touches, SCHEMA).coalesce(1).write.parquet(rpath)
-    joined = stream_stream_window_join(
-        stream_data(spark, lpath, SCHEMA),
-        stream_data(spark, rpath, SCHEMA),
-        bound="10 minutes",
-    )
-    name = run_to_memory(joined)
-    rows = spark.sql(
-        f"SELECT * FROM {name} ORDER BY left_ts, right_ts"
-    ).collect()
-    got = [(r["left_value"], r["right_value"]) for r in rows]
-    assert got == [(100.0, 1.0), (100.0, 2.0), (200.0, 3.0)]
-
-
-def test_streaming_cms_heavy_hitters_across_batches(spark, tmp_path):
-    from kukur_spark.streaming import streaming_cms_heavy_hitters
-
-    path = str(tmp_path / "cms")
-    schema = "grp string, token string"
-    batch1 = [("g", t) for t in ["a"] * 5 + ["b"] * 3 + ["c"] * 1]
-    spark.createDataFrame(batch1, schema).coalesce(1).write.parquet(path)
-    stream = (
-        spark.readStream.schema(schema).parquet(path)
-    )
-    out = streaming_cms_heavy_hitters(stream, "grp", "token")
-    name = f"cms_{uuid.uuid4().hex[:8]}"
-    query = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    query.processAllAvailable()
-    first = spark.sql(
-        f"SELECT * FROM {name} ORDER BY rank"
-    ).collect()
-    assert [r.token for r in first[:2]] == ["a", "b"]
-    assert first[0].est >= 5  # CMS never undercounts
-
-    # batch 2: "b" overtakes "a"; sketch state survives the boundary
-    batch2 = [("g", "b")] * 6
-    spark.createDataFrame(batch2, schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(path)
-    query.processAllAvailable()
-    query.stop()
-    # the memory sink accumulates batches; the batch-2 snapshot is the
-    # rank-1 row whose estimate includes the 6 new "b" arrivals
-    rows = spark.sql(f"SELECT * FROM {name}").collect()
-    assert any(r.token == "b" and r.rank == 1 and r.est >= 9 for r in rows)
-
-
-def test_streaming_state_machine_across_batches(spark, tmp_path):
-    from kukur_spark.streaming import streaming_state_machine
-
-    schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("event_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-        ]
-    )
-    path = str(tmp_path / "fsm")
-    # u1: signup → purchase spans the batch boundary; u2 never signs up
-    batch1 = [
-        (1, ts(0), 1, "view"),
-        (1, ts(1), 2, "signup"),
-        (2, ts(2), 3, "purchase"),  # ignored from state 0
-    ]
-    spark.createDataFrame(batch1, schema).coalesce(1).write.parquet(path)
-    df = stream_data(spark, path, schema)
-    out = streaming_state_machine(df)
-    name = f"fsm_{uuid.uuid4().hex[:8]}"
-    query = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    query.processAllAvailable()
-    mid = {
-        r["user_id"]: r
-        for r in spark.sql(f"SELECT * FROM {name}").collect()
-    }
-    assert mid[1]["final_state"] == 1 and mid[1]["n_events"] == 2
-    assert mid[2]["final_state"] == 0
-    # batch 2: u1 purchase (1→2) then error (2→3); u2 signup (0→1);
-    # out-of-order within the batch is replayed in (ts, event_id) order
-    batch2 = [
-        (1, ts(9), 6, "error"),
-        (1, ts(5), 5, "purchase"),
-        (2, ts(6), 7, "signup"),
-    ]
-    spark.createDataFrame(batch2, schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(path)
-    query.processAllAvailable()
-    query.stop()
-    rows = spark.sql(f"SELECT * FROM {name}").collect()
-    final = {}
-    for r in rows:  # update mode: last emission per user wins
-        final[r["user_id"]] = r
-    assert final[1]["final_state"] == 3 and final[1]["n_events"] == 4
-    assert final[2]["final_state"] == 1 and final[2]["n_events"] == 2
 
 
 def test_streaming_exp_smooth_across_batches(spark, tmp_path):
@@ -471,320 +214,6 @@ def test_streaming_exp_smooth_across_batches(spark, tmp_path):
     assert final["s1"]["n"] == 3
     # s2: 8e6 → (8e6+4e6)>>1 = 6e6
     assert final["s2"]["smooth_e6"] == 6_000_000 and final["s2"]["n"] == 2
-
-
-def test_streaming_session_close_event_time_timeout(spark, tmp_path):
-    from kukur_spark.streaming import streaming_session_close
-
-    path = str(tmp_path / "sessclose")
-    # u1: two events 2 min apart (one session); s2: single event
-    batch1 = [
-        ("s1", ts(0), 1.0),
-        ("s1", ts(2), 2.0),
-        ("s2", ts(1), 5.0),
-    ]
-    spark.createDataFrame(batch1, SCHEMA).coalesce(1).write.parquet(path)
-    df = stream_data(spark, path, SCHEMA)
-    out = streaming_session_close(df, watermark="5 minutes")
-    name = f"sc_{uuid.uuid4().hex[:8]}"
-    query = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    query.processAllAvailable()
-    assert spark.sql(f"SELECT * FROM {name}").count() == 0  # nothing closed
-    # batch 2: an s1 event 90 min later closes s1's first session via the
-    # in-data gap; its own session stays open. The late timestamp also
-    # advances the watermark far past s2's last event + 30 min gap, so
-    # s2's session closes via the EVENT-TIME TIMEOUT on the next trigger.
-    batch2 = [("s1", datetime(2020, 1, 1, 1, 30, tzinfo=timezone.utc), 3.0)]
-    spark.createDataFrame(batch2, SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(path)
-    query.processAllAvailable()
-    # one more (empty-data) trigger lets pending timeouts fire
-    spark.createDataFrame(
-        [("s3", datetime(2020, 1, 1, 3, 0, tzinfo=timezone.utc), 0.0)],
-        SCHEMA,
-    ).coalesce(1).write.mode("append").parquet(path)
-    query.processAllAvailable()
-    query.stop()
-    rows = spark.sql(f"SELECT * FROM {name}").collect()
-    closed = {(r.series, r.session_start_us, r.n_events) for r in rows}
-    t0 = int(ts(0).timestamp() * 1_000_000)
-    t1 = int(ts(1).timestamp() * 1_000_000)
-    assert ("s1", t0, 2) in closed  # closed by in-data gap
-    assert ("s2", t1, 1) in closed  # closed by event-time timeout
-
-
-def test_streaming_holt_trend_across_batches(spark, tmp_path):
-    from kukur_spark.streaming import streaming_holt_trend
-
-    path = str(tmp_path / "holt")
-    batch1 = [("s1", ts(0), 100.0), ("s1", ts(1), 50.0)]
-    spark.createDataFrame(batch1, SCHEMA).coalesce(1).write.parquet(path)
-    df = stream_data(spark, path, SCHEMA)
-    out = streaming_holt_trend(df)
-    name = f"holt_{uuid.uuid4().hex[:8]}"
-    query = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    query.processAllAvailable()
-    batch2 = [("s1", ts(5), 10.0)]
-    spark.createDataFrame(batch2, SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(path)
-    query.processAllAvailable()
-    query.stop()
-    rows = spark.sql(f"SELECT * FROM {name}").collect()
-    final = {r["series"]: r for r in rows}  # update mode: last wins
-    # replay the batch recursion: l0=100e6,b0=0
-    level, trend = 100_000_000, 0
-    for v in (50_000_000, 10_000_000):
-        new_level = (v + level + trend) >> 1
-        trend = (new_level - level + trend) >> 1
-        level = new_level
-    r = final["s1"]
-    assert (r["level_e6"], r["trend_e6"], r["n"]) == (level, trend, 3)
-    assert r["fcst1_e6"] == level + trend
-
-
-def test_streaming_pii_scrub_redacts_on_ingest(spark, tmp_path):
-    from kukur_spark.streaming import streaming_pii_scrub
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    rows = [
-        (1, "reach me at alice@example.com or 12-345-678-9012 thanks"),
-        (2, "no pii here at all"),
-        (3, "two mails a@b.io c@d.org one phone 99-111-222-3333"),
-    ]
-    src = str(tmp_path / "docs")
-    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(src)
-    df = spark.readStream.format("parquet").schema(schema).load(src)
-    out = streaming_pii_scrub(df)
-    assert out.isStreaming
-    name = run_to_memory(out)
-    got = {
-        r["doc_id"]: r for r in spark.sql(f"SELECT * FROM {name}").collect()
-    }
-    assert got[1]["emails_found"] == 1 and got[1]["phones_found"] == 1
-    assert got[1]["text"] == "reach me at <EMAIL> or <PHONE> thanks"
-    assert got[2]["emails_found"] == 0 and got[2]["phones_found"] == 0
-    assert got[2]["text"] == "no pii here at all"
-    assert got[3]["emails_found"] == 2 and got[3]["phones_found"] == 1
-    assert "@" not in got[3]["text"]
-    spark.catalog.dropTempView(name)
-
-
-def test_streaming_quality_gate_matches_batch(spark, tmp_path):
-    """The streaming gate must emit exactly the batch classifier's
-    'keep' rows with identical scores."""
-    from kukur_spark.streaming import streaming_quality_gate
-    from kukur_spark.workloads_r12 import docs_quality_classifier
-
-    batch = {
-        r["doc_id"]: r
-        for r in docs_quality_classifier(
-            spark, "/root/testdata/sf0.001"
-        ).collect()
-    }
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    src = str(tmp_path / "docs")
-    (
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        .select("doc_id", "text")
-        .coalesce(1)
-        .write.parquet(src)
-    )
-    df = spark.readStream.format("parquet").schema(schema).load(src)
-    out = streaming_quality_gate(df)
-    assert out.isStreaming
-    name = run_to_memory(out)
-    got = {
-        r["doc_id"]: r for r in spark.sql(f"SELECT * FROM {name}").collect()
-    }
-    kept = {k for k, v in batch.items() if v["label"] == "keep"}
-    assert set(got) == kept
-    for k, row in got.items():
-        assert row["score_e6"] == batch[k]["score_e6"]
-        assert row["label"] == "keep"
-    spark.catalog.dropTempView(name)
-
-
-def test_streaming_ks_drift_matches_batch_replay(spark, tmp_path):
-    """Each emitted KS value equals an exact python replay over the same
-    buckets, and bucket-count state survives the batch boundary."""
-    from kukur_spark.streaming import streaming_ks_drift
-
-    width, nb = 10, 8
-    ref_values = [5, 15, 15, 25, 25, 25, 35, 75]  # reference sample
-    ref = [0] * nb
-    for v in ref_values:
-        ref[min(v // width, nb - 1)] += 1
-
-    def py_ks(seen):
-        counts = [0] * nb
-        for v in seen:
-            counts[min(v // width, nb - 1)] += 1
-        n_s, n_r = len(seen), len(ref_values)
-        cs = cr = best = 0
-        for i in range(nb):
-            cs += counts[i]
-            cr += ref[i]
-            best = max(best, abs(cs * n_r - cr * n_s))
-        return best * 1_000_000 // (n_s * n_r)
-
-    path = str(tmp_path / "ks")
-    schema = "grp string, value long"
-    batch1 = [("g", v) for v in [5, 15, 25, 25]]
-    spark.createDataFrame(batch1, schema).coalesce(1).write.parquet(path)
-    stream = spark.readStream.schema(schema).parquet(path)
-    out = streaming_ks_drift(stream, ref, "grp", "value", width)
-    name = f"ks_{uuid.uuid4().hex[:8]}"
-    query = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    query.processAllAvailable()
-    rows = spark.sql(f"SELECT * FROM {name}").collect()
-    assert rows[-1].n_seen == 4
-    assert rows[-1].ks_ppm == py_ks([5, 15, 25, 25])
-
-    batch2 = [("g", v) for v in [65, 75, 75]]  # drift right
-    spark.createDataFrame(batch2, schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(path)
-    query.processAllAvailable()
-    query.stop()
-    rows = spark.sql(f"SELECT * FROM {name} ORDER BY n_seen").collect()
-    assert rows[-1].n_seen == 7  # state carried across batches
-    assert rows[-1].ks_ppm == py_ks([5, 15, 25, 25, 65, 75, 75])
-
-
-def test_streaming_pack_nextfit_matches_batch(spark, tmp_path):
-    """Fed the same docs in per-shard doc_id order, the streaming packer
-    reproduces docs_pack_nextfit's assignments, with sequence state
-    carried across micro-batches."""
-    from pyspark.sql import functions as F
-
-    from kukur_spark.io import load_table
-    from kukur_spark.streaming import streaming_pack_nextfit
-    from kukur_spark.workloads_r11 import (
-        _PACK_C,
-        _PACK_SHARDS,
-        docs_pack_nextfit,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    expected = {
-        r.doc_id: (r.shard, r.seq_idx, r.tok_offset, r.n_tokens)
-        for r in docs_pack_nextfit(spark, sf).collect()
-    }
-
-    docs = (
-        load_table(spark, sf, "documents")
-        .select(
-            "doc_id",
-            F.size(F.split("text", " ")).cast("long").alias("n_tokens"),
-        )
-        .orderBy("doc_id")
-        .collect()
-    )
-    # two batches split mid-stream; doc_id order == per-shard arrival
-    # order, matching the batch twin's array_sort
-    half = len(docs) // 2
-    path = str(tmp_path / "pack")
-    schema = "doc_id long, n_tokens long"
-    spark.createDataFrame(
-        [(r.doc_id, r.n_tokens) for r in docs[:half]], schema
-    ).coalesce(1).write.parquet(path)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    )
-    out = streaming_pack_nextfit(stream, _PACK_C, _PACK_SHARDS)
-    name = f"pack_{uuid.uuid4().hex[:8]}"
-    query = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    query.processAllAvailable()
-    spark.createDataFrame(
-        [(r.doc_id, r.n_tokens) for r in docs[half:]], schema
-    ).coalesce(1).write.mode("append").parquet(path)
-    query.processAllAvailable()
-    query.stop()
-
-    got = {
-        r.doc_id: (r.shard, r.seq_idx, r.tok_offset, r.n_tokens)
-        for r in spark.sql(f"SELECT * FROM {name}").collect()
-    }
-    assert got == expected
-
-
-def test_streaming_emb_decontaminate_matches_batch(spark, tmp_path):
-    """The streaming twin reproduces docs_emb_decontaminate exactly
-    across two micro-batches (broadcast static eval set, update-mode
-    max aggregate)."""
-    from kukur_spark.io import load_table
-    from kukur_spark.streaming import streaming_emb_decontaminate
-    from kukur_spark.workloads import QUERIES
-
-    sf = "/root/testdata/sf0.001"
-    emb = load_table(spark, sf, "embeddings").select("vec_id", "embedding")
-    ev = emb.filter(F.col("vec_id") < 32)
-    docs = emb.filter(F.col("vec_id") >= 32)
-
-    stream_path = tmp_path / "emb_stream"
-    stream_path.mkdir()
-    docs.filter(F.col("vec_id") % 2 == 0).coalesce(1).write.mode(
-        "append"
-    ).parquet(str(stream_path))
-
-    stream = spark.readStream.schema(docs.schema).parquet(str(stream_path))
-    flagged = streaming_emb_decontaminate(stream, ev)
-    name = f"decon_{uuid.uuid4().hex[:8]}"
-    query = (
-        flagged.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        query.processAllAvailable()
-        docs.filter(F.col("vec_id") % 2 == 1).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(stream_path))
-        query.processAllAvailable()
-        got = sorted(tuple(r) for r in spark.table(name).collect())
-    finally:
-        query.stop()
-
-    want = sorted(
-        tuple(r) for r in QUERIES["docs_emb_decontaminate"](spark, sf).collect()
-    )
-    assert got == want
-    assert any(r[3] == 1 for r in got), "corpus should contain contamination"
 
 
 def test_streaming_expectations_gate_flags_planted_rows(spark, tmp_path):

@@ -1,13 +1,13 @@
 """All-null groups must leave NO state behind (ADVICE r9): before this
-fix, _update_exp_smooth/_update_holt_trend wrote a (None, 0) state
-entry for a series whose every arrival was null — a permanent,
-invisible per-key leak since the output row is suppressed.  The fold
-functions are plain generators, so drive them with a fake GroupState
+fix, _update_exp_smooth wrote a (None, 0) state entry for a series
+whose every arrival was null — a permanent, invisible per-key leak
+since the output row is suppressed.  The fold function is a plain
+generator, so drive it with a fake GroupState
 and assert update() is only called once a real value lands."""
 
 import pandas as pd
 
-from kukur_spark.streaming import _update_exp_smooth, _update_holt_trend
+from kukur_spark.streaming import _update_exp_smooth
 
 
 class FakeState:
@@ -61,22 +61,3 @@ def test_exp_smooth_existing_state_survives_all_null_batch():
     # carried n stays 1 > 0, so the fold re-emits and state persists
     assert state.updates == [(4_000_000, 1)]
     assert out["smooth_e6"].tolist() == [4_000_000]
-
-
-def test_holt_all_null_batch_leaves_no_state():
-    state = FakeState()
-    out = _drain(
-        _update_holt_trend(("s1",), [_pdf([(1, None), (2, None)])], state)
-    )
-    assert state.updates == []
-    assert not state.exists
-    assert len(out) == 0
-
-
-def test_holt_updates_once_value_arrives():
-    state = FakeState()
-    _drain(_update_holt_trend(("s1",), [_pdf([(1, None)])], state))
-    assert not state.exists
-    out = _drain(_update_holt_trend(("s1",), [_pdf([(2, 2_000_000)])], state))
-    assert state.updates == [(2_000_000, 0, 1)]
-    assert out["fcst1_e6"].tolist() == [2_000_000]

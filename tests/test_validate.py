@@ -27,7 +27,6 @@ def test_rule_semantics_on_synthetic(spark):
         V.non_negative("v"),
         V.in_range("v", 0.0, 5.0),
         V.in_set("cat", ["A", "B"]),
-        V.matches("code", "^x[0-9]$"),
         V.unique("id"),
         V.foreign_key(["id"], ref, ["rid"]),
     ]
@@ -39,7 +38,6 @@ def test_rule_semantics_on_synthetic(spark):
     assert got["non_negative(v)"] == (2, False)  # -5.0 and the null
     assert got["in_range(v,0.0,5.0)"] == (3, False)  # -5, 10, null
     assert got["in_set(cat)"] == (1, False)  # C
-    assert got["matches(code)"] == (1, False)  # zz
     assert got["unique(id)"] == (1, False)  # duplicate 4
     # null id rows are orphans too (left_anti keeps them)
     assert got["foreign_key(id)"] == (1, False)
