@@ -3,15 +3,8 @@
 Deliberately a LEAF module (imports only ``operators.dedup``): the
 survivorship / soft-dedup / leakage-split oracles in ``workloads_r10``
 and ``workloads_r13`` derive their SQL from ``DEDUP_CLUSTERS_SQL`` at
-module-import time.  While these templates lived in
-``kukur_spark.workloads``, that call-time import re-entered
-``workloads`` mid-module whenever a ``workloads_r{10,13}`` module was
-imported FIRST in a process: ``workloads`` then snapshotted the
-half-built ``R{10,13}_ORACLES`` dicts and silently dropped every oracle
-registered after the re-entry point (measured: ORACLES 239 → 236 with
-``workloads_r13`` imported first).  Housing the shared templates below
-both modules removes the cycle structurally instead of depending on
-import order.
+module-import time, and ``kukur_spark.workloads`` imports both modules,
+so the templates live below all three to keep the imports acyclic.
 """
 
 from kukur_spark.operators.dedup import (

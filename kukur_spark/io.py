@@ -146,7 +146,7 @@ def load_table(
 # safe: the quantile-literal design keeps lineage replayable, so a
 # consumer that still references an evicted plan just recomputes it.
 _PERSISTED_FIFO: "list[DataFrame]" = []
-_PERSISTED_CAP = int(os.environ.get("SPARK_GRAFT_PERSIST_CAP", "8"))
+_PERSISTED_CAP = 8
 
 
 def persist_once(df: DataFrame) -> DataFrame:
@@ -160,10 +160,10 @@ def persist_once(df: DataFrame) -> DataFrame:
     session.
 
     Plans persisted here are tracked in a bounded FIFO
-    (``SPARK_GRAFT_PERSIST_CAP``, default 8): once full, the oldest
-    engine-initiated persist is unpersisted (non-blocking).  ``0`` (or
+    (``_PERSISTED_CAP``, 8): once full, the oldest engine-initiated
+    persist is unpersisted (non-blocking).  A cap of ``0`` (or
     negative) disables EVICTION — the cache grows unbounded, matching
-    the 0-disables-the-guard convention of the sibling knobs.  Frames
+    the 0-disables-the-guard convention of the sibling caps.  Frames
     the CALLER persisted hit the early return and are never tracked, so
     caller-managed caches are never evicted by the engine.
     """

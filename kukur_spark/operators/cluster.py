@@ -16,14 +16,12 @@ doubling joins touch only the node-sized label table.  The loop stops
 exactly at convergence by counting changed labels.  All operations are
 DataFrame joins/aggregations, so the edge set can be arbitrarily large;
 the one exception is deliberate and bounded — edge sets small enough to
-be a broadcast side (≤ ``SPARK_GRAFT_CC_DRIVER_MAX_EDGES``) solve as a
+be a broadcast side (≤ ``_CC_DRIVER_MAX_EDGES``) solve as a
 driver-side union-find instead of paying shuffle rounds (see
 ``connected_components``).
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -31,9 +29,7 @@ from pyspark.sql import functions as F
 # Edge-count bound for the driver-side union-find fast path (0 disables).
 # Below this, the whole edge set is smaller than a broadcast-join side —
 # solving it where it sits beats paying O(log diameter) shuffle rounds.
-_CC_DRIVER_MAX_EDGES = int(
-    os.environ.get("SPARK_GRAFT_CC_DRIVER_MAX_EDGES", "131072")
-)
+_CC_DRIVER_MAX_EDGES = 131072
 
 
 def _driver_union_find(rows) -> dict:
@@ -94,7 +90,7 @@ def connected_components(
     **Adaptive small-graph path**: the edge set is materialized once
     (checkpoint below) before the loop, so its exact count costs one
     cached scan.  When it is at most ``driver_max_edges`` (default
-    ``SPARK_GRAFT_CC_DRIVER_MAX_EDGES`` = 131072 — two longs per edge,
+    ``_CC_DRIVER_MAX_EDGES`` = 131072 — two longs per edge,
     ~2 MB, the same order as a broadcast-join side; 0 disables), the
     transitive closure runs as a driver-side union-find instead of
     O(log diameter) shuffle rounds — the AQE move of re-planning a

@@ -16,17 +16,16 @@ whole-stage codegen and scales to 100 TB document tables:
 Recall contract under the bucket-skew cap (``_band_candidates``): every
 completeness guarantee above — the SimHash pigeonhole, the md5 twins'
 bit-for-bit oracle equality — holds whenever no (band, bucket) exceeds
-``SPARK_GRAFT_LSH_BUCKET_CAP`` (4096), which is every oracle-gate SF and
-any corpus without a >4096-member near-dup family.  Above the cap, the
+``_LSH_BUCKET_CAP`` (4096), which is every oracle-gate SF and any
+corpus without a >4096-member near-dup family.  Above the cap, the
 guarantees soften to bounded recall by design: the exact candidate set
-IS the n²/2 blow-up the cap exists to prevent.  Set the env var to 0 to
-recover exactness at your own straggler risk.
+IS the n²/2 blow-up the cap exists to prevent.  Pass ``max_bucket=0``
+to recover exactness at your own straggler risk.
 """
 
 from __future__ import annotations
 
 import logging
-import os
 import weakref
 from typing import Optional
 
@@ -38,7 +37,7 @@ from kukur_spark.io import persist_once
 # Per-(band, bucket) membership bound for the LSH self-join; buckets
 # larger than this are sub-split so no single task materializes more
 # than ~cap² candidate pairs.  0 disables (exact all-pairs per bucket).
-_LSH_BUCKET_CAP = int(os.environ.get("SPARK_GRAFT_LSH_BUCKET_CAP", "4096"))
+_LSH_BUCKET_CAP = 4096
 
 # Hard absolute ceiling on the toy-scale guard skip: the skip trusts
 # Catalyst's sizeInBytes-derived row estimate, and an optimizer
@@ -46,9 +45,7 @@ _LSH_BUCKET_CAP = int(os.environ.get("SPARK_GRAFT_LSH_BUCKET_CAP", "4096"))
 # would silently disable the skew guard at real scale — reintroducing
 # the n²/2 blow-up.  Never skip when the estimated banded row count
 # exceeds this, however favorable the per-bucket bound looks.
-_LSH_SKIP_ROW_CEILING = int(
-    os.environ.get("SPARK_GRAFT_LSH_SKIP_ROW_CEILING", "4000000")
-)
+_LSH_SKIP_ROW_CEILING = 4000000
 
 _LOG = logging.getLogger(__name__)
 
@@ -234,7 +231,7 @@ def _band_candidates(
     bucket) would otherwise put n²/2 pairs in a single join task — at
     corpus scale that is both a straggler and an output blow-up nothing
     downstream can absorb.  Buckets whose membership exceeds
-    ``max_bucket`` (default ``SPARK_GRAFT_LSH_BUCKET_CAP``, 4096; 0
+    ``max_bucket`` (default ``_LSH_BUCKET_CAP``, 4096; 0
     disables) are deterministically sub-split by ``xxhash64(id)`` into
     ceil(n/cap) sub-buckets, bounding every join task to ~cap² pairs.
     Cross-sub-bucket pairs inside an over-full bucket are not emitted —
@@ -293,8 +290,7 @@ def _band_candidates(
         if _guard_elided(bound, max_bucket, bands):
             _LOG.info(
                 "LSH skew guard elided: estimated bucket bound %d within "
-                "cap %d pair budget (set SPARK_GRAFT_LSH_SKIP_ROW_CEILING"
-                "=0 to always guard)",
+                "cap %d pair budget",
                 bound,
                 max_bucket,
             )

@@ -391,20 +391,10 @@ class FileSource:
         if declared is not None:
             target = declared
         elif isinstance(dtype, T.StringType):
-            # sniff once per (source, column): the result is a property of
-            # the file, and interval-split reads would otherwise re-run
-            # this eager job per chunk
-            cache = getattr(self, "_sniff_cache", None)
-            if cache is None:
-                cache = self._sniff_cache = {}
-            if column in cache:
-                sample = cache[column]
-            else:
-                first = (
-                    df.select(column).filter(df[column].isNotNull()).first()
-                )
-                sample = first[0] if first is not None else None
-                cache[column] = sample
+            # sniffed per series: the caller's TTL plan cache holds the
+            # result per selector
+            first = df.select(column).filter(df[column].isNotNull()).first()
+            sample = first[0] if first is not None else None
             # the sniff honors the configured decimal separator: "1,5" is a
             # number only when csv_decimal_point = "," — otherwise it must
             # classify as string (a blind double cast would null every row)

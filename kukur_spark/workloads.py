@@ -4,6 +4,11 @@ Every entry exercises one operator family from SURVEY.md §2 (or a
 beyond-reference pipeline operator) against the driver's synthetic tables
 (TESTDATA.md). The oracle SQL is the same computation in ANSI/DuckDB SQL.
 
+Every workloads module registers its own queries with
+``kukur_spark.registry.register``.  This module imports them all and
+exports ``QUERIES`` (the driver window first, then every other name in
+name order) and ``ORACLES``.
+
 Determinism rules used throughout so Spark and DuckDB agree bit-for-bit:
 
 - timestamps are returned as epoch microseconds (``unix_micros`` /
@@ -26,9 +31,34 @@ from typing import Callable, Dict, List
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from kukur_spark import (  # noqa: F401 — each module registers its queries
+    workloads_llm,
+    workloads_mm,
+    workloads_r2,
+    workloads_r3,
+    workloads_r4,
+    workloads_r5,
+    workloads_r6,
+    workloads_r7,
+    workloads_r8,
+    workloads_r9,
+    workloads_r10,
+    workloads_r11,
+    workloads_r12,
+    workloads_r13,
+    workloads_r14,
+    workloads_r15,
+    workloads_tpch,
+    workloads_ts,
+    workloads_ts2,
+)
+from kukur_spark.dedup_sql import DEDUP_CLUSTERS_SQL
+from kukur_spark.dedup_sql import lsh_edges_sql_ctes as _lsh_edges_sql_ctes
 from kukur_spark.io import load_table, persist_once
 from kukur_spark.operators.asof import asof_join
 from kukur_spark.operators.dedup import (
+    EDGE_BANDS as _EDGE_BANDS,
+    EDGE_HASHES as _EDGE_HASHES,
     exact_dedup,
     minhash_lsh_pairs,
     minhash_lsh_pairs_md5,
@@ -40,26 +70,15 @@ from kukur_spark.operators.dedup import (
 from kukur_spark.operators.plot import plot_buckets
 from kukur_spark.operators.similarity import brute_force_topk, ivf_topk, lsh_topk
 from kukur_spark.operators.text import language_id, fingerprint
+from kukur_spark.oracle_sql import duck_cos
+from kukur_spark.registry import ORACLES, QUERIES, register
 from kukur_spark.schema import union_conform
-from kukur_spark.workloads_tpch import TPCH_EXTRA_ORACLES, TPCH_EXTRA_QUERIES
-from kukur_spark.workloads_ts import TS_EXTRA_ORACLES, TS_EXTRA_QUERIES
-from kukur_spark.workloads_mm import MM_ORACLES, MM_QUERIES
-from kukur_spark.workloads_ts2 import TS2_ORACLES, TS2_QUERIES
-from kukur_spark.workloads_llm import LLM_ORACLES, LLM_QUERIES
-from kukur_spark.workloads_r2 import R2_ORACLES, R2_QUERIES
-from kukur_spark.workloads_r3 import R3_ORACLES, R3_QUERIES
-from kukur_spark.workloads_r4 import R4_ORACLES, R4_QUERIES
-from kukur_spark.workloads_r5 import R5_ORACLES, R5_QUERIES
-from kukur_spark.workloads_r6 import R6_ORACLES, R6_QUERIES
-from kukur_spark.workloads_r7 import R7_ORACLES, R7_QUERIES
-from kukur_spark.workloads_r8 import R8_ORACLES, R8_QUERIES
-from kukur_spark.workloads_r9 import R9_ORACLES, R9_QUERIES
+from kukur_spark.timeutil import epoch_us as _epoch_us
+from kukur_spark.workloads_llm import emb_pq_topk
 
 # events table time range (driver synthetic data, TESTDATA.md)
 EVENTS_START = datetime(2024, 1, 1, tzinfo=timezone.utc)
 EVENTS_END = datetime(2024, 2, 1, tzinfo=timezone.utc)
-
-from kukur_spark.timeutil import epoch_us as _epoch_us  # noqa: E402
 
 EVENTS_START_US = _epoch_us(EVENTS_START)
 EVENTS_END_US = _epoch_us(EVENTS_END)
@@ -1184,12 +1203,6 @@ ORDER BY id_a, id_b
 """
 
 
-from kukur_spark.operators.dedup import (  # noqa: E402 — canonical banding
-    EDGE_BANDS as _EDGE_BANDS,
-    EDGE_HASHES as _EDGE_HASHES,
-)
-
-
 def lsh_jaccard_edges(spark: SparkSession, sf: str) -> DataFrame:
     """Near-dup edges: md5-LSH banding candidates, token-Jaccard verified.
 
@@ -1277,16 +1290,6 @@ def _lsh_edges_from(docs: DataFrame) -> DataFrame:
     )
 
 
-# the CTE chain + cluster template live in the leaf kukur_spark.dedup_sql
-# (workloads_r10/r13 consume DEDUP_CLUSTERS_SQL at module-import time;
-# importing it from HERE re-entered this module mid-body and snapshotted
-# half-built registries — see dedup_sql's docstring); re-exported for
-# compatibility
-from kukur_spark.dedup_sql import (  # noqa: E402
-    lsh_edges_sql_ctes as _lsh_edges_sql_ctes,
-)
-
-
 LSH_JACCARD_EDGES_SQL_TEMPLATE = """WITH {ctes}
 SELECT id_a, id_b, jaccard_e6 FROM pairs ORDER BY id_a, id_b
 """
@@ -1348,9 +1351,6 @@ def dedup_clusters(spark: SparkSession, sf: str) -> DataFrame:
     ``tests/test_cluster.py::test_collapsed_groups_match_naive``.
     """
     return dedup_doc_groups(spark, sf).orderBy("doc_id")
-
-
-from kukur_spark.dedup_sql import DEDUP_CLUSTERS_SQL  # noqa: E402
 
 
 def dedup_kept(spark: SparkSession, sf: str) -> DataFrame:
@@ -1493,21 +1493,6 @@ FROM ranked WHERE rank <= 5 ORDER BY query_id, rank
 """
 
 
-def _duck_cos(a: str, b: str) -> str:
-    """DuckDB cosine-similarity expression matching operators.similarity
-    (sequential left-fold dot products over double-cast elements — the
-    exact IEEE operation order Spark's ``aggregate`` performs)."""
-    def _dot(x: str, y: str) -> str:
-        return (
-            f"list_sum(list_transform(range(1, len({x}) + 1), "
-            f"i -> CAST({x}[i] AS DOUBLE) * CAST({y}[i] AS DOUBLE)))"
-        )
-
-    return (
-        f"{_dot(a, b)} / (sqrt({_dot(a, a)}) * sqrt({_dot(b, b)}))"
-    )
-
-
 # IVF top-k is hash-free (seed centroids = lowest-id vectors; everything
 # else is float arithmetic DuckDB reproduces bit-for-bit), so unlike the
 # xxhash64 LSH variant it gets a full exact oracle.
@@ -1518,7 +1503,7 @@ WITH centroids AS (
 ),
 assign_scored AS (
   SELECT e.vec_id, c.centroid_id, e.embedding,
-    {_duck_cos('e.embedding', 'c.centroid')} AS sim
+    {duck_cos('e.embedding', 'c.centroid')} AS sim
   FROM embeddings e, centroids c
 ),
 assignments AS (
@@ -1532,7 +1517,7 @@ assignments AS (
 q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 10),
 probe_scored AS (
   SELECT query_id, qv, centroid_id,
-    {_duck_cos('qv', 'centroid')} AS centroid_sim
+    {duck_cos('qv', 'centroid')} AS centroid_sim
   FROM q, centroids
 ),
 probes AS (
@@ -1545,7 +1530,7 @@ probes AS (
 ),
 scored AS (
   SELECT p.query_id, a.vec_id AS neighbor_id,
-    {_duck_cos('p.qv', 'a.embedding')} AS cos_sim
+    {duck_cos('p.qv', 'a.embedding')} AS cos_sim
   FROM probes p
   JOIN assignments a ON a.centroid_id = p.centroid_id
   WHERE p.query_id <> a.vec_id
@@ -1878,7 +1863,7 @@ WITH sigs AS (
 q AS (SELECT vec_id AS query_id, v AS qv, bucket FROM sigs WHERE vec_id < 10),
 scored AS (
   SELECT q.query_id, c.vec_id AS neighbor_id,
-    {_duck_cos('q.qv', 'c.v')} AS cos_sim
+    {duck_cos('q.qv', 'c.v')} AS cos_sim
   FROM sigs c JOIN q ON c.bucket = q.bucket
   WHERE q.query_id <> c.vec_id
 ),
@@ -1909,178 +1894,63 @@ def emb_ivf_topk_q(spark: SparkSession, sf: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # registry
 # ---------------------------------------------------------------------------
-QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "tpch_q1": tpch_q1,
-    "tpch_q3": tpch_q3,
-    "tpch_q5": tpch_q5,
-    "tpch_q6": tpch_q6,
-    "tpch_q7": tpch_q7_volume_shipping,
-    "tpch_q10": tpch_q10_returned_items,
-    "tpch_q14": tpch_q14_promo_revenue,
-    "tpch_q19": tpch_q19_disjunctive,
-    "tpch_q17": tpch_q17_small_quantity,
-    "tpch_q18": tpch_q18_large_orders,
-    "orders_by_quarter": orders_by_quarter,
-    "events_rolling_7d": events_rolling_7d,
-    "top_customer_per_nation": top_customer_per_nation,
-    "ts_range_filter": ts_range_filter,
-    "ts_series_discovery": ts_series_discovery,
-    "ts_latest_value": ts_latest_value,
-    "ts_plot_buckets": ts_plot_buckets,
-    "ts_plot_downsample": ts_plot_downsample,
-    "ts_asof_join": ts_asof_join,
-    "ts_resample_stepped": _resample_query("stepped"),
-    "ts_resample_linear": _resample_query("linear"),
-    "ts_interval_union": ts_interval_union,
-    "distinct_users": distinct_users,
-    "events_daily_window": events_daily_window,
-    "events_rollup": events_rollup,
-    "sessionize": sessionize,
-    "orders_exists_semi": orders_with_shipments_semi,
-    "orders_missing_anti": orders_without_shipments_anti,
-    "events_json_extract": events_json_extract,
-    "events_pivot_wide": events_pivot_wide,
-    "customer_cube": customer_cube,
-    "emb_neardup_pairs": emb_neardup_pairs,
-    "dedup_exact": dedup_exact_q,
-    "text_token_stats": text_token_stats,
-    "text_quality_score": text_quality_score,
-    "text_langid": text_langid,
-    "text_fingerprint": text_fingerprint,
-    "ngram_jaccard": ngram_jaccard_exact,
-    "dedup_clusters": dedup_clusters,
-    "dedup_kept": dedup_kept,
-    "corpus_stats": corpus_stats,
-    "text_tfidf_topk": text_tfidf_topk,
-    "emb_topk_bruteforce": emb_topk_bruteforce,
-    "emb_topk_l2": emb_topk_l2,
-    "emb_centroid_per_label": emb_centroid_per_label,
-    "minhash_lsh_md5": minhash_lsh_md5_q,
-    "simhash_md5": simhash_md5_q,
-    "emb_lsh_topk": emb_lsh_topk_q,
-    "emb_ivf_topk": emb_ivf_topk_q,
-}
-# the driver's CORRECTNESS gate records the registry's first 50 entries:
-# keep that window fully oracle-paired. multimodal_features is promoted
-# here (its MM_QUERIES registration below re-binds the same callable);
-# the two no-oracle xxhash64 fast paths (whose md5 twins above run the
-# identical plan WITH oracles) are appended at the registry tail instead.
-from kukur_spark.workloads_mm import multimodal_features as _mm_features
-
-QUERIES["multimodal_features"] = _mm_features
-QUERIES.update(TPCH_EXTRA_QUERIES)
-QUERIES.update(TS_EXTRA_QUERIES)
-QUERIES.update(MM_QUERIES)
-QUERIES.update(TS2_QUERIES)
-QUERIES.update(LLM_QUERIES)
-QUERIES.update(R2_QUERIES)
-QUERIES.update(R3_QUERIES)
-QUERIES.update(R4_QUERIES)
-QUERIES.update(R5_QUERIES)
-QUERIES.update(R6_QUERIES)
-QUERIES.update(R7_QUERIES)
-QUERIES.update(R8_QUERIES)
-QUERIES.update(R9_QUERIES)
-# r10 imports back into this module (DEDUP_CLUSTERS_SQL) — import here,
-# after those names exist, not at the top
-from kukur_spark.workloads_r10 import R10_ORACLES, R10_QUERIES  # noqa: E402
-
-QUERIES.update(R10_QUERIES)
-from kukur_spark.workloads_r11 import R11_ORACLES, R11_QUERIES  # noqa: E402
-from kukur_spark.workloads_r12 import R12_ORACLES, R12_QUERIES  # noqa: E402
-
-from kukur_spark.workloads_r13 import R13_ORACLES, R13_QUERIES  # noqa: E402
-from kukur_spark.workloads_r14 import R14_ORACLES, R14_QUERIES  # noqa: E402
-from kukur_spark.workloads_r15 import R15_ORACLES, R15_QUERIES  # noqa: E402
-
-QUERIES.update(R11_QUERIES)
-QUERIES.update(R12_QUERIES)
-QUERIES.update(R13_QUERIES)
-QUERIES.update(R14_QUERIES)
-QUERIES.update(R15_QUERIES)
-# registry tail: production fast paths whose hash (xxhash64) is not
-# SQL-expressible — each has an oracle-paired md5 twin above running the
-# identical plan; keeping them last keeps the driver's 50-entry
-# CORRECTNESS window fully oracle-backed
-QUERIES["minhash_lsh_pairs"] = minhash_lsh_q
-QUERIES["simhash_pairs"] = simhash_q
-
-ORACLES: Dict[str, str] = {
-    "tpch_q1": TPCH_Q1_SQL,
-    "tpch_q3": TPCH_Q3_SQL,
-    "tpch_q5": TPCH_Q5_SQL,
-    "tpch_q6": TPCH_Q6_SQL,
-    "tpch_q7": TPCH_Q7_SQL,
-    "tpch_q10": TPCH_Q10_SQL,
-    "tpch_q14": TPCH_Q14_SQL,
-    "tpch_q19": TPCH_Q19_SQL,
-    "tpch_q17": TPCH_Q17_SQL,
-    "tpch_q18": TPCH_Q18_SQL,
-    "orders_by_quarter": ORDERS_BY_QUARTER_SQL,
-    "events_rolling_7d": EVENTS_ROLLING_SQL,
-    "top_customer_per_nation": TOP_CUSTOMER_SQL,
-    "ts_range_filter": TS_RANGE_FILTER_SQL,
-    "ts_series_discovery": TS_SERIES_DISCOVERY_SQL,
-    "ts_latest_value": TS_LATEST_VALUE_SQL,
-    "ts_plot_buckets": TS_PLOT_BUCKETS_SQL,
-    "ts_plot_downsample": TS_PLOT_DOWNSAMPLE_SQL,
-    "ts_asof_join": TS_ASOF_JOIN_SQL,
-    "ts_resample_stepped": _resample_sql("stepped"),
-    "ts_resample_linear": _resample_sql("linear"),
-    "ts_interval_union": TS_INTERVAL_UNION_SQL,
-    "distinct_users": DISTINCT_USERS_SQL,
-    "events_daily_window": EVENTS_DAILY_WINDOW_SQL,
-    "events_rollup": EVENTS_ROLLUP_SQL,
-    "sessionize": SESSIONIZE_SQL,
-    "orders_exists_semi": ORDERS_SEMI_SQL,
-    "orders_missing_anti": ORDERS_ANTI_SQL,
-    "events_json_extract": EVENTS_JSON_SQL,
-    "events_pivot_wide": EVENTS_PIVOT_SQL,
-    "customer_cube": CUSTOMER_CUBE_SQL,
-    "emb_neardup_pairs": EMB_NEARDUP_SQL,
-    "dedup_exact": DEDUP_EXACT_SQL,
-    "text_token_stats": TEXT_TOKEN_STATS_SQL,
-    "text_quality_score": TEXT_QUALITY_SCORE_SQL,
-    "text_langid": TEXT_LANGID_SQL,
-    "text_fingerprint": TEXT_FINGERPRINT_SQL,
-    "ngram_jaccard": NGRAM_JACCARD_SQL,
-    "dedup_clusters": DEDUP_CLUSTERS_SQL,
-    "dedup_kept": DEDUP_KEPT_SQL,
-    "corpus_stats": CORPUS_STATS_SQL,
-    "text_tfidf_topk": TEXT_TFIDF_SQL,
-    "emb_topk_bruteforce": EMB_TOPK_SQL,
-    "emb_topk_l2": EMB_TOPK_L2_SQL,
-    "emb_centroid_per_label": EMB_CENTROID_SQL,
-    # minhash_lsh_pairs / simhash_pairs: xxhash64 fast paths — not
-    # expressible in DuckDB; rows-only check, each proven exactly by its
-    # md5 twin below.
-    "minhash_lsh_md5": minhash_md5_oracle_sql(),
-    "simhash_md5": simhash_md5_oracle_sql(),
-    "emb_ivf_topk": EMB_IVF_SQL,
-    "emb_lsh_topk": _emb_lsh_sql(),
-    "lsh_jaccard_edges": LSH_JACCARD_EDGES_SQL_TEMPLATE.format(
-        ctes=_lsh_edges_sql_ctes()
-    ),
-    **TPCH_EXTRA_ORACLES,
-    **TS_EXTRA_ORACLES,
-    **MM_ORACLES,
-    **TS2_ORACLES,
-    **LLM_ORACLES,
-    **R2_ORACLES,
-    **R3_ORACLES,
-    **R4_ORACLES,
-    **R5_ORACLES,
-    **R6_ORACLES,
-    **R7_ORACLES,
-    **R8_ORACLES,
-    **R9_ORACLES,
-    **R10_ORACLES,
-    **R11_ORACLES,
-    **R12_ORACLES,
-    **R13_ORACLES,
-    **R14_ORACLES,
-    **R15_ORACLES,
-}
+register("tpch_q1", tpch_q1, TPCH_Q1_SQL)
+register("tpch_q3", tpch_q3, TPCH_Q3_SQL)
+register("tpch_q5", tpch_q5, TPCH_Q5_SQL)
+register("tpch_q6", tpch_q6, TPCH_Q6_SQL)
+register("tpch_q7", tpch_q7_volume_shipping, TPCH_Q7_SQL)
+register("tpch_q10", tpch_q10_returned_items, TPCH_Q10_SQL)
+register("tpch_q14", tpch_q14_promo_revenue, TPCH_Q14_SQL)
+register("tpch_q19", tpch_q19_disjunctive, TPCH_Q19_SQL)
+register("tpch_q17", tpch_q17_small_quantity, TPCH_Q17_SQL)
+register("tpch_q18", tpch_q18_large_orders, TPCH_Q18_SQL)
+register("orders_by_quarter", orders_by_quarter, ORDERS_BY_QUARTER_SQL)
+register("events_rolling_7d", events_rolling_7d, EVENTS_ROLLING_SQL)
+register("top_customer_per_nation", top_customer_per_nation, TOP_CUSTOMER_SQL)
+register("ts_range_filter", ts_range_filter, TS_RANGE_FILTER_SQL)
+register("ts_series_discovery", ts_series_discovery, TS_SERIES_DISCOVERY_SQL)
+register("ts_latest_value", ts_latest_value, TS_LATEST_VALUE_SQL)
+register("ts_plot_buckets", ts_plot_buckets, TS_PLOT_BUCKETS_SQL)
+register("ts_plot_downsample", ts_plot_downsample, TS_PLOT_DOWNSAMPLE_SQL)
+register("ts_asof_join", ts_asof_join, TS_ASOF_JOIN_SQL)
+register(
+    "ts_resample_stepped", _resample_query("stepped"), _resample_sql("stepped")
+)
+register(
+    "ts_resample_linear", _resample_query("linear"), _resample_sql("linear")
+)
+register("ts_interval_union", ts_interval_union, TS_INTERVAL_UNION_SQL)
+register("distinct_users", distinct_users, DISTINCT_USERS_SQL)
+register("events_daily_window", events_daily_window, EVENTS_DAILY_WINDOW_SQL)
+register("events_rollup", events_rollup, EVENTS_ROLLUP_SQL)
+register("sessionize", sessionize, SESSIONIZE_SQL)
+register("orders_exists_semi", orders_with_shipments_semi, ORDERS_SEMI_SQL)
+register("orders_missing_anti", orders_without_shipments_anti, ORDERS_ANTI_SQL)
+register("events_json_extract", events_json_extract, EVENTS_JSON_SQL)
+register("events_pivot_wide", events_pivot_wide, EVENTS_PIVOT_SQL)
+register("customer_cube", customer_cube, CUSTOMER_CUBE_SQL)
+register("emb_neardup_pairs", emb_neardup_pairs, EMB_NEARDUP_SQL)
+register("dedup_exact", dedup_exact_q, DEDUP_EXACT_SQL)
+register("text_token_stats", text_token_stats, TEXT_TOKEN_STATS_SQL)
+register("text_quality_score", text_quality_score, TEXT_QUALITY_SCORE_SQL)
+register("text_langid", text_langid, TEXT_LANGID_SQL)
+register("text_fingerprint", text_fingerprint, TEXT_FINGERPRINT_SQL)
+register("ngram_jaccard", ngram_jaccard_exact, NGRAM_JACCARD_SQL)
+register("dedup_clusters", dedup_clusters, DEDUP_CLUSTERS_SQL)
+register("dedup_kept", dedup_kept, DEDUP_KEPT_SQL)
+register("corpus_stats", corpus_stats, CORPUS_STATS_SQL)
+register("text_tfidf_topk", text_tfidf_topk, TEXT_TFIDF_SQL)
+register("emb_topk_bruteforce", emb_topk_bruteforce, EMB_TOPK_SQL)
+register("emb_topk_l2", emb_topk_l2, EMB_TOPK_L2_SQL)
+register("emb_centroid_per_label", emb_centroid_per_label, EMB_CENTROID_SQL)
+register("minhash_lsh_md5", minhash_lsh_md5_q, minhash_md5_oracle_sql())
+register("simhash_md5", simhash_md5_q, simhash_md5_oracle_sql())
+# xxhash64 fast paths: not expressible in DuckDB, so no oracle; each md5
+# twin above runs the identical plan with one
+register("minhash_lsh_pairs", minhash_lsh_q)
+register("simhash_pairs", simhash_q)
+register("emb_lsh_topk", emb_lsh_topk_q, _emb_lsh_sql())
+register("emb_ivf_topk", emb_ivf_topk_q, EMB_IVF_SQL)
 
 
 def _recall_against_exact(
@@ -2140,9 +2010,7 @@ def emb_ann_recall(spark: SparkSession, sf: str) -> DataFrame:
         ),
         _recall_against_exact(
             exact,
-            QUERIES["emb_pq_topk"](spark, sf).select(
-                "query_id", "neighbor_id"
-            ),
+            emb_pq_topk(spark, sf).select("query_id", "neighbor_id"),
             "pq",
         ),
     ]
@@ -2153,12 +2021,10 @@ def emb_ann_recall(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _ann_recall_sql() -> str:
-    from kukur_spark.workloads_llm import LLM_ORACLES
-
     methods = {
         "lsh": _emb_lsh_sql(),
         "ivf": EMB_IVF_SQL,
-        "pq": LLM_ORACLES["emb_pq_topk"],
+        "pq": ORACLES["emb_pq_topk"],
     }
     # MATERIALIZED: each expensive side evaluates once, not per join arm
     ctes = [f"exact AS MATERIALIZED ({EMB_TOPK_SQL})"]
@@ -2190,8 +2056,7 @@ LEFT JOIN (
 
 EMB_ANN_RECALL_SQL = _ann_recall_sql()
 
-QUERIES["emb_ann_recall"] = emb_ann_recall
-ORACLES["emb_ann_recall"] = EMB_ANN_RECALL_SQL
+register("emb_ann_recall", emb_ann_recall, EMB_ANN_RECALL_SQL)
 
 
 def docs_lang_confusion(spark: SparkSession, sf: str) -> DataFrame:
@@ -2246,8 +2111,7 @@ FROM cells c JOIN totals t USING (true_lang)
 ORDER BY true_lang, pred_lang
 """
 
-QUERIES["docs_lang_confusion"] = docs_lang_confusion
-ORACLES["docs_lang_confusion"] = DOCS_LANG_CONFUSION_SQL
+register("docs_lang_confusion", docs_lang_confusion, DOCS_LANG_CONFUSION_SQL)
 
 
 def emb_knn_accuracy(spark: SparkSession, sf: str) -> DataFrame:
@@ -2366,25 +2230,15 @@ GROUP BY true_label
 ORDER BY label
 """
 
-QUERIES["emb_knn_accuracy"] = emb_knn_accuracy
-ORACLES["emb_knn_accuracy"] = EMB_KNN_ACC_SQL
-
-
-# IVF-PQ: registered here (not in the R9 dict) because its oracle
-# builder needs _duck_cos from this module — imported lazily after init
-from kukur_spark.workloads_r9 import (  # noqa: E402
-    emb_ivfpq_topk,
-    ivfpq_oracle_sql,
+register("emb_knn_accuracy", emb_knn_accuracy, EMB_KNN_ACC_SQL)
+# the banded production edge query; its all-pairs exact twin
+# (ngram_jaccard) stays registered as the recall baseline
+register(
+    "lsh_jaccard_edges",
+    lsh_jaccard_edges,
+    LSH_JACCARD_EDGES_SQL_TEMPLATE.format(ctes=_lsh_edges_sql_ctes()),
 )
 
-QUERIES["emb_ivfpq_topk"] = emb_ivfpq_topk
-ORACLES["emb_ivfpq_topk"] = ivfpq_oracle_sql()
-
-# r5: the banded production edge query becomes a first-class registry
-# entry (VERDICT r4 #4) — registered at the tail so base-window slots are
-# untouched, then rotated into the window in place of its all-pairs exact
-# twin (which stays registered as the recall baseline).
-QUERIES["lsh_jaccard_edges"] = lsh_jaccard_edges
 
 def docs_emb_decontaminate(spark: SparkSession, sf: str) -> DataFrame:
     """Embedding-based eval-set decontamination: flag training vectors
@@ -2452,7 +2306,7 @@ WITH ev AS (
 ),
 scored AS (
   SELECT d.vec_id, e.eval_id,
-    {_duck_cos('d.embedding', 'e.ev')} AS sim
+    {duck_cos('d.embedding', 'e.ev')} AS sim
   FROM embeddings d, ev e
   WHERE d.vec_id >= 32
 ),
@@ -2470,8 +2324,9 @@ FROM ranked WHERE rn = 1
 ORDER BY vec_id
 """
 
-QUERIES["docs_emb_decontaminate"] = docs_emb_decontaminate
-ORACLES["docs_emb_decontaminate"] = EMB_DECONTAMINATE_SQL
+register(
+    "docs_emb_decontaminate", docs_emb_decontaminate, EMB_DECONTAMINATE_SQL
+)
 
 
 # ---------------------------------------------------------------------------
@@ -2481,11 +2336,11 @@ ORACLES["docs_emb_decontaminate"] = EMB_DECONTAMINATE_SQL
 # driver-checked (VERDICT r5's structural complaint).  From round 6 the
 # window is rebuilt wholesale each round: ~5 long-proven canaries (regression
 # tripwires spanning the core families) + ~45 queries that have never earned
-# a driver-green row, swept in registry order until every oracled query has
-# been driver-checked.  Ever-checked names accumulate in the committed
+# a driver-green row, swept until every oracled query has been
+# driver-checked.  Ever-checked names accumulate in the committed
 # CORRECTNESS_r*.json files.  Every window name must be oracle-paired;
-# tests/test_registry_window.py pins the invariants.  Must run AFTER the
-# last QUERIES[...] registration.
+# tests/test_registry_window.py pins the invariants.  The window is
+# applied once every query module above has registered.
 # ---------------------------------------------------------------------------
 _WINDOW_CANARIES = [
     # the five regression tripwires VERDICT r5 #3 named
@@ -2502,7 +2357,7 @@ def _set_window(queries: Dict[str, Callable], window: List[str]) -> Dict:
     if missing:
         raise KeyError(f"window names not registered: {missing}")
     head = set(window)
-    rest = [n for n in queries if n not in head]
+    rest = sorted(n for n in queries if n not in head)
     return {name: queries[name] for name in list(window) + rest}
 
 
@@ -2517,9 +2372,9 @@ def _set_window(queries: Dict[str, Callable], window: List[str]) -> Dict:
 # the r11 import recomputes and the window advances with zero edits.
 # Never-green names (e.g. a query registered this round) sort first, so
 # new registrations are always driver-checked on registration.  Ties
-# break by registry order, keeping the rotation deterministic for a
-# fixed set of ledger files.  tests/test_registry_window.py pins the
-# staleness-minimality invariant.
+# break by query name, so the window depends only on the set of
+# registered names and the ledger files, never on import order.
+# tests/test_registry_window.py pins the staleness-minimality invariant.
 # ---------------------------------------------------------------------------
 
 
@@ -2528,7 +2383,7 @@ def _driver_green_rounds() -> Dict[str, int]:
 
     A row counts as green only when rows+schema matched with no error —
     the same bar the verdicts apply.  Unreadable or absent ledgers are
-    skipped (a fresh clone rotates on registry order alone).
+    skipped (a fresh clone rotates on query names alone).
     """
     import glob as _glob
     import json as _json
@@ -2566,12 +2421,11 @@ def _rotation_window(
     canaries: List[str],
     sweep_slots: int = 45,
 ) -> List[str]:
-    """The 45 stale-most oracled names, by (last-green round, registry
-    order), never-green first."""
+    """The 45 stale-most oracled names, by (last-green round, name),
+    never-green first."""
     last = _driver_green_rounds()
-    index = {name: i for i, name in enumerate(queries)}
     pool = [n for n in queries if n in oracles and n not in canaries]
-    pool.sort(key=lambda n: (last.get(n, -1), index[n]))
+    pool.sort(key=lambda n: (last.get(n, -1), n))
     return pool[:sweep_slots]
 
 

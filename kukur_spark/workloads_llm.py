@@ -13,6 +13,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kukur_spark.io import load_table, persist_once
+from kukur_spark.oracle_sql import pq_enc_scored_sql
+from kukur_spark.registry import register
 
 
 # ---------------------------------------------------------------------------
@@ -370,23 +372,18 @@ ORDER BY b.event_type, b.ts_us, b.event_id
 """
 
 
-LLM_QUERIES = {
-    "docs_split_assign": docs_split_assign,
-    "docs_decontaminate": docs_decontaminate,
-    "docs_pipeline_yield": docs_pipeline_yield,
-    "events_retention_cohorts": events_retention_cohorts,
-    "emb_dim_stats": emb_dim_stats,
-    "ts_seasonal_residual_outliers": ts_seasonal_residual_outliers,
-}
-
-LLM_ORACLES = {
-    "docs_split_assign": DOCS_SPLIT_SQL,
-    "docs_decontaminate": DOCS_DECONTAMINATE_SQL,
-    "docs_pipeline_yield": DOCS_YIELD_SQL,
-    "events_retention_cohorts": EVENTS_RETENTION_SQL,
-    "emb_dim_stats": EMB_DIM_STATS_SQL,
-    "ts_seasonal_residual_outliers": TS_SEASONAL_RESIDUAL_SQL,
-}
+register("docs_split_assign", docs_split_assign, DOCS_SPLIT_SQL)
+register("docs_decontaminate", docs_decontaminate, DOCS_DECONTAMINATE_SQL)
+register("docs_pipeline_yield", docs_pipeline_yield, DOCS_YIELD_SQL)
+register(
+    "events_retention_cohorts", events_retention_cohorts, EVENTS_RETENTION_SQL
+)
+register("emb_dim_stats", emb_dim_stats, EMB_DIM_STATS_SQL)
+register(
+    "ts_seasonal_residual_outliers",
+    ts_seasonal_residual_outliers,
+    TS_SEASONAL_RESIDUAL_SQL,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -497,10 +494,8 @@ GROUP BY event_type, day_us
 ORDER BY event_type, day_us
 """
 
-LLM_QUERIES["orders_market_basket"] = orders_market_basket
-LLM_QUERIES["ts_downtime_intervals"] = ts_downtime_intervals
-LLM_ORACLES["orders_market_basket"] = ORDERS_BASKET_SQL
-LLM_ORACLES["ts_downtime_intervals"] = TS_DOWNTIME_SQL
+register("orders_market_basket", orders_market_basket, ORDERS_BASKET_SQL)
+register("ts_downtime_intervals", ts_downtime_intervals, TS_DOWNTIME_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -662,20 +657,7 @@ def _pq_sql() -> str:
     floats the Spark literals came from), same left-assoc chains."""
     m, dsub, codes, k, nq = _PQ_M, _PQ_DSUB, _PQ_CODES, _PQ_K, _PQ_QUERIES
 
-    def enc_dist(s):
-        return " + ".join(
-            f"(CAST(e.embedding[{s * dsub + d + 1}] AS DOUBLE)"
-            f" - CAST(se.embedding[{s * dsub + d + 1}] AS DOUBLE))"
-            f" * (CAST(e.embedding[{s * dsub + d + 1}] AS DOUBLE)"
-            f" - CAST(se.embedding[{s * dsub + d + 1}] AS DOUBLE))"
-            for d in range(dsub)
-        )
-
-    enc_unions = "\nUNION ALL\n".join(
-        f"SELECT e.vec_id, {s} AS s, se.vec_id AS c, {enc_dist(s)} AS dist\n"
-        f"FROM embeddings e, seeds se"
-        for s in range(m)
-    )
+    enc_unions = pq_enc_scored_sql(m, dsub)
     code_cols = ", ".join(
         f"MAX(CASE WHEN s = {s} THEN code END) AS code{s}" for s in range(m)
     )
@@ -732,8 +714,7 @@ FROM ranked WHERE rank <= {k} ORDER BY query_id, rank
 """.replace("ranked_src", "scored")
 
 
-LLM_QUERIES["emb_pq_topk"] = emb_pq_topk
-LLM_ORACLES["emb_pq_topk"] = _pq_sql()
+register("emb_pq_topk", emb_pq_topk, _pq_sql())
 
 
 # ---------------------------------------------------------------------------
@@ -872,10 +853,14 @@ FROM counts c JOIN totals t USING (from_type)
 ORDER BY c.from_type, c.to_type
 """
 
-LLM_QUERIES["ts_seasonal_naive_backtest"] = ts_seasonal_naive_backtest
-LLM_QUERIES["events_transition_matrix"] = events_transition_matrix
-LLM_ORACLES["ts_seasonal_naive_backtest"] = TS_SEASONAL_NAIVE_SQL
-LLM_ORACLES["events_transition_matrix"] = EVENTS_TRANSITION_SQL
+register(
+    "ts_seasonal_naive_backtest",
+    ts_seasonal_naive_backtest,
+    TS_SEASONAL_NAIVE_SQL,
+)
+register(
+    "events_transition_matrix", events_transition_matrix, EVENTS_TRANSITION_SQL
+)
 
 
 # ---------------------------------------------------------------------------
@@ -1055,10 +1040,8 @@ SELECT event_type, n_hours,
 FROM stats ORDER BY event_type
 """
 
-LLM_QUERIES["docs_prefix_containment"] = docs_prefix_containment
-LLM_QUERIES["ts_stl_lite"] = ts_stl_lite
-LLM_ORACLES["docs_prefix_containment"] = DOCS_PREFIX_SQL
-LLM_ORACLES["ts_stl_lite"] = TS_STL_LITE_SQL
+register("docs_prefix_containment", docs_prefix_containment, DOCS_PREFIX_SQL)
+register("ts_stl_lite", ts_stl_lite, TS_STL_LITE_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1215,10 +1198,8 @@ FROM pairs
 ORDER BY tok_a, tok_b
 """
 
-LLM_QUERIES["docs_pack_chunks"] = docs_pack_chunks
-LLM_QUERIES["text_pmi_pairs"] = text_pmi_pairs
-LLM_ORACLES["docs_pack_chunks"] = DOCS_PACK_SQL
-LLM_ORACLES["text_pmi_pairs"] = TEXT_PMI_SQL
+register("docs_pack_chunks", docs_pack_chunks, DOCS_PACK_SQL)
+register("text_pmi_pairs", text_pmi_pairs, TEXT_PMI_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1385,10 +1366,8 @@ WHERE prev_e6 IS NOT NULL AND next_e6 IS NOT NULL
 ORDER BY event_type, ts_us, event_id
 """
 
-LLM_QUERIES["orders_rfm_segments"] = orders_rfm_segments
-LLM_QUERIES["ts_peak_detect"] = ts_peak_detect
-LLM_ORACLES["orders_rfm_segments"] = ORDERS_RFM_SQL
-LLM_ORACLES["ts_peak_detect"] = TS_PEAK_SQL
+register("orders_rfm_segments", orders_rfm_segments, ORDERS_RFM_SQL)
+register("ts_peak_detect", ts_peak_detect, TS_PEAK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1520,7 +1499,9 @@ WINDOW cum AS (ORDER BY pct ROWS BETWEEN UNBOUNDED PRECEDING
 ORDER BY pct
 """
 
-LLM_QUERIES["events_grouping_sets"] = events_grouping_sets
-LLM_QUERIES["orders_cumulative_share"] = orders_cumulative_share
-LLM_ORACLES["events_grouping_sets"] = EVENTS_GROUPING_SETS_SQL
-LLM_ORACLES["orders_cumulative_share"] = ORDERS_CUM_SHARE_SQL
+register(
+    "events_grouping_sets", events_grouping_sets, EVENTS_GROUPING_SETS_SQL
+)
+register(
+    "orders_cumulative_share", orders_cumulative_share, ORDERS_CUM_SHARE_SQL
+)

@@ -22,6 +22,7 @@ from kukur_spark.operators.multimodal import (
     frame_sample,
     synthesize_assets,
 )
+from kukur_spark.registry import register
 
 N_ASSETS = 500
 
@@ -165,14 +166,8 @@ ORDER BY asset_id
 """
 
 
-MM_QUERIES = {
-    "multimodal_features": multimodal_features,
-    "multimodal_frame_sample": multimodal_frame_sample,
-    "multimodal_resize": multimodal_resize,
-}
-
-MM_ORACLES = {
-    "multimodal_features": MULTIMODAL_FEATURES_SQL,
-    "multimodal_frame_sample": MULTIMODAL_FRAMES_SQL,
-    "multimodal_resize": MULTIMODAL_RESIZE_SQL,
-}
+register("multimodal_features", multimodal_features, MULTIMODAL_FEATURES_SQL)
+register(
+    "multimodal_frame_sample", multimodal_frame_sample, MULTIMODAL_FRAMES_SQL
+)
+register("multimodal_resize", multimodal_resize, MULTIMODAL_RESIZE_SQL)

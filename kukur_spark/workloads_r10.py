@@ -21,9 +21,8 @@ from pyspark.sql import functions as F
 
 from kukur_spark.io import load_table
 from kukur_spark.operators.dedup import md5_long
+from kukur_spark.registry import register
 
-R10_QUERIES: dict = {}
-R10_ORACLES: dict = {}
 
 _DSIR_BUCKETS = 256  # hashed-feature dimensionality (paper: 10k; the
 # 40-word synthetic vocabulary saturates far earlier)
@@ -142,8 +141,7 @@ SELECT doc_id, n_tokens, logw_e6, rank FROM (
 ) WHERE rank <= {_DSIR_TOP} ORDER BY rank
 """
 
-R10_QUERIES["docs_dsir_weights"] = docs_dsir_weights
-R10_ORACLES["docs_dsir_weights"] = DOCS_DSIR_SQL
+register("docs_dsir_weights", docs_dsir_weights, DOCS_DSIR_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -204,9 +202,7 @@ ORDER BY g.doc_id""",
     )
 
 
-R10_QUERIES["docs_softdedup_weights"] = docs_softdedup_weights
-
-R10_ORACLES["docs_softdedup_weights"] = _softdedup_sql()
+register("docs_softdedup_weights", docs_softdedup_weights, _softdedup_sql())
 
 
 # ---------------------------------------------------------------------------
@@ -266,5 +262,8 @@ ORDER BY doc_id""",
     )
 
 
-R10_QUERIES["docs_leakage_safe_split"] = docs_leakage_safe_split
-R10_ORACLES["docs_leakage_safe_split"] = _leakage_safe_split_sql()
+register(
+    "docs_leakage_safe_split",
+    docs_leakage_safe_split,
+    _leakage_safe_split_sql(),
+)

@@ -42,9 +42,8 @@ from pyspark.sql import functions as F
 
 from kukur_spark.io import load_table
 from kukur_spark.operators.dedup import md5_long
+from kukur_spark.registry import register
 
-R11_QUERIES: dict = {}
-R11_ORACLES: dict = {}
 
 _SPAN_K = 8  # tokens per rolling window (Lee et al. use 50 BPE tokens;
 # the synthetic docs average 55 whitespace tokens, so 8 keeps the
@@ -146,8 +145,7 @@ FROM isl GROUP BY doc_id, grp
 ORDER BY doc_id, start_pos
 """
 
-R11_QUERIES["docs_dup_ngram_spans"] = docs_dup_ngram_spans
-R11_ORACLES["docs_dup_ngram_spans"] = DUP_NGRAM_SPANS_SQL
+register("docs_dup_ngram_spans", docs_dup_ngram_spans, DUP_NGRAM_SPANS_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -265,8 +263,7 @@ SELECT doc_id, shard, seq_idx, tok_offset, n_tokens
 FROM p ORDER BY doc_id
 """
 
-R11_QUERIES["docs_pack_nextfit"] = docs_pack_nextfit
-R11_ORACLES["docs_pack_nextfit"] = PACK_NEXTFIT_SQL
+register("docs_pack_nextfit", docs_pack_nextfit, PACK_NEXTFIT_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -341,8 +338,7 @@ SELECT epoch, doc_id, shard,
 FROM s ORDER BY epoch, shard, pos
 """
 
-R11_QUERIES["docs_epoch_shards"] = docs_epoch_shards
-R11_ORACLES["docs_epoch_shards"] = EPOCH_SHARDS_SQL
+register("docs_epoch_shards", docs_epoch_shards, EPOCH_SHARDS_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -421,8 +417,7 @@ SELECT dim,
 FROM e GROUP BY dim ORDER BY dim
 """
 
-R11_QUERIES["emb_int8_quant_stats"] = emb_int8_quant_stats
-R11_ORACLES["emb_int8_quant_stats"] = EMB_INT8_QUANT_SQL
+register("emb_int8_quant_stats", emb_int8_quant_stats, EMB_INT8_QUANT_SQL)
 
 
 # --- PII scrubbing (C4 / Dolma-style redaction stage) -----------------
@@ -562,5 +557,4 @@ SELECT n_name,
 FROM scrub GROUP BY n_name ORDER BY n_name
 """
 
-R11_QUERIES["docs_pii_scrub"] = docs_pii_scrub
-R11_ORACLES["docs_pii_scrub"] = PII_SCRUB_SQL
+register("docs_pii_scrub", docs_pii_scrub, PII_SCRUB_SQL)

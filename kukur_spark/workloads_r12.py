@@ -31,9 +31,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kukur_spark.io import load_table
+from kukur_spark.registry import register
 
-R12_QUERIES: dict = {}
-R12_ORACLES: dict = {}
 
 _QC_BUCKETS = 64
 
@@ -157,8 +156,9 @@ SELECT doc_id, n_feats,
 FROM scores ORDER BY doc_id
 """
 
-R12_QUERIES["docs_quality_classifier"] = docs_quality_classifier
-R12_ORACLES["docs_quality_classifier"] = QUALITY_CLASSIFIER_SQL
+register(
+    "docs_quality_classifier", docs_quality_classifier, QUALITY_CLASSIFIER_SQL
+)
 
 
 def docs_quality_classifier_fast(
@@ -175,4 +175,4 @@ def docs_quality_classifier_fast(
     ).orderBy("doc_id")
 
 
-R12_QUERIES["docs_quality_classifier_fast"] = docs_quality_classifier_fast
+register("docs_quality_classifier_fast", docs_quality_classifier_fast)

@@ -39,9 +39,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kukur_spark.io import load_table, persist_once
+from kukur_spark.oracle_sql import duck_cos
+from kukur_spark.registry import register
 
-R13_QUERIES: dict = {}
-R13_ORACLES: dict = {}
 
 # PAA grid length (DTW) — small fixed sketch; production would size this
 # per use case, the plan shape is P-independent.
@@ -604,20 +604,6 @@ def emb_matryoshka_recall(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _mrl_cos(a: str, b: str) -> str:
-    """DuckDB cosine matching operators.similarity's fold order (same
-    expression as workloads._duck_cos, local to avoid a circular
-    import)."""
-
-    def _dot(x: str, y: str) -> str:
-        return (
-            f"list_sum(list_transform(range(1, len({x}) + 1), "
-            f"i -> CAST({x}[i] AS DOUBLE) * CAST({y}[i] AS DOUBLE)))"
-        )
-
-    return f"{_dot(a, b)} / (sqrt({_dot(a, a)}) * sqrt({_dot(b, b)}))"
-
-
 def _mrl_topk_sql(d) -> str:
     """Ranked top-k subquery over the first ``d`` components ('full' =
     all 64)."""
@@ -627,7 +613,7 @@ def _mrl_topk_sql(d) -> str:
   SELECT query_id, neighbor_id FROM (
     SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
       ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY
-        {_mrl_cos(qv, cv)} DESC, c.vec_id ASC) AS rank
+        {duck_cos(qv, cv)} DESC, c.vec_id ASC) AS rank
     FROM embeddings c, embeddings q
     WHERE q.vec_id < {_MRL_NQ} AND q.vec_id <> c.vec_id
   ) WHERE rank <= {_MRL_K}
@@ -1993,14 +1979,10 @@ ORDER BY l.shard
 """
 
 
-R13_QUERIES["ts_dtw_banded"] = ts_dtw_banded
-R13_ORACLES["ts_dtw_banded"] = TS_DTW_SQL
-R13_QUERIES["ts_haar_energy"] = ts_haar_energy
-R13_ORACLES["ts_haar_energy"] = TS_HAAR_SQL
-R13_QUERIES["docs_cdc_chunks"] = docs_cdc_chunks
-R13_ORACLES["docs_cdc_chunks"] = DOCS_CDC_SQL
-R13_QUERIES["docs_fastcdc_chunks"] = docs_fastcdc_chunks
-R13_ORACLES["docs_fastcdc_chunks"] = DOCS_FASTCDC_SQL
+register("ts_dtw_banded", ts_dtw_banded, TS_DTW_SQL)
+register("ts_haar_energy", ts_haar_energy, TS_HAAR_SQL)
+register("docs_cdc_chunks", docs_cdc_chunks, DOCS_CDC_SQL)
+register("docs_fastcdc_chunks", docs_fastcdc_chunks, DOCS_FASTCDC_SQL)
 # ---------------------------------------------------------------------------
 # BPE tokenizer-training merge steps
 # ---------------------------------------------------------------------------
@@ -2157,8 +2139,7 @@ WITH RECURSIVE w0 AS (
 )
 
 
-R13_QUERIES["emb_matryoshka_recall"] = emb_matryoshka_recall
-R13_ORACLES["emb_matryoshka_recall"] = EMB_MRL_SQL
+register("emb_matryoshka_recall", emb_matryoshka_recall, EMB_MRL_SQL)
 # ---------------------------------------------------------------------------
 # SymSpell symmetric-delete fuzzy join
 # ---------------------------------------------------------------------------
@@ -2282,8 +2263,7 @@ FROM verified GROUP BY diff_pos ORDER BY diff_pos
 """
 
 
-R13_QUERIES["text_bpe_merge_steps"] = text_bpe_merge_steps
-R13_ORACLES["text_bpe_merge_steps"] = TEXT_BPE_SQL
+register("text_bpe_merge_steps", text_bpe_merge_steps, TEXT_BPE_SQL)
 # ---------------------------------------------------------------------------
 # Two-sample Kolmogorov-Smirnov drift test
 # ---------------------------------------------------------------------------
@@ -2379,8 +2359,9 @@ LIMIT 1
 """
 
 
-R13_QUERIES["customer_symspell_pairs"] = customer_symspell_pairs
-R13_ORACLES["customer_symspell_pairs"] = CUSTOMER_SYMSPELL_SQL
+register(
+    "customer_symspell_pairs", customer_symspell_pairs, CUSTOMER_SYMSPELL_SQL
+)
 # ---------------------------------------------------------------------------
 # KMV (k-minimum-values) sketch set operations
 # ---------------------------------------------------------------------------
@@ -2574,33 +2555,20 @@ ORDER BY u.ta, u.tb
 """
 
 
-R13_QUERIES["docs_ks_drift"] = docs_ks_drift
-R13_ORACLES["docs_ks_drift"] = DOCS_KS_SQL
-R13_QUERIES["events_kmv_overlap"] = events_kmv_overlap
-R13_ORACLES["events_kmv_overlap"] = EVENTS_KMV_SQL
-R13_QUERIES["docs_pack_bestfit_eval"] = docs_pack_bestfit_eval
-R13_ORACLES["docs_pack_bestfit_eval"] = PACK_BESTFIT_SQL
-R13_QUERIES["ts_theilsen_trend"] = ts_theilsen_trend
-R13_ORACLES["ts_theilsen_trend"] = TS_THEILSEN_SQL
-R13_QUERIES["ts_mann_kendall"] = ts_mann_kendall
-R13_ORACLES["ts_mann_kendall"] = TS_MANN_KENDALL_SQL
-R13_QUERIES["ts_pettitt_change"] = ts_pettitt_change
-R13_ORACLES["ts_pettitt_change"] = TS_PETTITT_SQL
-R13_QUERIES["ts_trimmed_mean"] = ts_trimmed_mean
-R13_ORACLES["ts_trimmed_mean"] = TS_TRIMMED_SQL
-R13_QUERIES["orders_pareto_abc"] = orders_pareto_abc
-R13_ORACLES["orders_pareto_abc"] = ORDERS_ABC_SQL
-R13_QUERIES["docs_qq_deciles"] = docs_qq_deciles
-R13_ORACLES["docs_qq_deciles"] = DOCS_QQ_SQL
-R13_QUERIES["text_burstiness"] = text_burstiness
-R13_ORACLES["text_burstiness"] = TEXT_BURSTINESS_SQL
-R13_QUERIES["events_rank_suite"] = events_rank_suite
-R13_ORACLES["events_rank_suite"] = EVENTS_RANK_SQL
-R13_QUERIES["docs_quota_allocation"] = docs_quota_allocation
-R13_ORACLES["docs_quota_allocation"] = DOCS_QUOTA_SQL
-R13_QUERIES["docs_dedup_survivorship"] = docs_dedup_survivorship
-R13_ORACLES["docs_dedup_survivorship"] = _survivorship_sql()
-R13_QUERIES["ts_acf_multi"] = ts_acf_multi
-R13_ORACLES["ts_acf_multi"] = TS_ACF_SQL
-R13_QUERIES["orders_cohort_ltv"] = orders_cohort_ltv
-R13_ORACLES["orders_cohort_ltv"] = ORDERS_LTV_SQL
+register("docs_ks_drift", docs_ks_drift, DOCS_KS_SQL)
+register("events_kmv_overlap", events_kmv_overlap, EVENTS_KMV_SQL)
+register("docs_pack_bestfit_eval", docs_pack_bestfit_eval, PACK_BESTFIT_SQL)
+register("ts_theilsen_trend", ts_theilsen_trend, TS_THEILSEN_SQL)
+register("ts_mann_kendall", ts_mann_kendall, TS_MANN_KENDALL_SQL)
+register("ts_pettitt_change", ts_pettitt_change, TS_PETTITT_SQL)
+register("ts_trimmed_mean", ts_trimmed_mean, TS_TRIMMED_SQL)
+register("orders_pareto_abc", orders_pareto_abc, ORDERS_ABC_SQL)
+register("docs_qq_deciles", docs_qq_deciles, DOCS_QQ_SQL)
+register("text_burstiness", text_burstiness, TEXT_BURSTINESS_SQL)
+register("events_rank_suite", events_rank_suite, EVENTS_RANK_SQL)
+register("docs_quota_allocation", docs_quota_allocation, DOCS_QUOTA_SQL)
+register(
+    "docs_dedup_survivorship", docs_dedup_survivorship, _survivorship_sql()
+)
+register("ts_acf_multi", ts_acf_multi, TS_ACF_SQL)
+register("orders_cohort_ltv", orders_cohort_ltv, ORDERS_LTV_SQL)

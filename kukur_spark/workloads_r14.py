@@ -57,9 +57,7 @@ from pyspark.sql import functions as F
 
 from kukur_spark.io import load_table
 from kukur_spark.operators import validate as V
-
-R14_QUERIES: dict = {}
-R14_ORACLES: dict = {}
+from kukur_spark.registry import register
 
 
 # ---------------------------------------------------------------------------
@@ -179,8 +177,7 @@ SELECT check_name, violations, total FROM (
 ORDER BY check_name
 """
 
-R14_QUERIES["dq_expectations"] = dq_expectations
-R14_ORACLES["dq_expectations"] = _EXPECTATIONS_SQL
+register("dq_expectations", dq_expectations, _EXPECTATIONS_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -254,8 +251,7 @@ _RI_SQL = (
     + ") ORDER BY fk_edge"
 )
 
-R14_QUERIES["dq_referential_integrity"] = dq_referential_integrity
-R14_ORACLES["dq_referential_integrity"] = _RI_SQL
+register("dq_referential_integrity", dq_referential_integrity, _RI_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -318,8 +314,7 @@ _UNIQ_SQL = (
     + ") ORDER BY key_name"
 )
 
-R14_QUERIES["dq_uniqueness"] = dq_uniqueness
-R14_ORACLES["dq_uniqueness"] = _UNIQ_SQL
+register("dq_uniqueness", dq_uniqueness, _UNIQ_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -370,8 +365,7 @@ _PROFILE_SQL = (
     + ") ORDER BY column_name"
 )
 
-R14_QUERIES["dq_profile"] = dq_profile
-R14_ORACLES["dq_profile"] = _PROFILE_SQL
+register("dq_profile", dq_profile, _PROFILE_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -474,8 +468,7 @@ GROUP BY coalesce(src2, src1)
 ORDER BY source
 """
 
-R14_QUERIES["dq_version_diff"] = dq_version_diff
-R14_ORACLES["dq_version_diff"] = _VERSION_DIFF_SQL
+register("dq_version_diff", dq_version_diff, _VERSION_DIFF_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -569,8 +562,7 @@ _PROFILE_DRIFT_SQL = (
     + ") ORDER BY column_name"
 )
 
-R14_QUERIES["dq_profile_drift"] = dq_profile_drift
-R14_ORACLES["dq_profile_drift"] = _PROFILE_DRIFT_SQL
+register("dq_profile_drift", dq_profile_drift, _PROFILE_DRIFT_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -754,5 +746,8 @@ _PROFILE_DRIFT_SKETCH_SQL = (
     + ") ORDER BY column_name"
 )
 
-R14_QUERIES["dq_profile_drift_sketch"] = dq_profile_drift_sketch
-R14_ORACLES["dq_profile_drift_sketch"] = _PROFILE_DRIFT_SKETCH_SQL
+register(
+    "dq_profile_drift_sketch",
+    dq_profile_drift_sketch,
+    _PROFILE_DRIFT_SKETCH_SQL,
+)

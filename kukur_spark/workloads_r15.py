@@ -50,9 +50,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kukur_spark.io import load_table
+from kukur_spark.registry import register
 
-R15_QUERIES: dict = {}
-R15_ORACLES: dict = {}
 
 _STOPWORDS = (
     "the", "and", "of", "to", "a", "in", "is", "on", "that", "for"
@@ -150,8 +149,7 @@ SELECT doc_id, n_words, mean_wlen_e2, stop_ppm, digit_ppm,
 FROM flags ORDER BY doc_id
 """
 
-R15_QUERIES["docs_gopher_rules"] = docs_gopher_rules
-R15_ORACLES["docs_gopher_rules"] = GOPHER_RULES_SQL
+register("docs_gopher_rules", docs_gopher_rules, GOPHER_RULES_SQL)
 
 
 def ts_spc_rules(
@@ -294,8 +292,7 @@ FROM ruled WHERE r1 + r2 + r3 + r4 > 0
 ORDER BY event_type, ts_us, event_id
 """
 
-R15_QUERIES["ts_spc_rules"] = ts_spc_rules
-R15_ORACLES["ts_spc_rules"] = SPC_RULES_SQL
+register("ts_spc_rules", ts_spc_rules, SPC_RULES_SQL)
 
 
 def ts_oee_daily(spark: SparkSession, sf: str) -> DataFrame:
@@ -472,8 +469,7 @@ FROM rated r JOIN best b USING (event_type)
 ORDER BY event_type, day_idx
 """
 
-R15_QUERIES["ts_oee_daily"] = ts_oee_daily
-R15_ORACLES["ts_oee_daily"] = OEE_DAILY_SQL
+register("ts_oee_daily", ts_oee_daily, OEE_DAILY_SQL)
 
 
 def ts_ewma_control(spark: SparkSession, sf: str) -> DataFrame:
@@ -590,8 +586,7 @@ WHERE z - mean > halfwidth OR mean - z > halfwidth
 ORDER BY event_type, ts_us, event_id
 """
 
-R15_QUERIES["ts_ewma_control"] = ts_ewma_control
-R15_ORACLES["ts_ewma_control"] = EWMA_CONTROL_SQL
+register("ts_ewma_control", ts_ewma_control, EWMA_CONTROL_SQL)
 
 
 def ts_process_capability(spark: SparkSession, sf: str) -> DataFrame:
@@ -732,5 +727,6 @@ SELECT event_type, n1 AS n_base, n2 AS n_eval,
 FROM derived ORDER BY event_type
 """
 
-R15_QUERIES["ts_process_capability"] = ts_process_capability
-R15_ORACLES["ts_process_capability"] = PROCESS_CAPABILITY_SQL
+register(
+    "ts_process_capability", ts_process_capability, PROCESS_CAPABILITY_SQL
+)

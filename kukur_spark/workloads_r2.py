@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from kukur_spark.io import load_table
 from kukur_spark.operators.asof import asof_join
 from kukur_spark.operators.interval_join import interval_join
+from kukur_spark.registry import register
 
 
 # ---------------------------------------------------------------------------
@@ -656,24 +657,15 @@ ORDER BY day_us
 """
 
 
-R2_QUERIES = {
-    "ts_interval_join": ts_interval_join,
-    "text_repetition": text_repetition,
-    "docs_domain_mix": docs_domain_mix,
-    "ts_asof_nearest": ts_asof_nearest,
-    "ts_merge_intervals": ts_merge_intervals,
-    "emb_int8_quantize": emb_int8_quantize,
-    "text_pretokenize": text_pretokenize,
-    "events_cumulative_users": events_cumulative_users,
-}
-
-R2_ORACLES = {
-    "ts_interval_join": TS_INTERVAL_JOIN_SQL,
-    "text_repetition": TEXT_REPETITION_SQL,
-    "docs_domain_mix": DOCS_DOMAIN_MIX_SQL,
-    "ts_asof_nearest": TS_ASOF_NEAREST_SQL,
-    "ts_merge_intervals": TS_MERGE_INTERVALS_SQL,
-    "emb_int8_quantize": EMB_INT8_SQL,
-    "text_pretokenize": TEXT_PRETOKENIZE_SQL,
-    "events_cumulative_users": EVENTS_CUMULATIVE_USERS_SQL,
-}
+register("ts_interval_join", ts_interval_join, TS_INTERVAL_JOIN_SQL)
+register("text_repetition", text_repetition, TEXT_REPETITION_SQL)
+register("docs_domain_mix", docs_domain_mix, DOCS_DOMAIN_MIX_SQL)
+register("ts_asof_nearest", ts_asof_nearest, TS_ASOF_NEAREST_SQL)
+register("ts_merge_intervals", ts_merge_intervals, TS_MERGE_INTERVALS_SQL)
+register("emb_int8_quantize", emb_int8_quantize, EMB_INT8_SQL)
+register("text_pretokenize", text_pretokenize, TEXT_PRETOKENIZE_SQL)
+register(
+    "events_cumulative_users",
+    events_cumulative_users,
+    EVENTS_CUMULATIVE_USERS_SQL,
+)

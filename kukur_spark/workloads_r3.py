@@ -18,6 +18,7 @@ from kukur_spark.operators.asof import asof_join
 from kukur_spark.operators.cdc import merge_upsert
 from kukur_spark.operators.dedup import shingles
 from kukur_spark.operators.sketch import hll_sketch, hll_sketch_sql
+from kukur_spark.registry import register
 
 
 # ---------------------------------------------------------------------------
@@ -295,21 +296,11 @@ WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
 """
 
 
-R3_QUERIES = {
-    "docs_hll_tokens": docs_hll_tokens,
-    "events_merge_upsert": events_merge_upsert,
-    "docs_chunks": docs_chunks,
-    "text_lev_neardup": text_lev_neardup,
-    "orders_scd2": orders_scd2,
-}
-
-R3_ORACLES = {
-    "docs_hll_tokens": DOCS_HLL_SQL,
-    "events_merge_upsert": EVENTS_MERGE_SQL,
-    "docs_chunks": DOCS_CHUNKS_SQL,
-    "text_lev_neardup": TEXT_LEV_SQL,
-    "orders_scd2": ORDERS_SCD2_SQL,
-}
+register("docs_hll_tokens", docs_hll_tokens, DOCS_HLL_SQL)
+register("events_merge_upsert", events_merge_upsert, EVENTS_MERGE_SQL)
+register("docs_chunks", docs_chunks, DOCS_CHUNKS_SQL)
+register("text_lev_neardup", text_lev_neardup, TEXT_LEV_SQL)
+register("orders_scd2", orders_scd2, ORDERS_SCD2_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -614,22 +605,13 @@ QUALIFY rk <= 5
 """
 
 
-R3_QUERIES.update(
-    {
-        "textrank_step": textrank_step,
-        "ts_quantile_sketch": ts_quantile_sketch,
-        "docs_sample_bernoulli": docs_sample_bernoulli,
-        "events_reservoir_per_user": events_reservoir_per_user,
-    }
-)
-
-R3_ORACLES.update(
-    {
-        "textrank_step": TEXTRANK_SQL,
-        "ts_quantile_sketch": TS_QUANTILE_SKETCH_SQL,
-        "docs_sample_bernoulli": DOCS_SAMPLE_SQL,
-        "events_reservoir_per_user": EVENTS_RESERVOIR_SQL,
-    }
+register("textrank_step", textrank_step, TEXTRANK_SQL)
+register("ts_quantile_sketch", ts_quantile_sketch, TS_QUANTILE_SKETCH_SQL)
+register("docs_sample_bernoulli", docs_sample_bernoulli, DOCS_SAMPLE_SQL)
+register(
+    "events_reservoir_per_user",
+    events_reservoir_per_user,
+    EVENTS_RESERVOIR_SQL,
 )
 
 
@@ -760,8 +742,7 @@ WHERE hits * 1000000 // n_shingles < {CONTAM_MAX_E6}
 ORDER BY doc_id
 """
 
-R3_QUERIES["docs_training_manifest"] = docs_training_manifest
-R3_ORACLES["docs_training_manifest"] = DOCS_MANIFEST_SQL
+register("docs_training_manifest", docs_training_manifest, DOCS_MANIFEST_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -919,8 +900,7 @@ GROUP BY cluster, dim
 ORDER BY cluster, dim
 """
 
-R3_QUERIES["emb_kmeans_iter2"] = emb_kmeans_iter2
-R3_ORACLES["emb_kmeans_iter2"] = EMB_KMEANS_ITER2_SQL
+register("emb_kmeans_iter2", emb_kmeans_iter2, EMB_KMEANS_ITER2_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1000,8 +980,7 @@ GROUP BY touch_type
 ORDER BY touch_type
 """
 
-R3_QUERIES["events_attribution"] = events_attribution
-R3_ORACLES["events_attribution"] = EVENTS_ATTRIBUTION_SQL
+register("events_attribution", events_attribution, EVENTS_ATTRIBUTION_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1070,5 +1049,8 @@ GROUP BY day_us, event_type
 ORDER BY day_us, event_type
 """
 
-R3_QUERIES["events_incremental_rollup"] = events_incremental_rollup
-R3_ORACLES["events_incremental_rollup"] = EVENTS_INCREMENTAL_SQL
+register(
+    "events_incremental_rollup",
+    events_incremental_rollup,
+    EVENTS_INCREMENTAL_SQL,
+)

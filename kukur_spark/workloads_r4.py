@@ -16,9 +16,7 @@ from pyspark.sql import functions as F
 
 from kukur_spark.io import load_table
 from kukur_spark.operators.dedup import md5_long
-
-R4_QUERIES: dict = {}
-R4_ORACLES: dict = {}
+from kukur_spark.registry import register
 
 
 # ---------------------------------------------------------------------------
@@ -96,8 +94,7 @@ ORDER BY est DESC, token
 LIMIT 20
 """
 
-R4_QUERIES["text_cms_topk"] = text_cms_topk
-R4_ORACLES["text_cms_topk"] = TEXT_CMS_SQL
+register("text_cms_topk", text_cms_topk, TEXT_CMS_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -143,8 +140,7 @@ GROUP BY p.doc_id
 ORDER BY doc_id
 """
 
-R4_QUERIES["text_df_score"] = text_df_score
-R4_ORACLES["text_df_score"] = TEXT_DF_SQL
+register("text_df_score", text_df_score, TEXT_DF_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -251,8 +247,7 @@ ORDER BY n_tri DESC, node
 LIMIT 20
 """
 
-R4_QUERIES["graph_triangles"] = graph_triangles
-R4_ORACLES["graph_triangles"] = GRAPH_TRI_SQL
+register("graph_triangles", graph_triangles, GRAPH_TRI_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -367,8 +362,7 @@ QUALIFY row_number() OVER (PARTITION BY event_type, win
 ORDER BY event_type, win
 """
 
-R4_QUERIES["ts_matrix_profile"] = ts_matrix_profile
-R4_ORACLES["ts_matrix_profile"] = TS_MP_SQL
+register("ts_matrix_profile", ts_matrix_profile, TS_MP_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -424,8 +418,7 @@ GROUP BY dim
 ORDER BY dim
 """
 
-R4_QUERIES["emb_power_iter"] = emb_power_iter
-R4_ORACLES["emb_power_iter"] = EMB_POWER_SQL
+register("emb_power_iter", emb_power_iter, EMB_POWER_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -501,8 +494,7 @@ GROUP BY g.doc_id
 ORDER BY doc_id
 """
 
-R4_QUERIES["docs_novelty"] = docs_novelty
-R4_ORACLES["docs_novelty"] = DOCS_NOVELTY_SQL
+register("docs_novelty", docs_novelty, DOCS_NOVELTY_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -550,8 +542,7 @@ SELECT source, n_docs, w_e6,
 FROM w ORDER BY source
 """
 
-R4_QUERIES["docs_temperature_mix"] = docs_temperature_mix
-R4_ORACLES["docs_temperature_mix"] = DOCS_TEMP_SQL
+register("docs_temperature_mix", docs_temperature_mix, DOCS_TEMP_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -693,5 +684,6 @@ QUALIFY row_number() OVER (PARTITION BY event_type, w1
 ORDER BY event_type, win
 """
 
-R4_QUERIES["ts_matrix_profile_banded"] = ts_matrix_profile_banded
-R4_ORACLES["ts_matrix_profile_banded"] = TS_MP_BANDED_SQL
+register(
+    "ts_matrix_profile_banded", ts_matrix_profile_banded, TS_MP_BANDED_SQL
+)

@@ -13,9 +13,7 @@ from pyspark.sql import functions as F
 
 from kukur_spark.io import load_table
 from kukur_spark.operators.dedup import md5_long
-
-R5_QUERIES: dict = {}
-R5_ORACLES: dict = {}
+from kukur_spark.registry import register
 
 
 # ---------------------------------------------------------------------------
@@ -99,8 +97,7 @@ FROM agg
 ORDER BY event_type, week
 """
 
-R5_QUERIES["ts_linreg_trend"] = ts_linreg_trend
-R5_ORACLES["ts_linreg_trend"] = TS_LINREG_SQL
+register("ts_linreg_trend", ts_linreg_trend, TS_LINREG_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -210,8 +207,7 @@ WHERE prev IS NOT NULL AND above <> prev
 ORDER BY event_type, day
 """
 
-R5_QUERIES["ts_ma_crossover"] = ts_ma_crossover
-R5_ORACLES["ts_ma_crossover"] = TS_MA_CROSS_SQL
+register("ts_ma_crossover", ts_ma_crossover, TS_MA_CROSS_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -289,8 +285,7 @@ WHERE r = (n_keys + 1) // 2
 GROUP BY n_keys, total, max_cnt
 """
 
-R5_QUERIES["events_skew_report"] = events_skew_report
-R5_ORACLES["events_skew_report"] = EVENTS_SKEW_SQL
+register("events_skew_report", events_skew_report, EVENTS_SKEW_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -399,8 +394,7 @@ FROM probes p LEFT JOIN hit USING (word)
 ORDER BY word
 """
 
-R5_QUERIES["docs_bloom_probe"] = docs_bloom_probe
-R5_ORACLES["docs_bloom_probe"] = DOCS_BLOOM_SQL
+register("docs_bloom_probe", docs_bloom_probe, DOCS_BLOOM_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -455,8 +449,7 @@ GROUP BY doc_id
 ORDER BY doc_id
 """
 
-R5_QUERIES["text_gini_diversity"] = text_gini_diversity
-R5_ORACLES["text_gini_diversity"] = TEXT_GINI_SQL
+register("text_gini_diversity", text_gini_diversity, TEXT_GINI_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -522,8 +515,7 @@ GROUP BY event_type
 ORDER BY event_type
 """
 
-R5_QUERIES["ts_interarrival_stats"] = ts_interarrival_stats
-R5_ORACLES["ts_interarrival_stats"] = TS_INTERARRIVAL_SQL
+register("ts_interarrival_stats", ts_interarrival_stats, TS_INTERARRIVAL_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -572,8 +564,7 @@ GROUP BY digit
 ORDER BY digit
 """
 
-R5_QUERIES["orders_benford"] = orders_benford
-R5_ORACLES["orders_benford"] = ORDERS_BENFORD_SQL
+register("orders_benford", orders_benford, ORDERS_BENFORD_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -628,8 +619,7 @@ GROUP BY token
 ORDER BY token
 """
 
-R5_QUERIES["text_inverted_index"] = text_inverted_index
-R5_ORACLES["text_inverted_index"] = TEXT_INVERTED_SQL
+register("text_inverted_index", text_inverted_index, TEXT_INVERTED_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -698,8 +688,7 @@ FROM dau d JOIN wau w USING (day)
 ORDER BY day
 """
 
-R5_QUERIES["events_dau_wau"] = events_dau_wau
-R5_ORACLES["events_dau_wau"] = EVENTS_DAU_WAU_SQL
+register("events_dau_wau", events_dau_wau, EVENTS_DAU_WAU_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -750,8 +739,7 @@ FROM last, wm
 ORDER BY event_type
 """
 
-R5_QUERIES["ts_staleness"] = ts_staleness
-R5_ORACLES["ts_staleness"] = TS_STALENESS_SQL
+register("ts_staleness", ts_staleness, TS_STALENESS_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -829,5 +817,6 @@ SELECT rule, n_rows, n_violations, n_violations = 0 AS passed FROM (
 ORDER BY rule
 """
 
-R5_QUERIES["lineitem_quality_report"] = lineitem_quality_report
-R5_ORACLES["lineitem_quality_report"] = LINEITEM_QUALITY_SQL
+register(
+    "lineitem_quality_report", lineitem_quality_report, LINEITEM_QUALITY_SQL
+)

@@ -22,9 +22,7 @@ from pyspark.sql import functions as F
 
 from kukur_spark.io import load_table
 from kukur_spark.operators.text import tokens
-
-R6_QUERIES: dict = {}
-R6_ORACLES: dict = {}
+from kukur_spark.registry import register
 
 
 # ---------------------------------------------------------------------------
@@ -214,8 +212,7 @@ SELECT CAST(query_id AS BIGINT) AS query_id, doc_id, bm25_e6, rank
 FROM ranked WHERE rank <= 10 ORDER BY query_id, rank
 """
 
-R6_QUERIES["docs_bm25_topk"] = docs_bm25_topk
-R6_ORACLES["docs_bm25_topk"] = DOCS_BM25_SQL
+register("docs_bm25_topk", docs_bm25_topk, DOCS_BM25_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -376,8 +373,7 @@ SELECT doc_id, rank_b, rank_c, rrf_e9, rank FROM (
 ) WHERE rank <= 10 ORDER BY rank
 """
 
-R6_QUERIES["docs_hybrid_rrf"] = docs_hybrid_rrf
-R6_ORACLES["docs_hybrid_rrf"] = DOCS_HYBRID_RRF_SQL
+register("docs_hybrid_rrf", docs_hybrid_rrf, DOCS_HYBRID_RRF_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -455,8 +451,7 @@ SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens,
 FROM inst GROUP BY doc_id ORDER BY doc_id
 """
 
-R6_QUERIES["docs_unigram_logprob"] = docs_unigram_logprob
-R6_ORACLES["docs_unigram_logprob"] = DOCS_UNIGRAM_SQL
+register("docs_unigram_logprob", docs_unigram_logprob, DOCS_UNIGRAM_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -529,8 +524,7 @@ SELECT doc_id, source, n_tokens,
 FROM offs ORDER BY source, doc_id
 """
 
-R6_QUERIES["docs_pack_sequences"] = docs_pack_sequences
-R6_ORACLES["docs_pack_sequences"] = DOCS_PACK_SQL
+register("docs_pack_sequences", docs_pack_sequences, DOCS_PACK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -599,8 +593,7 @@ WHERE sel_rank <= cap
 ORDER BY lang, sel_rank
 """
 
-R6_QUERIES["docs_balanced_sample"] = docs_balanced_sample
-R6_ORACLES["docs_balanced_sample"] = DOCS_BALANCED_SQL
+register("docs_balanced_sample", docs_balanced_sample, DOCS_BALANCED_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -673,8 +666,7 @@ FROM weighted CROSS JOIN total
 ORDER BY lang
 """
 
-R6_QUERIES["docs_mixture_weights"] = docs_mixture_weights
-R6_ORACLES["docs_mixture_weights"] = DOCS_MIXTURE_SQL
+register("docs_mixture_weights", docs_mixture_weights, DOCS_MIXTURE_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -789,8 +781,7 @@ SELECT n_overlap, dcg_e6, idcg_e6,
 FROM d CROSS JOIN i
 """
 
-R6_QUERIES["retrieval_ndcg"] = retrieval_ndcg
-R6_ORACLES["retrieval_ndcg"] = RETRIEVAL_NDCG_SQL
+register("retrieval_ndcg", retrieval_ndcg, RETRIEVAL_NDCG_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -877,8 +868,9 @@ FROM el CROSS JOIN er CROSS JOIN eu CROSS JOIN ex
 """
 
 
-R6_QUERIES["join_cardinality_estimate"] = join_cardinality_estimate
-R6_ORACLES["join_cardinality_estimate"] = _join_card_sql()
+register(
+    "join_cardinality_estimate", join_cardinality_estimate, _join_card_sql()
+)
 
 
 # ---------------------------------------------------------------------------
@@ -956,8 +948,7 @@ SELECT doc_id, n_chars, key_e9, rank FROM (
 ) WHERE rank <= {_WSAMPLE_K} ORDER BY rank
 """
 
-R6_QUERIES["docs_weighted_sample"] = docs_weighted_sample
-R6_ORACLES["docs_weighted_sample"] = DOCS_WSAMPLE_SQL
+register("docs_weighted_sample", docs_weighted_sample, DOCS_WSAMPLE_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1018,5 +1009,6 @@ SELECT stage, CAST(COUNT(*) AS BIGINT) AS n_docs,
 FROM tiled GROUP BY stage ORDER BY stage
 """
 
-R6_QUERIES["docs_curriculum_buckets"] = docs_curriculum_buckets
-R6_ORACLES["docs_curriculum_buckets"] = DOCS_CURRICULUM_SQL
+register(
+    "docs_curriculum_buckets", docs_curriculum_buckets, DOCS_CURRICULUM_SQL
+)

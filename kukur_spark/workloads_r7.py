@@ -19,15 +19,11 @@ whole recursion is integer-exact cross-engine.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kukur_spark.io import load_table
-
-R7_QUERIES: dict = {}
-R7_ORACLES: dict = {}
+from kukur_spark.registry import register
 
 
 # ---------------------------------------------------------------------------
@@ -110,8 +106,7 @@ FROM walk WHERE i = len(seq)
 ORDER BY event_type, day_us
 """
 
-R7_QUERIES["ts_exp_smooth"] = ts_exp_smooth
-R7_ORACLES["ts_exp_smooth"] = TS_EXP_SMOOTH_SQL
+register("ts_exp_smooth", ts_exp_smooth, TS_EXP_SMOOTH_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -209,8 +204,7 @@ FROM walk WHERE i = len(seq)
 ORDER BY user_id
 """
 
-R7_QUERIES["events_state_machine"] = events_state_machine
-R7_ORACLES["events_state_machine"] = EVENTS_FSM_SQL
+register("events_state_machine", events_state_machine, EVENTS_FSM_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -284,8 +278,9 @@ FROM counts c JOIN totals t USING (prev_type)
 ORDER BY c.prev_type, c.event_type
 """
 
-R7_QUERIES["events_markov_transitions"] = events_markov_transitions
-R7_ORACLES["events_markov_transitions"] = EVENTS_MARKOV_SQL
+register(
+    "events_markov_transitions", events_markov_transitions, EVENTS_MARKOV_SQL
+)
 
 
 # ---------------------------------------------------------------------------
@@ -356,8 +351,7 @@ SELECT event_type, word, n, rank FROM (
 """
 
 
-R7_QUERIES["ts_sax_motifs"] = ts_sax_motifs
-R7_ORACLES["ts_sax_motifs"] = _sax_motifs_sql()
+register("ts_sax_motifs", ts_sax_motifs, _sax_motifs_sql())
 
 
 # ---------------------------------------------------------------------------
@@ -368,12 +362,11 @@ _OUTLIER_CAP = 1000  # exact-parity subset (see tests/test_r7_operators.py)
 # multi-table LSH: 8 tables of 3 planes each over the 500-vector test
 # corpus; production grows planes with log2(N / target_bucket_size) to
 # hold bucket sizes — and with them candidate volume per vector —
-# constant.  The env knob makes that posture executable without a code
-# edit (the Spark query AND the DuckDB oracle both derive from it, so
-# results stay exactly checkable at any setting); the default 3 is the
+# constant.  The Spark query AND the DuckDB oracle both derive from this
+# constant, so results stay exactly checkable at any setting; 3 is the
 # value the static oracle fixtures and the driver's result hashes pin.
 # plans/r11/scale.json carries a 10x probe at planes=6.
-_OUTLIER_PLANES = int(os.environ.get("SPARK_GRAFT_OUTLIER_PLANES", "3"))
+_OUTLIER_PLANES = 3
 _OUTLIER_TABLES = 8
 
 
@@ -602,5 +595,4 @@ SELECT vec_id, score_e6, rank FROM (
 ) WHERE rank <= 10 ORDER BY rank
 """
 
-R7_QUERIES["emb_outlier_knn"] = emb_outlier_knn
-R7_ORACLES["emb_outlier_knn"] = EMB_OUTLIER_SQL
+register("emb_outlier_knn", emb_outlier_knn, EMB_OUTLIER_SQL)

@@ -16,9 +16,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kukur_spark.io import load_table
+from kukur_spark.registry import register
 
-R8_QUERIES: dict = {}
-R8_ORACLES: dict = {}
 
 _SESSION_GAP_US = 30 * 60 * 1_000_000
 
@@ -121,8 +120,7 @@ FROM per_session GROUP BY entry_type, exit_type
 ORDER BY entry_type, exit_type
 """
 
-R8_QUERIES["sessions_entry_exit"] = sessions_entry_exit
-R8_ORACLES["sessions_entry_exit"] = SESSIONS_ENTRY_EXIT_SQL
+register("sessions_entry_exit", sessions_entry_exit, SESSIONS_ENTRY_EXIT_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -233,8 +231,7 @@ SELECT term, share_a_ppm, share_b_ppm, drift_ppm, rank FROM (
 ) WHERE rank <= 10 ORDER BY rank
 """
 
-R8_QUERIES["docs_vocab_drift"] = docs_vocab_drift
-R8_ORACLES["docs_vocab_drift"] = DOCS_VOCAB_DRIFT_SQL
+register("docs_vocab_drift", docs_vocab_drift, DOCS_VOCAB_DRIFT_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -294,8 +291,7 @@ SELECT new_id, hist_id, jaccard_ppm FROM (
 """
 
 
-R8_QUERIES["dedup_incremental"] = dedup_incremental
-R8_ORACLES["dedup_incremental"] = _dedup_incr_sql()
+register("dedup_incremental", dedup_incremental, _dedup_incr_sql())
 
 
 # ---------------------------------------------------------------------------
@@ -416,8 +412,7 @@ FROM margins GROUP BY label ORDER BY label
 """
 
 
-R8_QUERIES["emb_class_margin"] = emb_class_margin
-R8_ORACLES["emb_class_margin"] = _emb_class_margin_sql()
+register("emb_class_margin", emb_class_margin, _emb_class_margin_sql())
 
 
 # ---------------------------------------------------------------------------
@@ -512,8 +507,9 @@ WHERE c.cum_qty * 2 >= t.total_qty
 GROUP BY c.l_returnflag ORDER BY c.l_returnflag
 """
 
-R8_QUERIES["lineitem_weighted_median"] = lineitem_weighted_median
-R8_ORACLES["lineitem_weighted_median"] = LINEITEM_WMEDIAN_SQL
+register(
+    "lineitem_weighted_median", lineitem_weighted_median, LINEITEM_WMEDIAN_SQL
+)
 
 
 # ---------------------------------------------------------------------------
@@ -783,8 +779,7 @@ FROM (
 ) WHERE rank <= 10 ORDER BY rank
 """
 
-R8_QUERIES["docs_rag_query"] = docs_rag_query
-R8_ORACLES["docs_rag_query"] = DOCS_RAG_SQL
+register("docs_rag_query", docs_rag_query, DOCS_RAG_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -851,8 +846,7 @@ SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
 FROM joined GROUP BY source ORDER BY source
 """
 
-R8_QUERIES["docs_dup_rate_by_source"] = docs_dup_rate_by_source
-R8_ORACLES["docs_dup_rate_by_source"] = DOCS_DUP_RATE_SQL
+register("docs_dup_rate_by_source", docs_dup_rate_by_source, DOCS_DUP_RATE_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -919,8 +913,7 @@ SELECT user_id, burst_n, burst_end_us FROM (
 ) WHERE rn = 1 ORDER BY user_id
 """
 
-R8_QUERIES["events_error_burst"] = events_error_burst
-R8_ORACLES["events_error_burst"] = EVENTS_ERROR_BURST_SQL
+register("events_error_burst", events_error_burst, EVENTS_ERROR_BURST_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1006,8 +999,7 @@ SELECT event_type, streak_len, start_us, end_us FROM (
 ) WHERE rn = 1 ORDER BY event_type
 """
 
-R8_QUERIES["ts_threshold_streaks"] = ts_threshold_streaks
-R8_ORACLES["ts_threshold_streaks"] = TS_STREAKS_SQL
+register("ts_threshold_streaks", ts_threshold_streaks, TS_STREAKS_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1138,8 +1130,7 @@ LEFT JOIN median m USING (cohort_us)
 ORDER BY t.cohort_us
 """
 
-R8_QUERIES["events_conversion_lag"] = events_conversion_lag
-R8_ORACLES["events_conversion_lag"] = EVENTS_CONVERSION_SQL
+register("events_conversion_lag", events_conversion_lag, EVENTS_CONVERSION_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1291,8 +1282,7 @@ LEFT JOIN seg_med s USING (c_mktsegment)
 ORDER BY t.c_mktsegment
 """
 
-R8_QUERIES["orders_repeat_rate"] = orders_repeat_rate
-R8_ORACLES["orders_repeat_rate"] = ORDERS_REPEAT_SQL
+register("orders_repeat_rate", orders_repeat_rate, ORDERS_REPEAT_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1395,8 +1385,7 @@ SELECT event_type, anomalous_date, n_hours, mean_dev_e6 FROM (
 ) WHERE rn = 1 ORDER BY event_type
 """
 
-R8_QUERIES["ts_profile_anomaly"] = ts_profile_anomaly
-R8_ORACLES["ts_profile_anomaly"] = TS_PROFILE_ANOMALY_SQL
+register("ts_profile_anomaly", ts_profile_anomaly, TS_PROFILE_ANOMALY_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1483,8 +1472,7 @@ FROM n_tbl n JOIN med m USING (l_suppkey)
 ORDER BY n.l_suppkey
 """
 
-R8_QUERIES["supplier_lead_time"] = supplier_lead_time
-R8_ORACLES["supplier_lead_time"] = SUPPLIER_LEAD_SQL
+register("supplier_lead_time", supplier_lead_time, SUPPLIER_LEAD_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1643,8 +1631,7 @@ SELECT lag_h, n, r_ppm,
 FROM scored ORDER BY lag_h
 """
 
-R8_QUERIES["ts_leadlag_corr"] = ts_leadlag_corr
-R8_ORACLES["ts_leadlag_corr"] = TS_LEADLAG_SQL
+register("ts_leadlag_corr", ts_leadlag_corr, TS_LEADLAG_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1739,5 +1726,4 @@ JOIN sizes sb ON sb.source = i.source_b
 ORDER BY i.source_a, i.source_b
 """
 
-R8_QUERIES["docs_source_overlap"] = docs_source_overlap
-R8_ORACLES["docs_source_overlap"] = DOCS_SOURCE_OVERLAP_SQL
+register("docs_source_overlap", docs_source_overlap, DOCS_SOURCE_OVERLAP_SQL)

@@ -23,9 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kukur_spark.io import load_table
-
-R9_QUERIES: dict = {}
-R9_ORACLES: dict = {}
+from kukur_spark.oracle_sql import duck_cos, pq_enc_scored_sql
+from kukur_spark.registry import register
 
 
 # ---------------------------------------------------------------------------
@@ -125,8 +124,7 @@ SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
 FROM scored GROUP BY doc_id ORDER BY doc_id
 """
 
-R9_QUERIES["docs_bigram_surprisal"] = docs_bigram_surprisal
-R9_ORACLES["docs_bigram_surprisal"] = DOCS_BIGRAM_SQL
+register("docs_bigram_surprisal", docs_bigram_surprisal, DOCS_BIGRAM_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -201,8 +199,7 @@ ORDER BY rank LIMIT {_BP_TOPK}
 """
 
 
-R9_QUERIES["docs_boilerplate_chunks"] = docs_boilerplate_chunks
-R9_ORACLES["docs_boilerplate_chunks"] = _bp_sql()
+register("docs_boilerplate_chunks", docs_boilerplate_chunks, _bp_sql())
 
 
 # ---------------------------------------------------------------------------
@@ -265,8 +262,7 @@ SELECT source,
 FROM scored GROUP BY source ORDER BY source
 """
 
-R9_QUERIES["docs_blocklist_filter"] = docs_blocklist_filter
-R9_ORACLES["docs_blocklist_filter"] = DOCS_BLOCKLIST_SQL
+register("docs_blocklist_filter", docs_blocklist_filter, DOCS_BLOCKLIST_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -391,8 +387,7 @@ FROM marked GROUP BY decile ORDER BY decile
 """
 
 
-R9_QUERIES["dedup_lsh_recall"] = dedup_lsh_recall
-R9_ORACLES["dedup_lsh_recall"] = _lsh_recall_sql()
+register("dedup_lsh_recall", dedup_lsh_recall, _lsh_recall_sql())
 
 
 # ---------------------------------------------------------------------------
@@ -491,8 +486,9 @@ WHERE d.doc_id % 25 <> 0
 GROUP BY d.source ORDER BY d.source
 """
 
-R9_QUERIES["docs_decontaminate_13gram"] = docs_decontaminate_13gram
-R9_ORACLES["docs_decontaminate_13gram"] = DOCS_DECON13_SQL
+register(
+    "docs_decontaminate_13gram", docs_decontaminate_13gram, DOCS_DECON13_SQL
+)
 
 
 # ---------------------------------------------------------------------------
@@ -589,32 +585,15 @@ def emb_ivfpq_topk(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def ivfpq_oracle_sql() -> str:
+def _ivfpq_oracle_sql() -> str:
     """DuckDB oracle for :func:`emb_ivfpq_topk` — the IVF CTE prefix
     (centroids/assignments/probes, identical to ``EMB_IVF_SQL``) feeding
     the PQ encode/ADC CTEs (identical to ``_pq_sql``), joined on the
-    probed lists only.  Built lazily (called from ``workloads.py`` after
-    module init) so the ``_duck_cos`` helper can be imported without a
-    cycle."""
-    from kukur_spark.workloads import _duck_cos
+    probed lists only."""
     from kukur_spark.workloads_llm import _PQ_CODES, _PQ_DSUB, _PQ_K, _PQ_M
 
     m, dsub = _PQ_M, _PQ_DSUB
-
-    def enc_dist(s: int) -> str:
-        return " + ".join(
-            f"(CAST(e.embedding[{s * dsub + d + 1}] AS DOUBLE)"
-            f" - CAST(se.embedding[{s * dsub + d + 1}] AS DOUBLE))"
-            f" * (CAST(e.embedding[{s * dsub + d + 1}] AS DOUBLE)"
-            f" - CAST(se.embedding[{s * dsub + d + 1}] AS DOUBLE))"
-            for d in range(dsub)
-        )
-
-    enc_unions = "\nUNION ALL\n".join(
-        f"SELECT e.vec_id, {s} AS s, se.vec_id AS c, {enc_dist(s)} AS dist\n"
-        f"FROM embeddings e, seeds se"
-        for s in range(m)
-    )
+    enc_unions = pq_enc_scored_sql(m, dsub)
     code_cols = ", ".join(
         f"MAX(CASE WHEN s = {s} THEN code END) AS code{s}" for s in range(m)
     )
@@ -638,7 +617,7 @@ WITH centroids AS (
 ),
 assign_scored AS (
   SELECT e.vec_id, c.centroid_id,
-    {_duck_cos('e.embedding', 'c.centroid')} AS sim
+    {duck_cos('e.embedding', 'c.centroid')} AS sim
   FROM embeddings e, centroids c
 ),
 assignments AS (
@@ -655,7 +634,7 @@ q AS (
 ),
 probe_scored AS (
   SELECT query_id, qv, centroid_id,
-    {_duck_cos('qv', 'centroid')} AS centroid_sim
+    {duck_cos('qv', 'centroid')} AS centroid_sim
   FROM q, centroids
 ),
 probes AS (
@@ -700,6 +679,9 @@ SELECT query_id, neighbor_id, round(adc, 6) AS adc,
   CAST(rank AS BIGINT) AS rank
 FROM ranked WHERE rank <= {_PQ_K} ORDER BY query_id, rank
 """
+
+
+register("emb_ivfpq_topk", emb_ivfpq_topk, _ivfpq_oracle_sql())
 
 
 # ---------------------------------------------------------------------------
@@ -832,8 +814,7 @@ FROM scored
 ORDER BY rank LIMIT {_BASKET_TOPK}
 """
 
-R9_QUERIES["parts_basket_lift"] = parts_basket_lift
-R9_ORACLES["parts_basket_lift"] = PARTS_BASKET_SQL
+register("parts_basket_lift", parts_basket_lift, PARTS_BASKET_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -938,8 +919,7 @@ FROM walk WHERE i = len(seq)
 ORDER BY event_type, day_us
 """
 
-R9_QUERIES["ts_holt_trend"] = ts_holt_trend
-R9_ORACLES["ts_holt_trend"] = TS_HOLT_SQL
+register("ts_holt_trend", ts_holt_trend, TS_HOLT_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1158,8 +1138,7 @@ FROM agg ORDER BY source
 """
 
 
-R9_QUERIES["docs_curation_funnel"] = docs_curation_funnel
-R9_ORACLES["docs_curation_funnel"] = _funnel_sql()
+register("docs_curation_funnel", docs_curation_funnel, _funnel_sql())
 
 
 # ---------------------------------------------------------------------------
@@ -1357,8 +1336,7 @@ FROM named ORDER BY rank LIMIT 25
 """
 
 
-R9_QUERIES["nation_trade_pagerank"] = nation_trade_pagerank
-R9_ORACLES["nation_trade_pagerank"] = _pagerank_sql()
+register("nation_trade_pagerank", nation_trade_pagerank, _pagerank_sql())
 
 
 # ---------------------------------------------------------------------------
@@ -1470,8 +1448,7 @@ WHERE r.draw <= a.alloc
 ORDER BY r.source, r.draw
 """
 
-R9_QUERIES["docs_stratified_sample"] = docs_stratified_sample
-R9_ORACLES["docs_stratified_sample"] = DOCS_STRAT_SQL
+register("docs_stratified_sample", docs_stratified_sample, DOCS_STRAT_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1519,8 +1496,7 @@ FROM events WHERE value IS NOT NULL
 GROUP BY event_type ORDER BY event_type
 """
 
-R9_QUERIES["events_salted_agg"] = events_salted_agg
-R9_ORACLES["events_salted_agg"] = EVENTS_SALTED_SQL
+register("events_salted_agg", events_salted_agg, EVENTS_SALTED_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1600,8 +1576,7 @@ WHERE NOT (l.prefix_max >= p.size OR l.lvl_max > p.size)
 ORDER BY p.p_partkey
 """
 
-R9_QUERIES["parts_skyline"] = parts_skyline
-R9_ORACLES["parts_skyline"] = PARTS_SKYLINE_SQL
+register("parts_skyline", parts_skyline, PARTS_SKYLINE_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1718,8 +1693,7 @@ SELECT trigram, n,
 FROM counts ORDER BY rank LIMIT {_PATH_TOPK}
 """
 
-R9_QUERIES["events_path_trigrams"] = events_path_trigrams
-R9_ORACLES["events_path_trigrams"] = EVENTS_PATH_SQL
+register("events_path_trigrams", events_path_trigrams, EVENTS_PATH_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1930,8 +1904,7 @@ ORDER BY e.vec_id
 
 EMB_SEMANTIC_SQL = _sem_oracle_sql()
 
-R9_QUERIES["emb_semantic_clusters"] = emb_semantic_clusters
-R9_ORACLES["emb_semantic_clusters"] = EMB_SEMANTIC_SQL
+register("emb_semantic_clusters", emb_semantic_clusters, EMB_SEMANTIC_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -2058,8 +2031,7 @@ FROM scored GROUP BY LEAST(exact_ppm // 100000, 9) ORDER BY decile
 """
 
 
-R9_QUERIES["minhash_estimate_error"] = minhash_estimate_error
-R9_ORACLES["minhash_estimate_error"] = _mh_err_sql()
+register("minhash_estimate_error", minhash_estimate_error, _mh_err_sql())
 
 
 # ---------------------------------------------------------------------------
@@ -2159,8 +2131,7 @@ FROM per_nation p JOIN nation nt ON nt.n_nationkey = p.s_nationkey
 ORDER BY nation
 """
 
-R9_QUERIES["nation_revenue_gini"] = nation_revenue_gini
-R9_ORACLES["nation_revenue_gini"] = NATION_GINI_SQL
+register("nation_revenue_gini", nation_revenue_gini, NATION_GINI_SQL)
 
 
 def parts_brand_hhi(spark: SparkSession, sf: str) -> DataFrame:
@@ -2252,5 +2223,4 @@ SELECT p_type, n_brands,
 FROM shares GROUP BY p_type, n_brands ORDER BY p_type
 """
 
-R9_QUERIES["parts_brand_hhi"] = parts_brand_hhi
-R9_ORACLES["parts_brand_hhi"] = PARTS_HHI_SQL
+register("parts_brand_hhi", parts_brand_hhi, PARTS_HHI_SQL)

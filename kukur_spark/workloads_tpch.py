@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kukur_spark.io import load_table, persist_once
+from kukur_spark.registry import register
 
 
 def _dsum(col) -> Column:
@@ -672,32 +673,15 @@ ORDER BY s_name
 """
 
 
-TPCH_EXTRA_QUERIES = {
-    "tpch_q2": tpch_q2_min_cost_supplier,
-    "tpch_q20": tpch_q20_excess_share,
-    "tpch_q4": tpch_q4_priority,
-    "tpch_q8": tpch_q8_market_share,
-    "tpch_q9": tpch_q9_profit,
-    "tpch_q11": tpch_q11_important_parts,
-    "tpch_q12": tpch_q12_late_lines,
-    "tpch_q13": tpch_q13_custdist,
-    "tpch_q15": tpch_q15_top_supplier,
-    "tpch_q16": tpch_q16_part_suppliers,
-    "tpch_q21": tpch_q21_waiting_suppliers,
-    "tpch_q22": tpch_q22_idle_customers,
-}
-
-TPCH_EXTRA_ORACLES = {
-    "tpch_q2": TPCH_Q2_SQL,
-    "tpch_q20": TPCH_Q20_SQL,
-    "tpch_q4": TPCH_Q4_SQL,
-    "tpch_q8": TPCH_Q8_SQL,
-    "tpch_q9": TPCH_Q9_SQL,
-    "tpch_q11": TPCH_Q11_SQL,
-    "tpch_q12": TPCH_Q12_SQL,
-    "tpch_q13": TPCH_Q13_SQL,
-    "tpch_q15": TPCH_Q15_SQL,
-    "tpch_q16": TPCH_Q16_SQL,
-    "tpch_q21": TPCH_Q21_SQL,
-    "tpch_q22": TPCH_Q22_SQL,
-}
+register("tpch_q2", tpch_q2_min_cost_supplier, TPCH_Q2_SQL)
+register("tpch_q20", tpch_q20_excess_share, TPCH_Q20_SQL)
+register("tpch_q4", tpch_q4_priority, TPCH_Q4_SQL)
+register("tpch_q8", tpch_q8_market_share, TPCH_Q8_SQL)
+register("tpch_q9", tpch_q9_profit, TPCH_Q9_SQL)
+register("tpch_q11", tpch_q11_important_parts, TPCH_Q11_SQL)
+register("tpch_q12", tpch_q12_late_lines, TPCH_Q12_SQL)
+register("tpch_q13", tpch_q13_custdist, TPCH_Q13_SQL)
+register("tpch_q15", tpch_q15_top_supplier, TPCH_Q15_SQL)
+register("tpch_q16", tpch_q16_part_suppliers, TPCH_Q16_SQL)
+register("tpch_q21", tpch_q21_waiting_suppliers, TPCH_Q21_SQL)
+register("tpch_q22", tpch_q22_idle_customers, TPCH_Q22_SQL)

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kukur_spark.io import load_table, persist_once
+from kukur_spark.registry import register
 
 
 # ---------------------------------------------------------------------------
@@ -1131,36 +1132,17 @@ ORDER BY event_type, day_us
 """
 
 
-TS_EXTRA_QUERIES = {
-    "ts_twa": ts_twa,
-    "ts_paa_sax": ts_paa_sax,
-    "ts_lttb": ts_lttb,
-    "ts_seasonal_profile": ts_seasonal_profile,
-    "ts_counter_delta": ts_counter_delta,
-    "ts_zscore_outliers": ts_zscore_outliers,
-    "ts_rate_of_change": ts_rate_of_change,
-    "ts_minmax_normalize": ts_minmax_normalize,
-    "ts_gap_detect": ts_gap_detect,
-    "ts_percentiles": ts_percentiles,
-    "ts_value_histogram": ts_value_histogram,
-    "ts_corr_pairs": ts_corr_pairs,
-    "ts_ewma": ts_ewma,
-    "ts_autocorr": ts_autocorr,
-}
-
-TS_EXTRA_ORACLES = {
-    "ts_twa": TS_TWA_SQL,
-    "ts_paa_sax": TS_PAA_SAX_SQL,
-    "ts_lttb": TS_LTTB_SQL,
-    "ts_seasonal_profile": TS_SEASONAL_SQL,
-    "ts_counter_delta": TS_COUNTER_SQL,
-    "ts_zscore_outliers": TS_ZSCORE_SQL,
-    "ts_rate_of_change": TS_RATE_SQL,
-    "ts_minmax_normalize": TS_MINMAX_SQL,
-    "ts_gap_detect": TS_GAP_SQL,
-    "ts_percentiles": TS_PERCENTILES_SQL,
-    "ts_value_histogram": TS_HISTOGRAM_SQL,
-    "ts_corr_pairs": TS_CORR_SQL,
-    "ts_ewma": TS_EWMA_SQL,
-    "ts_autocorr": TS_AUTOCORR_SQL,
-}
+register("ts_twa", ts_twa, TS_TWA_SQL)
+register("ts_paa_sax", ts_paa_sax, TS_PAA_SAX_SQL)
+register("ts_lttb", ts_lttb, TS_LTTB_SQL)
+register("ts_seasonal_profile", ts_seasonal_profile, TS_SEASONAL_SQL)
+register("ts_counter_delta", ts_counter_delta, TS_COUNTER_SQL)
+register("ts_zscore_outliers", ts_zscore_outliers, TS_ZSCORE_SQL)
+register("ts_rate_of_change", ts_rate_of_change, TS_RATE_SQL)
+register("ts_minmax_normalize", ts_minmax_normalize, TS_MINMAX_SQL)
+register("ts_gap_detect", ts_gap_detect, TS_GAP_SQL)
+register("ts_percentiles", ts_percentiles, TS_PERCENTILES_SQL)
+register("ts_value_histogram", ts_value_histogram, TS_HISTOGRAM_SQL)
+register("ts_corr_pairs", ts_corr_pairs, TS_CORR_SQL)
+register("ts_ewma", ts_ewma, TS_EWMA_SQL)
+register("ts_autocorr", ts_autocorr, TS_AUTOCORR_SQL)

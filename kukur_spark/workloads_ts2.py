@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kukur_spark.io import load_table
+from kukur_spark.registry import register
 
 
 def _base_events(spark: SparkSession, sf: str) -> DataFrame:
@@ -510,20 +511,9 @@ ORDER BY cluster, dim
 """
 
 
-TS2_QUERIES = {
-    "ts_rolling_quantile": ts_rolling_quantile,
-    "ts_cusum_changepoint": ts_cusum_changepoint,
-    "ts_trapezoid_integral": ts_trapezoid_integral,
-    "ts_mad_outliers": ts_mad_outliers,
-    "events_funnel": events_funnel,
-    "emb_kmeans_step": emb_kmeans_step,
-}
-
-TS2_ORACLES = {
-    "ts_rolling_quantile": TS_ROLLING_QUANTILE_SQL,
-    "ts_cusum_changepoint": TS_CUSUM_SQL,
-    "ts_trapezoid_integral": TS_TRAPEZOID_SQL,
-    "ts_mad_outliers": TS_MAD_SQL,
-    "events_funnel": EVENTS_FUNNEL_SQL,
-    "emb_kmeans_step": EMB_KMEANS_SQL,
-}
+register("ts_rolling_quantile", ts_rolling_quantile, TS_ROLLING_QUANTILE_SQL)
+register("ts_cusum_changepoint", ts_cusum_changepoint, TS_CUSUM_SQL)
+register("ts_trapezoid_integral", ts_trapezoid_integral, TS_TRAPEZOID_SQL)
+register("ts_mad_outliers", ts_mad_outliers, TS_MAD_SQL)
+register("events_funnel", events_funnel, EVENTS_FUNNEL_SQL)
+register("emb_kmeans_step", emb_kmeans_step, EMB_KMEANS_SQL)

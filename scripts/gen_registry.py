@@ -1,7 +1,7 @@
 """Generate REGISTRY.md — the query→module index (VERDICT r9 #6).
 
-237 queries live across ~20 workloads modules; this script maps every
-registered name to its defining module:line, oracle pairing, and
+The registered queries live across ~20 workloads modules; this script
+maps every registered name to its defining module:line, oracle pairing, and
 driver-verification history so a maintainer can find
 `events_kmv_overlap` without grep.  Regenerate after adding queries or
 when a new CORRECTNESS_r{N}.json lands:

@@ -37,11 +37,6 @@ KEEP = {
     "kukur_spark.workloads_r2._merge_pass": "reference implementation the registered merge query is compared against",
     "kukur_spark.workloads_r7._emb_outlier_knn_exact": "exact reference the registered outlier query is compared against",
     "kukur_spark.workloads_r7._OUTLIER_CAP": "row cap of the exact outlier reference above",
-    "kukur_spark.operators.maintenance.compact_table": "table compaction; its test pins core-count independence",
-    "kukur_spark.operators.maintenance.table_stats": "table file/byte stats; the compaction tests read it",
-    "kukur_spark.operators.maintenance._hadoop_fs": "helper of table_stats",
-    "kukur_spark.operators.maintenance._HIVE_NULL": "helper of compact_table",
-    "kukur_spark.operators.maintenance._unescape_partition_value": "helper of compact_table",
 }
 
 Target = Tuple[str, str]  # (module, top-level name)
@@ -174,6 +169,8 @@ class Scan:
                aliases: Dict[str, Tuple[str, ...]]) -> None:
         for alias in aliases.values():
             self._load(alias[1])  # importing a module runs its body
+            if alias[0] == "sym":  # `from pkg import submodule` runs it too
+                self._load(f"{alias[1]}.{alias[2]}")
         for top in nodes:
             for node in ast.walk(top):
                 if isinstance(node, ast.Attribute):

@@ -114,7 +114,7 @@ def test_driver_path_matches_distributed(spark):
 
 
 def test_driver_path_respects_disable_env(spark, monkeypatch):
-    """SPARK_GRAFT_CC_DRIVER_MAX_EDGES=0 (module default override) must
+    """_CC_DRIVER_MAX_EDGES = 0 (module default override) must
     force the distributed loop even for tiny graphs."""
     from kukur_spark.operators import cluster as C
 

@@ -228,6 +228,39 @@ def test_dir_layout(spark, tmp_path):
     assert [r["value"] for r in rows] == [1.0, 2.0]
 
 
+def _mixed_type_source(spark, tmp_path, layout):
+    if layout == "dir":
+        d = tmp_path / "series"
+        d.mkdir()
+        (d / "a.csv").write_text(
+            "2020-01-01T00:00:00Z,1\n2020-02-01T00:00:00Z,2\n"
+        )
+        (d / "b.csv").write_text(
+            "2020-01-01T00:00:00Z,on\n2020-02-01T00:00:00Z,off\n"
+        )
+        return make_source(spark, str(d), format="dir")
+    path = tmp_path / "pivot.csv"
+    path.write_text(
+        "ts,a,b\n2020-01-01T00:00:00Z,1,on\n2020-02-01T00:00:00Z,2,off\n"
+    )
+    return make_source(spark, str(path), format="pivot")
+
+
+@pytest.mark.parametrize("layout", ["dir", "pivot"])
+@pytest.mark.parametrize("order", [("a", "b"), ("b", "a")])
+def test_value_type_sniffed_per_series(spark, tmp_path, layout, order):
+    """Each series sniffs its own value type (reference arrow.py:235-241):
+    a numeric series stays double and an on/off series stays string,
+    whichever of the two a source reads first."""
+    source = _mixed_type_source(spark, tmp_path, layout)
+    expected = {"a": ("double", [1.0, 2.0]), "b": ("string", ["on", "off"])}
+    for name in order:
+        df = source.get_data(SeriesSelector.from_name("test", name), START, END)
+        dtype, values = expected[name]
+        assert dict(df.dtypes)["value"] == dtype, name
+        assert [r["value"] for r in df.collect()] == values, name
+
+
 def test_metadata_csv_with_derived_accuracy(spark, make_csv, tmp_path):
     data_path = make_csv(ROW_CSV, "data.csv")
     metadata_csv = (

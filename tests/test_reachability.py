@@ -30,6 +30,7 @@ def _write(root, rel, body):
 
 
 def test_scan_follows_aliases_attributes_and_entry_modules(tmp_path):
+    # `from pkg import submodule` runs the submodule's registrations
     root = str(tmp_path)
     _write(root, "kukur_spark/__init__.py", "")
     _write(root, "kukur_spark/ops/__init__.py", "from .core import via_reexport\n")
@@ -62,10 +63,33 @@ def test_scan_follows_aliases_attributes_and_entry_modules(tmp_path):
         if __name__ == "__main__":
             main()
     """)
-    _write(root, "scripts/run.py", "from kukur_spark.ops import via_reexport\nvia_reexport()\n")
+    _write(root, "kukur_spark/plugins.py", """
+        from kukur_spark import plugin_a  # noqa: F401
+
+        def unused_here():
+            pass
+    """)
+    _write(root, "kukur_spark/plugin_a.py", """
+        from kukur_spark.registry import register
+
+        def registered():
+            pass
+
+        def not_registered():
+            pass
+
+        register("a", registered)
+    """)
+    _write(root, "kukur_spark/registry.py", """
+        def register(name, fn):
+            pass
+    """)
+    _write(root, "scripts/run.py", "from kukur_spark.ops import via_reexport\nvia_reexport()\nimport kukur_spark.plugins\n")
     _write(root, "tests/test_core.py", "from kukur_spark.ops.core import only_tested\n")
     assert set(reach.unreachable(root)) == {
         "kukur_spark.ops.core.only_tested",
         "kukur_spark.ops.core._only_tested_helper",
         "kukur_spark.cli.unused",
+        "kukur_spark.plugins.unused_here",
+        "kukur_spark.plugin_a.not_registered",
     }

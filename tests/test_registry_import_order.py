@@ -1,17 +1,15 @@
-"""The query/oracle registries must be complete regardless of which
-workloads module a process imports first.
+"""The query/oracle registries must be complete, and in the same order,
+regardless of which workloads module a process imports first.
 
-``workloads_r10`` and ``workloads_r13`` derive oracles from
-``DEDUP_CLUSTERS_SQL`` at module-import time.  While that template lived
-in ``kukur_spark.workloads``, importing either r-module FIRST re-entered
-``workloads`` mid-body and snapshotted half-built ``R*_ORACLES`` dicts —
-ORACLES silently lost up to 3 entries (and QUERIES 2) depending on
-import order.  The template now lives in the leaf
-``kukur_spark.dedup_sql``; this pins that no import order truncates the
-registries again.  Each probe runs in a fresh subprocess because the
-damage is per-process import state.
+Every workloads module registers its own queries in the leaf
+``kukur_spark.registry`` when it is imported, so registration order
+follows import order.  ``kukur_spark.workloads`` imports every query
+module and then orders the public registry by the driver window and by
+name, which must make ``list(QUERIES)`` independent of that order.  Each
+probe runs in a fresh subprocess because import state is per process.
 """
 
+import json
 import os
 import subprocess
 import sys
@@ -21,31 +19,56 @@ import pytest
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 PROBE = """
-import sys
+import json, sys
 sys.path.insert(0, {repo!r})
 import kukur_spark.{module}  # noqa: F401 — imported FIRST, the trigger
 from kukur_spark.workloads import ORACLES, QUERIES
-print(len(QUERIES), len(ORACLES))
+print(json.dumps([list(QUERIES), sorted(ORACLES)]))
 """
 
 
-@pytest.mark.parametrize(
-    "module", ["workloads", "workloads_r10", "workloads_r13"]
-)
-def test_registry_complete_for_any_first_import(module):
+def _probe(module):
     out = subprocess.run(
         [sys.executable, "-c", PROBE.format(repo=REPO, module=module)],
         capture_output=True,
         text=True,
         check=True,
         timeout=300,
-    ).stdout.split()
-    n_queries, n_oracles = int(out[0]), int(out[1])
-    # the canonical counts come from the plain-workloads import
-    assert (n_queries, n_oracles) == (242, 239), (
+    ).stdout
+    return json.loads(out.strip().splitlines()[-1])
+
+
+@pytest.fixture(scope="module")
+def canonical():
+    return _probe("workloads")
+
+
+@pytest.mark.parametrize(
+    "module", ["workloads", "workloads_r9", "workloads_r10", "workloads_r13"]
+)
+def test_registry_complete_for_any_first_import(module, canonical):
+    queries, oracles = _probe(module)
+    assert (len(queries), len(oracles)) == (242, 239), (
         f"registry truncated when kukur_spark.{module} is imported first: "
-        f"{n_queries} queries / {n_oracles} oracles"
+        f"{len(queries)} queries / {len(oracles)} oracles"
     )
+    assert oracles == canonical[1], (
+        f"oracles differ when kukur_spark.{module} is imported first"
+    )
+    assert queries == canonical[0], (
+        f"list(QUERIES) differs when kukur_spark.{module} is imported first"
+    )
+
+
+def test_duplicate_name_raises():
+    from kukur_spark import registry
+    from kukur_spark.workloads import QUERIES
+
+    name = "tpch_q1"
+    before = (dict(registry.QUERIES), dict(registry.ORACLES))
+    with pytest.raises(ValueError, match="tpch_q1"):
+        registry.register(name, QUERIES[name], "SELECT 1")
+    assert (registry.QUERIES, registry.ORACLES) == before
 
 
 def test_cluster_sql_reexport_identical():

@@ -3,7 +3,7 @@ entries — pin that window.  Rounds 6-9 swept pinned lists until every
 oracled query earned a driver-green row; from round 10 the window is a
 standing rotation COMPUTED from the committed CORRECTNESS_r*.json
 ledgers: 5 canaries + the 45 oracled names whose latest driver-green
-round is oldest (never-green names first, ties by registry order).
+round is oldest (never-green names first, ties by query name).
 The cursor is the ledger itself — each new CORRECTNESS file advances
 the rotation with zero code edits (see workloads._rotation_window)."""
 
@@ -30,14 +30,13 @@ def test_rotation_is_staleness_minimal():
     """No oracled query OUTSIDE the window is staler than any sweep
     slot INSIDE it: the rotation always re-verifies the least-recently
     driver-checked names (never-green names, e.g. new registrations,
-    sort first)."""
+    sort first, ties break by name)."""
     last = _driver_green_rounds()
     if not last:  # fresh clone without driver artifacts
         return
-    index = {name: i for i, name in enumerate(QUERIES)}
 
     def key(name):
-        return (last.get(name, -1), index[name])
+        return (last.get(name, -1), name)
 
     outside = [
         n

@@ -8,7 +8,7 @@
    diff, not a full-file insert; dropping the DV restores rows.
 3. read_delta string timestamps prefer the ISO-8601 calendar reading:
    compact dates like "20240101" are dates, not epoch millis.
-4. SPARK_GRAFT_PERSIST_CAP=0 disables eviction (unbounded cache), not
+4. A persist cap of 0 disables eviction (unbounded cache), not
    caching itself — matching the 0-disables-the-guard convention.
 """
 

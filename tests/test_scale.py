@@ -1,4 +1,4 @@
-"""Skew, distributed-ranking and table-maintenance helpers."""
+"""Skew and distributed-ranking helpers."""
 
 import pytest
 
@@ -134,87 +134,6 @@ def test_distributed_ntile_plan_is_bucket_partitioned(spark):
     assert "windowspecdefinition(metric" not in plan, plan
     # fault tolerance restored: no lineage-truncating checkpoint scan
     assert "existingrdd" not in plan, plan
-
-
-def test_table_stats_and_compaction(spark, tmp_path):
-    """40 tiny files across 2 hive partitions compact to the planned
-    per-partition file counts with identical data."""
-    from kukur_spark.operators.maintenance import compact_table, table_stats
-    from pyspark.sql import functions as F
-
-    src = str(tmp_path / "frag")
-    dst = str(tmp_path / "packed")
-    df = spark.range(400).select(
-        (F.col("id") % 2).cast("string").alias("part"),
-        F.col("id").alias("v"),
-    )
-    df.repartition(20).write.partitionBy("part").parquet(src)
-
-    stats = table_stats(spark, src)
-    assert set(stats) == {("part=0",), ("part=1",)}
-    assert all(n >= 15 for n, _ in stats.values())  # fragmented input
-
-    plan = compact_table(spark, src, dst, target_file_bytes=10**9)
-    assert plan == {("part=0",): 1, ("part=1",): 1}
-    out_stats = table_stats(spark, dst)
-    assert {p: n for p, (n, _) in out_stats.items()} == {
-        ("part=0",): 1,
-        ("part=1",): 1,
-    }
-    before = sorted((r["part"], r["v"]) for r in spark.read.parquet(src).collect())
-    after = sorted((r["part"], r["v"]) for r in spark.read.parquet(dst).collect())
-    assert before == after
-
-
-def test_compaction_unpartitioned_splits_to_target(spark, tmp_path):
-    from kukur_spark.operators.maintenance import compact_table, table_stats
-
-    src = str(tmp_path / "u_src")
-    dst = str(tmp_path / "u_dst")
-    spark.range(1000).repartition(25).write.parquet(src)
-    (n_files, nbytes) = table_stats(spark, src)[()]
-    assert n_files == 25
-    # target half the table size, rounded up so that
-    # ceil(nbytes / target) is exactly 2 for odd nbytes too
-    compact_table(spark, src, dst, target_file_bytes=(nbytes + 1) // 2)
-    assert table_stats(spark, dst)[()][0] == 2
-    assert spark.read.parquet(dst).count() == 1000
-
-
-def test_compaction_escaped_and_null_partition_values(spark, tmp_path):
-    """Partition values needing hive escaping (':') and null partition
-    values must survive compaction — the quota join is unescaped and
-    null-safe, and an unmatched key degrades to one file, never loss."""
-    from kukur_spark.operators.maintenance import compact_table
-
-    src = str(tmp_path / "esc_src")
-    dst = str(tmp_path / "esc_dst")
-    rows = [(1, "a:b"), (2, "a:b"), (3, None), (4, "plain")]
-    spark.createDataFrame(rows, "v long, part string").repartition(
-        4
-    ).write.partitionBy("part").parquet(src)
-
-    compact_table(spark, src, dst, target_file_bytes=10**9)
-    got = sorted(
-        (r["v"], r["part"]) for r in spark.read.parquet(dst).collect()
-    )
-    assert got == [(1, "a:b"), (2, "a:b"), (3, None), (4, "plain")]
-
-
-def test_table_stats_ignores_hidden_directories(spark, tmp_path):
-    """Files inside _spark_metadata (streaming sink log) are not data."""
-    import os
-    from kukur_spark.operators.maintenance import table_stats
-
-    path = str(tmp_path / "with_meta")
-    spark.range(10).coalesce(1).write.parquet(path)
-    meta = os.path.join(path, "_spark_metadata")
-    os.makedirs(meta)
-    with open(os.path.join(meta, "0"), "w") as f:
-        f.write("{}")
-    stats = table_stats(spark, path)
-    assert list(stats) == [()]
-    assert stats[()][0] == 1  # only the data file
 
 
 def test_keyed_lag_matches_window(spark):

@@ -140,48 +140,6 @@ def test_windowed_stats_drops_late_data(spark, tmp_path):
     assert rows[0]["sum_value"] == 3.0
 
 
-def test_stream_ingest_then_compaction(spark, tmp_path):
-    """The 100 TB ingestion loop end-to-end: a stream lands many tiny
-    per-trigger files; the maintenance pass bin-packs them without
-    changing the data."""
-    from kukur_spark.operators.maintenance import compact_table, table_stats
-
-    src = str(tmp_path / "in")
-    lake = str(tmp_path / "lake")
-    packed = str(tmp_path / "packed")
-    ckpt = str(tmp_path / "ckpt")
-
-    rows = [("s1", ts(m), float(m)) for m in range(30)]
-    spark.createDataFrame(rows, SCHEMA).repartition(10).write.parquet(src)
-
-    # one input file per trigger, so each micro-batch lands its own file
-    # whatever the core count (one batch over all ten files would pack
-    # them into defaultParallelism tasks)
-    stream = (
-        spark.readStream.schema(SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    query = (
-        stream.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", lake)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    query.processAllAvailable()
-    query.stop()
-
-    (n_files, _) = table_stats(spark, lake)[()]
-    assert n_files >= 10  # fragmented: one file per trigger
-
-    compact_table(spark, lake, packed, target_file_bytes=10**9)
-    assert table_stats(spark, packed)[()][0] == 1
-    before = sorted(r["value"] for r in spark.read.parquet(lake).collect())
-    after = sorted(r["value"] for r in spark.read.parquet(packed).collect())
-    assert before == after == [float(m) for m in range(30)]
-
-
 def test_streaming_exp_smooth_across_batches(spark, tmp_path):
     from kukur_spark.streaming import streaming_exp_smooth
 
