@@ -9,6 +9,7 @@ at the API edge, e.g. the Flight server).
 from __future__ import annotations
 
 import re
+import threading
 
 from datetime import datetime, timedelta, timezone
 from uuid import uuid4
@@ -20,6 +21,11 @@ from kukur_spark.base import SeriesSearch, SeriesSelector, SourceStructure
 from kukur_spark.metadata import Metadata
 from kukur_spark.session import get_spark
 from kukur_spark.sources import SearchResult, SourceFactory
+
+# Every Engine runs on get_spark()'s one session, so temp views share one
+# catalog across threads: without this lock a concurrent sql() call can
+# replace or drop a view between another call's registration and analysis.
+_SQL_VIEWS_LOCK = threading.Lock()
 
 
 class Engine:
@@ -155,6 +161,7 @@ class Engine:
         register_sql_functions(self.spark)
         names = sources if sources is not None else self.factory.source_names()
         views: Dict[str, str] = {}
+        frames: Dict[str, DataFrame] = {}
         for name in names:
             source = self.factory.get_source(name)
             frame = getattr(source.source, "data_frame", None)
@@ -174,21 +181,25 @@ class Engine:
                     "explicitly to register only the one you mean"
                 )
             views[view] = name
-            frame().createOrReplaceTempView(view)
+            frames[view] = frame()
         # named parameters (:name) bind server-side — no string splicing.
         # Analysis resolves the views eagerly, so they can be dropped
         # before returning — otherwise registrations outlive the call on
         # a long-lived server and leak into later calls that passed a
-        # narrower `sources` list.
-        try:
-            return (
-                self.spark.sql(statement, args=args)
-                if args
-                else self.spark.sql(statement)
-            )
-        finally:
-            for view in views:
-                self.spark.catalog.dropTempView(view)
+        # narrower `sources` list.  Executing the returned frame needs
+        # no lock.
+        with _SQL_VIEWS_LOCK:
+            for view, frame_df in frames.items():
+                frame_df.createOrReplaceTempView(view)
+            try:
+                return (
+                    self.spark.sql(statement, args=args)
+                    if args
+                    else self.spark.sql(statement)
+                )
+            finally:
+                for view in frames:
+                    self.spark.catalog.dropTempView(view)
 
     # -- introspection -----------------------------------------------------
     def list_sources(self) -> List[str]:

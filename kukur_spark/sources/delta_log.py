@@ -34,9 +34,9 @@ Reader-feature support matrix (gate: ``_reject_unsupported``):
   ``domainMetadata``, ``appendOnly``, ``invariants``, ``checkConstraints``,
   ``generatedColumns``, ``identityColumns``, ``icebergCompatV*``,
   ``inCommitTimestamp`` — none constrain a reader.  ICT is still
-  *honored* where it matters: ``version_at_timestamp`` and the CDF
-  ``_commit_timestamp`` prefer ``commitInfo.inCommitTimestamp`` over
-  the wall-clock field, with delta-spark's monotonization.
+  *honored* where it matters: ``version_at_timestamp`` prefers
+  ``commitInfo.inCommitTimestamp`` over the wall-clock field, with
+  delta-spark's monotonization.
 - **rejected loudly** (``NotImplementedError``, never a misread): any
   ``minReaderVersion > 3`` and any reader feature not listed above —
   future protocol additions fail closed.
@@ -187,8 +187,8 @@ def _normalize_table_path(table_path: str) -> str:
     """Absolute form of a local table path (URIs pass through).
 
     Every path derived from the table root — snapshot data files, DV
-    anti-join keys, CDF change files — must compare equal to the
-    absolute paths Spark reports in ``_metadata.file_path``."""
+    anti-join keys — must compare equal to the absolute paths Spark
+    reports in ``_metadata.file_path``."""
     if "://" in table_path:
         return table_path
     return os.path.abspath(table_path)
@@ -699,333 +699,3 @@ def read_delta(
             ]
         )
     return df
-
-
-def read_delta_changes(
-    spark,
-    table_path: str,
-    starting_version: int = 0,
-    ending_version: Optional[int] = None,
-):
-    """Change Data Feed between two versions (inclusive), engine-side.
-
-    Per the public Delta protocol: a commit that contains ``cdc``
-    actions materializes its row-level changes as ``_change_data/``
-    parquet files carrying ``_change_type`` (``insert`` /
-    ``update_preimage`` / ``update_postimage`` / ``delete``); a commit
-    without cdc actions changes data only through ``dataChange``
-    add/remove actions — adds are inserts, removes are deletes (read
-    back from the tombstoned file; if VACUUM already reclaimed it the
-    read fails loudly rather than dropping changes).  Deletion vectors
-    are applied: a commit that re-adds a file with a new DV (the
-    physical shape of a DV-based DELETE/UPDATE) contributes exactly the
-    position diff — newly covered positions as deletes, uncovered ones
-    as inserts — and a tombstoned file that already carried a DV only
-    deletes its still-live rows.  Output columns =
-    the table's logical columns + ``_change_type``,
-    ``_commit_version``, ``_commit_timestamp`` — the shape
-    delta-spark's ``readChangeFeed`` returns.
-
-    Beyond-reference extension (the reference reads snapshots only,
-    kukur delta_lake.py): incremental pipelines — dedup-vs-index,
-    decontamination, ANN index maintenance — consume the per-commit
-    delta instead of re-scanning the table.
-    """
-    from pyspark.sql import functions as F
-
-    table_path = _normalize_table_path(table_path)
-    log_dir = os.path.join(table_path, "_delta_log")
-    if not os.path.isdir(log_dir):
-        raise FileNotFoundError(f"not a Delta table: {log_dir} missing")
-    versions = sorted(
-        int(name[:20])
-        for name in os.listdir(log_dir)
-        if len(name) == 25 and name.endswith(".json") and name[:20].isdigit()
-    )
-    if not versions:
-        raise FileNotFoundError(f"no Delta commits found in {log_dir}")
-    if ending_version is None:
-        ending_version = versions[-1]
-    wanted = [v for v in versions if starting_version <= v <= ending_version]
-    missing = set(range(starting_version, ending_version + 1)) - set(wanted)
-    if missing:
-        raise ValueError(
-            f"commits missing from the log (truncated?): {sorted(missing)}"
-        )
-
-    # schema/mapping as of the END version — the shape changes roll up to
-    snapshot = read_snapshot(table_path, ending_version)
-    mapping = _column_mapping(snapshot.schema_json)
-    relabel = None
-    if mapping:
-        relabel = [
-            F.col(physical).cast(dtype).alias(logical)
-            for physical, logical, dtype in mapping
-        ]
-    # declared partition types: an injected literal is the raw string
-    # from partitionValues; cast it (mapped tables get theirs from the
-    # relabel cast instead)
-    from pyspark.sql import types as T
-
-    partition_types = {}
-    if snapshot.schema_json and not mapping:
-        declared = T.StructType.fromJson(json.loads(snapshot.schema_json))
-        partition_types = {
-            f.name: f.dataType
-            for f in declared.fields
-            if f.name in set(snapshot.partition_columns)
-        }
-
-    def _frame(paths, partition_values, change_type=None, positions=None,
-               keep=False):
-        """Read a group of data/cdc files, injecting partition literals
-        (cdc/tombstone files are read directly, never via basePath, so
-        hive dirs don't resolve on their own).
-
-        ``positions`` (always with a single-file ``paths``) restricts
-        the frame by within-file row index: ``keep=True`` keeps exactly
-        those rows (a DV delta), ``keep=False`` drops them (rows that
-        were already DV-deleted before this commit).  The position set
-        is bounded by a file's deleted-row count, so it rides a
-        broadcast join and the scan stays a plain distributed read."""
-        for rel in paths:
-            full = os.path.join(table_path, unquote(rel))
-            if not os.path.exists(full):
-                raise FileNotFoundError(
-                    f"change-data source file missing (vacuumed?): {rel}"
-                )
-        part = spark.read.parquet(
-            *[os.path.join(table_path, unquote(p)) for p in paths]
-        )
-        if positions is not None:
-            import pyarrow as pa
-
-            pos_df = spark.createDataFrame(
-                pa.table(
-                    {"__pos": pa.array(sorted(positions), pa.int64())}
-                ).to_pandas(),
-                schema="__pos long",
-            )
-            part = (
-                part.withColumn("__pos", F.col("_metadata.row_index"))
-                .join(
-                    F.broadcast(pos_df),
-                    "__pos",
-                    "left_semi" if keep else "left_anti",
-                )
-                .drop("__pos")
-            )
-        for column, value in sorted(partition_values.items()):
-            literal = F.lit(value) if value is not None else F.lit(None)
-            if column in partition_types:
-                literal = literal.cast(partition_types[column])
-            part = part.withColumn(column, literal)
-        if change_type is not None:
-            part = part.withColumn("_change_type", F.lit(change_type))
-        if relabel is not None:
-            part = part.select(*relabel, "_change_type")
-        return part
-
-    def _positions(descriptor):
-        from kukur_spark.sources.delta_dv import read_descriptor
-
-        if not descriptor:
-            return set()
-        return set(read_descriptor(table_path, descriptor))
-
-    out = None
-    prev_ts = -(1 << 62)
-    # unquoted rel path -> deletionVector descriptor (or None) for live
-    # files, replayed over every commit the log still holds so a no-cdc
-    # DV-rewrite commit can be diffed against the file's prior DV.
-    dv_state: Dict[str, Optional[dict]] = {}
-    if versions[0] > 0:
-        # the oldest retained commit is not 0 (checkpointed log): seed
-        # the live set from the snapshot just before it, so a later
-        # re-add of a checkpoint-era file diffs against its real prior
-        # DV instead of being mistaken for a freshly-born file.
-        try:
-            seed = read_snapshot(table_path, versions[0] - 1)
-        except (FileNotFoundError, ValueError):
-            seed = None  # no replayable checkpoint: keep the
-            # remove-descriptor fallback behavior below
-        if seed is not None:
-            for abs_path in seed.files:
-                rel = os.path.relpath(abs_path, table_path)
-                dv_state[rel] = seed.deletion_vectors.get(abs_path)
-    for v in versions:  # monotonize over the full log like time travel
-        commit = os.path.join(log_dir, f"{v:020d}.json")
-        cdc_groups: Dict[tuple, List[str]] = {}
-        # dataChange adds/removes: path -> (partition values, descriptor)
-        adds: Dict[str, tuple] = {}
-        removes: Dict[str, tuple] = {}
-        state_updates: List[tuple] = []  # ALL adds/removes, incl. OPTIMIZE
-        commit_ts = None
-        with open(commit) as handle:
-            for line in handle:
-                line = line.strip()
-                if not line:
-                    continue
-                action = json.loads(line)
-                info = action.get("commitInfo")
-                if info is not None and commit_ts is None:
-                    raw = info.get("inCommitTimestamp", info.get("timestamp"))
-                    if raw is not None:
-                        commit_ts = int(raw)
-                cdc = action.get("cdc")
-                if cdc:
-                    key = tuple(sorted((cdc.get("partitionValues") or {}).items()))
-                    cdc_groups.setdefault(key, []).append(cdc["path"])
-                add = action.get("add")
-                if add:
-                    state_updates.append(
-                        ("add", add["path"], add.get("deletionVector"))
-                    )
-                    if add.get("dataChange", True):
-                        adds[add["path"]] = (
-                            dict(add.get("partitionValues") or {}),
-                            add.get("deletionVector"),
-                        )
-                remove = action.get("remove")
-                if remove:
-                    state_updates.append(("remove", remove["path"], None))
-                    if remove.get("dataChange", True):
-                        removes[remove["path"]] = (
-                            dict(remove.get("partitionValues") or {}),
-                            remove.get("deletionVector"),
-                        )
-        if commit_ts is None:
-            commit_ts = int(os.path.getmtime(commit) * 1000)
-        commit_ts = max(commit_ts, prev_ts + 1)
-        prev_ts = commit_ts
-        # pre-commit DV for every touched path, BEFORE applying updates
-        # (a DV rewrite adds and removes the same path in one commit).
-        # Fallback to the remove action's own descriptor when the add
-        # predates the oldest retained commit (checkpointed log).
-        pre_dv: Dict[str, Optional[dict]] = {}
-        live_before: Dict[str, bool] = {}
-        for path in set(adds) | set(removes):
-            key = unquote(path)  # dv_state keys are unquoted rel paths
-            live_before[path] = key in dv_state
-            if key in dv_state:
-                pre_dv[path] = dv_state[key]
-            else:
-                pre_dv[path] = (removes.get(path) or (None, None))[1]
-        # action order within a commit is not significant (Delta log
-        # reconciliation: an add of a path wins over a remove of the
-        # same path in the same version) — apply removes first so a
-        # writer that serializes add-before-remove cannot evict a
-        # re-added live file from dv_state.
-        for kind, path, _descriptor in state_updates:
-            if kind == "remove":
-                dv_state.pop(unquote(path), None)
-        for kind, path, descriptor in state_updates:
-            if kind == "add":
-                dv_state[unquote(path)] = descriptor
-        if v < starting_version or v > ending_version:
-            continue
-        pieces = []
-        if cdc_groups:
-            # the spec: when ANY cdc action exists, it is the complete
-            # change description for the commit — add/remove are the
-            # snapshot bookkeeping for the same rows, not extra changes
-            for key, paths in sorted(cdc_groups.items()):
-                pieces.append(_frame(paths, dict(key)))
-        else:
-            # no cdc actions: synthesize the row delta from dataChange
-            # adds/removes, applying deletion vectors.  A path both
-            # added and removed in the commit is a DV rewrite of the
-            # same file — the delta is the position diff, not a
-            # full-file insert+delete.
-            rewritten = set(adds) & set(removes)
-            plain_add_groups: Dict[tuple, List[str]] = {}
-            plain_remove_groups: Dict[tuple, List[str]] = {}
-            for path in sorted(rewritten):
-                pvals, post_desc = adds[path]
-                pre = _positions(pre_dv.get(path))
-                post = _positions(post_desc)
-                deleted = post - pre
-                restored = pre - post
-                if deleted:
-                    pieces.append(
-                        _frame([path], pvals, "delete",
-                               positions=deleted, keep=True)
-                    )
-                if restored:
-                    pieces.append(
-                        _frame([path], pvals, "insert",
-                               positions=restored, keep=True)
-                    )
-            for path, (pvals, descriptor) in sorted(adds.items()):
-                if path in rewritten:
-                    continue
-                if live_before.get(path):
-                    # lone re-add of an already-live file (a protocol-
-                    # legal DV update without a paired remove): the
-                    # change is the position diff against the prior DV,
-                    # never a full-file insert.  A re-add that DROPS the
-                    # DV restores its previously-deleted rows.
-                    pre = _positions(pre_dv.get(path))
-                    post = _positions(descriptor)
-                    deleted = post - pre
-                    restored = pre - post
-                    if deleted:
-                        pieces.append(
-                            _frame([path], pvals, "delete",
-                                   positions=deleted, keep=True)
-                        )
-                    if restored:
-                        pieces.append(
-                            _frame([path], pvals, "insert",
-                                   positions=restored, keep=True)
-                        )
-                elif descriptor:  # born with a DV: insert the live rows
-                    pieces.append(
-                        _frame([path], pvals, "insert",
-                               positions=_positions(descriptor), keep=False)
-                    )
-                else:
-                    key = tuple(sorted(pvals.items()))
-                    plain_add_groups.setdefault(key, []).append(path)
-            for path, (pvals, _descriptor) in sorted(removes.items()):
-                if path in rewritten:
-                    continue
-                pre = _positions(pre_dv.get(path))
-                if pre:  # only the still-live rows are deleted now
-                    pieces.append(
-                        _frame([path], pvals, "delete",
-                               positions=pre, keep=False)
-                    )
-                else:
-                    key = tuple(sorted(pvals.items()))
-                    plain_remove_groups.setdefault(key, []).append(path)
-            for key, paths in sorted(plain_add_groups.items()):
-                pieces.append(_frame(paths, dict(key), "insert"))
-            for key, paths in sorted(plain_remove_groups.items()):
-                pieces.append(_frame(paths, dict(key), "delete"))
-        for piece in pieces:
-            piece = piece.withColumns(
-                {
-                    "_commit_version": F.lit(v).cast("long"),
-                    "_commit_timestamp": F.timestamp_millis(
-                        F.lit(commit_ts)
-                    ),
-                }
-            )
-            out = piece if out is None else out.unionByName(piece)
-    if out is None:
-        # empty range: typed empty frame with the table + CDF columns
-        from pyspark.sql import types as T
-
-        base = (
-            T.StructType.fromJson(json.loads(snapshot.schema_json))
-            if snapshot.schema_json
-            else T.StructType([])
-        )
-        fields = list(base.fields) + [
-            T.StructField("_change_type", T.StringType()),
-            T.StructField("_commit_version", T.LongType()),
-            T.StructField("_commit_timestamp", T.TimestampType()),
-        ]
-        return spark.createDataFrame([], T.StructType(fields))
-    return out

@@ -14,7 +14,7 @@ violation semantics (``violation_predicate``); the r5
 ``lineitem_quality_report`` is its pass/fail report (rule, n_rows,
 n_violations, passed); this module's ``expectations_report`` is the
 grouped view of the SAME predicates (per-check totals, optional group
-columns — e.g. per ``_commit_version`` for the incremental CDF form).
+columns).
 Multi-table audits (``dq_referential_integrity``, ``dq_uniqueness``)
 generalize the single-table ``foreign_key``/``unique`` rules to
 edge/key inventories.  Per-series freshness lives in the r5
@@ -40,9 +40,6 @@ The suite:
   unchanged between two corpus manifests via one content-hash equi-join
   on the doc key (bucketed manifests join with zero exchange below the
   join — plan-pinned).
-- ``dq_expectations_changes`` — the incremental form: the expectations
-  report keyed by ``_commit_version`` over a Delta CDF range, so each
-  ingest batch is validated at change-volume cost.
 
 Exactness: every metric is a COUNT (bigint in Spark and DuckDB — the
 oracles use ``count(*) FILTER`` / ``CAST(sum .. AS BIGINT)`` so no
@@ -83,8 +80,8 @@ def expectations_report(df: DataFrame, rules=None, group_cols=()) -> DataFrame:
     """One-pass rule-violation report over any frame: every rule is a
     conditional count in a single aggregate (map-side combine does the
     data-sized work), unpivoted with ``stack``.  ``group_cols`` splits
-    the report (e.g. per ``_commit_version`` for incremental checks)
-    without extra passes — it only keys the one aggregate."""
+    the report (e.g. per partition or per ingest batch) without extra
+    passes — it only keys the one aggregate."""
     rules = rules if rules is not None else _violation_rules()
     if not rules:
         # mirror validate(): fail loudly instead of emitting `stack(0, )`
@@ -109,36 +106,6 @@ def expectations_report(df: DataFrame, rules=None, group_cols=()) -> DataFrame:
 
 def dq_expectations(spark: SparkSession, sf: str) -> DataFrame:
     return expectations_report(load_table(spark, sf, "lineitem"))
-
-
-def dq_expectations_changes(
-    spark: SparkSession,
-    table_path: str,
-    starting_version: int = 0,
-    ending_version=None,
-    rules=None,
-) -> DataFrame:
-    """Incremental data quality: validate ONLY the rows a Delta commit
-    range touched, per commit.
-
-    At 100 TB you do not re-validate the table on every ingest — you
-    validate the change feed.  Inserted/updated rows (CDF
-    ``insert``/``update_postimage``) run through the same one-aggregate
-    expectations report keyed by ``_commit_version``, so each ingest
-    batch gets its own violation row set and a regression pinpoints the
-    commit that introduced it.  Cost is proportional to the change
-    volume, never the table."""
-    from kukur_spark.sources.delta_log import read_delta_changes
-
-    changes = read_delta_changes(
-        spark, table_path, starting_version, ending_version
-    )
-    incoming = changes.filter(
-        F.col("_change_type").isin("insert", "update_postimage")
-    )
-    return expectations_report(
-        incoming, rules=rules, group_cols=("_commit_version",)
-    )
 
 
 _EXPECTATIONS_SQL = """

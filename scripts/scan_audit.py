@@ -14,7 +14,7 @@ cold recipe at EVERY consumer, so reference counts overstate executed
 scans for cached pipelines (minhash/simhash signatures, the scale
 machinery's `_range_bucket` input, ANN index builds).  The count is a
 lead, not a verdict — confirm with `.explain("formatted")` /
-`scripts/isolate.py` noop timings before restructuring.
+`perfbench/run.py --trace 1` timings before restructuring.
 """
 
 from __future__ import annotations

@@ -1173,128 +1173,6 @@ def test_variant_column_round_trips(spark, tmp_path):
     assert json.loads(row.j) == {"x": 1, "y": [2, 3]}
 
 
-def test_change_data_feed_cdc_and_synthesized(spark, tmp_path):
-    """CDF replay: v0 has no cdc actions (adds synthesize inserts),
-    v1 carries materialized _change_data files (used verbatim — the
-    accompanying add/remove are snapshot bookkeeping, not changes),
-    v2 synthesizes a delete from its tombstone."""
-    from pyspark.sql import functions as F
-
-    from kukur_spark.sources.delta_log import read_delta_changes
-
-    root = str(tmp_path / "cdf")
-    log_dir = os.path.join(root, "_delta_log")
-    os.makedirs(log_dir)
-    os.makedirs(os.path.join(root, "_change_data"))
-    schema = "id string, value double"
-    _write_parquet(spark, [("a", 1.0), ("b", 2.0)], schema,
-                   os.path.join(root, "f0.parquet"))
-    # v1 rewrites f0 -> f1 (b updated to 20.0); cdc file has the pre/post
-    _write_parquet(spark, [("a", 1.0), ("b", 20.0)], schema,
-                   os.path.join(root, "f1.parquet"))
-    _write_parquet(
-        spark,
-        [("b", 2.0, "update_preimage"), ("b", 20.0, "update_postimage")],
-        "id string, value double, _change_type string",
-        os.path.join(root, "_change_data", "cdc0.parquet"),
-    )
-    fields = [("id", "string"), ("value", "double")]
-    _commit(log_dir, 0, [
-        _PROTOCOL,
-        _meta_action(fields),
-        {"commitInfo": {"timestamp": 1000}},
-        _add("f0.parquet"),
-    ])
-    _commit(log_dir, 1, [
-        {"commitInfo": {"timestamp": 2000}},
-        {"cdc": {"path": "_change_data/cdc0.parquet",
-                 "partitionValues": {}, "size": 1, "dataChange": False}},
-        {"remove": {"path": "f0.parquet", "deletionTimestamp": 2,
-                    "dataChange": True}},
-        _add("f1.parquet"),
-    ])
-    _commit(log_dir, 2, [
-        {"commitInfo": {"timestamp": 3000}},
-        {"remove": {"path": "f1.parquet", "deletionTimestamp": 3,
-                    "dataChange": True}},
-    ])
-    changes = read_delta_changes(spark, root).orderBy(
-        "_commit_version", "_change_type", "id"
-    )
-    rows = [
-        (r.id, r.value, r._change_type, r._commit_version)
-        for r in changes.collect()
-    ]
-    assert rows == [
-        ("a", 1.0, "insert", 0),
-        ("b", 2.0, "insert", 0),
-        ("b", 20.0, "update_postimage", 1),  # "post" sorts before "pre"
-        ("b", 2.0, "update_preimage", 1),
-        ("a", 1.0, "delete", 2),
-        ("b", 20.0, "delete", 2),
-    ]
-    # commit timestamps surface and are monotone
-    ts = [r._commit_timestamp for r in changes.select(
-        "_commit_version", "_commit_timestamp"
-    ).distinct().orderBy("_commit_version").collect()]
-    assert ts == sorted(ts) and len(ts) == 3
-
-    # version range bounds are inclusive
-    only_v1 = read_delta_changes(spark, root, 1, 1)
-    assert sorted(
-        r._change_type for r in only_v1.collect()
-    ) == ["update_postimage", "update_preimage"]
-
-
-def test_change_data_feed_vacuumed_tombstone_fails(spark, tmp_path):
-    from kukur_spark.sources.delta_log import read_delta_changes
-
-    root = str(tmp_path / "cdfgone")
-    log_dir = os.path.join(root, "_delta_log")
-    os.makedirs(log_dir)
-    schema = "id string, value double"
-    _write_parquet(spark, [("a", 1.0)], schema,
-                   os.path.join(root, "f0.parquet"))
-    _commit(log_dir, 0, [
-        _PROTOCOL, _meta_action([("id", "string"), ("value", "double")]),
-        _add("f0.parquet"),
-    ])
-    _commit(log_dir, 1, [
-        {"remove": {"path": "f0.parquet", "deletionTimestamp": 2,
-                    "dataChange": True}},
-    ])
-    os.remove(os.path.join(root, "f0.parquet"))  # "VACUUM"
-    with pytest.raises(FileNotFoundError, match="vacuumed"):
-        read_delta_changes(spark, root, 1, 1).collect()
-
-
-def test_change_data_feed_partitioned(spark, tmp_path):
-    """Partition values ride into CDF rows with their declared type."""
-    from kukur_spark.sources.delta_log import read_delta_changes
-
-    root = str(tmp_path / "cdfpart")
-    log_dir = os.path.join(root, "_delta_log")
-    os.makedirs(log_dir)
-    os.makedirs(os.path.join(root, "day=1"))
-    _write_parquet(spark, [("a", 1.0)], "id string, value double",
-                   os.path.join(root, "day=1", "f0.parquet"))
-    _commit(log_dir, 0, [
-        _PROTOCOL,
-        _meta_action(
-            [("id", "string"), ("value", "double"), ("day", "integer")],
-            partition_columns=["day"],
-        ),
-        {"add": {"path": "day=1/f0.parquet",
-                 "partitionValues": {"day": "1"}, "size": 1,
-                 "modificationTime": 0, "dataChange": True}},
-    ])
-    rows = read_delta_changes(spark, root).collect()
-    assert [(r.id, r.day, r._change_type) for r in rows] == [
-        ("a", 1, "insert")
-    ]
-    assert dict(read_delta_changes(spark, root).dtypes)["day"] == "int"
-
-
 def test_deletion_vector_composes_with_type_widening(spark, tmp_path):
     """DV anti-join and the declared (widened) scan schema compose: the
     pre-widen int file has a deleted row AND upcasts to long."""

@@ -279,6 +279,36 @@ def test_sql_verb_views_do_not_leak_across_calls(spark, tmp_path_factory):
         engine.sql("SELECT COUNT(*) AS n FROM demo", sources=[]).collect()
 
 
+def test_concurrent_sql_calls_keep_their_views(spark, tmp_path_factory):
+    """Flight serves sql tickets from a thread pool, and every Engine
+    registers its views on the one shared session: a call must not drop
+    the view another call has registered but not yet analyzed."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    tmp = tmp_path_factory.mktemp("sql_concurrent")
+    spark.createDataFrame(
+        [("s1", datetime(2020, 1, 1, tzinfo=timezone.utc), 1.0)],
+        "`series name` string, ts timestamp, value double",
+    ).coalesce(1).write.parquet(str(tmp / "demo"))
+    config = {
+        "source": {
+            "demo": {"type": "parquet", "format": "row", "path": str(tmp / "demo")}
+        }
+    }
+    engine = Engine(config, spark)
+
+    def call(_):
+        return engine.sql(
+            "SELECT COUNT(*) AS n FROM demo", sources=["demo"]
+        ).collect()[0]["n"]
+
+    with ThreadPoolExecutor(max_workers=8) as pool:
+        futures = [pool.submit(call, i) for i in range(64)]
+        counts = [f.result(timeout=300) for f in futures]
+    assert counts == [1] * 64
+    assert not any(t.name == "demo" for t in spark.catalog.listTables())
+
+
 def test_stream_window_drops_memory_sink_view(spark, tmp_path_factory):
     """Each stream_window call materializes through a uuid-named memory
     sink; the catalog entry must not outlive the call."""

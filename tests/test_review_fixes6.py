@@ -12,8 +12,6 @@ import json
 import os
 from datetime import datetime, timezone
 
-import pytest
-
 from kukur_spark.sources.delta_dv import serialize_bitmap, z85_encode
 from kukur_spark.sources.delta_log import read_delta
 
@@ -197,117 +195,6 @@ def test_read_delta_relative_table_path_applies_dv(spark, tmp_path):
     finally:
         os.chdir(cwd)
     assert [r.id for r in rows] == [0, 2, 4, 5]
-
-
-def test_cdf_dv_rewrite_emits_position_diff(spark, tmp_path):
-    """A DV-based DELETE (re-add of the same file with a wider DV +
-    remove of the old version) must contribute exactly the newly
-    deleted positions — not a full-file insert plus a full-file delete
-    that also resurrects already-deleted rows."""
-    from kukur_spark.sources.delta_log import read_delta_changes
-
-    root = str(tmp_path / "cdf_dv")
-    log_dir = os.path.join(root, "_delta_log")
-    os.makedirs(log_dir)
-    _write_parquet(
-        spark,
-        [(i, float(i) * 10) for i in range(6)],
-        "id long, value double",
-        os.path.join(root, "a.parquet"),
-    )
-    _write_parquet(
-        spark, [(100, 1000.0)], "id long, value double",
-        os.path.join(root, "b.parquet"),
-    )
-    fields = [("id", "long"), ("value", "double")]
-    add_a = {"path": "a.parquet", "partitionValues": {}, "size": 1,
-             "modificationTime": 0, "dataChange": True}
-    _commit(log_dir, 0, [
-        _DV_PROTOCOL, _meta_action(fields),
-        {"commitInfo": {"timestamp": 1_000, "operation": "WRITE"}},
-        {"add": dict(add_a)},
-    ])
-    # v1: DELETE ids 1,3 via DV
-    _commit(log_dir, 1, [
-        {"commitInfo": {"timestamp": 2_000, "operation": "DELETE"}},
-        {"add": {**add_a, "deletionVector": _inline_dv([1, 3])}},
-        {"remove": {"path": "a.parquet", "deletionTimestamp": 2_000,
-                    "dataChange": True}},
-    ])
-    # v2: DELETE id 5 (DV widens to {1,3,5})
-    _commit(log_dir, 2, [
-        {"commitInfo": {"timestamp": 3_000, "operation": "DELETE"}},
-        {"add": {**add_a, "deletionVector": _inline_dv([1, 3, 5])}},
-        {"remove": {"path": "a.parquet", "deletionTimestamp": 3_000,
-                    "dataChange": True,
-                    "deletionVector": _inline_dv([1, 3])}},
-    ])
-    # v3: overwrite — tombstone a.parquet (carrying its DV), add b
-    _commit(log_dir, 3, [
-        {"commitInfo": {"timestamp": 4_000, "operation": "WRITE"}},
-        {"remove": {"path": "a.parquet", "deletionTimestamp": 4_000,
-                    "dataChange": True,
-                    "deletionVector": _inline_dv([1, 3, 5])}},
-        {"add": {"path": "b.parquet", "partitionValues": {}, "size": 1,
-                 "modificationTime": 0, "dataChange": True}},
-    ])
-
-    def _changes(start, end):
-        return sorted(
-            (r._change_type, r.id)
-            for r in read_delta_changes(spark, root, start, end).collect()
-        )
-
-    assert _changes(1, 1) == [("delete", 1), ("delete", 3)]
-    assert _changes(2, 2) == [("delete", 5)]
-    # tombstone deletes only the still-live rows; b arrives as insert
-    assert _changes(3, 3) == [
-        ("delete", 0), ("delete", 2), ("delete", 4), ("insert", 100),
-    ]
-    assert _changes(0, 3) == sorted(
-        [("insert", i) for i in range(6)]
-        + [("delete", 1), ("delete", 3), ("delete", 5),
-           ("delete", 0), ("delete", 2), ("delete", 4), ("insert", 100)]
-    )
-
-
-def test_cdf_dv_narrowing_restores_rows(spark, tmp_path):
-    """A commit that re-adds a file with a NARROWER DV (RESTORE-style)
-    emits the uncovered positions as inserts."""
-    from kukur_spark.sources.delta_log import read_delta_changes
-
-    root = str(tmp_path / "cdf_dv_restore")
-    log_dir = os.path.join(root, "_delta_log")
-    os.makedirs(log_dir)
-    _write_parquet(
-        spark,
-        [(i, float(i)) for i in range(4)],
-        "id long, value double",
-        os.path.join(root, "a.parquet"),
-    )
-    fields = [("id", "long"), ("value", "double")]
-    add_a = {"path": "a.parquet", "partitionValues": {}, "size": 1,
-             "modificationTime": 0, "dataChange": True}
-    _commit(log_dir, 0, [
-        _DV_PROTOCOL, _meta_action(fields),
-        {"commitInfo": {"timestamp": 1_000, "operation": "WRITE"}},
-        {"add": {**add_a, "deletionVector": _inline_dv([0, 2])}},
-    ])
-    _commit(log_dir, 1, [
-        {"commitInfo": {"timestamp": 2_000, "operation": "RESTORE"}},
-        {"add": {**add_a, "deletionVector": _inline_dv([0])}},
-        {"remove": {"path": "a.parquet", "deletionTimestamp": 2_000,
-                    "dataChange": True,
-                    "deletionVector": _inline_dv([0, 2])}},
-    ])
-    rows = sorted(
-        (r._change_type, r.id, r._commit_version)
-        for r in read_delta_changes(spark, root, 0, 1).collect()
-    )
-    # v0: a file born with a DV inserts only its live rows
-    assert rows == [
-        ("insert", 1, 0), ("insert", 2, 1), ("insert", 3, 0),
-    ]
 
 
 def test_read_delta_dv_path_with_plus_sign(spark, tmp_path):
