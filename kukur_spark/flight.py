@@ -18,6 +18,7 @@ surface, matching the reference's usage).
 
 from __future__ import annotations
 
+import hmac
 import json
 import threading
 from datetime import datetime
@@ -49,6 +50,15 @@ def _selector_from_data(data: Dict[str, Any]) -> SeriesSelector:
     return SeriesSelector(
         data["source"], dict(data.get("tags", {})), data.get("field", "value")
     )
+
+
+def _valid_api_key(secret: Optional[str], api_keys, repository) -> bool:
+    """A static key (constant-time compare) or one the repository verifies."""
+    if secret is not None and any(
+        hmac.compare_digest(secret, key) for key in api_keys
+    ):
+        return True
+    return repository is not None and repository.verify(secret)
 
 
 if HAS_FLIGHT:
@@ -91,8 +101,6 @@ if HAS_FLIGHT:
             self.repository = repository
 
         def start_call(self, info, headers):
-            import hmac
-
             # the handshake RPC itself must pass: the auth handler judges it
             if info.method == fl.FlightMethod.HANDSHAKE:
                 return None
@@ -112,11 +120,7 @@ if HAS_FLIGHT:
                 return None
             provided = headers.get("x-api-key", [None])
             secret = provided[0] if provided else None
-            if secret is not None and any(
-                hmac.compare_digest(secret, key) for key in self.api_keys
-            ):
-                return None
-            if self.repository is not None and self.repository.verify(secret):
+            if _valid_api_key(secret, self.api_keys, self.repository):
                 return None
             raise fl.FlightUnauthenticatedError("missing or invalid api key")
 
@@ -138,16 +142,11 @@ if HAS_FLIGHT:
                     api_keys, repository
                 )
 
-                def validate(secret: str) -> bool:
-                    import hmac
-
-                    if any(
-                        hmac.compare_digest(secret, key) for key in (api_keys or [])
-                    ):
-                        return True
-                    return repository is not None and repository.verify(secret)
-
-                auth_handler = _BasicServerAuthHandler(validate)
+                auth_handler = _BasicServerAuthHandler(
+                    lambda secret: _valid_api_key(
+                        secret, api_keys or [], repository
+                    )
+                )
             super().__init__(
                 location, auth_handler=auth_handler, middleware=middleware
             )

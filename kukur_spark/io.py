@@ -17,6 +17,10 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from kukur_spark.plancache import PLANS, fingerprint
+from kukur_spark.timeutil import epoch_ns
 
 TABLES = [
     "region",
@@ -35,28 +39,11 @@ TABLES = [
 # (older testdata generations), per table.
 _NANOS_TS_COLUMNS = {"events": ["ts"]}
 
-# Parquet schema cache: footer-based schema inference costs ~0.1-0.15 s
-# per read (every query re-pays it for every table it touches); the test
-# tables are immutable, so infer once per (session, path). Keyed by
-# applicationId so a new session never reuses a stale entry.
-_SCHEMA_CACHE: dict = {}
-
-# DataFrame-handle cache: even with the schema cached, assembling the
-# reader + the ns→timestamp normalization costs ~25-35 ms of py4j round
-# trips per call (measured round 10), and the bench queries call
-# load_table ~45 times per pass (~1.2 s of pure driver latency).
-# DataFrames are immutable lazy plan handles — returning the same object
-# is semantically identical to rebuilding it, and every action still
-# computes from the parquet files.  Keyed by applicationId like the
-# schema cache.  ``ts_range`` reads are NOT served from here (the range
-# predicate must land on the raw column before conversion); they reuse
-# the cached raw handle and rebuild the cheap filter+convert tail.
-_DF_CACHE: dict = {}
-
-# Sessions whose canonical-read confs have been pinned already — the
-# three spark.conf.set calls are ~1 ms of py4j each and the values never
-# change after the first call for a given session.
-_CONF_PINNED: set = set()
+# Per (session, path), the raw read and its normalized table stay in the
+# plan cache while the file is unchanged: schema inference costs
+# ~0.1-0.15 s per read and the reader + ns→timestamp tail ~25-35 ms of
+# py4j (round 10), against ~45 calls per bench pass.  ``ts_range`` reads
+# build their filter + convert tail on the cached raw handle.
 
 
 def load_table(
@@ -73,69 +60,48 @@ def load_table(
     and would NOT reach the parquet scan (no row-group pruning); the raw
     long comparison shows up in ``PushedFilters`` and prunes at 100 TB.
     """
-    app_id = spark.sparkContext.applicationId
-    if app_id not in _CONF_PINNED:
-        # canonical timestamp semantics require a UTC session (SURVEY
-        # §1.3); the caller's session (e.g. the driver's) may be
-        # configured otherwise — all three confs are runtime SQLConfs,
-        # safe to set before the read resolves, and constant for the
-        # lifetime of the session, so pin them once per applicationId
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        # naive parquet timestamps → session-tz TIMESTAMP (not NTZ):
-        # keeps every timestamp function (unix_micros, window, …)
-        # applicable and matches the oracle's instant semantics under
-        # the UTC session
-        spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        # TIMESTAMP(NANOS) parquet columns read as long (normalized to
-        # timestamp[us] below); also an engine default in get_spark
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        _CONF_PINNED.add(app_id)
     path = os.path.join(sf_dir, f"{name}.parquet")
-    cache_key = (app_id, path)
+    raw, table = PLANS.get(
+        ("table", spark, path),
+        fingerprint(path),
+        lambda: _read_table(spark, name, path),
+    )
     if ts_range is None:
-        hit = _DF_CACHE.get(cache_key)
-        if hit is not None:
-            return hit
-    cached = _SCHEMA_CACHE.get(cache_key)
-    if cached is not None:
-        df = spark.read.schema(cached).parquet(path)
-    else:
-        df = spark.read.parquet(path)
-        _SCHEMA_CACHE[cache_key] = df.schema
-    ts_columns = _NANOS_TS_COLUMNS.get(name, [])
-    for column in ts_columns:
+        return table
+    return _normalize_ts(raw, name, ts_range)
+
+
+def _read_table(spark: SparkSession, name: str, path: str):
+    """(raw read, normalized table) for :func:`load_table`'s cache."""
+    # canonical timestamp semantics need a UTC session (SURVEY §1.3) that
+    # reads naive parquet timestamps as session-tz TIMESTAMP (not NTZ, so
+    # every timestamp function applies) and TIMESTAMP(NANOS) as long; the
+    # caller's session may be configured otherwise, so set them per miss
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    raw = spark.read.parquet(path)
+    return raw, _normalize_ts(raw, name, None)
+
+
+def _normalize_ts(df: DataFrame, name: str, ts_range) -> DataFrame:
+    """ns-long timestamp columns → timestamp[us], after the optional
+    ``ts_range`` filter on the stored column: a predicate through
+    ``timestamp_micros(x div 1000)`` is opaque to Catalyst and would not
+    reach the scan (no row-group pruning at 100 TB)."""
+    for column in _NANOS_TS_COLUMNS.get(name, []):
         if column not in df.columns:
             continue
-        is_nanos_long = str(df.schema[column].dataType) in (
-            "LongType()",
-            "LongType",
-            "bigint",
-        )
-        if is_nanos_long:
-            # filter on the raw long BEFORE conversion: a predicate through
-            # timestamp_micros(x div 1000) is opaque to Catalyst and would
-            # not reach the scan (no row-group pruning at 100 TB)
-            if ts_range is not None:
-                from kukur_spark.timeutil import epoch_ns
-
-                start_ns = epoch_ns(ts_range[0])
-                end_ns = epoch_ns(ts_range[1])
-                df = df.filter(
-                    (F.col(column) >= F.lit(start_ns))
-                    & (F.col(column) < F.lit(end_ns))
-                )
+        nanos = isinstance(df.schema[column].dataType, T.LongType)
+        if ts_range is not None:
+            lo, hi = [epoch_ns(t) for t in ts_range] if nanos else ts_range
+            df = df.filter(
+                (F.col(column) >= F.lit(lo)) & (F.col(column) < F.lit(hi))
+            )
+        if nanos:
             df = df.withColumn(
                 column, F.timestamp_micros(F.expr(f"`{column}` div 1000"))
             )
-        elif ts_range is not None:
-            # native timestamp column: a plain half-open range predicate
-            # pushes down to the parquet scan as-is
-            df = df.filter(
-                (F.col(column) >= F.lit(ts_range[0]))
-                & (F.col(column) < F.lit(ts_range[1]))
-            )
-    if ts_range is None:
-        _DF_CACHE[cache_key] = df
     return df
 
 

@@ -26,13 +26,13 @@ to recover exactness at your own straggler risk.
 from __future__ import annotations
 
 import logging
-import weakref
 from typing import Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from kukur_spark.io import persist_once
+from kukur_spark.plancache import PLANS
 
 # Per-(band, bucket) membership bound for the LSH self-join; buckets
 # larger than this are sub-split so no single task materializes more
@@ -111,34 +111,23 @@ def _estimated_bucket_bound(banded: DataFrame, bands: int) -> Optional[int]:
         return None
 
 
-# Skew-guard estimate memo: the shadow-plan row bound is a pure function
-# of the (immutable) source frame, the shadow kind and the band count —
-# and the shadow exists precisely so the estimate is independent of any
-# session cache state, so re-deriving it on every query construction is
-# pure py4j/analysis overhead (~0.13 s per LSH-family construction,
-# measured round 10: shadow build + optimizedPlan().stats()).  Keyed by
-# (applicationId, kind, bands, id(source df)) with a weakref identity
-# check so a recycled id() can never serve a stale bound.  Only the
-# *estimate* is memoized — never any query result; the guard decision it
-# feeds is already cold=warm-stable by the shadow's design.
-_BOUND_MEMO: dict = {}
+# The shadow-plan row bound is a pure function of the (immutable) source
+# frame, the shadow kind and the band count, and re-deriving it costs
+# ~0.13 s of py4j/analysis per LSH-family construction (round 10), so it
+# is cached with the source frame itself as the fingerprint (DataFrames
+# compare by identity; the entry holds the frame, so its id() stays
+# unique).  Only the estimate is cached, never a query result.
 
 
-def _memoized_bound(src: DataFrame, kind: str, bands: int, builder):
-    """Bucket bound from the memo, or compute via ``builder()`` and store."""
-    try:
-        app_id = src.sparkSession.sparkContext.applicationId
-    except Exception:
-        app_id = None
-    key = (app_id, kind, bands, id(src))
-    hit = _BOUND_MEMO.get(key)
-    if hit is not None and hit[0]() is src:
-        return hit[1]
-    bound = _estimated_bucket_bound(builder(), bands)
-    if len(_BOUND_MEMO) > 512:  # stale-session hygiene, never hot
-        _BOUND_MEMO.clear()
-    _BOUND_MEMO[key] = (weakref.ref(src), bound)
-    return bound
+def _memoized_bound(src: DataFrame, kind: str, id_column: str, bands: int):
+    """Bucket bound of ``src``'s ``kind`` ("banded" or "simhash") stats
+    shadow, from the plan cache."""
+    shadow = _stats_shadow_banded if kind == "banded" else _stats_shadow_simhash
+    return PLANS.get(
+        ("bucket_bound", kind, id_column, bands, id(src)),
+        src,
+        lambda: _estimated_bucket_bound(shadow(src, id_column, bands), bands),
+    )
 
 
 def _stats_shadow_banded(
@@ -528,12 +517,7 @@ FROM (
         f"slice(sig, b * {rows_per_band} + 1, {rows_per_band}), "
         f"x -> cast(x AS string)), ','), b) AS bucket))"
     )
-    bound = _memoized_bound(
-        df,
-        "banded",
-        bands,
-        lambda: _stats_shadow_banded(df, id_column, bands),
-    )
+    bound = _memoized_bound(df, "banded", id_column, bands)
     if _guard_elided(bound, _LSH_BUCKET_CAP, bands):
         # one statement, one analysis pass; plan identical to the
         # unguarded Column path (plans/r11 + scripts/plan_diff.py).
@@ -690,12 +674,7 @@ def minhash_lsh_pairs_md5(
     pairs = _band_candidates(
         banded,
         bands=bands,
-        stats_bound=_memoized_bound(
-            df,
-            "banded",
-            bands,
-            lambda: _stats_shadow_banded(df, id_column, bands),
-        ),
+        stats_bound=_memoized_bound(df, "banded", id_column, bands),
     )
     verified = _join_hash_sets(pairs, base.select("id", "hs"))
     inter = F.size(F.array_intersect("hs_a", "hs_b")).cast("long")
@@ -992,12 +971,7 @@ def simhash_pairs(
         _simhash_banded(sig, bands=4, bits_per_band=16),
         carry=("sig",),
         bands=4,
-        stats_bound=_memoized_bound(
-            df,
-            "simhash",
-            4,
-            lambda: _stats_shadow_simhash(df, id_column, 4),
-        ),
+        stats_bound=_memoized_bound(df, "simhash", id_column, 4),
     )
     hamming = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
     return (
@@ -1063,12 +1037,7 @@ def simhash_pairs_md5(
         _simhash_banded(sig, bands=4, bits_per_band=15),
         carry=("sig",),
         bands=4,
-        stats_bound=_memoized_bound(
-            df,
-            "simhash",
-            4,
-            lambda: _stats_shadow_simhash(df, id_column, 4),
-        ),
+        stats_bound=_memoized_bound(df, "simhash", id_column, 4),
     )
     hamming = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
     return (

@@ -22,6 +22,7 @@ from __future__ import annotations
 import base64
 import glob as globlib
 import os
+import threading
 from dataclasses import dataclass, field as dc_field
 from datetime import datetime
 from typing import Any, Dict, Iterator, List, Optional, Union
@@ -39,6 +40,7 @@ from kukur_spark.base import (
 )
 from kukur_spark.metadata import Metadata
 from kukur_spark.operators.plot import plot_downsample
+from kukur_spark.plancache import PLANS, fingerprint
 from kukur_spark.schema import (
     QUALITY_COLUMN,
     TS_COLUMN,
@@ -133,13 +135,6 @@ class FileSourceOptions:
     file_extension: Optional[str] = None
     encoding: Optional[str] = None  # e.g. "cp1252"; BOM handled by UTF-8 default
     metadata_path: Optional[str] = None
-    # TTL for the per-search analyzed-plan cache (seconds; 0 disables).
-    # Rebuilding the search plan costs ~1 s of driver-side analysis +
-    # codegen per call, dwarfing the ~0.1 s execution for small-result
-    # federated calls (SURVEY.md §7 risk 6).  The cached DataFrame is
-    # lazy — file CONTENTS are re-read on every execution; only the
-    # file listing + schema snapshot ages, bounded by this TTL.
-    search_cache_seconds: float = 30.0
     metadata_field_column: Optional[str] = None
     # whitelist of metadata fields this source returns (reference
     # kukur/source/csv/csv.py:68-70: ``metadata_fields`` or ``fields``);
@@ -224,10 +219,11 @@ class FileSourceOptions:
                 int(config["version"]) if "version" in config else None
             ),
             delta_timestamp=config.get("timestamp"),
-            search_cache_seconds=float(
-                config.get("search_cache_seconds", 30.0)
-            ),
         )
+
+
+# path → fingerprint during the outermost plan lookup on this thread
+_CALL = threading.local()
 
 
 class FileSource:
@@ -237,21 +233,17 @@ class FileSource:
         self.spark = spark
         self.name = name
         self.options = options
-        # (search key) -> (monotonic stamp, analyzed DataFrame); see
-        # FileSourceOptions.search_cache_seconds
-        self._search_plan_cache: Dict[Any, Any] = {}
 
     # ------------------------------------------------------------------
     # raw reads
     # ------------------------------------------------------------------
     def _read_raw(self, path: Optional[str] = None) -> DataFrame:
-        """TTL-cached raw read (see :meth:`_plan_cached`): reader
+        """Plan-cached raw read (see :meth:`_plan_cached`): reader
         construction + schema resolution cost ~90 ms per call through the
         Flight verbs, ~60% of a small ``get_data``'s wall (round 11)."""
-        opts = self.options
-        path = path or opts.path
+        path = path or self.options.path
         return self._plan_cached(
-            ("raw", path), lambda: self._read_raw_uncached(path)
+            ("raw", path), path, lambda: self._read_raw_uncached(path)
         )
 
     def _read_raw_uncached(self, path: str) -> DataFrame:
@@ -391,7 +383,7 @@ class FileSource:
         if declared is not None:
             target = declared
         elif isinstance(dtype, T.StringType):
-            # sniffed per series: the caller's TTL plan cache holds the
+            # sniffed per series: the caller's plan cache holds the
             # result per selector
             first = df.select(column).filter(df[column].isNotNull()).first()
             sample = first[0] if first is not None else None
@@ -423,11 +415,13 @@ class FileSource:
 
         Row layout: ``tag…, ts, field…[, quality]``. Pivot and dir layouts
         are converted on read (melt / path-partition extraction), so every
-        downstream operator sees the same shape.  TTL-cached (see
+        downstream operator sees the same shape.  Plan-cached (see
         :meth:`_plan_cached`) — the melt/normalize chain re-analyzes
         otherwise on every verb call.
         """
-        return self._plan_cached(("data_frame",), self._data_frame_uncached)
+        return self._plan_cached(
+            ("data_frame",), self.options.path, self._data_frame_uncached
+        )
 
     def _data_frame_uncached(self) -> DataFrame:
         opts = self.options
@@ -543,39 +537,29 @@ class FileSource:
     # ------------------------------------------------------------------
     # 4-verb API
     # ------------------------------------------------------------------
-    def _plan_cached(self, key, builder) -> DataFrame:
-        """TTL plan-handle cache shared by the verb hot paths.
-
-        The federated hot path is many small repeated verb calls
-        (reference kukur/flight.py:95-101); driver-side plan analysis +
-        codegen dominates execution ~10:1 there, so analyzed plans are
-        reused for ``search_cache_seconds`` (0 disables).  Plans stay
-        lazy — every execution re-reads file contents; only the
-        file-listing snapshot ages within the TTL.  Never caches
-        results."""
-        import time as _time
-
-        ttl = self.options.search_cache_seconds
-        if ttl <= 0:
-            return builder()
-        hit = self._search_plan_cache.get(key)
-        now = _time.monotonic()
-        if hit is not None and now - hit[0] < ttl:
-            return hit[1]
-        df = builder()
-        self._search_plan_cache[key] = (now, df)
-        return df
+    def _plan_cached(self, key, path: str, builder):
+        """``builder()``'s handle, reused while the files under ``path``
+        are unchanged: driver-side plan analysis dominates the small
+        repeated verb calls of the federated hot path ~10:1 (reference
+        kukur/flight.py:95-101).  The nested lookups of one call (series →
+        data_frame → raw) share one fingerprint per path."""
+        seen = getattr(_CALL, "fingerprints", None)
+        if seen is None:
+            _CALL.fingerprints = {}
+            try:
+                return self._plan_cached(key, path, builder)
+            finally:
+                _CALL.fingerprints = None
+        if path not in seen:
+            seen[path] = fingerprint(path)
+        return PLANS.get((self, key), seen[path], builder)
 
     def search_df(self, search: SeriesSearch) -> DataFrame:
-        """TTL-cached wrapper over :meth:`_search_df_uncached` (see
+        """Plan-cached wrapper over :meth:`_search_df_uncached` (see
         :meth:`_plan_cached`)."""
-        key = (
-            "search",
-            tuple(sorted((search.tags or {}).items())),
-            search.field,
-        )
+        key = ("search", tuple(sorted((search.tags or {}).items())), search.field)
         return self._plan_cached(
-            key, lambda: self._search_df_uncached(search)
+            key, self.options.path, lambda: self._search_df_uncached(search)
         )
 
     def _search_df_uncached(self, search: SeriesSearch) -> DataFrame:
@@ -663,7 +647,7 @@ class FileSource:
         """(ts, value[, quality]) for one series in half-open [start, end).
 
         The range-independent prefix (read → tag filter → casts → sort →
-        conform) is TTL-cached per selector (see :meth:`_plan_cached`);
+        conform) is plan-cached per selector (see :meth:`_plan_cached`);
         only the two range predicates are built per call — the verb hot
         path repeats selectors far more often than plans change.  The
         filter-after-sort order is plan-neutral (Catalyst pushes the
@@ -675,13 +659,11 @@ class FileSource:
         if opts.timestamp_partition_columns or opts.partitions:
             base = self._series_frame(selector, start, end)
         else:
-            key = (
-                "series",
-                tuple(sorted(selector.tags.items())),
-                selector.field,
-            )
+            key = ("series", tuple(sorted(selector.tags.items())), selector.field)
+            # a dir-layout series is one file: stat it, not the directory
+            path = self._series_path(selector) if opts.format == "dir" else opts.path
             base = self._plan_cached(
-                key, lambda: self._series_frame(selector, None, None)
+                key, path, lambda: self._series_frame(selector, None, None)
             )
         return base.filter(
             (F.col(TS_COLUMN) >= F.lit(start)) & (F.col(TS_COLUMN) < F.lit(end))
@@ -814,15 +796,13 @@ class FileSource:
     # metadata files
     # ------------------------------------------------------------------
     def _metadata_index(self) -> Dict[tuple, Dict[str, str]]:
-        """Read the metadata CSV once into {(series key): {field: value}}.
+        """The metadata CSV as {(series key): {field: value}}, plan-cached:
+        the search fan-out calls get_metadata once per series."""
+        return self._plan_cached(
+            ("metadata",), self.options.metadata_path, self._read_metadata_index
+        )
 
-        Cached per source instance: the search fan-out calls get_metadata
-        once per series, and re-collecting the same immutable file would
-        cost O(series) driver jobs.
-        """
-        cached = getattr(self, "_metadata_index_cache", None)
-        if cached is not None:
-            return cached
+    def _read_metadata_index(self) -> Dict[tuple, Dict[str, str]]:
         opts = self.options
         df = self.spark.read.csv(
             opts.metadata_path, header=True, encoding=self._spark_encoding()
@@ -850,7 +830,6 @@ class FileSource:
             if opts.metadata_field_column and opts.metadata_field_column in data:
                 key = key + (data[opts.metadata_field_column],)
             index[key] = data
-        self._metadata_index_cache = index
         return index
 
     def _lookup_metadata(

@@ -1232,7 +1232,6 @@ def _lsh_edges_from(docs: DataFrame) -> DataFrame:
         _md5_banded,
         _md5_base,
         _memoized_bound,
-        _stats_shadow_banded,
     )
     from kukur_spark.io import persist_once
 
@@ -1243,16 +1242,11 @@ def _lsh_edges_from(docs: DataFrame) -> DataFrame:
     # stats shadow: the persisted base otherwise pollutes the skew-guard
     # row estimate once materialized (see _stats_shadow_banded), re-
     # engaging the detection jobs on every re-construction in a session;
-    # the bound is memoized per (session, docs handle) — see _memoized_bound
+    # the bound is cached per docs handle — see _memoized_bound
     cand = _band_candidates(
         banded,
         bands=_EDGE_BANDS,
-        stats_bound=_memoized_bound(
-            docs,
-            "banded",
-            _EDGE_BANDS,
-            lambda: _stats_shadow_banded(docs, "doc_id", _EDGE_BANDS),
-        ),
+        stats_bound=_memoized_bound(docs, "banded", "doc_id", _EDGE_BANDS),
     )
     toks = docs.select(
         F.col("doc_id").alias("id"),

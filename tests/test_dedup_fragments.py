@@ -27,10 +27,14 @@ SF = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="module")
 def hs_table(spark):
+    # checkpointed: CollapseProject would otherwise inline the shingle
+    # chain into every transform(hs, …) of the forms compared below
     docs = load_table(spark, SF, "documents")
-    return docs.selectExpr(
-        "doc_id AS id", f"{_token_hashes_sql('text')} AS th"
-    ).selectExpr("id", f"{_combine_shingle_hashes_sql('th', 3)} AS hs")
+    return (
+        docs.selectExpr("doc_id AS id", f"{_token_hashes_sql('text')} AS th")
+        .selectExpr("id", f"{_combine_shingle_hashes_sql('th', 3)} AS hs")
+        .localCheckpoint()
+    )
 
 
 def test_minhash_signature_sequence_matches_unrolled(spark, hs_table):
@@ -83,9 +87,11 @@ def test_md5_signature_sequence_matches_unrolled(spark):
 
 def test_band_buckets_sequence_matches_unrolled(spark, hs_table):
     bands, rpb = 8, 4
+    # checkpointed so the 32-hash signature is computed once, not inlined
+    # into every slice(sig, …) of the two band forms
     sig = hs_table.selectExpr(
         "id", f"{_minhash_signature_sql('hs', bands * rpb)} AS sig"
-    )
+    ).localCheckpoint()
     new_structs = (
         f"transform(sequence(0, {bands - 1}), b -> struct(b AS band, "
         f"xxhash64(array_join(transform(slice(sig, b * {rpb} + 1, {rpb}), "

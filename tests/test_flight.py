@@ -334,8 +334,9 @@ def test_stream_window_drops_memory_sink_view(spark, tmp_path_factory):
 
 def test_search_plan_cache_hits_and_expires(spark, tmp_path):
     """Federated latency (SURVEY.md §7 risk 6): repeated searches reuse
-    the analyzed plan within the TTL (driver-side analysis dominates
-    execution ~10:1 for small results), and a TTL of 0 disables it."""
+    the analyzed plan while the source files are unchanged (driver-side
+    analysis dominates execution ~10:1 for small results), and a changed
+    file expires it on the next call."""
     from kukur_spark.base import SeriesSearch
     from kukur_spark.sources.file_source import FileSource, FileSourceOptions
 
@@ -350,21 +351,42 @@ def test_search_plan_cache_hits_and_expires(spark, tmp_path):
     # a different tag filter is a different plan
     other = src.search_df(SeriesSearch("c", {"series name": "s1"}))
     assert other is not first
-    # expiry: age every entry past the TTL (the shared plan cache also
-    # holds the raw-read and data_frame prefixes the search plan builds on)
-    for key, (stamp, df) in list(src._search_plan_cache.items()):
-        src._search_plan_cache[key] = (stamp - 10_000.0, df)
-    assert src.search_df(SeriesSearch("c")) is not first
-
-    uncached = FileSource(
-        spark,
-        "u",
-        FileSourceOptions(
-            path=str(tmp_path / "d.csv"), search_cache_seconds=0.0
-        ),
+    # expiry: the file changes, so its fingerprint does
+    (tmp_path / "d.csv").write_text(
+        "s1,2020-01-01T00:00:00Z,1\ns2,2020-01-01T00:00:00Z,2\n"
     )
-    a = uncached.search_df(SeriesSearch("u"))
-    assert uncached.search_df(SeriesSearch("u")) is not a
+    fresh = src.search_df(SeriesSearch("c"))
+    assert fresh is not first
+    assert [r["series name"] for r in fresh.collect()] == ["s1", "s2"]
+
+
+def test_sql_registers_functions_once(spark, tmp_path, monkeypatch):
+    """The sql verb installs the ku_* functions only when the session
+    lacks them: a second call issues no CREATE statement."""
+    from kukur_spark.sql_functions import _FUNCTIONS
+
+    (tmp_path / "d.csv").write_text("s1,2020-01-01T00:00:00Z,1\n")
+    engine = Engine(
+        {"source": {"demo": {"type": "csv", "path": str(tmp_path / "d.csv")}}},
+        spark,
+    )
+    for name in _FUNCTIONS:
+        spark.sql(f"DROP TEMPORARY FUNCTION IF EXISTS {name}")
+    statements = []
+    real_sql = spark.sql
+
+    def recording_sql(statement, *args, **kwargs):
+        statements.append(statement)
+        return real_sql(statement, *args, **kwargs)
+
+    monkeypatch.setattr(spark, "sql", recording_sql)
+    for _ in range(2):
+        row = engine.sql(
+            "SELECT ku_opc_good(192) AS g FROM demo", sources=["demo"]
+        ).collect()[0]
+        assert row["g"] == 1
+    creates = [s for s in statements if s.startswith("CREATE")]
+    assert len(creates) == len(_FUNCTIONS)
 
 
 def test_flight_small_result_latency_smoke(flight_client):
