@@ -376,16 +376,15 @@ def _join_hash_sets(pairs: DataFrame, sets: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 # shingling + MinHash
 #
-# Each helper exists twice: a Column-expression form (the original public
-# API, still used by secondary workloads) and a ``*_sql`` fragment builder
-# composed into ONE ``F.expr``/``selectExpr`` string by the hot paths.
-# Both resolve to the same Catalyst tree — the fragment form exists because
-# building a 32-permutation signature out of pyspark Column objects costs
-# ~2 600 py4j round trips (~0.7 s of pure driver latency per query
-# construction, measured round 10); one SQL string is a single round trip.
+# Each helper is a ``*_sql`` fragment builder, composed into ONE
+# ``F.expr``/``selectExpr``/``spark.sql`` string by its callers: building
+# a 32-permutation signature out of pyspark Column objects cost ~2 600
+# py4j round trips (~0.7 s of pure driver latency per query construction,
+# measured round 10); one SQL string is a single round trip.
 # ---------------------------------------------------------------------------
-def _shingles_sql(text_sql: str, k: int = 3) -> str:
-    """SQL fragment equivalent of :func:`shingles`."""
+def shingles_sql(text_sql: str, k: int = 3) -> str:
+    """SQL fragment: distinct k-token shingles of a whitespace-tokenized
+    text."""
     toks = f"split({text_sql}, ' ')"
     return (
         f"array_distinct(transform("
@@ -394,8 +393,12 @@ def _shingles_sql(text_sql: str, k: int = 3) -> str:
     )
 
 
-def _md5_long_sql(x_sql: str) -> str:
-    """SQL fragment equivalent of :func:`md5_long`."""
+def md5_long_sql(x_sql: str) -> str:
+    """SQL fragment: first 60 bits of md5 as a non-negative bigint.
+
+    md5 is the one hash both Spark and DuckDB implement identically, which
+    makes the md5 LSH variant's full pipeline checkable against a SQL
+    oracle (the xxhash64 fast path is not expressible outside Spark)."""
     return f"cast(conv(substring(md5({x_sql}), 1, 15), 16, 10) as bigint)"
 
 
@@ -430,16 +433,6 @@ def _minhash_signature_sql(hs_col: str, num_hashes: int = 32) -> str:
     return (
         f"transform(sequence(0, {num_hashes - 1}), "
         f"j -> array_min(transform({hs_col}, h -> xxhash64(h, j))))"
-    )
-
-
-def shingles(text: Column, k: int = 3) -> Column:
-    """Distinct k-token shingles of a whitespace-tokenized text."""
-    toks = F.split(text, " ")
-    n = F.size(toks)
-    idx = F.sequence(F.lit(0), F.greatest(n - F.lit(k), F.lit(0)))
-    return F.array_distinct(
-        F.transform(idx, lambda i: F.array_join(F.slice(toks, i + 1, k), " "))
     )
 
 
@@ -572,15 +565,6 @@ WHERE jaccard >= {jaccard_threshold!r}D
 # ---------------------------------------------------------------------------
 # MinHash+LSH, md5 variant (cross-engine checkable)
 # ---------------------------------------------------------------------------
-def md5_long(col: Column) -> Column:
-    """First 60 bits of md5 as a non-negative bigint.
-
-    md5 is the one hash both Spark and DuckDB implement identically, which
-    makes this variant's full LSH pipeline checkable against a SQL oracle
-    (the xxhash64 fast path is not expressible outside Spark)."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
 def _md5_base(
     df: DataFrame,
     text_column: str,
@@ -600,18 +584,18 @@ def _md5_base(
     sig_mins = (
         f"transform(sequence(0, {num_hashes - 1}), j -> "
         "array_min(transform(sh, s -> "
-        + _md5_long_sql("concat(s, '#', cast(j AS string))")
+        + md5_long_sql("concat(s, '#', cast(j AS string))")
         + ")))"
     )
     return (
         _spread(df, id_column)
         .selectExpr(
             f"`{id_column}` AS id",
-            f"{_shingles_sql(f'`{text_column}`', shingle_size)} AS sh",
+            f"{shingles_sql(f'`{text_column}`', shingle_size)} AS sh",
         )
         .selectExpr(
             "id",
-            f"array_distinct(transform(sh, s -> {_md5_long_sql('s')})) AS hs",
+            f"array_distinct(transform(sh, s -> {md5_long_sql('s')})) AS hs",
             f"{sig_mins} AS sig",
         )
     )
@@ -634,7 +618,7 @@ def _md5_banded(
     )
     structs = (
         f"transform(sequence(0, {bands - 1}), b -> struct(b AS band, "
-        + _md5_long_sql(
+        + md5_long_sql(
             f"concat(concat_ws(','{row_refs}), '|', cast(b AS string))"
         )
         + " AS bucket))"
@@ -988,16 +972,15 @@ def simhash_md5(text_column: str) -> Column:
     """60-bit SimHash over md5-derived token hashes (oracle-checkable).
 
     Same fold as :func:`simhash` but the per-token hash is the 60-bit md5
-    prefix (`md5_long`), computed once per token, so DuckDB can replicate
-    the signature exactly."""
+    prefix (:func:`md5_long_sql`), computed once per token, so DuckDB can
+    replicate the signature exactly."""
     return F.expr(
         f"""
         aggregate(
           zip_with(
             aggregate(
               transform(split({text_column}, ' '),
-                        tok -> cast(conv(substring(md5(tok), 1, 15), 16, 10)
-                                    as bigint)),
+                        tok -> {md5_long_sql('tok')}),
               array_repeat(cast(0 as bigint), 60),
               (acc, h) -> zip_with(
                 acc,

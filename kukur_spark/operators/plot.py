@@ -118,31 +118,41 @@ def plot_downsample(
     span = max(end_us - start_us, 1)
     n = int(interval_count)
     gsel = "".join(f"`{c}`, " for c in group_columns)
-    gby = gsel + f"`{TS_COLUMN}`"
-    # One parameterized statement embedding the bucket stats as a CTE —
-    # the Column-object tail (struct array → explode → dropDuplicates →
-    # orderBy) cost ~6 analysis passes per verb call (round 11).  The
-    # GROUP BY + first() dedup is exactly what dropDuplicates rewrites
-    # to (Aggregate over the key with First(ignoreNulls=false) for the
-    # rest), so the plan and the tie pick are unchanged.
+    # [first, min, max, last]; a point whose ts an earlier one already
+    # has becomes NULL, so the first point per distinct ts is kept
+    points = [
+        ("ts_first", "first_value"),
+        ("ts_min", "min_value"),
+        ("ts_max", "max_value"),
+        ("ts_last", "last_value"),
+    ]
+    pts = []
+    for i, (t, v) in enumerate(points):
+        point = f"struct({t} AS `{TS_COLUMN}`, {v} AS `{VALUE_COLUMN}`)"
+        earlier = ", ".join(e for e, _ in points[:i])
+        pts.append(f"IF({t} IN ({earlier}), NULL, {point})" if earlier else point)
+    # One parameterized statement embedding the bucket stats as a CTE.
+    # Buckets partition time, so equal timestamps are deduplicated inside
+    # each bucket row, with no second shuffle.  Without groups the result
+    # has at most 4 × interval_count rows, so it is sorted in one
+    # partition instead of range-partitioned (a sampling job and an
+    # exchange).
+    order = (
+        f"ORDER BY {gsel}`{TS_COLUMN}`"
+        if group_columns
+        else f"SORT BY `{TS_COLUMN}`"
+    )
+    hint = "" if group_columns else "/*+ COALESCE(1) */ "
     sql = f"""
 WITH __stats AS ({_bucket_stats_sql(start_us, end_us, span, n,
                                     group_columns)})
-SELECT {gsel}`{TS_COLUMN}`, first(`{VALUE_COLUMN}`) AS `{VALUE_COLUMN}`
+SELECT {hint}{gsel}p.`{TS_COLUMN}` AS `{TS_COLUMN}`,
+       p.`{VALUE_COLUMN}` AS `{VALUE_COLUMN}`
 FROM (
-  SELECT {gsel}p.`{TS_COLUMN}` AS `{TS_COLUMN}`,
-         p.`{VALUE_COLUMN}` AS `{VALUE_COLUMN}`
-  FROM (
-    SELECT {gsel}explode(array_distinct(array(
-      struct(ts_first AS `{TS_COLUMN}`, first_value AS `{VALUE_COLUMN}`),
-      struct(ts_min AS `{TS_COLUMN}`, min_value AS `{VALUE_COLUMN}`),
-      struct(ts_max AS `{TS_COLUMN}`, max_value AS `{VALUE_COLUMN}`),
-      struct(ts_last AS `{TS_COLUMN}`, last_value AS `{VALUE_COLUMN}`)
-    ))) AS p
-    FROM __stats
-  )
+  SELECT {gsel}explode(array_sort(array({", ".join(pts)}))) AS p
+  FROM __stats
 )
-GROUP BY {gby}
-ORDER BY {gby}
+WHERE p IS NOT NULL
+{order}
 """
     return df.sparkSession.sql(sql, df=df)

@@ -14,7 +14,10 @@
   ``nprobe`` nearest centroids only.
 
 All dot products are built-in higher-order functions (``zip_with`` +
-``aggregate``) over double-cast arrays — JVM-side, no Python in the loop.
+``aggregate``) over double-cast arrays — JVM-side, no Python in the loop —
+written once each as SQL fragments (``dot_sql``, ``norm_sql``,
+``cosine_sql``, ``as_double_sql``), and every ranking uses the one
+(score desc, id asc) tie rule of ``rank_sql``.
 
 The fold form is deliberate, not an oversight: unrolling the dot
 product into a flat left-associated 64-term sum (bit-identical IEEE
@@ -29,45 +32,45 @@ from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from kukur_spark.io import persist_once
 
 
-def _as_double(v: Column) -> Column:
-    return F.transform(v, lambda x: x.cast("double"))
-
-
-def dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def norm(a: Column) -> Column:
-    return F.sqrt(dot(a, a))
-
-
-# SQL-fragment twins of the Column helpers above: same expressions, one
-# parse instead of ~40 py4j round trips per use (driver latency only —
-# the resolved trees are identical; lambda-variable display names differ,
-# normalized by scripts/plan_diff.py)
-def _as_double_sql(v: str) -> str:
+# One SQL fragment per expression; Column-API callers wrap one in
+# ``F.expr`` (one parse instead of ~40 py4j round trips per use).
+def as_double_sql(v: str) -> str:
+    """SQL fragment: the array ``v`` with every element cast to DOUBLE."""
     return f"transform({v}, x -> CAST(x AS DOUBLE))"
 
 
-def _dot_sql(a: str, b: str) -> str:
+def dot_sql(a: str, b: str) -> str:
+    """SQL fragment: dot product of two double arrays (positional fold)."""
     return (
         f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D,"
         " (acc, x) -> acc + x)"
     )
 
 
-def _norm_sql(a: str) -> str:
-    return f"sqrt({_dot_sql(a, a)})"
+def norm_sql(a: str) -> str:
+    """SQL fragment: Euclidean norm of a double array."""
+    return f"sqrt({dot_sql(a, a)})"
+
+
+def cosine_sql(a: str, b: str) -> str:
+    """SQL fragment: cosine similarity of two double arrays."""
+    return f"({dot_sql(a, b)} / ({norm_sql(a)} * {norm_sql(b)}))"
+
+
+def rank_sql(partition: str, score: str, tie: str) -> str:
+    """SQL fragment: the top-k tie rule of every similarity ranking —
+    row number within ``partition`` by ``score`` descending, ties broken
+    by ``tie`` ascending."""
+    return (
+        f"row_number() OVER (PARTITION BY {partition}"
+        f" ORDER BY {score} DESC, {tie} ASC)"
+    )
 
 
 def brute_force_topk(
@@ -98,22 +101,20 @@ def brute_force_topk(
 SELECT query_id, neighbor_id, round(cos_sim, 6) AS cos_sim,
        CAST(rank AS BIGINT) AS rank
 FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id
-                               ORDER BY cos_sim DESC, neighbor_id ASC)
-            AS rank
+  SELECT *, {rank_sql("query_id", "cos_sim", "neighbor_id")} AS rank
   FROM (
     SELECT /*+ BROADCAST(q) */ c.*, q.*,
-           {_dot_sql("qv", "cv")} / (qn * cn) AS cos_sim
+           {dot_sql("qv", "cv")} / (qn * cn) AS cos_sim
     FROM (
-      SELECT *, {_norm_sql("cv")} AS cn
+      SELECT *, {norm_sql("cv")} AS cn
       FROM (SELECT `{id_column}` AS neighbor_id,
-                   {_as_double_sql(f"`{vector_column}`")} AS cv
+                   {as_double_sql(f"`{vector_column}`")} AS cv
             FROM {{corpus}})
     ) c
     JOIN (
-      SELECT *, {_norm_sql("qv")} AS qn
+      SELECT *, {norm_sql("qv")} AS qn
       FROM (SELECT `{id_column}` AS query_id,
-                   {_as_double_sql(f"`{vector_column}`")} AS qv
+                   {as_double_sql(f"`{vector_column}`")} AS qv
             FROM {{queries}})
     ) q ON {condition}
   )
@@ -195,19 +196,17 @@ def lsh_topk(
     same resolved trees (plans/r11 + scripts/plan_diff.py).
     """
     n_parts = corpus.sparkSession.sparkContext.defaultParallelism
-    vec = _as_double_sql(f"`{vector_column}`")
+    vec = as_double_sql(f"`{vector_column}`")
     sql = f"""
 SELECT query_id, neighbor_id, round(cos_sim, 6) AS cos_sim,
        CAST(rank AS BIGINT) AS rank
 FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id
-                               ORDER BY cos_sim DESC, neighbor_id ASC)
-            AS rank
+  SELECT *, {rank_sql("query_id", "cos_sim", "neighbor_id")} AS rank
   FROM (
     SELECT /*+ BROADCAST(q) */ c.*, q.*,
-           {_dot_sql("qv", "cv")} / (qn * cn) AS cos_sim
+           {dot_sql("qv", "cv")} / (qn * cn) AS cos_sim
     FROM (
-      SELECT *, {_norm_sql("cv")} AS cn
+      SELECT *, {norm_sql("cv")} AS cn
       FROM (
         SELECT neighbor_id, cv,
                {_hyperplane_signature_sql('cv', num_planes, dim)} AS bucket
@@ -219,7 +218,7 @@ FROM (
       )
     ) c
     JOIN (
-      SELECT *, {_norm_sql("qv")} AS qn
+      SELECT *, {norm_sql("qv")} AS qn
       FROM (
         SELECT query_id, qv,
                {_hyperplane_signature_sql('qv', num_planes, dim)} AS bucket
@@ -254,9 +253,9 @@ def ivf_assign(
     centroids = (
         corpus.orderBy(F.col(id_column).asc())
         .limit(num_centroids)
-        .select(
-            F.col(id_column).alias("centroid_id"),
-            _as_double(F.col(vector_column)).alias("centroid"),
+        .selectExpr(
+            f"`{id_column}` AS centroid_id",
+            f"{as_double_sql(f'`{vector_column}`')} AS centroid",
         )
     )
     centroids = persist_once(centroids)  # num_centroids rows, broadcast
@@ -264,15 +263,14 @@ def ivf_assign(
     # consumer
     c = corpus.repartition(
         corpus.sparkSession.sparkContext.defaultParallelism, F.col(id_column)
-    ).select(F.col(id_column), _as_double(F.col(vector_column)).alias("v"))
+    ).selectExpr(f"`{id_column}`", f"{as_double_sql(f'`{vector_column}`')} AS v")
     scored = c.join(F.broadcast(centroids)).withColumn(
-        "sim", dot("v", "centroid") / (norm(F.col("v")) * norm(F.col("centroid")))
-    )
-    window = Window.partitionBy(id_column).orderBy(
-        F.col("sim").desc(), F.col("centroid_id").asc()
+        "sim", F.expr(cosine_sql("v", "centroid"))
     )
     assignments = (
-        scored.withColumn("rn", F.row_number().over(window))
+        scored.withColumn(
+            "rn", F.expr(rank_sql(f"`{id_column}`", "sim", "centroid_id"))
+        )
         .filter(F.col("rn") == 1)
         .select(id_column, "centroid_id", "v")
     )
@@ -290,20 +288,16 @@ def probe_nearest_centroids(
     centroid table): ``query_id, qv, qn, centroid_id``. Shared by the
     in-memory and the persisted-index IVF paths — tie rule
     (sim desc, centroid_id asc) must stay identical between them."""
-    q = queries.select(
-        F.col(id_column).alias("query_id"),
-        _as_double(F.col(vector_column)).alias("qv"),
-    ).withColumn("qn", norm(F.col("qv")))
-    probe_window = Window.partitionBy("query_id").orderBy(
-        F.col("centroid_sim").desc(), F.col("centroid_id").asc()
-    )
+    q = queries.selectExpr(
+        f"`{id_column}` AS query_id",
+        f"{as_double_sql(f'`{vector_column}`')} AS qv",
+    ).withColumn("qn", F.expr(norm_sql("qv")))
     return (
         q.join(F.broadcast(centroids))
+        .withColumn("centroid_sim", F.expr(cosine_sql("qv", "centroid")))
         .withColumn(
-            "centroid_sim",
-            dot("qv", "centroid") / (norm(F.col("qv")) * norm(F.col("centroid"))),
+            "rn", F.expr(rank_sql("query_id", "centroid_sim", "centroid_id"))
         )
-        .withColumn("rn", F.row_number().over(probe_window))
         .filter(F.col("rn") <= nprobe)
         .select("query_id", "qv", "qn", "centroid_id")
     )
@@ -321,13 +315,12 @@ def score_probed_lists(
     scored = (
         lists.join(F.broadcast(probes), on="centroid_id")
         .filter(F.col("query_id") != F.col(id_column))
-        .withColumn("cos_sim", dot("qv", "v") / (F.col("qn") * F.col("vn")))
-    )
-    window = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col(id_column).asc()
+        .withColumn("cos_sim", F.expr(f"{dot_sql('qv', 'v')} / (qn * vn)"))
     )
     return (
-        scored.withColumn("rank", F.row_number().over(window))
+        scored.withColumn(
+            "rank", F.expr(rank_sql("query_id", "cos_sim", f"`{id_column}`"))
+        )
         .filter(F.col("rank") <= k)
         .select(
             "query_id",
@@ -352,7 +345,7 @@ def ivf_topk(
     probes = probe_nearest_centroids(
         queries, centroids, nprobe, id_column, vector_column
     )
-    lists = assignments.withColumn("vn", norm(F.col("v")))
+    lists = assignments.withColumn("vn", F.expr(norm_sql("v")))
     return score_probed_lists(lists, probes, k, id_column)
 
 
@@ -399,7 +392,7 @@ cent_dims AS (
 
 
 def multi_table_signatures(
-    v: Column,
+    v_sql: str,
     num_planes: int = 3,
     num_tables: int = 8,
     dim: int = 64,
@@ -414,9 +407,10 @@ def multi_table_signatures(
     production tuning grows ``num_planes`` with log(corpus) to hold
     bucket sizes constant.  Bucket ids are namespaced per table
     (``t * 2^num_planes + bits``) so one equi-join over the exploded
-    array covers all tables.
+    array covers all tables.  ``v_sql`` is the SQL text of the vector
+    (e.g. a column name).
     """
-    v = _as_double(v)
+    v = F.expr(as_double_sql(v_sql))
     # dim contract: vectors longer than ``dim`` are projected on their
     # first ``dim`` components (NOT null-padded — zip_with pads the
     # shorter side with nulls, which would null every projection and

@@ -4,7 +4,8 @@ A cached handle (a lazy DataFrame, or a small index read from a file) is
 reused only while the files it was built from are unchanged, so a
 replaced, added or removed file is seen on the very next call, as in the
 reference, which rebuilds every source per request
-(kukur/source/__init__.py:349-364).  Results are never cached.
+(kukur/source/__init__.py:349-364).  The one result kept is a file
+source's search rows, bounded by ``file_source.MAX_CACHED_SEARCH_ROWS``.
 """
 
 from __future__ import annotations
@@ -15,8 +16,8 @@ import stat
 import threading
 from collections import OrderedDict
 
-# a few entries per file source (raw read, canonical frame, search plans,
-# one per hot selector) plus one per driver test table
+# a few entries per file source (raw read, canonical frame, search plans
+# and rows, one per hot selector) plus one per driver test table
 MAX_ENTRIES = 256
 
 

@@ -69,6 +69,10 @@ _STRPTIME_TO_SPARK = {
 }
 
 
+def _search_key(search: SeriesSearch) -> tuple:
+    return ("search", tuple(sorted((search.tags or {}).items())), search.field)
+
+
 def _literal_col(name: str) -> Column:
     """A column reference that treats ``name`` literally — both ``F.col``
     and ``df[name]`` parse dots as struct access; backtick-quoting (with
@@ -224,6 +228,12 @@ class FileSourceOptions:
 
 # path → fingerprint during the outermost plan lookup on this thread
 _CALL = threading.local()
+
+# a search population up to this many (tags, field) rows is kept in the
+# plan cache beside its plan, so a repeated search runs no Spark job; a
+# collected row holds ~0.4 KB of driver memory (tracemalloc over 20 000
+# rows of one or two tags), so one entry stays under ~5 MB
+MAX_CACHED_SEARCH_ROWS = 10_000
 
 
 class FileSource:
@@ -557,10 +567,32 @@ class FileSource:
     def search_df(self, search: SeriesSearch) -> DataFrame:
         """Plan-cached wrapper over :meth:`_search_df_uncached` (see
         :meth:`_plan_cached`)."""
-        key = ("search", tuple(sorted((search.tags or {}).items())), search.field)
         return self._plan_cached(
-            key, self.options.path, lambda: self._search_df_uncached(search)
+            _search_key(search),
+            self.options.path,
+            lambda: self._search_df_uncached(search),
         )
+
+    def _search_rows(self, search: SeriesSearch) -> list:
+        """The collected rows of :meth:`search_df`, one ``collect`` per
+        miss; kept in the plan cache when there are at most
+        ``MAX_CACHED_SEARCH_ROWS`` (a larger population is stored as
+        ``None`` and collected on every call)."""
+        collected: list = []
+
+        def collect():
+            collected.append(self.search_df(search).collect())
+            rows = collected[0]
+            return rows if len(rows) <= MAX_CACHED_SEARCH_ROWS else None
+
+        rows = self._plan_cached(
+            _search_key(search) + ("rows",), self.options.path, collect
+        )
+        if rows is not None:
+            return rows
+        if not collected:
+            collect()
+        return collected[0]
 
     def _search_df_uncached(self, search: SeriesSearch) -> DataFrame:
         """Distributed series discovery: one row per series (tags + field).
@@ -571,9 +603,7 @@ class FileSource:
         predicates push into the parquet scan (``PushedFilters``), and the
         tags×fields expansion is a crossJoin against a literal fields frame
         (reference semantics: kukur/source/arrow.py:183-189 group-by tags,
-        kukur/source/sql.py:287-304 tags×fields).  At 10⁷+ series the
-        iterator verb streams from this via ``toLocalIterator`` instead of
-        collecting every combo.
+        kukur/source/sql.py:287-304 tags×fields).
         """
         opts = self.options
         if opts.format == "dir":
@@ -616,7 +646,12 @@ class FileSource:
     def search(
         self, search: SeriesSearch
     ) -> Iterator[Union[SeriesSelector, Metadata]]:
-        """Series discovery: thin streaming wrapper over ``search_df``.
+        """Series discovery over the rows of ``search_df``.
+
+        The rows are collected once and, up to ``MAX_CACHED_SEARCH_ROWS``,
+        kept in the plan cache under the source's fingerprint, so a
+        repeated search runs no Spark job and a changed file is seen on
+        the next call.  The metadata of each result is looked up per call.
 
         Parity: reference kukur/source/arrow.py:183-189 (group-by tags) and
         tags×fields expansion kukur/source/sql.py:287-304. When a metadata
@@ -626,7 +661,7 @@ class FileSource:
         metadata_by_key = (
             self._metadata_index() if self.options.metadata_path else {}
         )
-        for row in self.search_df(search).toLocalIterator():
+        for row in self._search_rows(search):
             combo = row.asDict()
             fld = combo.pop("field")
             tags = {k: str(v) for k, v in combo.items()}

@@ -23,7 +23,7 @@ Reference semantics mirrored per function:
   SQL over raw OPC-DA quality columns.
 - ``ku_bucket`` — plot-interval bucketing (``get_plot_data`` W2).
 - ``ku_md5_long`` — the cross-engine 60-bit hash used by every
-  md5-oracle operator (`operators/dedup.py::md5_long`).
+  md5-oracle operator (`operators/dedup.py::md5_long_sql`).
 - ``ku_haversine_m`` — GPX great-circle distance
   (``kukur/source/gpx/__init__.py:98-102``).
 - ``ku_jaccard_e6`` — integer-exact set similarity (ppm) as used by the
@@ -34,15 +34,14 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
+from kukur_spark.operators.dedup import md5_long_sql
+
 _FUNCTIONS = {
     "ku_bucket": (
         "(ts TIMESTAMP, start TIMESTAMP, width_us BIGINT) RETURNS BIGINT "
         "RETURN (unix_micros(ts) - unix_micros(start)) div width_us"
     ),
-    "ku_md5_long": (
-        "(s STRING) RETURNS BIGINT "
-        "RETURN conv(substring(md5(s), 1, 15), 16, 10)"
-    ),
+    "ku_md5_long": f"(s STRING) RETURNS BIGINT RETURN {md5_long_sql('s')}",
     "ku_opc_good": (
         "(q BIGINT) RETURNS TINYINT "
         "RETURN CASE WHEN q >= 192 THEN CAST(1 AS TINYINT) "
@@ -109,9 +108,13 @@ _FUNCTIONS = {
 
 
 def register_sql_functions(spark: SparkSession) -> None:
-    """Install the ``ku_*`` SQL functions the session catalog lacks (the
-    probes cost ~1/10 of re-creating them, which the sql verb would do
-    on every call)."""
+    """Install the ``ku_*`` SQL functions the session catalog lacks.
+
+    The functions are created in ``_FUNCTIONS`` order, so the last name
+    present means all are: one catalog probe per sql-verb call, and all
+    are (re-)created when it is missing.  The sql verb rejects ``DROP``,
+    so a client cannot remove one function alone."""
+    if spark.catalog.functionExists(next(reversed(_FUNCTIONS))):
+        return
     for name, body in _FUNCTIONS.items():
-        if not spark.catalog.functionExists(name):
-            spark.sql(f"CREATE OR REPLACE TEMPORARY FUNCTION {name}{body}")
+        spark.sql(f"CREATE OR REPLACE TEMPORARY FUNCTION {name}{body}")

@@ -68,7 +68,12 @@ from kukur_spark.operators.dedup import (
     simhash_pairs_md5,
 )
 from kukur_spark.operators.plot import plot_buckets
-from kukur_spark.operators.similarity import brute_force_topk, ivf_topk, lsh_topk
+from kukur_spark.operators.similarity import (
+    as_double_sql,
+    brute_force_topk,
+    ivf_topk,
+    lsh_topk,
+)
 from kukur_spark.operators.text import language_id, fingerprint
 from kukur_spark.oracle_sql import duck_cos
 from kukur_spark.registry import ORACLES, QUERIES, register
@@ -1547,11 +1552,11 @@ def emb_topk_l2(spark: SparkSession, sf: str) -> DataFrame:
     emb = load_table(spark, sf, "embeddings")
     q = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"),
-        F.transform("embedding", lambda x: x.cast("double")).alias("qv"),
+        F.expr(as_double_sql("embedding")).alias("qv"),
     )
     c = emb.select(
         F.col("vec_id").alias("neighbor_id"),
-        F.transform("embedding", lambda x: x.cast("double")).alias("cv"),
+        F.expr(as_double_sql("embedding")).alias("cv"),
     )
     dist = F.sqrt(
         F.aggregate(
@@ -1759,13 +1764,12 @@ ORDER BY c_mktsegment ASC NULLS FIRST, c_nationkey ASC NULLS FIRST
 
 def emb_neardup_pairs(spark: SparkSession, sf: str) -> DataFrame:
     """Embedding near-duplicate pairs: cosine ≥ 0.99 over all pairs."""
-    from kukur_spark.operators.similarity import _as_double, dot, norm
+    from kukur_spark.operators.similarity import as_double_sql, dot_sql, norm_sql
 
     emb = load_table(spark, sf, "embeddings")
-    base = emb.select(
-        F.col("vec_id").alias("id"),
-        _as_double(F.col("embedding")).alias("v"),
-    ).withColumn("n", norm(F.col("v")))
+    base = emb.selectExpr(
+        "vec_id AS id", f"{as_double_sql('embedding')} AS v"
+    ).withColumn("n", F.expr(norm_sql("v")))
     # the corpus arrives as one parquet file; without an explicit
     # repartition the < join runs as a single-task nested loop —
     # spreading the streamed side is what makes the O(n²) verify
@@ -1777,9 +1781,7 @@ def emb_neardup_pairs(spark: SparkSession, sf: str) -> DataFrame:
         .select(
             F.col("a.id").alias("id_a"),
             F.col("b.id").alias("id_b"),
-            (dot(F.col("a.v"), F.col("b.v")) / (F.col("a.n") * F.col("b.n"))).alias(
-                "cos_sim"
-            ),
+            F.expr(f"{dot_sql('a.v', 'b.v')} / (a.n * b.n)").alias("cos_sim"),
         )
         .filter(F.col("cos_sim") >= 0.99)
     )
@@ -2119,14 +2121,12 @@ def emb_knn_accuracy(spark: SparkSession, sf: str) -> DataFrame:
     `emb_ann_recall` measures exactly how much of this accuracy they
     retain.  Accuracy is integer ppm.
     """
-    from kukur_spark.operators.similarity import _as_double, dot, norm
+    from kukur_spark.operators.similarity import as_double_sql, dot_sql, norm_sql
 
     emb = load_table(spark, sf, "embeddings")
-    base = emb.select(
-        F.col("vec_id").alias("id"),
-        F.col("label").alias("lbl"),
-        _as_double(F.col("embedding")).alias("v"),
-    ).withColumn("n", norm(F.col("v")))
+    base = emb.selectExpr(
+        "vec_id AS id", "label AS lbl", f"{as_double_sql('embedding')} AS v"
+    ).withColumn("n", F.expr(norm_sql("v")))
     streamed = base.repartition(spark.sparkContext.defaultParallelism)
     # cosine is symmetric (IEEE multiply commutes, positional fold order),
     # so score each unordered pair once (a.id < b.id — half the O(d)
@@ -2142,10 +2142,7 @@ def emb_knn_accuracy(spark: SparkSession, sf: str) -> DataFrame:
             F.col("a.lbl").alias("lbl_a"),
             F.col("b.id").alias("id_b"),
             F.col("b.lbl").alias("lbl_b"),
-            (
-                dot(F.col("a.v"), F.col("b.v"))
-                / (F.col("a.n") * F.col("b.n"))
-            ).alias("cos_sim"),
+            F.expr(f"{dot_sql('a.v', 'b.v')} / (a.n * b.n)").alias("cos_sim"),
         )
     )
     scored = half.select(
@@ -2249,29 +2246,24 @@ def docs_emb_decontaminate(spark: SparkSession, sf: str) -> DataFrame:
     broadcast).  Sims quantize to e6 BEFORE thresholding so the flag is
     integer-exact against the oracle.
     """
-    from kukur_spark.operators.similarity import _as_double, dot, norm
+    from kukur_spark.operators.similarity import as_double_sql, dot_sql, norm_sql
 
     emb = load_table(spark, sf, "embeddings")
     ev = (
         emb.orderBy("vec_id")
         .limit(32)
-        .select(
-            F.col("vec_id").alias("eval_id"),
-            _as_double(F.col("embedding")).alias("ev"),
-        )
-        .withColumn("evn", norm(F.col("ev")))
+        .selectExpr("vec_id AS eval_id", f"{as_double_sql('embedding')} AS ev")
+        .withColumn("evn", F.expr(norm_sql("ev")))
     )
     docs = (
         emb.filter(F.col("vec_id") >= 32)
-        .select("vec_id", _as_double(F.col("embedding")).alias("dv"))
-        .withColumn("dn", norm(F.col("dv")))
+        .selectExpr("vec_id", f"{as_double_sql('embedding')} AS dv")
+        .withColumn("dn", F.expr(norm_sql("dv")))
     )
     scored = docs.join(F.broadcast(ev)).select(
         "vec_id",
         "eval_id",
-        (
-            dot(F.col("dv"), F.col("ev")) / (F.col("dn") * F.col("evn"))
-        ).alias("sim"),
+        F.expr(f"{dot_sql('dv', 'ev')} / (dn * evn)").alias("sim"),
     )
     best = scored.groupBy("vec_id").agg(
         F.max(F.floor(F.col("sim") * F.lit(1000000.0))).alias("max_sim_e6"),

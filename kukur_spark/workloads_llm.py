@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kukur_spark.io import load_table, persist_once
+from kukur_spark.operators.similarity import as_double_sql
 from kukur_spark.oracle_sql import pq_enc_scored_sql
 from kukur_spark.registry import register
 
@@ -601,7 +602,7 @@ def emb_pq_topk(spark: SparkSession, sf: str) -> DataFrame:
     """
     emb = load_table(spark, sf, "embeddings").select(
         "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
+        F.expr(as_double_sql("embedding")).alias("v"),
     )
     # lazy one-row codebook (see _pq_codebook_df); cached so the encode
     # branch and the reconstruction branch compute the seed aggregate

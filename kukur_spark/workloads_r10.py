@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kukur_spark.io import load_table
-from kukur_spark.operators.dedup import md5_long
+from kukur_spark.operators.dedup import md5_long_sql
 from kukur_spark.registry import register
 
 
@@ -54,7 +54,7 @@ def docs_dsir_weights(spark: SparkSession, sf: str) -> DataFrame:
         "doc_id",
         "lang",
         F.explode(F.split("text", " ")).alias("tok"),
-    ).withColumn("bucket", md5_long(F.col("tok")) % _DSIR_BUCKETS)
+    ).withColumn("bucket", F.expr(md5_long_sql("tok")) % _DSIR_BUCKETS)
     stats = inst.groupBy("bucket").agg(
         F.sum(F.when(F.col("lang") == "en", 1).otherwise(0))
         .cast("long")

@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kukur_spark.io import load_table
-from kukur_spark.operators.dedup import md5_long
+from kukur_spark.operators.dedup import md5_long_sql
 from kukur_spark.registry import register
 
 
@@ -186,7 +186,7 @@ def docs_pack_nextfit(
         .cast("long")
         .alias("n_tokens"),
     ).withColumn(
-        "shard", md5_long(F.col("doc_id").cast("string")) % shards
+        "shard", F.expr(md5_long_sql("CAST(doc_id AS STRING)")) % shards
     )
     packed = d.groupBy("shard").agg(
         F.array_sort(F.collect_list(F.struct("doc_id", "n_tokens"))).alias(

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kukur_spark.io import load_table
+from kukur_spark.operators.dedup import md5_long_sql
 from kukur_spark.registry import register
 
 
@@ -52,10 +53,9 @@ _QC_WEIGHTS = [
 
 
 def quality_score(df: DataFrame, hash_fn: str = "md5") -> DataFrame:
-    """Per-row scoring core shared by the batch query and the streaming
-    twin (:func:`kukur_spark.streaming.streaming_quality_gate`): adds
-    ``n_feats, score_e6, label`` to any frame with a ``text`` column.
-    Pure projections — works unchanged on a streaming DataFrame.
+    """Per-row scoring core of the md5 and xxhash64 quality-classifier
+    queries: adds ``n_feats, score_e6, label`` to any frame with a
+    ``text`` column.  Pure projections.
 
     The token array is materialized once per row before the bigram
     transform (``element_at(split(text), i)`` inside the lambda would
@@ -65,10 +65,7 @@ def quality_score(df: DataFrame, hash_fn: str = "md5") -> DataFrame:
     twin — the minhash fast/md5-twin convention).
     """
     if hash_fn == "md5":
-        bucket = (
-            "cast(conv(substring(md5(g), 1, 15), 16, 10) as bigint)"
-            f" % {_QC_BUCKETS}"
-        )
+        bucket = f"{md5_long_sql('g')} % {_QC_BUCKETS}"
     elif hash_fn == "xxhash64":
         bucket = f"pmod(xxhash64(g), {_QC_BUCKETS})"
     else:  # pragma: no cover - guarded by callers
@@ -112,8 +109,8 @@ def docs_quality_classifier(spark: SparkSession, sf: str) -> DataFrame:
 
     Features are word unigrams and bigrams (occurrences, not distinct —
     fasttext counts repeats); each gram hashes to one of 64 buckets
-    (``md5_long(gram) % 64``); bucket weights come from
-    ``md5_long('qw|' || bucket) % 2001 - 1000`` ∈ [-1000, 1000].  The
+    (``md5_long_sql(gram) % 64``); bucket weights come from
+    ``md5_long_sql('qw|' || bucket) % 2001 - 1000`` ∈ [-1000, 1000].  The
     document score is the exact integer mean weight in micro-units.
     """
     docs = load_table(spark, sf, "documents").select("doc_id", "text")

@@ -1842,7 +1842,7 @@ def docs_pack_bestfit_eval(spark: SparkSession, sf: str) -> DataFrame:
     and the positional update a two-arg (value, index) ``transform`` —
     still one keyed exchange, no Python, no window.
     """
-    from kukur_spark.operators.dedup import md5_long
+    from kukur_spark.operators.dedup import md5_long_sql
 
     c, shards = _PACK_EVAL_C, _PACK_EVAL_SHARDS
     docs = load_table(spark, sf, "documents").select("doc_id", "text")
@@ -1852,7 +1852,7 @@ def docs_pack_bestfit_eval(spark: SparkSession, sf: str) -> DataFrame:
         .cast("long")
         .alias("n_tokens"),
     ).withColumn(
-        "shard", md5_long(F.col("doc_id").cast("string")) % shards
+        "shard", F.expr(md5_long_sql("CAST(doc_id AS STRING)")) % shards
     )
     packed = d.groupBy("shard").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -2366,7 +2366,7 @@ register(
 # KMV (k-minimum-values) sketch set operations
 # ---------------------------------------------------------------------------
 _KMV_K = 64
-_KMV_SPACE = 1 << 60  # md5_long yields 60-bit non-negative hashes
+_KMV_SPACE = 1 << 60  # md5_long_sql yields 60-bit non-negative hashes
 
 
 def events_kmv_overlap(spark: SparkSession, sf: str) -> DataFrame:
@@ -2385,7 +2385,7 @@ def events_kmv_overlap(spark: SparkSession, sf: str) -> DataFrame:
     At scale only the first distinct + keyed top-k touch data; sketches
     are k rows per side and every later join broadcasts them.
     """
-    from kukur_spark.operators.dedup import md5_long
+    from kukur_spark.operators.dedup import md5_long_sql
 
     events = load_table(spark, sf, "events").filter(
         F.col("user_id").isNotNull() & F.col("event_type").isNotNull()
@@ -2396,7 +2396,7 @@ def events_kmv_overlap(spark: SparkSession, sf: str) -> DataFrame:
         .select(
             "etype",
             "user_id",
-            md5_long(F.col("user_id").cast("string")).alias("h"),
+            F.expr(md5_long_sql("CAST(user_id AS STRING)")).alias("h"),
         )
     )
     w_side = Window.partitionBy("etype").orderBy("h")

@@ -16,7 +16,8 @@ from pyspark.sql import functions as F
 from kukur_spark.io import load_table
 from kukur_spark.operators.asof import asof_join
 from kukur_spark.operators.cdc import merge_upsert
-from kukur_spark.operators.dedup import shingles
+from kukur_spark.operators.dedup import shingles_sql
+from kukur_spark.operators.similarity import as_double_sql
 from kukur_spark.operators.sketch import hll_sketch, hll_sketch_sql
 from kukur_spark.registry import register
 
@@ -660,14 +661,12 @@ def docs_training_manifest(spark: SparkSession, sf: str) -> DataFrame:
     )
     bench_vocab = (
         docs.filter(F.col("doc_id") % 25 == 0)
-        .select(F.explode(shingles(F.col("text"), 8)).alias("sh"))
+        .selectExpr(f"explode({shingles_sql('text', 8)}) AS sh")
         .distinct()
         .withColumn("hit", F.lit(1))
     )
-    doc_shingles = surv.select(
-        "doc_id",
-        "source",
-        F.explode(shingles(F.col("text"), 8)).alias("sh"),
+    doc_shingles = surv.selectExpr(
+        "doc_id", "source", f"explode({shingles_sql('text', 8)}) AS sh"
     )
     scored = (
         doc_shingles.join(F.broadcast(bench_vocab), "sh", "left")
@@ -816,9 +815,8 @@ def emb_kmeans_iter2(spark: SparkSession, sf: str) -> DataFrame:
     data.  Centroids are e6-quantized between rounds so both engines
     iterate on identical numbers.
     """
-    emb = load_table(spark, sf, "embeddings").select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
+    emb = load_table(spark, sf, "embeddings").selectExpr(
+        "vec_id", f"{as_double_sql('embedding')} AS v"
     )
     seeds = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("cluster"), F.col("v").alias("cv")

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kukur_spark.io import load_table
-from kukur_spark.operators.dedup import md5_long
+from kukur_spark.operators.dedup import md5_long_sql
 from kukur_spark.registry import register
 
 
@@ -37,7 +37,7 @@ def text_cms_topk(spark: SparkSession, sf: str) -> DataFrame:
     joining the candidate tokens against the broadcast 256-row sketch;
     the exact count rides along only to expose the overestimate
     (``est >= exact`` always; equality when no bucket collisions).
-    Hashes are md5-derived (`operators/dedup.py::md5_long`) so the
+    Hashes are md5-derived (`operators/dedup.py::md5_long_sql`) so the
     DuckDB oracle replays them bit-for-bit.
     """
     docs = load_table(spark, sf, "documents")
@@ -54,7 +54,7 @@ def text_cms_topk(spark: SparkSession, sf: str) -> DataFrame:
     ).withColumn(
         "bucket",
         F.pmod(
-            md5_long(F.concat(F.col("token"), F.lit("#"), F.col("depth"))),
+            F.expr(md5_long_sql("concat(token, '#', depth)")),
             F.lit(_CMS_WIDTH),
         ),
     )

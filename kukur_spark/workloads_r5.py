@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kukur_spark.io import load_table
-from kukur_spark.operators.dedup import md5_long
+from kukur_spark.operators.dedup import md5_long_sql
 from kukur_spark.registry import register
 
 
@@ -317,7 +317,7 @@ def docs_bloom_probe(spark: SparkSession, sf: str) -> DataFrame:
         tokens.select("token", F.explode(ks).alias("k"))
         .select(
             F.pmod(
-                md5_long(F.concat(F.col("token"), F.lit("@"), F.col("k"))),
+                F.expr(md5_long_sql("concat(token, '@', k)")),
                 F.lit(_BLOOM_M),
             ).alias("bit")
         )
@@ -333,7 +333,7 @@ def docs_bloom_probe(spark: SparkSession, sf: str) -> DataFrame:
     ).select(
         "word",
         F.pmod(
-            md5_long(F.concat(F.col("word"), F.lit("@"), F.col("k"))),
+            F.expr(md5_long_sql("concat(word, '@', k)")),
             F.lit(_BLOOM_M),
         ).alias("bit"),
     )

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kukur_spark.io import load_table
+from kukur_spark.operators.dedup import md5_long_sql
 from kukur_spark.operators.text import tokens
 from kukur_spark.registry import register
 
@@ -249,18 +250,18 @@ def _dense_ranks(
     ``keep`` (one ``vec_id`` column) restricts the corpus by semi-join —
     the RAG pipeline passes its quality/dedup survivors.
     """
-    from kukur_spark.operators.similarity import _as_double, dot, norm
+    from kukur_spark.operators.similarity import as_double_sql, dot_sql, norm_sql
 
     emb = load_table(spark, sf, "embeddings").select("vec_id", "embedding")
     if keep is not None:
         emb = emb.join(keep, "vec_id", "left_semi")
-    qv = emb.filter(F.col("vec_id") == _RRF_QUERY_VEC).select(
-        _as_double(F.col("embedding")).alias("qv")
-    ).withColumn("qn", norm(F.col("qv")))
+    qv = emb.filter(F.col("vec_id") == _RRF_QUERY_VEC).selectExpr(
+        f"{as_double_sql('embedding')} AS qv"
+    ).withColumn("qn", F.expr(norm_sql("qv")))
     from kukur_spark.operators.scale import bounded_rank
 
-    ev = _as_double(F.col("embedding"))
-    cos = dot(ev, F.col("qv")) / (norm(ev) * F.col("qn"))
+    ev = as_double_sql("embedding")
+    cos = F.expr(f"{dot_sql(ev, 'qv')} / ({norm_sql(ev)} * qn)")
     scored = (
         emb.filter(F.col("vec_id") != _RRF_QUERY_VEC)
         .crossJoin(F.broadcast(qv))
@@ -547,15 +548,7 @@ def docs_balanced_sample(spark: SparkSession, sf: str) -> DataFrame:
     docs = load_table(spark, sf, "documents")
     counts = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n_lang"))
     cap = counts.agg(F.min("n_lang").alias("cap"))
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("bal1:"), F.col("doc_id").cast("string"))),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
+    h = F.expr(md5_long_sql("concat('bal1:', CAST(doc_id AS STRING))"))
     w = Window.partitionBy("lang").orderBy(
         F.col("h").asc(), F.col("doc_id").asc()
     )

@@ -425,19 +425,19 @@ def emb_outlier_knn(
     constant (the 10× scale probe runs planes=6; see PERFORMANCE.md).
     """
     from kukur_spark.operators.similarity import (
-        _as_double,
-        dot,
+        as_double_sql,
+        dot_sql,
         multi_table_signatures,
-        norm,
+        norm_sql,
     )
 
-    raw = load_table(spark, sf, "embeddings").select(
-        "vec_id", _as_double(F.col("embedding")).alias("v")
+    raw = load_table(spark, sf, "embeddings").selectExpr(
+        "vec_id", f"{as_double_sql('embedding')} AS v"
     )
     sigs = raw.select(
         "vec_id",
         F.explode(
-            multi_table_signatures(F.col("v"), num_planes, num_tables, 64)
+            multi_table_signatures("v", num_planes, num_tables, 64)
         ).alias("bucket"),
     )
     q = sigs.select(
@@ -464,8 +464,8 @@ def emb_outlier_knn(
         .select("query_id", "vec_id")
         .distinct()
     )
-    vectors = raw.withColumn("nv", norm(F.col("v")))
-    cos = dot(F.col("v"), F.col("qv")) / (F.col("nv") * F.col("qn"))
+    vectors = raw.withColumn("nv", F.expr(norm_sql("v")))
+    cos = F.expr(f"{dot_sql('v', 'qv')} / (nv * qn)")
     half = (
         ids.join(F.broadcast(vectors), "vec_id")
         .join(
@@ -504,20 +504,20 @@ def emb_outlier_knn(
 def _emb_outlier_knn_exact(spark: SparkSession, sf: str) -> DataFrame:
     """Exact all-pairs twin on a capped subset — the parity harness the
     registered ANN form is measured against (same scoring tail)."""
-    from kukur_spark.operators.similarity import _as_double, dot, norm
+    from kukur_spark.operators.similarity import as_double_sql, dot_sql, norm_sql
 
     emb = (
         load_table(spark, sf, "embeddings")
         .filter(F.col("vec_id") < _OUTLIER_CAP)
-        .select("vec_id", _as_double(F.col("embedding")).alias("v"))
-        .withColumn("nv", norm(F.col("v")))
+        .selectExpr("vec_id", f"{as_double_sql('embedding')} AS v")
+        .withColumn("nv", F.expr(norm_sql("v")))
     )
     q = emb.select(
         F.col("vec_id").alias("query_id"),
         F.col("v").alias("qv"),
         F.col("nv").alias("qn"),
     )
-    cos = dot(F.col("v"), F.col("qv")) / (F.col("nv") * F.col("qn"))
+    cos = F.expr(f"{dot_sql('v', 'qv')} / (nv * qn)")
     pairs = (
         emb.crossJoin(F.broadcast(q))
         .filter(F.col("vec_id") != F.col("query_id"))

@@ -313,10 +313,9 @@ def emb_class_margin(spark: SparkSession, sf: str) -> DataFrame:
     partial aggregate.
     """
     from kukur_spark.operators.similarity import (
-        _as_double,
+        as_double_sql,
         centroid_dims_e6,
-        dot,
-        norm,
+        cosine_sql,
     )
 
     emb = load_table(spark, sf, "embeddings")
@@ -331,8 +330,7 @@ def emb_class_margin(spark: SparkSession, sf: str) -> DataFrame:
         )
         .select(F.col("label").alias("c_label"), "cv")
     )
-    v = _as_double(F.col("embedding"))
-    cos = dot(v, F.col("cv")) / (norm(v) * norm(F.col("cv")))
+    cos = F.expr(cosine_sql(as_double_sql("embedding"), "cv"))
     pairs = (
         emb.select("vec_id", "label", "embedding")
         .crossJoin(F.broadcast(cent))

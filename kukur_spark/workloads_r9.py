@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kukur_spark.io import load_table
+from kukur_spark.operators.dedup import md5_long_sql, shingles_sql
 from kukur_spark.oracle_sql import duck_cos, pq_enc_scored_sql
 from kukur_spark.registry import register
 
@@ -396,6 +397,15 @@ register("dedup_lsh_recall", dedup_lsh_recall, _lsh_recall_sql())
 _DECON_N = 13
 
 
+def _gram_hashes_sql() -> str:
+    """SQL fragment: distinct md5 hashes of the ``_DECON_N``-token
+    shingles of ``text``."""
+    return (
+        f"array_distinct(transform({shingles_sql('text', _DECON_N)},"
+        f" s -> {md5_long_sql('s')}))"
+    )
+
+
 def docs_decontaminate_13gram(spark: SparkSession, sf: str) -> DataFrame:
     """Benchmark decontamination at 13-gram granularity, per source.
 
@@ -412,20 +422,8 @@ def docs_decontaminate_13gram(spark: SparkSession, sf: str) -> DataFrame:
     measures vocabulary *overlap ratio*; the 13-gram rule is the
     near-verbatim-leak detector actually used for training-set audits.
     """
-    from kukur_spark.operators.dedup import md5_long, shingles
-
     docs = load_table(spark, sf, "documents")
-    grams = docs.select(
-        "doc_id",
-        "source",
-        F.explode(
-            F.array_distinct(
-                F.transform(
-                    shingles(F.col("text"), _DECON_N), md5_long
-                )
-            )
-        ).alias("h"),
-    )
+    grams = docs.selectExpr("doc_id", "source", f"explode({_gram_hashes_sql()}) AS h")
     bench = (
         grams.filter(F.col("doc_id") % 25 == 0).select("h").distinct()
     )
@@ -513,6 +511,7 @@ def emb_ivfpq_topk(spark: SparkSession, sf: str) -> DataFrame:
     distances are IEEE-identical cross-engine.
     """
     from kukur_spark.operators.similarity import (
+        as_double_sql,
         ivf_assign,
         probe_nearest_centroids,
     )
@@ -527,10 +526,7 @@ def emb_ivfpq_topk(spark: SparkSession, sf: str) -> DataFrame:
     )
 
     emb_raw = load_table(spark, sf, "embeddings")
-    emb = emb_raw.select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-    )
+    emb = emb_raw.selectExpr("vec_id", f"{as_double_sql('embedding')} AS v")
     # lazy one-row codebook (no construction-time collect; a degenerate
     # corpus empties the result through the cross joins — see
     # _pq_codebook_df)
@@ -956,7 +952,6 @@ def docs_curation_funnel(spark: SparkSession, sf: str) -> DataFrame:
     (:func:`kukur_spark.workloads._collapsed_groups_from` — kills the
     family-quadratic candidate term the 100× probe exposed).
     """
-    from kukur_spark.operators.dedup import md5_long, shingles
     from kukur_spark.workloads import _collapsed_groups_from
 
     docs = load_table(spark, sf, "documents")
@@ -973,23 +968,10 @@ def docs_curation_funnel(spark: SparkSession, sf: str) -> DataFrame:
     )
     bench = (
         docs.filter(F.col("doc_id") % 25 == 0)
-        .select(
-            F.explode(
-                F.array_distinct(
-                    F.transform(shingles(F.col("text"), _DECON_N), md5_long)
-                )
-            ).alias("h")
-        )
+        .selectExpr(f"explode({_gram_hashes_sql()}) AS h")
         .distinct()
     )
-    s1_grams = s1.select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(
-                F.transform(shingles(F.col("text"), _DECON_N), md5_long)
-            )
-        ).alias("h"),
-    )
+    s1_grams = s1.selectExpr("doc_id", f"explode({_gram_hashes_sql()}) AS h")
     contaminated = (
         s1_grams.join(bench, "h", "left_semi").select("doc_id").distinct()
     )
@@ -1746,7 +1728,7 @@ def emb_semantic_clusters(spark: SparkSession, sf: str) -> DataFrame:
     """
     from kukur_spark.io import persist_once
     from kukur_spark.operators.cluster import dedup_groups
-    from kukur_spark.operators.similarity import _as_double, dot, norm
+    from kukur_spark.operators.similarity import as_double_sql, dot_sql, norm_sql
 
     emb = load_table(spark, sf, "embeddings")
     # collapse bit-identical vectors to a min-id representative before
@@ -1769,10 +1751,9 @@ def emb_semantic_clusters(spark: SparkSession, sf: str) -> DataFrame:
     base = persist_once(
         rep_emb.repartition(
             spark.sparkContext.defaultParallelism, F.col("vec_id")
-        ).select(
-            F.col("vec_id").alias("id"),
-            _as_double(F.col("embedding")).alias("v"),
-        ).withColumn("n", norm(F.col("v")))
+        ).selectExpr(
+            "vec_id AS id", f"{as_double_sql('embedding')} AS v"
+        ).withColumn("n", F.expr(norm_sql("v")))
     )
     buckets = base.select(
         "id",
@@ -1818,7 +1799,7 @@ def emb_semantic_clusters(spark: SparkSession, sf: str) -> DataFrame:
             "id_b",
         )
         .withColumn(
-            "cos_sim", dot("va", "vb") / (F.col("na") * F.col("nb"))
+            "cos_sim", F.expr(f"{dot_sql('va', 'vb')} / (na * nb)")
         )
         .filter(F.col("cos_sim") >= 0.99)
         .select("id_a", "id_b")

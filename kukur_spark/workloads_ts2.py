@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kukur_spark.io import load_table
+from kukur_spark.operators.similarity import as_double_sql
 from kukur_spark.registry import register
 
 
@@ -432,7 +433,7 @@ def emb_kmeans_step(spark: SparkSession, sf: str) -> DataFrame:
     """
     emb = load_table(spark, sf, "embeddings").select(
         "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
+        F.expr(as_double_sql("embedding")).alias("v"),
     )
     seeds = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("cluster"), F.col("v").alias("cv")

@@ -16,7 +16,7 @@ import pytest
 
 from kukur_spark.io import load_table
 from kukur_spark.operators.dedup import (
-    _md5_long_sql,
+    md5_long_sql,
     _minhash_signature_sql,
     _token_hashes_sql,
     _combine_shingle_hashes_sql,
@@ -66,14 +66,14 @@ def test_md5_signature_sequence_matches_unrolled(spark):
     new_form = (
         f"transform(sequence(0, {n - 1}), j -> "
         "array_min(transform(sh, s -> "
-        + _md5_long_sql("concat(s, '#', cast(j AS string))")
+        + md5_long_sql("concat(s, '#', cast(j AS string))")
         + ")))"
     )
     old_form = (
         "array("
         + ", ".join(
             "array_min(transform(sh, s -> "
-            + _md5_long_sql(f"concat(s, '#{j}')")
+            + md5_long_sql(f"concat(s, '#{j}')")
             + "))"
             for j in range(n)
         )

@@ -278,6 +278,14 @@ def test_threaded_mixed_verbs_match_serial(spark, tmp_path):
         kind, name = call
         if kind == "search":
             return [s.name for s in engine.search(SeriesSearch("src"))]
+        if kind == "sql":
+            df = engine.sql(
+                "SELECT `series name`, count(*) AS n, sum(value) AS total"
+                f" FROM src WHERE `series name` = '{name}'"
+                " GROUP BY `series name`",
+                sources=["src"],
+            )
+            return _arrow_bytes(df.toArrow())
         selector = SeriesSelector.from_name("src", name)
         if kind == "get_data":
             df = engine.get_data(selector, START, END)
@@ -287,7 +295,9 @@ def test_threaded_mixed_verbs_match_serial(spark, tmp_path):
 
     calls = [
         (kind, f"s{i % 4}")
-        for i, kind in enumerate(["search", "get_data", "get_plot_data"] * 8)
+        for i, kind in enumerate(
+            ["search", "get_data", "search", "get_plot_data", "sql"] * 6
+        )
     ]
     serial_engine = Engine(config, spark)
     expected = [run(serial_engine, call) for call in calls]

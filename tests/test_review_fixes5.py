@@ -27,9 +27,7 @@ def test_multi_table_signatures_dim_contract(spark):
         rows_in, "id long, v array<double>"
     ).select(
         "id",
-        multi_table_signatures(
-            F.col("v"), planes, tables, dim
-        ).alias("sig"),
+        multi_table_signatures("v", planes, tables, dim).alias("sig"),
     )
     sigs = {r.id: r.sig for r in df.collect()}
     for i in range(len(base)):

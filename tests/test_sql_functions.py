@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import hashlib
 import math
 
 import pytest
@@ -28,15 +29,13 @@ def test_bucket_matches_plot_operator_math(spark):
 
 
 def test_md5_long_matches_operator(spark):
-    from kukur_spark.operators.dedup import md5_long
-
-    df = spark.createDataFrame([("abc",), ("",), ("tok 1",)], "s string")
-    rows = df.select(
-        md5_long(F.col("s")).alias("py"),
-        F.expr("ku_md5_long(s)").alias("sql"),
-    ).collect()
-    for r in rows:
-        assert r.py == r.sql
+    """``ku_md5_long`` is built from ``md5_long_sql``, so check it against
+    an independent reference: the first 15 hex digits of hashlib's md5."""
+    texts = ["abc", "", "tok 1", "ünïcode"]
+    df = spark.createDataFrame([(t,) for t in texts], "s string")
+    got = [r.h for r in df.select(F.expr("ku_md5_long(s)").alias("h")).collect()]
+    want = [int(hashlib.md5(t.encode()).hexdigest()[:15], 16) for t in texts]
+    assert got == want
 
 
 def test_selector_name_round_trip(spark):
