@@ -12,15 +12,17 @@ import re
 import threading
 
 from datetime import datetime, timedelta, timezone
-from uuid import uuid4
 from typing import Any, Dict, Iterator, List, Optional
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from kukur_spark.base import SeriesSearch, SeriesSelector, SourceStructure
 from kukur_spark.metadata import Metadata
 from kukur_spark.session import get_spark
 from kukur_spark.sources import SearchResult, SourceFactory
+from kukur_spark.sources.file_source import _literal_col
+from kukur_spark.streaming import windowed_stats
 
 # Every Engine runs on get_spark()'s one session, so temp views share one
 # catalog across threads: without this lock a concurrent sql() call can
@@ -70,7 +72,7 @@ class Engine:
             selector, start, end, interval_count
         )
 
-    # -- streaming (Spark extension: the reference has no streams) ---------
+    # -- window aggregate (Spark extension: the reference has no streams) --
     def stream_window(
         self,
         source_name: str,
@@ -78,64 +80,35 @@ class Engine:
         watermark: str = "10 minutes",
         tags: Optional[Dict[str, str]] = None,
     ) -> DataFrame:
-        """Watermarked window aggregate over a file-backed source's
-        stream, materialized through one synchronous micro-batch pass.
+        """Event-time window aggregate over a file source's canonical frame.
 
-        The composition the Flight ``stream_window`` ticket serves:
-        ``readStream`` on the source's path → tag-equality predicates →
-        ``streaming.windowed_stats`` (watermark + event-time windows) →
-        update-mode memory sink → the sink table as a DataFrame (Arrow
-        out at the API edge).  Update mode returns the CURRENT aggregate
-        of every window seen so far; late rows beyond the watermark are
-        dropped by the state store exactly as in a long-running stream.
+        The composition the Flight ``stream_window`` ticket serves: the
+        source's plan-cached ``data_frame()`` (column mapping and
+        timestamp normalization, the same plan ``get_data`` and ``sql``
+        read) → tag-equality predicates → ``streaming.windowed_stats``
+        grouped by the source's tag columns, as one batch aggregate over
+        the files present at call time.  ``watermark`` is accepted and
+        has no effect: within one pass over the data no row can be late.
 
-        Only file-backed sources with a self-describing format stream
-        (parquet/orc); schema comes from a one-off batch read of
-        the same path.
+        Only parquet/orc file sources are accepted.
         """
-        from kukur_spark.streaming import stream_data, windowed_stats
-
-        wrapper = self.factory.get_source(source_name)
-        options = getattr(wrapper.source, "options", None)
-        path = getattr(options, "path", None)
+        source = self.factory.get_source(source_name).source
+        options = getattr(source, "options", None)
         file_format = getattr(options, "file_format", None)
-        if not path or file_format not in ("parquet", "orc"):
+        if not getattr(options, "path", None) or file_format not in ("parquet", "orc"):
             raise ValueError(
                 f"source {source_name!r} is not a streamable file source "
                 "(parquet/orc path required)"
             )
-        schema = self.spark.read.format(file_format).load(path).schema
-        stream = stream_data(
-            self.spark, path, schema, file_format=file_format, tags=tags
-        )
-        group_columns = [
-            c
-            for c in getattr(options, "tag_columns", [])
-            if c in stream.columns
-        ]
-        aggregated = windowed_stats(
-            stream,
+        frame = source.data_frame()
+        for key, value in (tags or {}).items():
+            frame = frame.filter(_literal_col(key) == F.lit(value))
+        return windowed_stats(
+            frame,
             window=window,
             watermark=watermark,
-            group_columns=group_columns,
+            group_columns=[c for c in options.tag_columns if c in frame.columns],
         )
-        name = f"stream_win_{uuid4().hex[:8]}"
-        query = (
-            aggregated.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            query.processAllAvailable()
-        finally:
-            query.stop()
-        # detach the result from the uuid-named memory-sink view before
-        # dropping it — otherwise every call on a long-running server
-        # leaks a catalog entry pinning its full result in driver memory
-        result = self.spark.table(name).localCheckpoint(eager=True)
-        self.spark.catalog.dropTempView(name)
-        return result
 
     # -- SQL (Spark extension: the gateway is also a query engine) ---------
     def sql(

@@ -9,6 +9,11 @@ are JSON:
 - actions: ``search``, ``get_metadata``, ``list_sources``,
   ``get_source_structure`` → one JSON result per item.
 
+Spark extensions ride the same ``do_get``: ``{"query": "sql", …}`` and
+``{"query": "stream_window", "source":…[, "window", "watermark",
+"tags"]}``, the latter a batch window aggregate over the source's
+canonical frame (``watermark`` has no effect within that one pass).
+
 The engine executes the query as a Spark plan; the result lands on the wire
 via ``DataFrame.toArrow()`` — executors compute, the driver only relays
 Arrow batches (Spark collects to the driver; for 100 TB-scale *exports* use
@@ -182,9 +187,9 @@ if HAS_FLIGHT:
                 )
                 return fl.RecordBatchStream(df.toArrow())
             if query == "stream_window":
-                # streaming extension: watermarked window aggregate over
-                # a file-backed source's stream, one synchronous
-                # micro-batch pass, current state out as Arrow
+                # window-aggregate extension: one batch pass of
+                # windowed_stats over a parquet/orc source's canonical
+                # frame (watermark accepted, no effect in one pass)
                 df = self.engine.stream_window(
                     request["source"],
                     window=request.get("window", "5 minutes"),
@@ -395,8 +400,8 @@ if HAS_FLIGHT:
             watermark: str = "10 minutes",
             tags=None,
         ):
-            """Watermarked streaming window aggregate served as Arrow —
-            the streaming extension composed through the API surface."""
+            """Event-time window aggregate of a parquet/orc source served
+            as Arrow (``watermark`` is accepted and has no effect)."""
             request: Dict[str, Any] = {
                 "query": "stream_window",
                 "source": source,

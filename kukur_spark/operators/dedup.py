@@ -209,7 +209,6 @@ def _band_candidates(
     carry: tuple = (),
     max_bucket: Optional[int] = None,
     bands: int = 1,
-    stats_plan: Optional[DataFrame] = None,
     stats_bound=_BOUND_UNSET,
 ) -> DataFrame:
     """Distinct candidate pairs from a banded table: self-equi-join on
@@ -268,9 +267,7 @@ def _band_candidates(
         bound = (
             stats_bound
             if stats_bound is not _BOUND_UNSET
-            else _estimated_bucket_bound(
-                banded if stats_plan is None else stats_plan, bands
-            )
+            else _estimated_bucket_bound(banded, bands)
         )
         # belt-and-braces inside _guard_elided: the bound derives from an
         # optimizer size estimate; an absolute row ceiling caps what the

@@ -24,6 +24,24 @@ from kukur_spark.base import SeriesSearch, SeriesSelector, SourceStructure
 from kukur_spark.metadata import Metadata
 from kukur_spark.operators.plot import plot_downsample
 from kukur_spark.schema import empty_data_frame, union_conform
+from kukur_spark.sources.adx import AzureDataExplorerSource
+from kukur_spark.sources.databricks_rest import DatabricksRestSource
+from kukur_spark.sources.elasticsearch import ElasticsearchSource
+from kukur_spark.sources.excel import ExcelSource
+from kukur_spark.sources.file_source import FileSource, FileSourceOptions
+from kukur_spark.sources.gpx import GpxSource
+from kukur_spark.sources.influxdb import InfluxDBSource
+from kukur_spark.sources.json_meta import JsonMetadataSource
+from kukur_spark.sources.piwebapi import PIWebAPISource
+from kukur_spark.sources.piwebapi_af import PIAssetFrameworkSource
+from kukur_spark.sources.piwebapi_af_template import (
+    PIAssetFrameworkTemplateSource,
+)
+from kukur_spark.sources.plugin import PluginSource
+from kukur_spark.sources.remote import RemoteSource
+from kukur_spark.sources.simulator import SimulatorSource
+from kukur_spark.sources.spark_sql import SparkSqlSource
+from kukur_spark.sources.sql_source import SqlSource
 
 logger = logging.getLogger(__name__)
 
@@ -40,17 +58,6 @@ class Source(Protocol):
     def get_data(
         self, selector: SeriesSelector, start: datetime, end: datetime
     ) -> DataFrame: ...
-
-
-class _OwnSource:
-    """Adapter presenting the wrapped source's own metadata (the merge
-    loop applies the wrapper's retry policy uniformly)."""
-
-    def __init__(self, wrapper: "SourceWrapper"):
-        self._wrapper = wrapper
-
-    def get_metadata(self, selector: SeriesSelector) -> Metadata:
-        return self._wrapper.source.get_metadata(selector)
 
 
 class SourceWrapper:
@@ -95,21 +102,6 @@ class SourceWrapper:
                 time.sleep(self.query_retry_delay)
         raise AssertionError("unreachable")
 
-    # -- distributed series discovery --------------------------------------
-    def search_df(self, search: SeriesSearch) -> DataFrame:
-        """Series discovery as a DataFrame (one row per series: tags +
-        field) that never materializes combos on the driver.  Sources
-        without a DataFrame-native discovery raise NotImplementedError
-        (never retried), mirroring the reference's NotImplemented
-        passthrough semantics.
-        """
-        source_search_df = getattr(self.source, "search_df", None)
-        if source_search_df is None:
-            raise NotImplementedError(
-                f"{type(self.source).__name__} has no DataFrame search"
-            )
-        return self._retry(lambda: source_search_df(search))
-
     # -- search with metadata fan-out (M2/J1) ------------------------------
     def search(self, search: SeriesSearch) -> Iterator[SearchResult]:
         """Selector results pass through unchanged; Metadata results are
@@ -149,8 +141,7 @@ class SourceWrapper:
         search fan-out, not here.
         """
         metadata = Metadata(selector)
-        own = _OwnSource(self)
-        for source in list(reversed(self.metadata_sources)) + [own]:
+        for source in list(reversed(self.metadata_sources)) + [self.source]:
             try:
                 # extras get the wrapper's retry policy too (reference
                 # source/__init__.py:216-223)
@@ -243,8 +234,6 @@ class SourceFactory:
     Spark plan is stateless, so reuse is safe and saves per-query latency.
     """
 
-    _registry: Dict[str, Callable[[SparkSession, str, Dict[str, Any]], Any]] = {}
-
     def __init__(
         self,
         spark: SparkSession,
@@ -263,12 +252,6 @@ class SourceFactory:
 
             token_cache_factory = InMemoryTokenCacheFactory()
         self._token_cache_factory = token_cache_factory
-
-    @classmethod
-    def register_source(
-        cls, source_type: str, builder: Callable[..., Any]
-    ) -> None:
-        cls._registry[source_type] = builder
 
     def source_names(self) -> List[str]:
         return sorted(self.config.get("source", {}).keys())
@@ -326,7 +309,7 @@ class SourceFactory:
 
     def _build(self, name: str, source_config: Dict[str, Any]) -> Any:
         source_type = source_config.get("type", "csv")
-        if source_type in self._registry:
+        if source_type in SOURCE_TYPES:
             # per-source token cache, injected the way the reference's
             # signature inspection does (kukur/source/__init__.py:434-435)
             # — our builders share one (spark, name, config) signature,
@@ -336,127 +319,57 @@ class SourceFactory:
                 "__token_cache__",
                 self._token_cache_factory.get_cache(name),
             )
-            return self._registry[source_type](self.spark, name, source_config)
+            return SOURCE_TYPES[source_type](self.spark, name, source_config)
         raise ValueError(f"unknown source type: {source_type}")
 
 
-def _register_builtin() -> None:
-    from kukur_spark.sources.excel import ExcelSource
-    from kukur_spark.sources.file_source import FileSource, FileSourceOptions
-    from kukur_spark.sources.gpx import GpxSource
-    from kukur_spark.sources.json_meta import JsonMetadataSource
-    from kukur_spark.sources.plugin import PluginSource
-    from kukur_spark.sources.remote import RemoteSource
-    from kukur_spark.sources.simulator import SimulatorSource
-    from kukur_spark.sources.sql_source import SqlSource
-    from kukur_spark.sources.spark_sql import SparkSqlSource
+def _file_source(spark: SparkSession, name: str, config: Dict[str, Any]) -> Any:
+    return FileSource(spark, name, FileSourceOptions.from_config(config))
 
-    def file_builder(spark, name, config):
-        return FileSource(spark, name, FileSourceOptions.from_config(config))
 
-    for source_type in (
-        "csv",
-        "parquet",
-        "orc",
-        "ndjson",
-        "feather",
-        "arrows",
-        "delta",
-    ):
-        SourceFactory.register_source(source_type, file_builder)
-    SourceFactory.register_source(
-        "json", lambda spark, name, config: JsonMetadataSource(spark, name, config)
-    )
-    SourceFactory.register_source(
-        "simulator", lambda spark, name, config: SimulatorSource(spark, name, config)
-    )
-    for dialect in (
-        "sqlite",
-        "sql",
-        "postgresql",
-        "odbc",
-        "adodb",
-        "cratedb",
-        "redshift",
-        "tdengine",
-        "databricks_sql_odbc",
-    ):
-        SourceFactory.register_source(
-            dialect, lambda spark, name, config: SqlSource(spark, name, config)
-        )
-    SourceFactory.register_source(
-        "spark_sql",
-        lambda spark, name, config: SparkSqlSource(spark, name, config),
-    )
-    SourceFactory.register_source(
-        "gpx", lambda spark, name, config: GpxSource(spark, name, config)
-    )
-    SourceFactory.register_source(
-        "plugin", lambda spark, name, config: PluginSource(spark, name, config)
-    )
-    SourceFactory.register_source(
-        "kukur", lambda spark, name, config: RemoteSource(spark, name, config)
-    )
-    SourceFactory.register_source(
-        "excel", lambda spark, name, config: ExcelSource(spark, name, config)
-    )
-    from kukur_spark.sources.elasticsearch import ElasticsearchSource
-    from kukur_spark.sources.influxdb import InfluxDBSource
-
-    SourceFactory.register_source(
-        "influxdb", lambda spark, name, config: InfluxDBSource(spark, name, config)
-    )
-    SourceFactory.register_source(
-        "elasticsearch",
-        lambda spark, name, config: ElasticsearchSource(spark, name, config),
-    )
-    from kukur_spark.sources.adx import AzureDataExplorerSource
-    from kukur_spark.sources.piwebapi import PIWebAPISource
-
-    SourceFactory.register_source(
-        "azure_data_explorer",
-        lambda spark, name, config: AzureDataExplorerSource(spark, name, config),
-    )
-    SourceFactory.register_source(
-        "piwebapi",
-        lambda spark, name, config: PIWebAPISource(spark, name, config),
-    )
-    from kukur_spark.sources.databricks_rest import DatabricksRestSource
-    from kukur_spark.sources.piwebapi_af import PIAssetFrameworkSource
-
-    SourceFactory.register_source(
-        "piwebapi_af",
-        lambda spark, name, config: PIAssetFrameworkSource(spark, name, config),
-    )
-
-    SourceFactory.register_source(
-        "databricks_rest",
-        lambda spark, name, config: DatabricksRestSource(spark, name, config),
-    )
-    from kukur_spark.sources.piwebapi_af_template import (
-        PIAssetFrameworkTemplateSource,
-    )
-
-    SourceFactory.register_source(
-        "piwebapi_af_template",
-        lambda spark, name, config: PIAssetFrameworkTemplateSource(
-            spark, name, config
+# Source type name -> builder called as ``builder(spark, name, config)``;
+# every connector class takes that signature, file formats share one
+# builder.  The hyphenated names and ``datafusion`` are the reference's
+# spellings (kukur/source/__init__.py:67-91), so a real Kukur TOML resolves
+# unchanged; ``datafusion`` maps to the Spark SQL source (same role: SQL
+# over registered file views).
+SOURCE_TYPES: Dict[str, Callable[[SparkSession, str, Dict[str, Any]], Any]] = {
+    **dict.fromkeys(
+        ("csv", "parquet", "orc", "ndjson", "feather", "arrows", "delta"),
+        _file_source,
+    ),
+    **dict.fromkeys(
+        (
+            "sqlite",
+            "sql",
+            "postgresql",
+            "odbc",
+            "adodb",
+            "cratedb",
+            "redshift",
+            "tdengine",
+            "databricks_sql_odbc",
+            "databricks-sql",
         ),
-    )
-
-    # Reference-parity type-name aliases: the reference registers hyphenated
-    # spellings (kukur/source/__init__.py:67-91). A real Kukur TOML must
-    # resolve unchanged, so accept both. `datafusion` maps to the Spark SQL
-    # source — same role (SQL over registered file views), Spark engine.
-    for alias, target in {
-        "azure-data-explorer": "azure_data_explorer",
-        "databricks-sql": "databricks_sql_odbc",
-        "datafusion": "spark_sql",
-        "piwebapi-da": "piwebapi",
-        "piwebapi-af": "piwebapi_af",
-        "piwebapi-af-template": "piwebapi_af_template",
-    }.items():
-        SourceFactory.register_source(alias, SourceFactory._registry[target])
-
-
-_register_builtin()
+        SqlSource,
+    ),
+    "json": JsonMetadataSource,
+    "simulator": SimulatorSource,
+    "spark_sql": SparkSqlSource,
+    "datafusion": SparkSqlSource,
+    "gpx": GpxSource,
+    "plugin": PluginSource,
+    "kukur": RemoteSource,
+    "excel": ExcelSource,
+    "influxdb": InfluxDBSource,
+    "elasticsearch": ElasticsearchSource,
+    "azure_data_explorer": AzureDataExplorerSource,
+    "azure-data-explorer": AzureDataExplorerSource,
+    "piwebapi": PIWebAPISource,
+    "piwebapi-da": PIWebAPISource,
+    "piwebapi_af": PIAssetFrameworkSource,
+    "piwebapi-af": PIAssetFrameworkSource,
+    "piwebapi_af_template": PIAssetFrameworkTemplateSource,
+    "piwebapi-af-template": PIAssetFrameworkTemplateSource,
+    "databricks_rest": DatabricksRestSource,
+}

@@ -1,15 +1,16 @@
 """Structured Streaming extensions.
 
-The reference has **no** streaming operators (SURVEY.md §2.9) — these are
-the Spark-native extension of the 4 verbs to continuous data:
+The reference has **no** streaming operators (SURVEY.md §2.9).
+``windowed_stats`` is the Spark-native window aggregate: watermarked
+tumbling/sliding windows with count/sum/min/max/first/last per series —
+the streaming twin of plot buckets.
 
-- ``stream_data``: a streaming ``get_data`` — file-source stream with the
-  same tag/range predicates and canonical projection;
-- ``windowed_stats``: watermarked tumbling/sliding window aggregates
-  (count/sum/min/max) per series — the streaming twin of plot buckets.
-
-Both compose on any streaming DataFrame (Kafka, file, socket); tests
-drive them with a file source + memory sink + processAllAvailable.
+It composes on any DataFrame.  ``Engine.stream_window`` runs it as one
+batch aggregate over a file source's canonical frame, where the watermark
+has no effect (no row can be late within one pass); on a streaming
+DataFrame (Kafka, file, socket) the watermark finalizes windows and drops
+late rows, and tests drive it there with a file source + memory sink +
+processAllAvailable.
 """
 
 from __future__ import annotations
@@ -18,27 +19,8 @@ from typing import List, Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from kukur_spark.schema import TS_COLUMN, VALUE_COLUMN
-
-
-def stream_data(
-    spark,
-    path: str,
-    schema: T.StructType,
-    file_format: str = "parquet",
-    tags: Optional[dict] = None,
-) -> DataFrame:
-    """Streaming scan with the engine's tag-equality predicates (F2)."""
-    df = (
-        spark.readStream.format(file_format)
-        .schema(schema)
-        .load(path)
-    )
-    for key, value in (tags or {}).items():
-        df = df.filter(F.col(key) == F.lit(value))
-    return df
 
 
 def windowed_stats(

@@ -8,6 +8,8 @@ plan ids, cache/view aliases and temp paths differ:
 - `[plan_id=NNN]`                    -> stripped
 - `[codegen id : N]`                 -> stripped
 - `_pyspark_<hex>` temp-view aliases -> `_pyspark_v`
+- `MapPartitionsRDD[NNN]` RDD ids     -> `MapPartitionsRDD[n]` (numbered
+  in session order, like expression IDs)
 - `(NN)` operator numbers are KEPT (operator count/order is the point)
 
 Usage:
@@ -25,6 +27,9 @@ def normalize(text: str) -> str:
     text = re.sub(r"\[plan_id=\d+\]", "", text)
     text = re.sub(r"\[codegen id : \d+\]", "", text)
     text = re.sub(r"_pyspark_[0-9a-f]+", "_pyspark_v", text)
+    # RDD ids of `createDataFrame` inputs; `Sample` seeds stay — a
+    # changed seed is a real plan change
+    text = re.sub(r"\b(\w*RDD)\[\d+\]", r"\1[n]", text)
     # persist_once cache names / InMemoryRelation serializer ids
     text = re.sub(r"StorageLevel\([^)]*\)", "StorageLevel(...)", text)
     # lambda variable names are display-only (positional in

@@ -195,9 +195,9 @@ def test_sql_verb_named_parameters(sql_flight_client):
 
 
 def test_stream_window_over_flight(spark, tmp_path_factory):
-    """Streaming composes with the API surface: a watermarked window
-    aggregate (readStream → windowed_stats → micro-batch memory sink)
-    served over Flight as one Arrow stream."""
+    """The window aggregate composes with the API surface: windowed_stats
+    over the source's canonical frame, served over Flight as one Arrow
+    stream."""
     from datetime import datetime, timezone
 
     tmp = tmp_path_factory.mktemp("flight_stream")
@@ -309,9 +309,11 @@ def test_concurrent_sql_calls_keep_their_views(spark, tmp_path_factory):
     assert not any(t.name == "demo" for t in spark.catalog.listTables())
 
 
-def test_stream_window_drops_memory_sink_view(spark, tmp_path_factory):
-    """Each stream_window call materializes through a uuid-named memory
-    sink; the catalog entry must not outlive the call."""
+def test_stream_window_starts_no_query_and_registers_no_view(
+    spark, tmp_path_factory
+):
+    """stream_window is one batch aggregate: a call starts no streaming
+    query and leaves no catalog entry behind."""
     from datetime import datetime, timezone
 
     tmp = tmp_path_factory.mktemp("stream_drop")
@@ -326,10 +328,13 @@ def test_stream_window_drops_memory_sink_view(spark, tmp_path_factory):
     }
     engine = Engine(config, spark)
     before = {t.name for t in spark.catalog.listTables()}
+    spark.streams.resetTerminated()
     result = engine.stream_window("sdemo", window="5 minutes")
-    assert result.count() == 1  # result survives the view drop
-    after = {t.name for t in spark.catalog.listTables()}
-    assert not [n for n in after - before if n.startswith("stream_win_")]
+    assert result.count() == 1
+    assert spark.streams.active == []
+    # a query started and stopped by the call would count as terminated
+    assert not spark.streams.awaitAnyTermination(1)
+    assert {t.name for t in spark.catalog.listTables()} == before
 
 
 def test_search_plan_cache_hits_and_expires(spark, tmp_path):

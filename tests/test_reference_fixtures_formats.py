@@ -526,7 +526,7 @@ def test_reference_type_names_all_resolve():
     `integration-test` is the reference's internal test rig and is
     deliberately unsupported.
     """
-    from kukur_spark.sources import SourceFactory
+    from kukur_spark.sources import SOURCE_TYPES
 
     reference_types = [
         "adodb",
@@ -554,7 +554,7 @@ def test_reference_type_names_all_resolve():
         "sqlite",
         "tdengine",
     ]
-    missing = [t for t in reference_types if t not in SourceFactory._registry]
+    missing = [t for t in reference_types if t not in SOURCE_TYPES]
     assert missing == []
 
 
