@@ -19,9 +19,9 @@ from pyspark.sql import functions as F
 
 from kukur_spark.base import SeriesSearch, SeriesSelector, SourceStructure
 from kukur_spark.metadata import Metadata
+from kukur_spark.schema import literal_col
 from kukur_spark.session import get_spark
 from kukur_spark.sources import SearchResult, SourceFactory
-from kukur_spark.sources.file_source import _literal_col
 from kukur_spark.streaming import windowed_stats
 
 # Every Engine runs on get_spark()'s one session, so temp views share one
@@ -102,7 +102,7 @@ class Engine:
             )
         frame = source.data_frame()
         for key, value in (tags or {}).items():
-            frame = frame.filter(_literal_col(key) == F.lit(value))
+            frame = frame.filter(literal_col(key) == F.lit(value))
         return windowed_stats(
             frame,
             window=window,

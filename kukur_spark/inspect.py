@@ -4,7 +4,7 @@ Parity target: reference inspect family (SURVEY.md S21-S24):
 ``kukur/inspect/arrow.py:27-34,138-180`` (extension classification),
 ``kukur/inspect/filesystem.py:16-37`` (listing + preview). Blob stores map
 to Hadoop FS schemes in Spark (s3a://, abfss://) through the same
-``spark.read`` calls — path handling is identical.
+``io.read_file`` calls — path handling is identical.
 """
 
 from __future__ import annotations
@@ -14,6 +14,8 @@ from dataclasses import dataclass
 from typing import List, Optional
 
 from pyspark.sql import DataFrame, SparkSession
+
+from kukur_spark.io import read_file
 
 PREVIEW_ROWS = 5000  # reference kukur/inspect/filesystem.py:31
 
@@ -163,54 +165,21 @@ def preview(
     ``DataOptions`` (kukur/inspect/__init__.py; exercised by reference
     ``test_read_filesystem_csv_delimiter_semicolon`` /
     ``_csv_no_header_row``); ``columns`` mirrors
-    ``DataOptions.column_names``.
+    ``DataOptions.column_names``.  Excel previews through
+    ``ExcelSource``; every other type is a file format of
+    :func:`kukur_spark.io.read_file`, which rejects the rest.
     """
     rt = inspected.resource_type
-    if rt == "parquet":
-        df = spark.read.parquet(inspected.path)
-    elif rt == "csv":
-        df = spark.read.csv(
-            inspected.path, header=csv_header_row, sep=csv_delimiter
-        )
-    elif rt == "orc":
-        try:
-            df = spark.read.orc(inspected.path)
-            df.schema  # force analysis: TIMESTAMP_INSTANT columns fail here
-        except Exception:
-            # ORC TIMESTAMP_INSTANT ("timestamp with local time zone")
-            # breaks Spark's reader; read driver-side via pyarrow instead
-            import pyarrow.orc
-
-            table = pyarrow.orc.read_table(inspected.path)
-            df = spark.createDataFrame(table.to_pandas())
-    elif rt == "ndjson":
-        df = spark.read.json(inspected.path)
-    elif rt == "delta":
-        try:
-            df = spark.read.format("delta").load(inspected.path)
-        except Exception:
-            from kukur_spark.sources.delta_log import read_delta
-
-            df = read_delta(spark, inspected.path)
-    elif rt == "excel":
+    if rt == "excel":
         from kukur_spark.sources.excel import ExcelSource
 
         df = ExcelSource(
             spark, "inspect", {"path": inspected.path}
         )._frame()
-    elif rt in ("arrow", "arrows"):
-        import pyarrow as pa
-        import pyarrow.feather
-        import pyarrow.ipc
-
-        if rt == "arrow":
-            table = pa.feather.read_table(inspected.path)
-        else:
-            with pa.OSFile(inspected.path, "rb") as handle:
-                table = pa.ipc.open_stream(handle).read_all()
-        df = spark.createDataFrame(table.to_pandas())
     else:
-        raise NotImplementedError(f"preview of {rt} not supported")
+        df = read_file(
+            spark, inspected.path, rt, header=csv_header_row, sep=csv_delimiter
+        )
     if columns:
         df = df.select(columns)
     return df.limit(num_rows)

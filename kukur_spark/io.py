@@ -1,5 +1,10 @@
-"""Table loading helpers for the driver-provided parquet test tables.
+"""File reads: the one format-name → reader map, and the test-table loader.
 
+:func:`read_file` is the only code that turns a file-format name into a
+reader; file sources, ``inspect.preview`` and the Spark-SQL source's
+registered tables all read through it.
+
+:func:`load_table` loads the parquet test tables (TESTDATA.md).
 Timestamp columns in the driver parquet are naive (isAdjustedToUTC=false);
 with ``spark.sql.parquet.inferTimestampNTZ.enabled=false`` Spark reads them
 as session-timezone TIMESTAMP — and the session is pinned to UTC (SURVEY.md
@@ -13,8 +18,11 @@ column (raw long for nanos files), never through a conversion expression.
 
 from __future__ import annotations
 
+import glob
 import os
+from typing import Optional
 
+from pyspark.errors import ParseException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -34,6 +42,90 @@ TABLES = [
     "documents",
     "embeddings",
 ]
+
+
+def read_file(
+    spark: SparkSession,
+    path: str,
+    file_format: str,
+    *,
+    header: bool = False,
+    sep: str = ",",
+    encoding: Optional[str] = None,
+    version: Optional[int] = None,
+    timestamp=None,
+) -> DataFrame:
+    """``path`` read as ``file_format``.
+
+    - ``csv`` (never schema-inferred: the config types the columns),
+      ``parquet``, ``orc`` and ``ndjson``/``json`` read through
+      ``spark.read``.  An ORC file with a TIMESTAMP_INSTANT column
+      ("timestamp with local time zone", which Spark's reader cannot
+      parse) is read in-process with pyarrow instead.
+    - ``feather``/``arrow`` (Arrow IPC file) and ``arrows`` (IPC stream)
+      have no Spark reader: the files (a glob may match several) are
+      read in-process with pyarrow and handed over the Arrow
+      ``createDataFrame`` path (reference kukur/source/feather/feather.py
+      :32-40, arrows/arrows.py:17-41).  Fine for small per-series files;
+      large data belongs in parquet or delta.
+    - ``delta`` reads with delta-spark, else (jar not on the classpath)
+      by replaying the transaction log engine-side
+      (:func:`kukur_spark.sources.delta_log.read_delta`); ``version`` and
+      ``timestamp`` select VERSION / TIMESTAMP AS OF.
+    """
+    if file_format == "csv":
+        return spark.read.csv(
+            path, header=header, sep=sep, inferSchema=False, encoding=encoding
+        )
+    if file_format == "parquet":
+        return spark.read.parquet(path)
+    if file_format == "orc":
+        try:
+            return spark.read.orc(path)
+        except ParseException:
+            import pyarrow.orc
+
+            return _read_pyarrow(spark, path, pyarrow.orc.read_table)
+    if file_format in ("ndjson", "json"):
+        return spark.read.json(path)
+    if file_format in ("feather", "arrow"):
+        import pyarrow.feather
+
+        return _read_pyarrow(spark, path, pyarrow.feather.read_table)
+    if file_format == "arrows":
+        return _read_pyarrow(spark, path, _read_ipc_stream)
+    if file_format == "delta":
+        try:
+            reader = spark.read.format("delta")
+            if version is not None:
+                reader = reader.option("versionAsOf", version)
+            if timestamp is not None:
+                reader = reader.option("timestampAsOf", str(timestamp))
+            return reader.load(path)
+        except Exception:
+            from kukur_spark.sources.delta_log import read_delta
+
+            return read_delta(spark, path, version, timestamp=timestamp)
+    raise ValueError(f"unknown file format: {file_format}")
+
+
+def _read_pyarrow(spark: SparkSession, path: str, read_one) -> DataFrame:
+    """Every file ``path`` names (a glob may match several) read with
+    ``read_one`` and concatenated, as one DataFrame."""
+    import pyarrow as pa
+
+    paths = sorted(glob.glob(path)) if any(c in path for c in "*?[") else [path]
+    table = pa.concat_tables([read_one(one) for one in paths])
+    return spark.createDataFrame(table.to_pandas())
+
+
+def _read_ipc_stream(path: str):
+    import pyarrow as pa
+    import pyarrow.ipc
+
+    with pa.OSFile(path, "rb") as handle:
+        return pyarrow.ipc.open_stream(handle).read_all()
+
 
 # Columns that may be stored as TIMESTAMP(NANOS) in the driver parquet
 # (older testdata generations), per table.

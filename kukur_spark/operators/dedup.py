@@ -283,7 +283,9 @@ def _band_candidates(
             max_bucket = 0
     if max_bucket > 0:
         rate = min(1.0, 64.0 / max_bucket)
-        sampled = banded if rate >= 1.0 else banded.sample(rate, seed=42)
+        sampled = (
+            banded if rate >= 1.0 else banded.sample(fraction=rate, seed=42)
+        )
         over = (
             sampled.groupBy("band", "bucket")
             .agg((F.count(F.lit(1)) / F.lit(rate)).cast("long").alias("_n"))

@@ -1,27 +1,36 @@
-"""Timestamp-partition pruning predicates.
+"""Timestamp-partition pruning: one predicate for a time range.
 
 Parity target: reference ``kukur/source/delta/delta_lake.py:298-356`` —
-tables partitioned by YEAR/MONTH/DAY/HOUR directory columns cannot be
-pruned by a raw ``ts`` range filter (the optimizer doesn't know the
-partition columns derive from ts), so the time range is *enumerated* into
-explicit partition-value predicates, with the reference's enumeration caps:
-months only when the range spans ≤ 1 year, days ≤ 31 days, hours ≤ 24
-hours. The produced predicates land in the scan's ``PartitionFilters`` and
-skip whole directories at any scale.
+tables partitioned by YEAR/MONTH/DAY/HOUR columns cannot be pruned by a
+raw ``ts`` range filter (the optimizer doesn't know the partition columns
+derive from ts), so the time range is *enumerated* into explicit
+partition-value predicates.  Both config forms feed the one rule here:
+``[[source.<n>.partitions]]`` entries with ``origin = "timestamp"``, and
+``timestamp_partition_columns = ["year", "month", …]``, read as such
+entries on those columns.  The predicate lands in the scan's
+``PartitionFilters`` and skips whole directories at any scale.
 """
 
 from __future__ import annotations
 
 from datetime import datetime, timedelta
+from functools import reduce
 from typing import Dict, List, Optional
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-# enumeration caps (reference delta_lake.py:298-356)
-MAX_MONTH_SPAN = timedelta(days=366)
-MAX_DAY_SPAN = timedelta(days=31)
-MAX_HOUR_SPAN = timedelta(hours=24)
+from kukur_spark.schema import literal_col
+
+# enumeration caps (reference delta_lake.py:298-356): months only when the
+# range spans ≤ 1 year, days ≤ 31 days, hours ≤ 24 hours
+CAPS = {
+    "month": timedelta(days=366),
+    "day": timedelta(days=31),
+    "hour": timedelta(hours=24),
+}
+_RESOLUTIONS = ("year", "month", "day", "hour")
 
 
 def _truncate(value: datetime, resolution: str) -> datetime:
@@ -46,161 +55,84 @@ def _next_boundary(value: datetime, resolution: str) -> datetime:
     return value + timedelta(hours=1)
 
 
-def _enumerate(start: datetime, end: datetime, resolution: str) -> List[Dict[str, int]]:
-    """Every partition the half-open [start, end) range touches.
-
-    The cursor walks exact calendar boundaries (truncate → next boundary),
-    so an unaligned range never skips its final partition — fixed-size
-    steps (the previous implementation) could jump past ``end`` before
-    emitting the partition that contains it, silently pruning in-range
-    data.
-    """
-    keep = {
-        "year": ("year",),
-        "month": ("year", "month"),
-        "day": ("year", "month", "day"),
-        "hour": ("year", "month", "day", "hour"),
-    }[resolution]
-    out = []
-    cursor = _truncate(start, resolution)
-    while cursor < end:
-        key = {
-            "year": cursor.year,
-            "month": cursor.month,
-            "day": cursor.day,
-            "hour": cursor.hour,
-        }
-        out.append({k: key[k] for k in keep})
-        cursor = _next_boundary(cursor, resolution)
-    return out
+def _value(moment: datetime, resolution: str, entry: Dict):
+    """The partition value of the period starting at ``moment``: the
+    entry's strftime ``format``, else ``%Y`` for YEAR and the bare number
+    otherwise; an int for an integral partition column."""
+    fmt = entry.get("format")
+    if fmt is not None:
+        text = moment.strftime(fmt)
+    elif resolution == "year":
+        text = moment.strftime("%Y")
+    else:
+        text = str(getattr(moment, resolution))
+    return int(text) if isinstance(entry.get("type"), T.IntegralType) else text
 
 
-def partition_predicates(
-    start: datetime,
-    end: datetime,
-    partition_columns: List[str],
+def partition_predicate(
+    start: datetime, end: datetime, entries: List[Dict]
 ) -> Optional[Column]:
-    """Build IN-list predicates over ts-derived partition columns.
+    """The partitions the half-open ``[start, end)`` range touches, as one
+    predicate; ``None`` when no entry can prune the range.
 
-    ``partition_columns`` is an ordered subset of
-    ``["year", "month", "day", "hour"]``. Enumeration caps follow the
-    reference: finer resolutions are skipped for ranges too wide to
-    enumerate (the coarser predicate still prunes).
+    ``entries`` are timestamp-origin partition entries: ``key`` (YEAR,
+    MONTH, DAY or HOUR, any case), ``column`` (default: the key), an
+    optional strftime ``format`` and an optional ``type``, the column's
+    Spark type.  An entry whose cap the span exceeds is left out: its
+    pruning is skipped, never allowed to drop an in-range partition (the
+    reference instead clips the range at the cap, delta_lake.py:339-343).
+    The cursor walks exact calendar boundaries (truncate → next boundary)
+    at the finest remaining resolution, so an unaligned range never skips
+    its final partition.  Each boundary gives one conjunction
+    ``column = value`` over the remaining entries, each value rendered
+    from the boundary truncated to the entry's own resolution; the
+    conjunctions are ORed.  When only YEAR entries remain, each column
+    gets one IN list of its values instead.
     """
     from kukur_spark.timeutil import as_utc
 
     start, end = as_utc(start), as_utc(end)
     span = end - start
-    resolution = partition_columns[-1]
-    if resolution == "month" and span > MAX_MONTH_SPAN:
-        resolution = "year"
-    elif resolution == "day" and span > MAX_DAY_SPAN:
-        resolution = "month" if span <= MAX_MONTH_SPAN else "year"
-    elif resolution == "hour" and span > MAX_HOUR_SPAN:
-        if span <= MAX_DAY_SPAN:
-            resolution = "day"
-        elif span <= MAX_MONTH_SPAN:
-            resolution = "month"
-        else:
-            resolution = "year"
-    usable = {
-        "year": ["year"],
-        "month": ["year", "month"],
-        "day": ["year", "month", "day"],
-        "hour": ["year", "month", "day", "hour"],
-    }[resolution]
-    usable = [c for c in usable if c in partition_columns]
-    if not usable:
+    kept = []
+    for entry in entries:
+        resolution = entry["key"].lower()
+        if resolution not in CAPS or span <= CAPS[resolution]:
+            kept.append((resolution, entry.get("column") or entry["key"], entry))
+    if not kept:
         return None
-    combos = _enumerate(start, end, usable[-1])
-    predicate = None
-    for combo in combos:
-        clause = None
-        for column in usable:
-            term = F.col(column) == F.lit(combo[column])
-            clause = term if clause is None else (clause & term)
-        predicate = clause if predicate is None else (predicate | clause)
-    return predicate
-
-
-def prune_time_partitions(
-    df: DataFrame,
-    start: datetime,
-    end: datetime,
-    partition_columns: List[str],
-) -> DataFrame:
-    """Apply the enumerated partition predicates (plus nothing else —
-    callers still apply the exact ts range filter on the data column)."""
-    predicate = partition_predicates(start, end, partition_columns)
-    if predicate is None:
-        return df
-    return df.filter(predicate)
-
-
-def timestamp_partition_values(
-    start: datetime,
-    end: datetime,
-    resolution: str,
-    fmt: Optional[str] = None,
-) -> Optional[List[str]]:
-    """Formatted partition values the half-open range touches.
-
-    Reference parity for configured ``[[source.<n>.partitions]]`` entries
-    with ``origin = "timestamp"`` (``kukur/source/delta/delta_lake.py:
-    306-356``): one value per YEAR/MONTH/DAY/HOUR boundary, rendered with
-    the configured strftime ``format`` (defaults: ``%Y`` for YEAR, the
-    bare component number otherwise).  Spans beyond the reference's
-    enumeration caps return ``None`` — pruning is *skipped*, never
-    allowed to drop in-range partitions (the reference instead clips the
-    enumerated range at the cap, reference delta_lake.py:339-343; a
-    correctness-over-pruning deviation, noted deliberately).
-    """
-    from kukur_spark.timeutil import as_utc
-
-    res = resolution.lower()
-    start, end = as_utc(start), as_utc(end)
-    span = end - start
-    caps = {"month": MAX_MONTH_SPAN, "day": MAX_DAY_SPAN, "hour": MAX_HOUR_SPAN}
-    if res in caps and span > caps[res]:
-        return None
-    out: List[str] = []
-    cursor = _truncate(start, res)
+    finest = max((r for r, _, _ in kept), key=_RESOLUTIONS.index)
+    clauses: Dict[tuple, None] = {}  # insertion-ordered set
+    cursor = _truncate(start, finest)
     while cursor < end:
-        if fmt is not None:
-            out.append(cursor.strftime(fmt))
-        elif res == "year":
-            out.append(cursor.strftime("%Y"))
-        elif res == "month":
-            out.append(str(cursor.month))
-        elif res == "day":
-            out.append(str(cursor.day))
-        else:
-            out.append(str(cursor.hour))
-        cursor = _next_boundary(cursor, res)
-    return out
-
-
-def prune_configured_partitions(
-    df: DataFrame,
-    start: datetime,
-    end: datetime,
-    partitions: List[dict],
-) -> DataFrame:
-    """Apply configured timestamp-partition IN filters.
-
-    Tag-origin entries need no work here: the partition column *is* a
-    tag column, so the ordinary tag equality filter already prunes it
-    (Catalyst partition pruning does the file skipping).
-    """
-    for part in partitions:
-        if (part.get("origin") or "tag") != "timestamp":
-            continue
-        values = timestamp_partition_values(
-            start, end, part["key"], part.get("format")
+        clause = tuple(
+            _value(_truncate(cursor, r), r, entry) for r, _, entry in kept
         )
-        if values is None:
-            continue
-        column = part.get("column") or part["key"]
-        if column in df.columns:
-            df = df.filter(F.col(column).isin(values))
-    return df
+        clauses[clause] = None
+        try:
+            cursor = _next_boundary(cursor, finest)
+        except (ValueError, OverflowError):  # next boundary past datetime.max
+            break
+    if not clauses:  # empty range: the ts filter already keeps nothing
+        return None
+    columns = [literal_col(column) for _, column, _ in kept]
+    if finest == "year":
+        # every value derives from the year alone: an IN list per column
+        # stays one node deep however many years the range spans (an OR
+        # per year overflows the JVM stack on a year 1 – 9999 range)
+        return reduce(
+            Column.__and__,
+            [
+                column.isin(list(dict.fromkeys(c[i] for c in clauses)))
+                for i, column in enumerate(columns)
+            ],
+        )
+    return reduce(
+        Column.__or__,
+        [
+            reduce(
+                Column.__and__,
+                [column == F.lit(v) for column, v in zip(columns, clause)],
+            )
+            for clause in clauses
+        ],
+    )

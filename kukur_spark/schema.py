@@ -16,7 +16,7 @@ from __future__ import annotations
 
 from typing import Iterable, List, Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -27,6 +27,13 @@ QUALITY_COLUMN = "quality"
 # quality enum: 0 = BAD, 1 = GOOD (reference kukur/source/quality.py:13-17)
 QUALITY_BAD = 0
 QUALITY_GOOD = 1
+
+
+def literal_col(name: str) -> Column:
+    """A column reference that treats ``name`` literally — both ``F.col``
+    and ``df[name]`` parse dots as struct access; backtick-quoting (with
+    doubled inner backticks) does not."""
+    return F.col("`" + name.replace("`", "``") + "`")
 
 
 def data_schema(

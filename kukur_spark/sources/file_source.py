@@ -38,7 +38,9 @@ from kukur_spark.base import (
     SeriesSelector,
     SourceStructure,
 )
+from kukur_spark.io import read_file
 from kukur_spark.metadata import Metadata
+from kukur_spark.operators.partitions import partition_predicate
 from kukur_spark.operators.plot import plot_downsample
 from kukur_spark.plancache import PLANS, fingerprint
 from kukur_spark.schema import (
@@ -46,6 +48,7 @@ from kukur_spark.schema import (
     TS_COLUMN,
     VALUE_COLUMN,
     conform,
+    literal_col,
 )
 from kukur_spark.sources.quality import QualityMapper
 
@@ -71,13 +74,6 @@ _STRPTIME_TO_SPARK = {
 
 def _search_key(search: SeriesSearch) -> tuple:
     return ("search", tuple(sorted((search.tags or {}).items())), search.field)
-
-
-def _literal_col(name: str) -> Column:
-    """A column reference that treats ``name`` literally — both ``F.col``
-    and ``df[name]`` parse dots as struct access; backtick-quoting (with
-    doubled inner backticks) does not."""
-    return F.col("`" + name.replace("`", "``") + "`")
 
 
 def _resolve_mapping(config: Dict[str, Any], key: str) -> Dict[str, Any]:
@@ -148,12 +144,13 @@ class FileSourceOptions:
     metadata_value_mapping: Dict[str, Dict[str, str]] = dc_field(default_factory=dict)
     dictionary_dir: Optional[str] = None
     value_type: Optional[str] = None  # None=auto | double | bigint | string
-    # ts-derived hive partition columns (subset of year/month/day/hour, in
-    # order) — range queries enumerate them into pruning predicates
+    # ts-derived hive partition columns named year/month/day/hour: read as
+    # timestamp-origin ``partitions`` entries on those columns
     timestamp_partition_columns: List[str] = dc_field(default_factory=list)
     # reference-style [[source.<n>.partitions]] entries: dicts with
     # origin (tag|timestamp), key, optional column, optional strftime
-    # format (kukur/source/delta/delta_lake.py:298-356)
+    # format (kukur/source/delta/delta_lake.py:298-356); range queries
+    # turn the timestamp entries into one pruning predicate
     partitions: List[Dict[str, Any]] = dc_field(default_factory=list)
     # Delta VERSION AS OF (Spark extension; None = latest snapshot)
     delta_version: Optional[int] = None
@@ -258,87 +255,25 @@ class FileSource:
 
     def _read_raw_uncached(self, path: str) -> DataFrame:
         opts = self.options
-        fmt = opts.file_format
-        if fmt == "csv":
-            # Spark's CSV reader accepts a fixed charset list (iso-8859-1,
-            # us-ascii, utf-16*, utf-32, utf-8); windows-125x configs map
-            # to their latin-1 sibling (_spark_encoding). CAVEAT: the
-            # 0x80-0x9F block (€, smart quotes, dashes) decodes as C1
-            # controls — re-encode such files to UTF-8 upstream if those
-            # characters matter.
-            encoding = self._spark_encoding()
-            # pivot CSVs always carry the series names in a header row:
-            # the reference reads them with pyarrow's default read options
-            # (first row = header) regardless of header_row
-            # (kukur/source/csv/csv.py:435-441 vs :466-471)
-            header = opts.header or opts.format == "pivot"
-            return self.spark.read.csv(
-                path,
-                header=header,
-                sep=opts.delimiter,
-                inferSchema=False,  # config-driven, never inferred
-                encoding=encoding,
-            )
-        if fmt == "parquet":
-            return self.spark.read.parquet(path)
-        if fmt == "orc":
-            return self.spark.read.orc(path)
-        if fmt == "ndjson":
-            return self.spark.read.json(path)
-        if fmt in ("feather", "arrows", "arrow"):
-            return self._read_arrow_ipc(path, fmt)
-        if fmt == "delta":
-            try:
-                reader = self.spark.read.format("delta")
-                if self.options.delta_version is not None:
-                    reader = reader.option(
-                        "versionAsOf", self.options.delta_version
-                    )
-                if self.options.delta_timestamp is not None:
-                    reader = reader.option(
-                        "timestampAsOf", str(self.options.delta_timestamp)
-                    )
-                return reader.load(path)
-            except Exception:
-                # delta-spark jar not on the classpath: replay the open
-                # transaction-log protocol engine-side (JSON commits +
-                # parquet checkpoints -> live file set with tombstones
-                # excluded; reference kukur/source/delta/delta_lake.py
-                # reads via deltalake-python the same way)
-                from kukur_spark.sources.delta_log import read_delta
-
-                return read_delta(
-                    self.spark,
-                    path,
-                    self.options.delta_version,
-                    timestamp=self.options.delta_timestamp,
-                )
-        raise ValueError(f"unknown file format: {fmt}")
-
-    def _read_arrow_ipc(self, path: str, fmt: str) -> DataFrame:
-        """Feather / Arrow IPC stream → DataFrame via Arrow interchange.
-
-        Spark has no native Feather reader (reference reads with
-        feather.read_table / ipc.open_stream, kukur/source/feather/feather.py
-        :32-40, arrows/arrows.py:17-41); files are read driver-side with
-        pyarrow and handed to Spark over the Arrow createDataFrame fast path.
-        Fine for the small per-series files this layout implies; large data
-        belongs in parquet/delta.
-        """
-        import pyarrow as pa
-        import pyarrow.feather
-        import pyarrow.ipc
-
-        paths = sorted(globlib.glob(path)) if any(c in path for c in "*?[") else [path]
-        tables = []
-        for one in paths:
-            if fmt == "feather":
-                tables.append(pyarrow.feather.read_table(one))
-            else:
-                with pa.OSFile(one, "rb") as handle:
-                    tables.append(pyarrow.ipc.open_stream(handle).read_all())
-        table = pa.concat_tables(tables)
-        return self.spark.createDataFrame(table.to_pandas())
+        # Spark's CSV reader accepts a fixed charset list (iso-8859-1,
+        # us-ascii, utf-16*, utf-32, utf-8); windows-125x configs map to
+        # their latin-1 sibling (_spark_encoding). CAVEAT: the 0x80-0x9F
+        # block (€, smart quotes, dashes) decodes as C1 controls —
+        # re-encode such files to UTF-8 upstream if those characters
+        # matter.  Pivot CSVs always carry the series names in a header
+        # row: the reference reads them with pyarrow's default read
+        # options (first row = header) regardless of header_row
+        # (kukur/source/csv/csv.py:435-441 vs :466-471).
+        return read_file(
+            self.spark,
+            path,
+            opts.file_format,
+            header=opts.header or opts.format == "pivot",
+            sep=opts.delimiter,
+            encoding=self._spark_encoding(),
+            version=opts.delta_version,
+            timestamp=opts.delta_timestamp,
+        )
 
     # ------------------------------------------------------------------
     # normalization
@@ -354,7 +289,7 @@ class FileSource:
         # mapping is canonical -> external (reference orientation)
         renames = {ext: canon for canon, ext in mapping.items()}
         return df.select(
-            [F.col(c).alias(renames.get(c, c)) for c in df.columns]
+            [literal_col(c).alias(renames.get(c, c)) for c in df.columns]
         )
 
     def _positional_columns(self, df: DataFrame) -> DataFrame:
@@ -371,7 +306,7 @@ class FileSource:
         Parity: reference kukur/source/arrow.py:254-282.
         """
         opts = self.options
-        col = _literal_col(column)  # dotted column names stay literal
+        col = literal_col(column)  # dotted column names stay literal
         if opts.data_datetime_format is not None:
             col = F.to_timestamp(col, opts.data_datetime_format)
         elif not isinstance(df.schema[column].dataType, T.TimestampType):
@@ -622,12 +557,12 @@ class FileSource:
             df = self.data_frame()
             tag_cols = [c for c in opts.tag_columns if c in df.columns]
             combos = df.select(
-                [_literal_col(c).cast("string").alias(c) for c in tag_cols]
+                [literal_col(c).cast("string").alias(c) for c in tag_cols]
             ).distinct()
         if search.tags:
             for key, value in search.tags.items():
                 if key in tag_cols:
-                    combos = combos.filter(_literal_col(key) == F.lit(value))
+                    combos = combos.filter(literal_col(key) == F.lit(value))
                 else:
                     # a tag key the source does not carry matches nothing
                     combos = combos.filter(F.lit(False))
@@ -639,7 +574,7 @@ class FileSource:
         )
         return (
             combos.crossJoin(F.broadcast(fields_df))
-            .orderBy(*[_literal_col(c) for c in tag_cols], "field_idx")
+            .orderBy(*[literal_col(c) for c in tag_cols], "field_idx")
             .drop("field_idx")
         )
 
@@ -683,37 +618,36 @@ class FileSource:
 
         The range-independent prefix (read → tag filter → casts → sort →
         conform) is plan-cached per selector (see :meth:`_plan_cached`);
-        only the two range predicates are built per call — the verb hot
+        only the range predicates are built per call — the verb hot
         path repeats selectors far more often than plans change.  The
         filter-after-sort order is plan-neutral (Catalyst pushes the
-        predicate below the Sort).  Sources with configured partition
-        pruning skip the cache: their pruning predicates derive from the
-        requested range itself.
+        predicate below the Sort).  The cached frame of a source with
+        timestamp partitions keeps their columns: each call adds the
+        partition predicate of its range, then drops them.
         """
         opts = self.options
-        if opts.timestamp_partition_columns or opts.partitions:
-            base = self._series_frame(selector, start, end)
-        else:
-            key = ("series", tuple(sorted(selector.tags.items())), selector.field)
-            # a dir-layout series is one file: stat it, not the directory
-            path = self._series_path(selector) if opts.format == "dir" else opts.path
-            base = self._plan_cached(
-                key, path, lambda: self._series_frame(selector, None, None)
-            )
-        return base.filter(
+        key = ("series", tuple(sorted(selector.tags.items())), selector.field)
+        # a dir-layout series is one file: stat it, not the directory
+        path = self._series_path(selector) if opts.format == "dir" else opts.path
+        base, partitions = self._plan_cached(
+            key, path, lambda: self._series_frame(selector)
+        )
+        df = base.filter(
             (F.col(TS_COLUMN) >= F.lit(start)) & (F.col(TS_COLUMN) < F.lit(end))
         )
+        if not partitions:
+            return df
+        predicate = partition_predicate(start, end, partitions)
+        if predicate is not None:
+            df = df.filter(predicate)
+        return df.drop(*[entry["column"] for entry in partitions])
 
-    def _series_frame(
-        self,
-        selector: SeriesSelector,
-        start: Optional[datetime],
-        end: Optional[datetime],
-    ) -> DataFrame:
+    def _series_frame(self, selector: SeriesSelector) -> tuple:
         """One series' conformed frame WITHOUT the range filter (applied
-        by :meth:`get_data` on top); ``start``/``end`` feed only the
-        configured partition pruning when present."""
+        by :meth:`get_data` on top), and the timestamp partitions whose
+        columns it keeps (see :meth:`_timestamp_partitions`)."""
         opts = self.options
+        partitions: List[Dict[str, Any]] = []
         if opts.format == "dir":
             df = self._read_dir_file(selector)
             value_col = VALUE_COLUMN
@@ -728,16 +662,17 @@ class FileSource:
             # parse dots as struct access and crash on "sensor.1"
             normalized = self._normalize_ts(df, ts_col)
             df = normalized.select(
-                _literal_col(ts_col).alias(TS_COLUMN),
-                _literal_col(selector.tags[SERIES_NAME_TAG]).alias(VALUE_COLUMN),
+                literal_col(ts_col).alias(TS_COLUMN),
+                literal_col(selector.tags[SERIES_NAME_TAG]).alias(VALUE_COLUMN),
             )
             value_col = VALUE_COLUMN
         else:
             df = self.data_frame()
             for key, value in selector.tags.items():
                 if key in df.columns:
-                    df = df.filter(F.col(key) == F.lit(value))
+                    df = df.filter(literal_col(key) == F.lit(value))
             value_col = selector.field if selector.field in df.columns else VALUE_COLUMN
+            partitions = self._timestamp_partitions(df)
 
         cols = [F.col(TS_COLUMN), self._cast_value(df, value_col).alias(VALUE_COLUMN)]
         if QUALITY_COLUMN in df.columns:
@@ -758,29 +693,31 @@ class FileSource:
                 cols.append(
                     F.col(QUALITY_COLUMN).cast("byte").alias(QUALITY_COLUMN)
                 )
-        if opts.timestamp_partition_columns and start is not None:
-            # enumerate the range into partition predicates while the
-            # ts-derived partition columns are still in scope (M-parity of
-            # the reference's Delta partition enumeration)
-            from kukur_spark.operators.partitions import prune_time_partitions
-
-            df = prune_time_partitions(
-                df, start, end, opts.timestamp_partition_columns
-            )
-        if opts.partitions and start is not None:
-            # configured partition entries (reference Delta parity):
-            # timestamp-origin entries become formatted IN filters on the
-            # partition column; tag-origin entries are already covered by
-            # the tag equality filter above
-            from kukur_spark.operators.partitions import (
-                prune_configured_partitions,
-            )
-
-            df = prune_configured_partitions(df, start, end, opts.partitions)
+        # conform keeps the partition columns, ahead of the canonical ones
+        cols += [literal_col(entry["column"]) for entry in partitions]
         df = df.select(cols)
         if opts.sort_by_timestamp:
             df = df.orderBy(TS_COLUMN)
-        return conform(df)
+        return conform(df), partitions
+
+    def _timestamp_partitions(self, df: DataFrame) -> List[Dict[str, Any]]:
+        """The timestamp-origin partition entries whose column ``df``
+        carries, each with its ``column`` name and Spark ``type`` (see
+        :func:`partition_predicate`).  ``timestamp_partition_columns``
+        are entries on those columns.  Tag-origin entries need no
+        predicate: their column is a tag column, so the tag equality
+        filter already prunes it."""
+        opts = self.options
+        entries = [
+            {"origin": "timestamp", "key": c}
+            for c in opts.timestamp_partition_columns
+        ] + list(opts.partitions)
+        out = []
+        for entry in entries:
+            column = entry.get("column") or entry["key"]
+            if (entry.get("origin") or "tag") == "timestamp" and column in df.columns:
+                out.append({**entry, "column": column, "type": df.schema[column].dataType})
+        return out
 
     def get_plot_data(
         self,
@@ -816,7 +753,7 @@ class FileSource:
         tag_cols = [c for c in opts.tag_columns if c in df.columns]
         row = df.agg(
             *[
-                F.sort_array(F.collect_set(_literal_col(c))).alias(c)
+                F.sort_array(F.collect_set(literal_col(c))).alias(c)
                 for c in tag_cols
             ]
         ).collect()[0]

@@ -16,7 +16,7 @@ Config::
 
     [[source.mysrc.tables]]
     name = "data"
-    type = "parquet"     # csv | parquet | orc | json
+    type = "parquet"     # any kukur_spark.io.read_file format
     path = "/data/x.parquet"
 """
 
@@ -26,9 +26,9 @@ from datetime import datetime
 from typing import Any, Dict, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from kukur_spark.base import SERIES_NAME_TAG, SeriesSearch, SeriesSelector
+from kukur_spark.io import read_file
 from kukur_spark.metadata import Metadata
 from kukur_spark.schema import TS_COLUMN, conform
 
@@ -51,21 +51,12 @@ class SparkSqlSource:
 
         register_sql_functions(self.spark)
         for table in self.config.get("tables", []):
-            fmt = table.get("type", "parquet")
-            reader = self.spark.read
-            if fmt == "csv":
-                df = reader.csv(
-                    table["path"], header=table.get("header", True)
-                )
-            elif fmt == "parquet":
-                df = reader.parquet(table["path"])
-            elif fmt == "orc":
-                df = reader.orc(table["path"])
-            elif fmt == "json":
-                df = reader.json(table["path"])
-            else:
-                raise ValueError(f"unknown table type {fmt!r}")
-            df.createOrReplaceTempView(table["name"])
+            read_file(
+                self.spark,
+                table["path"],
+                table.get("type", "parquet"),
+                header=table.get("header", True),
+            ).createOrReplaceTempView(table["name"])
         self._registered = True
 
     def search(self, search: SeriesSearch) -> Iterator[SeriesSelector]:

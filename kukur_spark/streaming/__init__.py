@@ -20,7 +20,7 @@ from typing import List, Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kukur_spark.schema import TS_COLUMN, VALUE_COLUMN
+from kukur_spark.schema import TS_COLUMN, VALUE_COLUMN, literal_col
 
 
 def windowed_stats(
@@ -31,7 +31,8 @@ def windowed_stats(
     group_columns: Optional[List[str]] = None,
 ) -> DataFrame:
     """Watermarked window aggregate: n/sum/min/max/first/last per window."""
-    group_columns = group_columns or []
+    # literal references: a tag column named "site.id" is not a struct field
+    group_columns = [literal_col(c) for c in group_columns or []]
     win = (
         F.window(TS_COLUMN, window, slide) if slide else F.window(TS_COLUMN, window)
     )

@@ -3,10 +3,11 @@
 from datetime import datetime, timezone
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from kukur_spark.operators.asof import asof_join
 from kukur_spark.operators.dedup import minhash_lsh_pairs
-from kukur_spark.operators.partitions import _enumerate, partition_predicates
+from kukur_spark.operators.partitions import partition_predicate
 from kukur_spark.timeutil import epoch_ns, epoch_us
 
 
@@ -15,30 +16,47 @@ def utc(*args):
 
 
 # -- partitions: unaligned ranges must not drop the final partition --------
-def test_enumerate_unaligned_hour_range_keeps_final_partition():
-    hours = _enumerate(
-        utc(2023, 1, 15, 23, 30), utc(2023, 1, 16, 0, 30), "hour"
+def _kept(spark, start, end, columns, rows):
+    """The partition ``rows`` (tuples over ``columns``, int columns) that
+    the predicate for ``[start, end)`` keeps."""
+    pred = partition_predicate(
+        start, end, [{"key": c, "type": T.IntegerType()} for c in columns]
     )
-    assert {(h["day"], h["hour"]) for h in hours} == {(15, 23), (16, 0)}
+    df = spark.createDataFrame(rows, ", ".join(f"{c} int" for c in columns))
+    return sorted(tuple(r) for r in df.filter(pred).collect())
 
 
-def test_enumerate_year_boundary():
-    years = _enumerate(utc(2023, 12, 20), utc(2024, 1, 5), "year")
-    assert [y["year"] for y in years] == [2023, 2024]
-
-
-def test_partition_predicates_cover_unaligned_range(spark):
-    pred = partition_predicates(
+def test_enumerate_unaligned_hour_range_keeps_final_partition(spark):
+    hours = _kept(
+        spark,
         utc(2023, 1, 15, 23, 30),
         utc(2023, 1, 16, 0, 30),
         ["year", "month", "day", "hour"],
+        [(2023, 1, d, h) for d in (15, 16) for h in range(24)],
     )
-    df = spark.createDataFrame(
+    assert {(h[2], h[3]) for h in hours} == {(15, 23), (16, 0)}
+
+
+def test_enumerate_year_boundary(spark):
+    years = _kept(
+        spark,
+        utc(2023, 12, 20),
+        utc(2024, 1, 5),
+        ["year"],
+        [(y,) for y in range(2021, 2027)],
+    )
+    assert [y[0] for y in years] == [2023, 2024]
+
+
+def test_partition_predicates_cover_unaligned_range(spark):
+    kept = _kept(
+        spark,
+        utc(2023, 1, 15, 23, 30),
+        utc(2023, 1, 16, 0, 30),
+        ["year", "month", "day", "hour"],
         [(2023, 1, 15, 23), (2023, 1, 16, 0), (2023, 1, 16, 5)],
-        "year int, month int, day int, hour int",
     )
-    kept = sorted((r["day"], r["hour"]) for r in df.filter(pred).collect())
-    assert kept == [(15, 23), (16, 0)]
+    assert [(k[2], k[3]) for k in kept] == [(15, 23), (16, 0)]
 
 
 # -- dedup: short documents must not crash under ANSI mode -----------------
